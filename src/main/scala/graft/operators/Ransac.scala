@@ -253,6 +253,15 @@ object Ransac {
     val colMode = orient == "col"
     val edgePx = Hough.edgePixels(images, band, thresh)
     val models = fit(edgePx, binwidth, orient, residual, exhaustiveMax, maxTrials, seed)
+    burnPredictions(edgePx, models, binwidth, colMode)
+  }
+
+  /** The burn of [[lines]]: every edge pixel of a fitted strip burns the
+    * model's predicted cross coordinate at its driving coordinate,
+    * in-raster burns only. `edgePx` is (image_id, w, h, x, y), `models`
+    * is [[fit]]'s output. */
+  private[graft] def burnPredictions(edgePx: DataFrame, models: DataFrame,
+                                     binwidth: Int, colMode: Boolean): DataFrame = {
     val stripCol = if (colMode) col("x") else col("y")
     val px = edgePx.withColumn("strip", floor(stripCol / binwidth).cast("int"))
     // round-half-up via exact integer arithmetic: pred = base +
@@ -268,12 +277,16 @@ object Ransac {
     // LONG arithmetic end-to-end (the iterFit kernel uses 2L* for the
     // same reason): num*2 on int columns wraps silently under Spark's
     // non-ANSI multiply for coordinates near the raster-size limit —
-    // "exact integer arithmetic" must mean exact at any raster size
+    // "exact integer arithmetic" must mean exact at any raster size.
+    // |num| < 2^62 for int coordinates, so num*2 + den fits a Long; the
+    // floor division stays in Long too (a double holds only 53 bits):
+    // floorDiv(a, b) = (a - pmod(a, b)) div b for b > 0, and the `div`
+    // is exact because its dividend is a multiple of b.
     val den = abs(dDrive).cast("long")
     val num = when(dDrive > 0, dCross.cast("long") * (drive - refA))
       .otherwise(-dCross.cast("long") * (drive - refA))
-    val pred = (base +
-      floor((num * 2 + den).cast("double") / (den * 2)).cast("int"))
+    val (a, b) = (num * 2 + den, den * 2)
+    val pred = base + call_function("div", a - pmod(a, b), b).cast("int")
     val burnX = if (colMode) pred else col("x")
     val burnY = if (colMode) col("y") else pred
     // in-raster burns only — same deliberate deviation from the numpy

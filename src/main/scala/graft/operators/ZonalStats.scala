@@ -35,16 +35,24 @@ object ZonalStats {
   final case class PolyCell(cell_id: Long, poly_id: Long, part: Int,
                             rings: Array[Array[Pt]])
 
-  /** Explode polygons into covering cells at `res` — the broadcast build
-    * side of the prefilter join (bbox cover refined by exact
-    * rect-polygon intersection, mirroring the reference's bbox prefilter
-    * shape.py:942-976). */
+  /** One polygon part's rings as (x, y) tuples and the grid cells at
+    * `res` it covers: bbox cover refined by exact rect-polygon
+    * intersection, mirroring the reference's bbox prefilter
+    * shape.py:942-976. The ONE cover definition: [[polyCells]] flatMaps
+    * it and the driver-built index of [[histogram]] calls it. */
+  private def cover(p: PolyRow, res: Int): (Geom.Rings, Array[Long]) = {
+    val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
+    (rings, GridIndex.coverPolygon(rings, res))
+  }
+
+  /** Explode polygons into covering cells at `res` — the build side of
+    * the join-shaped prefilters. [[histogram]] builds the same cover on
+    * the driver instead, with no Spark job. */
   def polyCells(polys: Dataset[PolyRow], res: Int)
                (implicit spark: SparkSession): Dataset[PolyCell] = {
     import spark.implicits._
     polys.flatMap { p =>
-      val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
-      GridIndex.coverPolygon(rings, res).map(c => PolyCell(c, p.poly_id, p.part, p.rings))
+      cover(p, res)._2.map(c => PolyCell(c, p.poly_id, p.part, p.rings))
     }
   }
 
@@ -80,62 +88,100 @@ object ZonalStats {
     }
   }
 
-  /** One pre-resolved (cell, polygon-part) prefilter entry of the
-    * broadcast index: rings/bbox converted ONCE at build time instead of
-    * per joined pair; per-ring packed (xs, ys) arrays feed the per-pixel
-    * PIP (flat-array reads, no Tuple2 chase per vertex). */
-  private final case class PolyPre(polyId: Long, rings: Geom.Rings,
-                                   xss: Array[Array[Double]],
-                                   yss: Array[Array[Double]],
-                                   pb: Geom.BBox) extends Serializable
+  /** One pre-resolved polygon part of the prefilter index: rings/bbox
+    * converted ONCE per polygon at build time and shared by every cell
+    * the polygon covers (the broadcast serializes a shared reference
+    * once, so rings ship once per polygon, not once per (cell, polygon));
+    * per-ring packed (xs, ys) arrays feed the per-pixel PIP (flat-array
+    * reads, no Tuple2 chase per vertex). */
+  private[operators] final case class PolyPre(polyId: Long, rings: Geom.Rings,
+                                              xss: Array[Array[Double]],
+                                              yss: Array[Array[Double]],
+                                              pb: Geom.BBox) extends Serializable
 
-  /** Hard cap on the driver-held prefilter index — the SAME smallness
-    * contract the plan-level BroadcastExchange this path replaced
-    * enforced implicitly (its build side was collected to the driver
-    * too), made loud: a vector layer whose cell cover exceeds it fails
-    * fast instead of OOM-ing the driver. 2^22 entries ~ a few hundred MB
-    * of rings at typical ring sizes. */
+  /** Hard cap on the (cell, polygon) entries of the driver-held prefilter
+    * index — the smallness contract of the zonal polygon layer, made
+    * loud: a layer whose cell cover exceeds it fails fast instead of
+    * OOM-ing the driver. */
   val MaxBroadcastPolyCells: Int = 1 << 22
+
+  /** Byte budget of the index's rings, next to the entry cap: 16 bytes
+    * (x, y doubles) per vertex of every polygon part that covers a cell.
+    * A few very detailed polygons fit the entry cap yet hold far more
+    * bytes; they fail here. The index holds each vertex twice (tuple
+    * rings and packed arrays), so 256 MiB of vertices is ~0.5 GiB of
+    * driver heap and broadcast blocks. */
+  val MaxBroadcastRingBytes: Long = 1L << 28
+
+  /** Driver-side prefilter index over an already collected polygon
+    * layer: cell_id -> the polygon parts covering it, in layer order.
+    * Fails past `maxEntries` (cell, polygon) entries or `maxRingBytes`
+    * bytes of vertices, counted while covering. */
+  private[operators] def buildIndex(polys: Array[PolyRow], res: Int,
+                                    maxEntries: Int, maxRingBytes: Long)
+      : java.util.HashMap[Long, Array[PolyPre]] = {
+    val byCell = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[PolyPre]]()
+    var entries = 0L
+    var ringBytes = 0L
+    polys.foreach { p =>
+      val (rings, cells) = cover(p, res)
+      if (cells.nonEmpty) {
+        entries += cells.length
+        require(entries <= maxEntries,
+          s"zonal prefilter index exceeds $maxEntries (cell, polygon) " +
+            "entries — coarsen cellRes or shard the polygon layer")
+        ringBytes += 16L * p.rings.map(_.length.toLong).sum
+        require(ringBytes <= maxRingBytes,
+          s"zonal prefilter index rings exceed $maxRingBytes bytes of vertices " +
+            "— simplify or shard the polygon layer")
+        val pre = PolyPre(p.poly_id, rings, p.rings.map(_.map(_.x)),
+          p.rings.map(_.map(_.y)), Geom.bbox(rings))
+        cells.foreach { c =>
+          byCell.computeIfAbsent(c, _ => scala.collection.mutable.ArrayBuffer.empty[PolyPre]) += pre
+        }
+      }
+    }
+    val index = new java.util.HashMap[Long, Array[PolyPre]](byCell.size * 2)
+    byCell.forEach((c, b) => index.put(c, b.toArray))
+    index
+  }
 
   /**
    * Tiles x polygons histogram, executed as a broadcast-VARIABLE map
-   * join: the polygon side (small by the zonal contract) is exploded
-   * into covering cells, collected once, indexed by cell_id and shipped
-   * via sparkContext.broadcast; the tile side streams through ONE
-   * mapPartitions that accumulates per-(poly, band) histograms for the
-   * whole partition and emits only the merged partials. vs the previous
-   * plan-level joinWith(broadcast(pc)):
+   * join: the polygon layer (small by the zonal contract) is collected
+   * once with `limit(cap + 1)` — no Spark job for a local layer, at most
+   * the scan's jobs for a file-backed one — and covered into cells ON THE
+   * DRIVER ([[buildIndex]], bounded by [[MaxBroadcastPolyCells]] entries
+   * and [[MaxBroadcastRingBytes]] of vertices, both loud), then shipped
+   * via sparkContext.broadcast with each polygon's rings once. The tile
+   * side streams through ONE mapPartitions that accumulates
+   * per-(poly, band) histograms for the whole partition and emits only
+   * the merged partials. vs a plan-level joinWith(broadcast(pc)):
    *  - pixels never enter Tungsten rows between the tiler and the
    *    kernel (EliminateSerialization fuses the two typed operators —
    *    the join forced a serialize + per-matched-pair deserialize of
    *    every pixel array);
    *  - the pre-shuffle row count drops from (pairs x distinct values)
    *    to (polys x bands x values x partitions);
-   *  - ring/bbox conversion happens once per (cell, poly), not once per
+   *  - ring/bbox conversion happens once per polygon, not once per
    *    joined pair.
    * Output rows and the final groupBy are IDENTICAL to the join form
-   * (oracle-checked); the only shuffle is still the summary-sized
-   * histogram merge.
+   * (oracle-checked); the pass runs two Spark jobs (the aggregate's
+   * shuffle-map and result stages), and the only shuffle is the
+   * summary-sized histogram merge.
    */
   def histogram(tiles: Dataset[TileRow], polys: Dataset[PolyRow], cellRes: Int,
                 pipParallelism: Int = 0)
                (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    // driver-held build side (bounded, fail-fast — see MaxBroadcastPolyCells)
-    val pcLocal = polyCells(polys, cellRes).limit(MaxBroadcastPolyCells + 1).collect()
-    require(pcLocal.length <= MaxBroadcastPolyCells,
-      s"zonal prefilter index exceeds $MaxBroadcastPolyCells (cell, polygon) " +
-        "entries — coarsen cellRes or shard the polygon layer")
-    val index = new java.util.HashMap[Long, Array[PolyPre]]()
-    pcLocal.groupBy(_.cell_id).foreach { case (cell, entries) =>
-      index.put(cell, entries.map { p =>
-        val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
-        PolyPre(p.poly_id, rings,
-          p.rings.map(_.map(_.x)), p.rings.map(_.map(_.y)),
-          Geom.bbox(rings))
-      })
-    }
-    val bc = spark.sparkContext.broadcast(index)
+    // driver-held build side (bounded, fail-fast); more polygons than the
+    // entry cap fail too, so the limit never truncates silently
+    val layer = polys.limit(MaxBroadcastPolyCells + 1).collect()
+    require(layer.length <= MaxBroadcastPolyCells,
+      s"zonal polygon layer exceeds $MaxBroadcastPolyCells polygon parts " +
+        "— shard the polygon layer")
+    val bc = spark.sparkContext.broadcast(
+      buildIndex(layer, cellRes, MaxBroadcastPolyCells, MaxBroadcastRingBytes))
     // Dense cells concentrate (tile x poly) pairs in few input partitions
     // and the map-side join gives AQE no shuffle to split — the salted
     // repartition below is the north rule's fix. Worth it exactly when the

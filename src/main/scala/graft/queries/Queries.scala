@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{PolyRow, Pt}
 import graft.operators.{SpatialJoin, Knn}
+import graft.sources.ParquetTable
 import graft.text.{TextOps, EmbedOps}
 
 /**
@@ -26,20 +27,16 @@ import graft.text.{TextOps, EmbedOps}
  */
 object Queries {
 
-  private def li(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/lineitem.parquet")
-  private def orders(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/orders.parquet")
-  private def customer(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/customer.parquet")
-  private def part(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/part.parquet")
-  private def events(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/events.parquet")
-  private def docs(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/documents.parquet")
-  private def emb(spark: SparkSession, dir: String) =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+  // table readers: schema from the footer on the driver, no inference job
+  private def table(spark: SparkSession, dir: String, name: String) =
+    ParquetTable.read(spark, s"$dir/$name.parquet")
+  private def li(spark: SparkSession, dir: String) = table(spark, dir, "lineitem")
+  private def orders(spark: SparkSession, dir: String) = table(spark, dir, "orders")
+  private def customer(spark: SparkSession, dir: String) = table(spark, dir, "customer")
+  private def part(spark: SparkSession, dir: String) = table(spark, dir, "part")
+  private def events(spark: SparkSession, dir: String) = table(spark, dir, "events")
+  private def docs(spark: SparkSession, dir: String) = table(spark, dir, "documents")
+  private def emb(spark: SparkSession, dir: String) = table(spark, dir, "embeddings")
 
   /** Deterministic point cloud derived from lineitem — the "pixel"
     * relation for the SQL-checkable spatial queries. Coordinates land on

@@ -26,13 +26,14 @@ object ImageTable {
     StructField("y_max", DoubleType, nullable = false),
     StructField("px", DoubleType, nullable = false)))
 
-  def read(spark: SparkSession, path: String): Dataset[ImageRow] = {
-    val df = spark.read.parquet(path)
-    val missing = schema.fieldNames.toSet -- df.columns.toSet
-    require(missing.isEmpty, s"image table at $path missing columns: $missing")
-    df.select(schema.fieldNames.map(col): _*)
+  /** The image table at `path`, with no Spark job: the driver reads the
+    * one parquet footer Spark's schema inference would open, checks it
+    * against [[schema]] (a missing column or a wrong type fails here,
+    * naming the column, not deep in an executor decode) and reads with
+    * that schema — see [[ParquetTable]]. */
+  def read(spark: SparkSession, path: String): Dataset[ImageRow] =
+    ParquetTable.read(spark, path, schema)
       .as[ImageRow](org.apache.spark.sql.Encoders.product[ImageRow])
-  }
 
   /** Write with observed metrics; returns (rows, payloadBytes). The
     * observe node's metrics surface on the WRITE command's own

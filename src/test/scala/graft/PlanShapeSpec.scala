@@ -368,5 +368,19 @@ class ImageTableSpec extends AnyFunSuite {
     spark.range(3).toDF("image_id").write.mode("overwrite").parquet(path + "_bad")
     val err = intercept[IllegalArgumentException](ImageTable.read(spark, path + "_bad"))
     assert(err.getMessage.contains("missing columns"))
+    // a wrong-typed column fails on the driver too, naming the column
+    spark.read.parquet(path).withColumn("w", org.apache.spark.sql.functions.col("w").cast("long"))
+      .write.mode("overwrite").parquet(path + "_wide")
+    val wide = intercept[IllegalArgumentException](ImageTable.read(spark, path + "_wide"))
+    assert(wide.getMessage.contains("w is BIGINT, expected INT"), wide.getMessage)
+  }
+
+  test("read launches no Spark job; its schema is the one Spark infers") {
+    val path = Files.createTempDirectory("graft_imgtab_").toString + "/t"
+    ImageTable.write(spark.createDataset(Synth.images(6, seed = 4L, bands = 1).toSeq), path)
+    val (ds, jobs) = SparkJobs.during(spark)(ImageTable.read(spark, path))
+    assert(jobs == 0, s"ImageTable.read launched $jobs job(s)")
+    assert(ds.count() == 6)
+    assert(graft.sources.ParquetTable.schema(spark, path) == spark.read.parquet(path).schema)
   }
 }

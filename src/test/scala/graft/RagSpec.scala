@@ -104,23 +104,12 @@ class RagSpec extends AnyFunSuite {
       org.apache.spark.sql.Encoders.product[ImageRow])
     val imgs = spark.createDataset(GridImages.ragImages(4).toSeq)(
       org.apache.spark.sql.Encoders.product[ImageRow])
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = Rag.ragMerge(segs, imgs, thresh = 100.0)
-      val p = df.queryExecution.executedPlan.toString
-      Thread.sleep(500) // listener bus is async
-      assert(jobs.get() == 0,
-        s"building the ragMerge plan launched ${jobs.get()} job(s) — driver-side work crept back")
-      assert(p.contains("MapGroups"),
-        s"per-image merge must run executor-side via mapGroups:\n$p")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (p, jobs) = SparkJobs.during(spark)(
+      Rag.ragMerge(segs, imgs, thresh = 100.0).queryExecution.executedPlan.toString)
+    assert(jobs == 0,
+      s"building the ragMerge plan launched $jobs job(s) — driver-side work crept back")
+    assert(p.contains("MapGroups"),
+      s"per-image merge must run executor-side via mapGroups:\n$p")
   }
 
   test("ragMerge: per-image maxEdges fail-fast fires per image, not globally") {

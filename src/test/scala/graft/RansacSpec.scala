@@ -204,6 +204,28 @@ class RansacSpec extends AnyFunSuite {
     assert(rows == Set((0, 0), (19, 1)))
   }
 
+  test("burn rounds half-up exactly beyond 2^53 (Long floor division)") {
+    // col mode: d_drive = yb - ya = 1073741825, d_cross = xb - xa =
+    // 97612893, drive offset y - ya = 268435459, so num = d_cross * 268435459
+    // ~ 2.9 * 2^53 and (2*num + den) / (2*den) = 24403224 - 1/(2*den):
+    // the exact half-up is 24403223; through a double it rounds to 24403224
+    val px = Seq(("big", 1 << 26, 1 << 29, 0, 268435459)).toDF("image_id", "w", "h", "x", "y")
+    val models = Seq(("big", 0, 0, 0, 97612893, 1073741825, 2L))
+      .toDF("image_id", "strip", "xa", "ya", "xb", "yb", "inliers")
+    val got = Ransac.burnPredictions(px, models, binwidth = 40, colMode = true)
+      .collect().map(r => (r.getInt(2), r.getInt(3))).toSeq
+    assert(got == Seq((24403223, 268435459)))
+    // row mode with a negative drive direction: the line through (10, 5)
+    // and (4, 8) at x = 13 is y = 3.5, half-up 4; at x = 7 it is 6.5 -> 7
+    val rpx = Seq(("neg", 20, 20, 13, 5), ("neg", 20, 20, 7, 5))
+      .toDF("image_id", "w", "h", "x", "y")
+    val rmodels = Seq(("neg", 0, 10, 5, 4, 8, 2L))
+      .toDF("image_id", "strip", "xa", "ya", "xb", "yb", "inliers")
+    val rgot = Ransac.burnPredictions(rpx, rmodels, binwidth = 40, colMode = false)
+      .collect().map(r => (r.getInt(2), r.getInt(3))).toSet
+    assert(rgot == Set((13, 4), (7, 7)))
+  }
+
   test("sampled path (n > exhaustiveMax) is deterministic in the seed") {
     val ds = spark.createDataset(GridImages.images(2, bands = 1).toSeq)
     val edgePx = Hough.edgePixels(ds, thresh = 40.0) // dense: > 64 pts/strip
