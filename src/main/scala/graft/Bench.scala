@@ -65,6 +65,28 @@ object Bench {
   @volatile private var abFineSplit = false
   @volatile private var abCnnSplit = "32m"
 
+  /** Runs `body` with `confs` set on the session, then puts each key
+    * back to its previous value (unset if it had none) — also when
+    * `body` throws, so a failed leg never leaks its overrides into the
+    * next one. Wrap the action too: confs are read at plan time. */
+  private[graft] def withConfs[A](spark: SparkSession, confs: (String, String)*)
+                                 (body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The overrides of a width-`parallelism` leg: shuffle width and, when
+    * given, the scan split size; none for `parallelism <= 0`. */
+  private def legConfs(parallelism: Int, split: Option[String]): Seq[(String, String)] =
+    if (parallelism <= 0) Nil
+    else ("spark.sql.shuffle.partitions" -> parallelism.toString) +:
+      split.map("spark.sql.files.maxPartitionBytes" -> _).toSeq
+
   /** Materialize the synthetic image table to parquet ONCE (the real
     * pipeline reads a table, not driver memory — also keeps task sizes
     * small). Returns (path, decoded-pixel count = sum w*h*bands).
@@ -111,40 +133,29 @@ object Bench {
     // is the opposite regime (~6 uneven default bins vs coalesce(4)) and
     // keeps its override — split size must be tuned to the table, which
     // is exactly the Snapshot.compact co-tuning note at cluster scale.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if (parallelism > 0) {
-      spark.conf.set("spark.sql.shuffle.partitions", parallelism.toString)
-      if (abFineSplit)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "8m")
+    // Restored after the action, so a later parallelism=0 run in the
+    // same session doesn't silently inherit the last scaling width.
+    withConfs(spark, legConfs(parallelism, Option.when(abFineSplit)("8m")): _*) {
+      val images1 = spark.read.parquet(imagesPath)
+      val images0 = if (limit > 0) images1.limit(limit) else images1
+      val images = (if (parallelism > 0) images0.coalesce(parallelism) else images0)
+        .as[ImageRow](Encoders.product[ImageRow])
+      val polys = spark.createDataset(
+        gen.Synth.polygons(nExtra = 64).toSeq)(Encoders.product[PolyRow])
+      val cellRes = operators.Tiler.resForCellSize(64.0)
+      val tiles = operators.Tiler.tiles(images, tileSize = 64, cellRes = cellRes)
+      // no pipParallelism repartition here: at this polygon density the PIP
+      // kernel is light relative to decode, and the extra shuffle costs more
+      // than the skew it fixes (measured; Skew.saltedRepartition is for
+      // PIP-dominated workloads)
+      val hist = operators.ZonalStats.histogram(tiles, polys, cellRes)
+      // the timed unit is the north-rule metric: spatial-join + tile
+      // assignment (decode -> tile -> broadcast join -> PIP -> histogram
+      // agg). The stats() windows are a tiny constant tail measured via the
+      // headline queries, not inside the scaling unit. Consumed via the
+      // noop sink so the final agg expressions stay in the timed plan.
+      consume(hist)
     }
-    val images1 = spark.read.parquet(imagesPath)
-    val images0 = if (limit > 0) images1.limit(limit) else images1
-    val images = (if (parallelism > 0) images0.coalesce(parallelism) else images0)
-      .as[ImageRow](Encoders.product[ImageRow])
-    val polys = spark.createDataset(
-      gen.Synth.polygons(nExtra = 64).toSeq)(Encoders.product[PolyRow])
-    val cellRes = operators.Tiler.resForCellSize(64.0)
-    val tiles = operators.Tiler.tiles(images, tileSize = 64, cellRes = cellRes)
-    // no pipParallelism repartition here: at this polygon density the PIP
-    // kernel is light relative to decode, and the extra shuffle costs more
-    // than the skew it fixes (measured; Skew.saltedRepartition is for
-    // PIP-dominated workloads)
-    val hist = operators.ZonalStats.histogram(tiles, polys, cellRes)
-    // the timed unit is the north-rule metric: spatial-join + tile
-    // assignment (decode -> tile -> broadcast join -> PIP -> histogram
-    // agg). The stats() windows are a tiny constant tail measured via the
-    // headline queries, not inside the scaling unit. Consumed via the
-    // noop sink so the final agg expressions stay in the timed plan.
-    consume(hist)
-    // restore AFTER the action (conf reads at plan time) — including
-    // shuffle.partitions, so a later parallelism=0 run in the same
-    // session doesn't silently inherit the last scaling width
-    if (parallelism > 0) {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      if (abFineSplit)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
-    }
-    ()
   }
 
   /** CNN inference over an image table: haloed multiTiles ->
@@ -166,26 +177,16 @@ object Bench {
                      limit: Int, parallelism: Int = 0): Unit = {
     import org.apache.spark.sql.Encoders
     implicit val s: SparkSession = spark
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if (parallelism > 0) {
-      spark.conf.set("spark.sql.shuffle.partitions", parallelism.toString)
-      if (abCnnSplit != "off")
-        spark.conf.set("spark.sql.files.maxPartitionBytes", abCnnSplit)
+    withConfs(spark,
+        legConfs(parallelism, Option.when(abCnnSplit != "off")(abCnnSplit)): _*) {
+      val im0 = spark.read.parquet(p)
+      val im1 = if (limit > 0) im0.limit(limit) else im0
+      val im = (if (parallelism > 0) im1.coalesce(parallelism) else im1)
+        .as[ImageRow](Encoders.product[ImageRow])
+      val cellRes = operators.Tiler.resForCellSize(64.0)
+      val tiles = operators.Tiler.multiTiles(im, 64, cellRes, halo = net.halo)
+      consume(operators.ConvNet.segPredictTiles(tiles, net, 64).toDF())
     }
-    val im0 = spark.read.parquet(p)
-    val im1 = if (limit > 0) im0.limit(limit) else im0
-    val im = (if (parallelism > 0) im1.coalesce(parallelism) else im1)
-      .as[ImageRow](Encoders.product[ImageRow])
-    val cellRes = operators.Tiler.resForCellSize(64.0)
-    val tiles = operators.Tiler.multiTiles(im, 64, cellRes, halo = net.halo)
-    consume(operators.ConvNet.segPredictTiles(tiles, net, 64).toDF())
-    // restore AFTER the action — incl. shuffle.partitions (see pipeline)
-    if (parallelism > 0) {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      if (abCnnSplit != "off")
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
-    }
-    ()
   }
 
   private def time[A](f: => A): (Double, A) = {

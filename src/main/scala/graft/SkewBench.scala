@@ -126,11 +126,8 @@ object SkewBench {
     def knnRun(): Unit = {
       operators.Knn.knnJoin(skewQs, skewPts, k = 5, res = cellRes, r1 = 1).count(); ()
     }
-    def withSkewJoin(on: Boolean)(f: => Unit): Double = {
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", on.toString)
-      try time(f) finally
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    }
+    def withSkewJoin(on: Boolean)(f: => Unit): Double =
+      Bench.withConfs(spark, "spark.sql.adaptive.skewJoin.enabled" -> on.toString)(time(f))
     knnRun() // warm
     val aqeRuns = (1 to 3).map(_ => (withSkewJoin(false)(knnRun()), withSkewJoin(true)(knnRun())))
     val toff = aqeRuns.map(_._1).min; val ton = aqeRuns.map(_._2).min

@@ -11,7 +11,9 @@ package graft.core
  * Point-in-polygon is ray casting with a winding-number fallback for
  * boundary ambiguity, per the north rule (BASELINE.json). Polygons follow
  * FIXTURES.md §3: `rings(0)` = exterior, others = holes; even-odd over
- * all rings implements holes naturally.
+ * all rings implements holes naturally. There is ONE kernel,
+ * [[pointInPolygonPacked]] over [[PackedPoly]] rings; the tuple-ring
+ * form and the Catalyst path (`PipRuntime`) go through its edge test.
  */
 object Geom {
 
@@ -24,14 +26,33 @@ object Geom {
     * vertex; closure is implicit. */
   type Rings = Array[Array[(Double, Double)]]
 
-  def bbox(rings: Rings): BBox = {
-    var x0 = Double.MaxValue; var y0 = Double.MaxValue
-    var x1 = Double.MinValue; var y1 = Double.MinValue
-    rings.foreach(_.foreach { case (x, y) =>
-      if (x < x0) x0 = x; if (x > x1) x1 = x
-      if (y < y0) y0 = y; if (y > y1) y1 = y
-    })
-    BBox(x0, y0, x1, y1)
+  /** Bounding box of all ring vertices; inverted (x0 > x1) for no
+    * vertices. */
+  def bbox(rings: Rings): BBox = PackedPoly(rings).box
+
+  /** A polygon's rings packed once into per-ring flat vertex arrays
+    * (`xss(r)(i)`, `yss(r)(i)`), with its bbox — the one form every PIP
+    * caller tests against. Build it once per polygon (never per pixel):
+    * the per-pixel kernel then reads doubles from contiguous arrays
+    * instead of chasing a Tuple2 pointer per vertex. */
+  final case class PackedPoly(xss: Array[Array[Double]], yss: Array[Array[Double]],
+                              box: BBox) {
+    def contains(px: Double, py: Double): Boolean = pointInPolygonPacked(px, py, xss, yss)
+  }
+
+  object PackedPoly {
+    def apply(rings: Rings): PackedPoly =
+      packed(rings.map(_.map(_._1)), rings.map(_.map(_._2)))
+    def apply(rings: Array[Array[graft.Pt]]): PackedPoly =
+      packed(rings.map(_.map(_.x)), rings.map(_.map(_.y)))
+
+    private def packed(xss: Array[Array[Double]], yss: Array[Array[Double]]): PackedPoly = {
+      var x0 = Double.MaxValue; var y0 = Double.MaxValue
+      var x1 = Double.MinValue; var y1 = Double.MinValue
+      xss.foreach(_.foreach { x => if (x < x0) x0 = x; if (x > x1) x1 = x })
+      yss.foreach(_.foreach { y => if (y < y0) y0 = y; if (y > y1) y1 = y })
+      PackedPoly(xss, yss, BBox(x0, y0, x1, y1))
+    }
   }
 
   private val Eps = 1e-12
@@ -58,36 +79,72 @@ object Geom {
     dot >= -Eps && dot <= len2 + Eps
   }
 
+  /** [[edgeStep]] result: the probe lies on the edge (inside). */
+  final val OnEdge = -1
+  /** [[edgeStep]] bit: the probe's rightward ray crosses the edge. */
+  final val Crosses = 1
+  /** [[edgeStep]] bit: an edge endpoint lies within Eps of the probe's
+    * scanline, so the crossing count is ambiguous. */
+  final val Ambiguous = 2
+
+  /** One edge (a -> b) of the ray cast for probe (px, py): [[OnEdge]], or
+    * the [[Crosses]] | [[Ambiguous]] bits. The edge test of both the
+    * packed kernel and the Catalyst path (`PipRuntime`). */
+  def edgeStep(px: Double, py: Double, ax: Double, ay: Double,
+               bx: Double, by: Double): Int = {
+    if (onSegment(px, py, ax, ay, bx, by)) return OnEdge
+    val amb = if (math.abs(ay - py) < Eps || math.abs(by - py) < Eps) Ambiguous else 0
+    if ((ay > py) != (by > py)) {
+      val xInt = ax + (py - ay) / (by - ay) * (bx - ax)
+      if (xInt > px) return amb | Crosses
+    }
+    amb
+  }
+
+  /** Winding-number contribution (+1, -1 or 0) of edge a -> b around
+    * (px, py). */
+  def windingStep(px: Double, py: Double, ax: Double, ay: Double,
+                  bx: Double, by: Double): Int = {
+    val isLeft = (bx - ax) * (py - ay) - (px - ax) * (by - ay)
+    if (ay <= py) { if (by > py && isLeft > 0) 1 else 0 }
+    else if (by <= py && isLeft < 0) -1 else 0
+  }
+
+  /** [[pointInPolygonPacked]] over tuple rings, packed per call — for
+    * one-off tests; per-pixel callers hold a [[PackedPoly]]. */
+  def pointInPolygon(px: Double, py: Double, rings: Rings): Boolean =
+    PackedPoly(rings).contains(px, py)
+
   /**
-   * Even-odd (crossing-number) test over all rings; a point exactly on any
-   * edge is defined as inside (deterministic boundary convention). When the
-   * crossing count is numerically ambiguous (a vertex lies within Eps of
-   * the scanline), falls back to the nonzero winding number, mirroring the
-   * north rule's "ray-casting with winding-number fallback".
+   * THE point-in-polygon kernel, over per-ring flat (xs, ys) vertex
+   * arrays. Even-odd (crossing-number) test over all rings; a point
+   * exactly on any edge is defined as inside (deterministic boundary
+   * convention). When the crossing count is numerically ambiguous (a
+   * vertex lies within Eps of the scanline), falls back to the nonzero
+   * winding number, mirroring the north rule's "ray-casting with
+   * winding-number fallback".
    */
-  def pointInPolygon(px: Double, py: Double, rings: Rings): Boolean = {
+  def pointInPolygonPacked(px: Double, py: Double,
+                           xss: Array[Array[Double]],
+                           yss: Array[Array[Double]]): Boolean = {
     var crossings = 0
-    var ambiguous = false
+    var ambiguous = 0
     var r = 0
-    while (r < rings.length) {
-      val ring = rings(r)
-      val n = ring.length
+    while (r < xss.length) {
+      val xs = xss(r); val ys = yss(r)
+      val n = xs.length
       var i = 0
       while (i < n) {
-        val (ax, ay) = ring(i)
-        val (bx, by) = ring((i + 1) % n)
-        if (onSegment(px, py, ax, ay, bx, by)) return true
-        if (math.abs(ay - py) < Eps || math.abs(by - py) < Eps) ambiguous = true
-        val crosses = (ay > py) != (by > py)
-        if (crosses) {
-          val xInt = ax + (py - ay) / (by - ay) * (bx - ax)
-          if (xInt > px) crossings += 1
-        }
+        val j = if (i + 1 < n) i + 1 else 0
+        val s = edgeStep(px, py, xs(i), ys(i), xs(j), ys(j))
+        if (s == OnEdge) return true
+        crossings ^= s & Crosses
+        ambiguous |= s & Ambiguous
         i += 1
       }
       r += 1
     }
-    if (!ambiguous) (crossings & 1) == 1
+    if (ambiguous == 0) crossings == Crosses
     else {
       // Orientation-independent fallback: a ring "contains" the point iff
       // its own winding number is nonzero; even-odd parity across rings
@@ -95,98 +152,32 @@ object Geom {
       // (fixtures wind holes the same way as exteriors).
       var inside = false
       var r = 0
-      while (r < rings.length) {
-        if (ringWinding(px, py, rings(r)) != 0) inside = !inside
-        r += 1
-      }
-      inside
-    }
-  }
-
-  /** Packed-ring form of [[pointInPolygon]]: identical algorithm and
-    * arithmetic over per-ring flat (xs, ys) vertex arrays — decision-
-    * identical for every input, but per-pixel kernels read doubles from
-    * contiguous arrays instead of chasing a Tuple2 pointer per vertex. */
-  def pointInPolygonPacked(px: Double, py: Double,
-                           xss: Array[Array[Double]],
-                           yss: Array[Array[Double]]): Boolean = {
-    var crossings = 0
-    var ambiguous = false
-    var r = 0
-    while (r < xss.length) {
-      val xs = xss(r); val ys = yss(r)
-      val n = xs.length
-      var i = 0
-      while (i < n) {
-        val ax = xs(i); val ay = ys(i)
-        val j = if (i + 1 < n) i + 1 else 0
-        val bx = xs(j); val by = ys(j)
-        if (onSegment(px, py, ax, ay, bx, by)) return true
-        if (math.abs(ay - py) < Eps || math.abs(by - py) < Eps) ambiguous = true
-        val crosses = (ay > py) != (by > py)
-        if (crosses) {
-          val xInt = ax + (py - ay) / (by - ay) * (bx - ax)
-          if (xInt > px) crossings += 1
-        }
-        i += 1
-      }
-      r += 1
-    }
-    if (!ambiguous) (crossings & 1) == 1
-    else {
-      var inside = false
-      var r = 0
       while (r < xss.length) {
-        if (ringWindingPacked(px, py, xss(r), yss(r)) != 0) inside = !inside
+        val xs = xss(r); val ys = yss(r)
+        val n = xs.length
+        var wn = 0
+        var i = 0
+        while (i < n) {
+          val j = if (i + 1 < n) i + 1 else 0
+          wn += windingStep(px, py, xs(i), ys(i), xs(j), ys(j))
+          i += 1
+        }
+        if (wn != 0) inside = !inside
         r += 1
       }
       inside
     }
   }
 
-  private def ringWindingPacked(px: Double, py: Double,
-                                xs: Array[Double], ys: Array[Double]): Int = {
-    var wn = 0
-    val n = xs.length
-    var i = 0
-    while (i < n) {
-      val ax = xs(i); val ay = ys(i)
-      val j = if (i + 1 < n) i + 1 else 0
-      val bx = xs(j); val by = ys(j)
-      val isLeft = (bx - ax) * (py - ay) - (px - ax) * (by - ay)
-      if (ay <= py) { if (by > py && isLeft > 0) wn += 1 }
-      else if (by <= py && isLeft < 0) wn -= 1
-      i += 1
-    }
-    wn
-  }
-
-  /** Winding number of a single ring around the point. */
-  def ringWinding(px: Double, py: Double, ring: Array[(Double, Double)]): Int = {
-    var wn = 0
-    val n = ring.length
-    var i = 0
-    while (i < n) {
-      val (ax, ay) = ring(i)
-      val (bx, by) = ring((i + 1) % n)
-      val isLeft = (bx - ax) * (py - ay) - (px - ax) * (by - ay)
-      if (ay <= py) { if (by > py && isLeft > 0) wn += 1 }
-      else if (by <= py && isLeft < 0) wn -= 1
-      i += 1
-    }
-    wn
-  }
-
-  /** Nonzero winding number summed across rings (holes wind opposite). */
-  def windingNumber(px: Double, py: Double, rings: Rings): Int = {
-    var wn = 0
-    var r = 0
-    while (r < rings.length) {
-      wn += ringWinding(px, py, rings(r))
-      r += 1
-    }
-    wn
-  }
+  /** Nonzero winding number summed across rings (holes wind opposite) —
+    * an independent reference for the ray cast, used by the specs. */
+  def windingNumber(px: Double, py: Double, rings: Rings): Int =
+    rings.iterator.map { ring =>
+      ring.indices.map { i =>
+        val (ax, ay) = ring(i); val (bx, by) = ring((i + 1) % ring.length)
+        windingStep(px, py, ax, ay, bx, by)
+      }.sum
+    }.sum
 
   /** Signed area of one ring (positive = CCW). Shoelace. */
   def signedArea(ring: Array[(Double, Double)]): Double = {
@@ -309,34 +300,48 @@ object Geom {
   /** Does axis-aligned rect intersect the polygon (conservative exact):
     * true if any rect corner is inside, any polygon vertex is inside the
     * rect, or any edge pair intersects. Used for cell covering. */
-  def rectIntersectsPolygon(rect: BBox, rings: Rings): Boolean =
-    rectIntersectsPolygon(rect, rings, bbox(rings))
-
-  /** Overload with a PRECOMPUTED polygon bbox: the bbox prefilter scans
-    * every ring vertex, so a caller testing MANY rects against one
-    * polygon (coverPolygon tests up to 16M cells) must not recompute it
-    * per rect — O(cells x vertices) driver time on the broadcast build
-    * side. */
-  def rectIntersectsPolygon(rect: BBox, rings: Rings, polyBox: BBox): Boolean = {
-    if (!rect.intersects(polyBox)) return false
-    if (pointInPolygon(rect.x0, rect.y0, rings) || pointInPolygon(rect.x1, rect.y0, rings) ||
-        pointInPolygon(rect.x0, rect.y1, rings) || pointInPolygon(rect.x1, rect.y1, rings)) return true
-    if (rings.exists(_.exists { case (x, y) => rect.contains(x, y) })) return true
-    anyEdgeIntersectsRect(rect, rings)
+  def rectIntersectsPolygon(rect: BBox, poly: PackedPoly): Boolean = {
+    if (!rect.intersects(poly.box)) return false
+    if (poly.contains(rect.x0, rect.y0) || poly.contains(rect.x1, rect.y0) ||
+        poly.contains(rect.x0, rect.y1) || poly.contains(rect.x1, rect.y1)) return true
+    anyVertexInRect(rect, poly) || anyEdgeIntersectsRect(rect, poly)
   }
 
-  private def anyEdgeIntersectsRect(rect: BBox, rings: Rings): Boolean = {
-    val corners = Array((rect.x0, rect.y0), (rect.x1, rect.y0), (rect.x1, rect.y1), (rect.x0, rect.y1))
+  /** Is the rect ENTIRELY inside the polygon (holes respected)? True only
+    * when the rect sits inside the polygon's bbox, every rect corner is
+    * inside, no polygon vertex lies inside the rect (a hole fully inside
+    * would), and no polygon edge crosses the rect boundary — the
+    * per-pixel-PIP skip condition for interior tiles. The bbox check
+    * runs first, so boundary/exterior rects (the common case) skip the
+    * ring scans. */
+  def rectInsidePolygon(rect: BBox, poly: PackedPoly): Boolean = {
+    val b = poly.box
+    b.x0 <= rect.x0 && rect.x1 <= b.x1 && b.y0 <= rect.y0 && rect.y1 <= b.y1 &&
+      poly.contains(rect.x0, rect.y0) && poly.contains(rect.x1, rect.y0) &&
+      poly.contains(rect.x0, rect.y1) && poly.contains(rect.x1, rect.y1) &&
+      !anyVertexInRect(rect, poly) && !anyEdgeIntersectsRect(rect, poly)
+  }
+
+  private def anyVertexInRect(rect: BBox, poly: PackedPoly): Boolean =
+    poly.xss.indices.exists { r =>
+      val xs = poly.xss(r); val ys = poly.yss(r)
+      xs.indices.exists(i => rect.contains(xs(i), ys(i)))
+    }
+
+  private def anyEdgeIntersectsRect(rect: BBox, poly: PackedPoly): Boolean = {
+    val cxs = Array(rect.x0, rect.x1, rect.x1, rect.x0)
+    val cys = Array(rect.y0, rect.y0, rect.y1, rect.y1)
     var r = 0
-    while (r < rings.length) {
-      val ring = rings(r); val n = ring.length
+    while (r < poly.xss.length) {
+      val xs = poly.xss(r); val ys = poly.yss(r); val n = xs.length
       var i = 0
       while (i < n) {
-        val (ax, ay) = ring(i); val (bx, by) = ring((i + 1) % n)
+        val j = if (i + 1 < n) i + 1 else 0
         var c = 0
         while (c < 4) {
-          val (cx0, cy0) = corners(c); val (cx1, cy1) = corners((c + 1) % 4)
-          if (segmentsIntersect(ax, ay, bx, by, cx0, cy0, cx1, cy1)) return true
+          val d = (c + 1) % 4
+          if (segmentsIntersect(xs(i), ys(i), xs(j), ys(j), cxs(c), cys(c), cxs(d), cys(d)))
+            return true
           c += 1
         }
         i += 1
@@ -344,18 +349,6 @@ object Geom {
       r += 1
     }
     false
-  }
-
-  /** Is the rect ENTIRELY inside the polygon (holes respected)? True only
-    * when every rect corner is inside, no polygon vertex lies inside the
-    * rect (a hole fully inside would), and no polygon edge crosses the
-    * rect boundary — the per-pixel-PIP skip condition for interior tiles. */
-  def rectInsidePolygon(rect: BBox, rings: Rings): Boolean = {
-    if (!(pointInPolygon(rect.x0, rect.y0, rings) && pointInPolygon(rect.x1, rect.y0, rings) &&
-          pointInPolygon(rect.x0, rect.y1, rings) && pointInPolygon(rect.x1, rect.y1, rings)))
-      return false
-    if (rings.exists(_.exists { case (x, y) => rect.contains(x, y) })) return false
-    !anyEdgeIntersectsRect(rect, rings)
   }
 
   private def segmentsIntersect(ax: Double, ay: Double, bx: Double, by: Double,

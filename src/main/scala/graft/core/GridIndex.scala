@@ -129,9 +129,6 @@ object GridIndex {
   /** Cells whose square actually intersects the polygon — the broadcast
     * build side of the prefilter join (exactness comes from the PIP refine,
     * so this only needs to be a superset-free-enough cover). */
-  def coverPolygon(rings: Geom.Rings, res: Int): Array[Long] = {
-    val box = Geom.bbox(rings) // computed ONCE, not per candidate cell
-    coverBBox(box, res)
-      .filter(c => Geom.rectIntersectsPolygon(cellBounds(c), rings, box))
-  }
+  def coverPolygon(poly: Geom.PackedPoly, res: Int): Array[Long] =
+    coverBBox(poly.box, res).filter(c => Geom.rectIntersectsPolygon(cellBounds(c), poly))
 }

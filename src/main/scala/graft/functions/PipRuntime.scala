@@ -11,17 +11,17 @@ import graft.core.Geom
  * Double)] materialization, so the expression stays cheap inside
  * WholeStageCodegen's hot loop.
  *
- * Semantics are IDENTICAL to Geom.pointInPolygon (boundary = inside,
- * even-odd with winding fallback on scanline ambiguity) — property-
- * tested against it in SpatialFunctionsSpec.
+ * Only the vertex walk is its own: each edge goes through the packed
+ * kernel's edge test ([[Geom.edgeStep]]) and winding step
+ * ([[Geom.windingStep]]), so decisions match `Geom.pointInPolygonPacked`
+ * (boundary = inside, even-odd with winding fallback on scanline
+ * ambiguity) — spec-checked against it in SpatialFunctionsSpec.
  */
 object PipRuntime {
 
-  private val Eps = 1e-12
-
   def eval(px: Double, py: Double, rings: ArrayData): Boolean = {
     var crossings = 0
-    var ambiguous = false
+    var ambiguous = 0
     val nRings = rings.numElements()
     var r = 0
     while (r < nRings) {
@@ -43,21 +43,19 @@ object PipRuntime {
           val b = ring.getStruct(i + 1, 2)
           bx = b.getDouble(0); by = b.getDouble(1)
         }
-        if (onSegment(px, py, ax, ay, bx, by)) return true
-        if (math.abs(ay - py) < Eps || math.abs(by - py) < Eps) ambiguous = true
-        if ((ay > py) != (by > py)) {
-          val xInt = ax + (py - ay) / (by - ay) * (bx - ax)
-          if (xInt > px) crossings += 1
-        }
+        val s = Geom.edgeStep(px, py, ax, ay, bx, by)
+        if (s == Geom.OnEdge) return true
+        crossings ^= s & Geom.Crosses
+        ambiguous |= s & Geom.Ambiguous
         ax = bx; ay = by
         i += 1
       }
       r += 1
     }
-    if (!ambiguous) (crossings & 1) == 1
+    if (ambiguous == 0) crossings == Geom.Crosses
     else {
-      // per-ring even-odd parity, orientation-independent (mirrors
-      // Geom.pointInPolygon's fallback — hole rings may wind either way)
+      // per-ring even-odd parity, orientation-independent (the packed
+      // kernel's fallback — hole rings may wind either way)
       var inside = false
       var rr = 0
       while (rr < nRings) {
@@ -68,33 +66,6 @@ object PipRuntime {
     }
   }
 
-  /** hypot-guarded form, decision-identical to the unguarded test for
-    * every input — see Geom.onSegment for the bound derivation. */
-  private def onSegment(px: Double, py: Double, ax: Double, ay: Double,
-                        bx: Double, by: Double): Boolean = {
-    val dxe = bx - ax; val dye = by - ay
-    val cross = dxe * (py - ay) - dye * (px - ax)
-    val ac = math.abs(cross)
-    val m = math.max(1.0, math.max(math.abs(dxe), math.abs(dye)))
-    if (ac > Eps * m * 1.5) return false
-    if (ac > Eps * m * 0.999999999 &&
-        ac > Eps * math.max(1.0, math.hypot(dxe, dye))) return false
-    val dot = (px - ax) * dxe + (py - ay) * dye
-    val len2 = dxe * dxe + dye * dye
-    dot >= -Eps && dot <= len2 + Eps
-  }
-
-  def windingNumber(px: Double, py: Double, rings: ArrayData): Int = {
-    var wn = 0
-    val nRings = rings.numElements()
-    var r = 0
-    while (r < nRings) {
-      wn += ringWinding(px, py, rings.getArray(r))
-      r += 1
-    }
-    wn
-  }
-
   private def ringWinding(px: Double, py: Double, ring: ArrayData): Int = {
     var wn = 0
     val n = ring.numElements()
@@ -102,11 +73,8 @@ object PipRuntime {
     while (i < n) {
       val a = ring.getStruct(i, 2)
       val b = ring.getStruct((i + 1) % n, 2)
-      val ax = a.getDouble(0); val ay = a.getDouble(1)
-      val bx = b.getDouble(0); val by = b.getDouble(1)
-      val isLeft = (bx - ax) * (py - ay) - (px - ax) * (by - ay)
-      if (ay <= py) { if (by > py && isLeft > 0) wn += 1 }
-      else if (by <= py && isLeft < 0) wn -= 1
+      wn += Geom.windingStep(px, py, a.getDouble(0), a.getDouble(1),
+        b.getDouble(0), b.getDouble(1))
       i += 1
     }
     wn

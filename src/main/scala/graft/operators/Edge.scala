@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{ImageRow, MultiTileRow}
 import graft.core.PixelCodec
@@ -235,14 +235,24 @@ object Edge {
     hysteresis8(cand0).select(col("image_id"), col("x"), col("y"))
   }
 
+  /** Per-partition bound on the candidate rows [[hysteresis8]] buffers
+    * (~300 B per row with its index entry, so ~1.2 GB): a pathological
+    * all-edges partition fails with a message instead of exhausting the
+    * executor heap. */
+  val MaxHysteresisPartitionRows: Int = 1 << 22
+
   /** Distributed double-threshold hysteresis: keeps every input pixel
     * whose 8-connected component (through weak-or-strong pixels of the
     * same image) contains a strong pixel — exactly the BFS flood fill,
     * solved as connected components over the SPARSE candidate graph.
     * Input needs (image_id, x, y, strong) columns; extra columns ride
     * through to the kept output rows. Shared by [[cannyTiles]] and
-    * [[PhaseCong.phaseCongEdgesTiles]]. */
-  private[operators] def hysteresis8(cand0: DataFrame): DataFrame = {
+    * [[PhaseCong.phaseCongEdgesTiles]]. Each partition's candidates are
+    * buffered whole (twice: labeling and probe passes); past
+    * `maxPartitionRows` of them the pass fails with a message. */
+  private[operators] def hysteresis8(cand0: DataFrame,
+                                     maxPartitionRows: Int = MaxHysteresisPartitionRows)
+      : DataFrame = {
     import org.apache.spark.sql.types.LongType
     // TWO-LEVEL connected components (round 6): the distributed CC used
     // to run on the PIXEL graph — every candidate pixel a node, every
@@ -273,14 +283,28 @@ object Edge {
     val iY = schema.fieldIndex("y")
     val iStrong = schema.fieldIndex("strong")
     val labeledSchema = schema.add("lab", LongType, nullable = false)
-    val labeled0 = cand0.mapPartitions { it =>
-      val rows = it.toArray
+    // one partition's candidate rows and their (image_id, x, y) -> row
+    // index, bounded by maxPartitionRows; both passes build it here, so
+    // the probe pass's map matches the labeling exactly
+    def indexed(it: Iterator[Row]): (Array[Row], java.util.HashMap[(String, Int, Int), Integer]) = {
+      val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+      while (it.hasNext) {
+        buf += it.next()
+        require(buf.length <= maxPartitionRows,
+          s"hysteresis: one partition holds more than $maxPartitionRows candidate " +
+            "pixels — split the candidate rows over more partitions")
+      }
+      val rows = buf.toArray
       val idx = new java.util.HashMap[(String, Int, Int), Integer](rows.length * 2)
       var i = 0
       while (i < rows.length) {
         idx.put((rows(i).getString(iImg), rows(i).getInt(iX), rows(i).getInt(iY)), i)
         i += 1
       }
+      (rows, idx)
+    }
+    val labeled0 = cand0.mapPartitions { it =>
+      val (rows, idx) = indexed(it)
       val parent = Array.tabulate(rows.length)(identity)
       def find(a: Int): Int = {
         var r = a
@@ -292,7 +316,7 @@ object Edge {
       // forward 4 of the 8 directions: every local undirected adjacency
       // considered exactly once
       val dxs = Array(1, -1, 0, 1); val dys = Array(0, 1, 1, 1)
-      i = 0
+      var i = 0
       while (i < rows.length) {
         val img = rows(i).getString(iImg)
         val x = rows(i).getInt(iX); val y = rows(i).getInt(iY)
@@ -309,8 +333,7 @@ object Edge {
       }
       val pid = org.apache.spark.TaskContext.getPartitionId().toLong
       rows.iterator.zipWithIndex.map { case (r, k) =>
-        org.apache.spark.sql.Row.fromSeq(
-          r.toSeq :+ ((pid << 40) | find(k).toLong))
+        Row.fromSeq(r.toSeq :+ ((pid << 40) | find(k).toLong))
       }
     }(org.apache.spark.sql.Encoders.row(labeledSchema))
     // Lazy RELIABLE checkpoint does not cache, so on the cluster path
@@ -330,13 +353,7 @@ object Edge {
     // rows, so it matches the labeling pass exactly)
     import cand0.sparkSession.implicits._
     val probes = labeled.mapPartitions { it =>
-      val rows = it.toArray
-      val idx = new java.util.HashMap[(String, Int, Int), Integer](rows.length * 2)
-      var i = 0
-      while (i < rows.length) {
-        idx.put((rows(i).getString(iImg), rows(i).getInt(iX), rows(i).getInt(iY)), i)
-        i += 1
-      }
+      val (rows, idx) = indexed(it)
       val dxs = Array(1, -1, 0, 1); val dys = Array(0, 1, 1, 1)
       rows.iterator.flatMap { r =>
         val img = r.getString(iImg)

@@ -44,8 +44,7 @@ object Glcm {
     val lv = levels
     joined.flatMap { case (t, p) =>
       val cb = GridIndex.cellBounds(p.cell_id)
-      val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
-      val pb = Geom.bbox(rings)
+      val poly = Geom.PackedPoly(p.rings)
       // interior-tile shortcut (the ZonalStats.histogram fast path):
       // when the rect spanned by ALL pixel centers this call can touch
       // (core + one offset of halo) sits entirely inside the polygon,
@@ -55,10 +54,7 @@ object Glcm {
       val centers = Geom.BBox(
         t.x_min + 0.5 * t.px - pad, t.y_max - (t.th - 0.5) * t.px - pad,
         t.x_min + (t.tw - 0.5) * t.px + pad, t.y_max - 0.5 * t.px + pad)
-      val fullInside =
-        pb.x0 <= centers.x0 && centers.x1 <= pb.x1 &&
-        pb.y0 <= centers.y0 && centers.y1 <= pb.y1 &&
-        Geom.rectInsidePolygon(centers, rings)
+      val fullInside = Geom.rectInsidePolygon(centers, poly)
       val acc = new scala.collection.mutable.HashMap[(Int, Int), Long]
       def quant(v: Float): Int = math.min(lv - 1, math.max(0, (v / maxVal * lv).toInt))
       // nodata pixels form NO pair (the reference masks them out of the
@@ -73,13 +69,13 @@ object Glcm {
         val cx = t.x_min + (c + 0.5) * t.px
         val cy = t.y_max - (row + 0.5) * t.px
         cx >= cb.x0 && cx < cb.x1 && cy >= cb.y0 && cy < cb.y1 &&
-          (fullInside || Geom.pointInPolygon(cx, cy, rings))
+          (fullInside || poly.contains(cx, cy))
       }
       def insidePartner(row: Int, c: Int): Boolean =
         fullInside || {
           val cx = t.x_min + (c + 0.5) * t.px
           val cy = t.y_max - (row + 0.5) * t.px
-          Geom.pointInPolygon(cx, cy, rings)
+          poly.contains(cx, cy)
         }
       // core region inside the (possibly halo-expanded) pixel array —
       // the ONE shared definition (Tiler.coreWindow), so the cropping

@@ -142,7 +142,7 @@ object RasterOps {
     val px = tiles.joinWith(broadcast(pc), tiles("cell_id") === pc("cell_id"))
       .flatMap { case (t, p) =>
         val cb = GridIndex.cellBounds(p.cell_id)
-        val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
+        val poly = Geom.PackedPoly(p.rings)
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Double, Double)]
         var row = 0
         while (row < t.th) {
@@ -151,7 +151,7 @@ object RasterOps {
           while (c < t.tw) {
             val cx = t.x_min + (c + 0.5) * t.px
             if (cx >= cb.x0 && cx < cb.x1 && cy >= cb.y0 && cy < cb.y1 &&
-              Geom.pointInPolygon(cx, cy, rings)) {
+              poly.contains(cx, cy)) {
               val i = row * t.tw + c
               out += ((p.poly_id, t.bands(0)(i).toDouble,
                 t.bands(1)(i).toDouble, t.bands(2)(i).toDouble))
@@ -312,12 +312,12 @@ object RasterOps {
                 burnClass: Boolean = false)
                (implicit spark: SparkSession): Dataset[TileRow] = {
     import spark.implicits._
-    val byCell: Map[Long, Array[(Long, Int, Geom.Rings, Float)]] =
+    val byCell: Map[Long, Array[(Long, Int, Geom.PackedPoly, Float)]] =
       boundedCollect(polys, "rasterize burn").flatMap { p =>
-        val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
+        val poly = Geom.PackedPoly(p.rings)
         val burn = if (burnClass) p.cls.toFloat else 1f
-        GridIndex.coverPolygon(rings, cellRes)
-          .map(c => c -> (p.poly_id, p.part, rings, burn))
+        GridIndex.coverPolygon(poly, cellRes)
+          .map(c => c -> (p.poly_id, p.part, poly, burn))
       }.groupBy(_._1).map { case (c, xs) =>
         c -> xs.map(_._2).sortBy(f => (f._1, f._2))
       }
@@ -325,14 +325,14 @@ object RasterOps {
     tiles.map { t =>
       val out = new Array[Float](t.pixels.length)
       byCellB.value.getOrElse(t.cell_id, Array.empty).foreach {
-        case (_, _, rings, burn) =>
+        case (_, _, poly, burn) =>
           var r = 0
           while (r < t.th) {
             val cy = t.y_max - (r + 0.5) * t.px
             var c = 0
             while (c < t.tw) {
               val cx = t.x_min + (c + 0.5) * t.px
-              if (Geom.pointInPolygon(cx, cy, rings)) out(r * t.tw + c) = burn
+              if (poly.contains(cx, cy)) out(r * t.tw + c) = burn
               c += 1
             }
             r += 1
@@ -347,10 +347,10 @@ object RasterOps {
   def clipRaster(tiles: Dataset[TileRow], poly: PolyRow, cellRes: Int)
                 (implicit spark: SparkSession): Dataset[TileRow] = {
     import spark.implicits._
-    val rings: Geom.Rings = poly.rings.map(_.map(q => (q.x, q.y)))
-    val bb = Geom.bbox(rings)
-    val cells = GridIndex.coverPolygon(rings, cellRes)
-    val ringsB = spark.sparkContext.broadcast(rings)
+    val packed = Geom.PackedPoly(poly.rings)
+    val bb = packed.box
+    val cells = GridIndex.coverPolygon(packed, cellRes)
+    val packedB = spark.sparkContext.broadcast(packed)
     tiles
       // Column predicate, NOT a typed lambda: isin stays visible to
       // Catalyst so a parquet-backed tile table prunes row groups /
@@ -358,7 +358,7 @@ object RasterOps {
       .where(col("cell_id").isin(cells: _*))
       .map { t =>
         val out = t.pixels.clone()
-        val rg = ringsB.value
+        val pp = packedB.value
         var r = 0
         while (r < t.th) {
           val cy = t.y_max - (r + 0.5) * t.px
@@ -366,7 +366,7 @@ object RasterOps {
           while (c < t.tw) {
             val cx = t.x_min + (c + 0.5) * t.px
             if (cx < bb.x0 || cx > bb.x1 || cy < bb.y0 || cy > bb.y1 ||
-              !Geom.pointInPolygon(cx, cy, rg)) out(r * t.tw + c) = t.nodata
+              !pp.contains(cx, cy)) out(r * t.tw + c) = t.nodata
             c += 1
           }
           r += 1

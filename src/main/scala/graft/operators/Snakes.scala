@@ -496,22 +496,22 @@ object Snakes {
     import spark.implicits._
     require(algo == "ACWE" || algo == "GAC", s"algo: $algo")
     val polyList = RasterOps.boundedCollect(polys, "snake polygon")
-      .map { p =>
-        val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
-        (p.poly_id, rings, Geom.bbox(rings))
-      }.sortBy(_._1)
+      .map(p => (p.poly_id, Geom.PackedPoly(p.rings)))
+      .sortBy(_._1)
     val polyB = spark.sparkContext.broadcast(polyList)
     images.flatMap { im =>
       val imgBB = Geom.BBox(im.x_min, im.y_max - im.h * im.px,
         im.x_min + im.w * im.px, im.y_max)
-      val hits = polyB.value.filter { case (_, _, bb) =>
+      val hits = polyB.value.filter { case (_, poly) =>
+        val bb = poly.box
         Geom.BBox(bb.x0 - buf1, bb.y0 - buf1, bb.x1 + buf1, bb.y1 + buf1)
           .intersects(imgBB)
       }
       if (hits.isEmpty) Iterator.empty
       else {
         val pix = PixelCodec.decode(im.bytes, im.fmt, im.w, im.h).bands(band)
-        hits.iterator.flatMap { case (polyId, rings, bb) =>
+        hits.iterator.flatMap { case (polyId, poly) =>
+          val bb = poly.box
           // window = buffered bbox in pixel indices, clamped (the
           // reference clamps negative offsets the same way)
           val cx0 = math.max(0, math.floor((bb.x0 - buf1 - im.x_min) / im.px).toInt)
@@ -531,7 +531,7 @@ object Snakes {
                 win(r * ww + c) = pix(gy * im.w + gx)
                 val wx = im.x_min + (gx + 0.5) * im.px
                 val wy = im.y_max - (gy + 0.5) * im.px
-                if (Geom.pointInPolygon(wx, wy, rings)) init(r * ww + c) = 1
+                if (poly.contains(wx, wy)) init(r * ww + c) = 1
                 c += 1
               }
               r += 1

@@ -112,22 +112,22 @@ object ThreshSeg {
                (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val polyList = RasterOps.boundedCollect(polys, "thresh_seg polygon")
-      .map { p =>
-        val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
-        (p.poly_id, rings, Geom.bbox(rings))
-      }.sortBy(_._1)
+      .map(p => (p.poly_id, Geom.PackedPoly(p.rings)))
+      .sortBy(_._1)
     val polyB = spark.sparkContext.broadcast(polyList)
     images.flatMap { im =>
       val imgBB = Geom.BBox(im.x_min, im.y_max - im.h * im.px,
         im.x_min + im.w * im.px, im.y_max)
-      val hits = polyB.value.filter { case (_, _, bb) =>
+      val hits = polyB.value.filter { case (_, poly) =>
+        val bb = poly.box
         Geom.BBox(bb.x0 - buf, bb.y0 - buf, bb.x1 + buf, bb.y1 + buf)
           .intersects(imgBB)
       }
       if (hits.isEmpty) Iterator.empty
       else {
         val pix = PixelCodec.decode(im.bytes, im.fmt, im.w, im.h).bands(band)
-        hits.iterator.flatMap { case (polyId, rings, bb) =>
+        hits.iterator.flatMap { case (polyId, poly) =>
+          val bb = poly.box
           val cx0 = math.max(0, math.floor((bb.x0 - buf - im.x_min) / im.px).toInt)
           val cx1 = math.min(im.w - 1, math.ceil((bb.x1 + buf - im.x_min) / im.px).toInt - 1)
           val cy0 = math.max(0, math.floor((im.y_max - (bb.y1 + buf)) / im.px).toInt)
@@ -145,7 +145,7 @@ object ThreshSeg {
                 val wx = im.x_min + (gx + 0.5) * im.px
                 val wy = im.y_max - (gy + 0.5) * im.px
                 win(r * ww + c) =
-                  if (Geom.pointInPolygon(wx, wy, rings)) pix(gy * im.w + gx)
+                  if (poly.contains(wx, wy)) pix(gy * im.w + gx)
                   else 0f
                 c += 1
               }

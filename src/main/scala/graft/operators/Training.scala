@@ -54,7 +54,7 @@ object Training {
     tiles.joinWith(broadcast(pc), tiles("cell_id") === pc("cell_id"))
       .flatMap { case (t, p) =>
         val cb = GridIndex.cellBounds(p.cell_id)
-        val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
+        val poly = Geom.PackedPoly(p.rings)
         val label = clsB.value((p.poly_id, p.part))
         val out = scala.collection.mutable.ArrayBuffer.empty[Sample]
         var row = 0
@@ -64,7 +64,7 @@ object Training {
           while (c < t.tw) {
             val cx = t.x_min + (c + 0.5) * t.px
             if (cx >= cb.x0 && cx < cb.x1 && cy >= cb.y0 && cy < cb.y1 &&
-              Geom.pointInPolygon(cx, cy, rings)) {
+              poly.contains(cx, cy)) {
               out += Sample(label, t.bands.map(_(row * t.tw + c)))
             }
             c += 1

@@ -35,14 +35,14 @@ object ZonalStats {
   final case class PolyCell(cell_id: Long, poly_id: Long, part: Int,
                             rings: Array[Array[Pt]])
 
-  /** One polygon part's rings as (x, y) tuples and the grid cells at
-    * `res` it covers: bbox cover refined by exact rect-polygon
+  /** One polygon part packed for PIP ([[Geom.PackedPoly]]) and the grid
+    * cells at `res` it covers: bbox cover refined by exact rect-polygon
     * intersection, mirroring the reference's bbox prefilter
     * shape.py:942-976. The ONE cover definition: [[polyCells]] flatMaps
     * it and the driver-built index of [[histogram]] calls it. */
-  private def cover(p: PolyRow, res: Int): (Geom.Rings, Array[Long]) = {
-    val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
-    (rings, GridIndex.coverPolygon(rings, res))
+  private def cover(p: PolyRow, res: Int): (Geom.PackedPoly, Array[Long]) = {
+    val poly = Geom.PackedPoly(p.rings)
+    (poly, GridIndex.coverPolygon(poly, res))
   }
 
   /** Explode polygons into covering cells at `res` — the build side of
@@ -88,16 +88,11 @@ object ZonalStats {
     }
   }
 
-  /** One pre-resolved polygon part of the prefilter index: rings/bbox
-    * converted ONCE per polygon at build time and shared by every cell
-    * the polygon covers (the broadcast serializes a shared reference
-    * once, so rings ship once per polygon, not once per (cell, polygon));
-    * per-ring packed (xs, ys) arrays feed the per-pixel PIP (flat-array
-    * reads, no Tuple2 chase per vertex). */
-  private[operators] final case class PolyPre(polyId: Long, rings: Geom.Rings,
-                                              xss: Array[Array[Double]],
-                                              yss: Array[Array[Double]],
-                                              pb: Geom.BBox) extends Serializable
+  /** One pre-resolved polygon part of the prefilter index: rings packed
+    * with their bbox ONCE per polygon at build time and shared by every
+    * cell the polygon covers (the broadcast serializes a shared reference
+    * once, so rings ship once per polygon, not once per (cell, polygon)). */
+  private[operators] final case class PolyPre(polyId: Long, poly: Geom.PackedPoly)
 
   /** Hard cap on the (cell, polygon) entries of the driver-held prefilter
     * index — the smallness contract of the zonal polygon layer, made
@@ -108,9 +103,9 @@ object ZonalStats {
   /** Byte budget of the index's rings, next to the entry cap: 16 bytes
     * (x, y doubles) per vertex of every polygon part that covers a cell.
     * A few very detailed polygons fit the entry cap yet hold far more
-    * bytes; they fail here. The index holds each vertex twice (tuple
-    * rings and packed arrays), so 256 MiB of vertices is ~0.5 GiB of
-    * driver heap and broadcast blocks. */
+    * bytes; they fail here. The index holds each vertex once (packed
+    * x and y arrays), so 256 MiB of vertices is ~256 MiB of heap and of
+    * broadcast blocks. */
   val MaxBroadcastRingBytes: Long = 1L << 28
 
   /** Driver-side prefilter index over an already collected polygon
@@ -124,7 +119,7 @@ object ZonalStats {
     var entries = 0L
     var ringBytes = 0L
     polys.foreach { p =>
-      val (rings, cells) = cover(p, res)
+      val (poly, cells) = cover(p, res)
       if (cells.nonEmpty) {
         entries += cells.length
         require(entries <= maxEntries,
@@ -134,8 +129,7 @@ object ZonalStats {
         require(ringBytes <= maxRingBytes,
           s"zonal prefilter index rings exceed $maxRingBytes bytes of vertices " +
             "— simplify or shard the polygon layer")
-        val pre = PolyPre(p.poly_id, rings, p.rings.map(_.map(_.x)),
-          p.rings.map(_.map(_.y)), Geom.bbox(rings))
+        val pre = PolyPre(p.poly_id, poly)
         cells.foreach { c =>
           byCell.computeIfAbsent(c, _ => scala.collection.mutable.ArrayBuffer.empty[PolyPre]) += pre
         }
@@ -226,21 +220,14 @@ object ZonalStats {
           var ei = 0
           while (ei < entries.length) {
             val p = entries(ei)
-            val rings = p.rings
-            val pb = p.pb
+            val poly = p.poly
+            val pb = poly.box
             // interior-tile shortcut: when the rect spanned by the tile's
             // pixel CENTERS sits entirely inside the polygon, every center
-            // passes PIP — large polygons pay zero per-pixel geometry. The
-            // bbox pre-check keeps boundary/exterior pairs (the common
-            // case) from paying the full ring scans of the containment
-            // test.
-            val centers = Geom.BBox(
+            // passes PIP — large polygons pay zero per-pixel geometry
+            val fullInside = Geom.rectInsidePolygon(Geom.BBox(
               t.x_min + 0.5 * t.px, t.y_max - (t.th - 0.5) * t.px,
-              t.x_min + (t.tw - 0.5) * t.px, t.y_max - 0.5 * t.px)
-            val fullInside =
-              pb.x0 <= centers.x0 && centers.x1 <= pb.x1 &&
-              pb.y0 <= centers.y0 && centers.y1 <= pb.y1 &&
-              Geom.rectInsidePolygon(centers, rings)
+              t.x_min + (t.tw - 0.5) * t.px, t.y_max - 0.5 * t.px), poly)
             // Hoist the per-pixel ownership + bbox bounds out of the inner
             // loop: the row predicate (cy in cell & poly-bbox y-range) and
             // col predicate (cx in cell & poly-bbox x-range) are monotone
@@ -271,8 +258,7 @@ object ZonalStats {
                   val v = t.pixels(base + col)
                   val isNodata = if (nodNaN) v.isNaN else v == nod
                   if (!isNodata && (fullInside ||
-                      Geom.pointInPolygonPacked(t.x_min + (col + 0.5) * t.px, cy,
-                        p.xss, p.yss))) {
+                      poly.contains(t.x_min + (col + 0.5) * t.px, cy))) {
                     val iv = v.toInt
                     if (iv >= 0 && iv < 256 && iv.toFloat == v) arr(iv) += 1L
                     else {

@@ -104,25 +104,50 @@ class GeomSpec extends AnyFunSuite with SeededProps {
     }
   }
 
-  test("PIP: packed form decision-identical to tuple form (incl. boundary/edge points)") {
-    // random polygons + deliberate on-edge/on-vertex probes: the packed
-    // kernel and the hypot-guarded onSegment must agree with the tuple
-    // form on EVERY input, including the boundary band the guard splits
+  /** Distance from (px, py) to segment a-b: the test-side "on the
+    * boundary" reference, independent of the kernel's onSegment. */
+  private def segDist(px: Double, py: Double, ax: Double, ay: Double,
+                      bx: Double, by: Double): Double = {
+    val dx = bx - ax; val dy = by - ay
+    val len2 = dx * dx + dy * dy
+    val t = if (len2 == 0) 0.0 else math.max(0.0, math.min(1.0, ((px - ax) * dx + (py - ay) * dy) / len2))
+    math.hypot(px - (ax + t * dx), py - (ay + t * dy))
+  }
+
+  private def onBoundary(px: Double, py: Double, rings: Geom.Rings): Boolean =
+    rings.exists(r => r.indices.exists { i =>
+      val (ax, ay) = r(i); val (bx, by) = r((i + 1) % r.length)
+      segDist(px, py, ax, ay, bx, by) < 1e-9
+    })
+
+  /** Per-ring winding parity: inside iff an odd number of rings wind
+    * around the point — holes excluded whichever way they wind. */
+  private def windingParity(px: Double, py: Double, rings: Geom.Rings): Boolean =
+    rings.count(r => Geom.windingNumber(px, py, Array(r)) != 0) % 2 == 1
+
+  test("PIP: on-edge and on-vertex probes read as inside; off the boundary the kernel == winding parity") {
+    // fixed shapes: a dense grid (some of it on edges) plus every vertex,
+    // edge midpoint and edge third, through the packed kernel
     val shapes: Seq[Geom.Rings] = Seq(square, holed, concaveL)
     shapes.foreach { rings =>
-      val xss = rings.map(_.map(_._1)); val yss = rings.map(_.map(_._2))
-      // probe a dense grid plus every vertex and edge midpoint
-      val probes = (for (x <- -2 to 12; y <- -2 to 12) yield (x * 1.0, y * 0.98)) ++
-        rings.flatMap(_.toSeq) ++
-        rings.flatMap(r => r.indices.map { i =>
+      val poly = Geom.PackedPoly(rings)
+      val onEdge = rings.flatMap(_.toSeq) ++
+        rings.flatMap(r => r.indices.flatMap { i =>
           val (ax, ay) = r(i); val (bx, by) = r((i + 1) % r.length)
-          ((ax + bx) / 2, (ay + by) / 2)
+          Seq(((ax + bx) / 2, (ay + by) / 2), (ax + (bx - ax) / 3, ay + (by - ay) / 3))
         })
-      probes.foreach { case (px, py) =>
-        assert(Geom.pointInPolygon(px, py, rings) ==
-          Geom.pointInPolygonPacked(px, py, xss, yss), s"($px,$py)")
+      onEdge.foreach { case (px, py) =>
+        assert(onBoundary(px, py, rings))
+        assert(poly.contains(px, py), s"boundary ($px,$py)")
+      }
+      for (x <- -2 to 12; y <- -2 to 12) {
+        val (px, py) = (x * 1.0, y * 0.98)
+        val want = onBoundary(px, py, rings) || windingParity(px, py, rings)
+        assert(Geom.pointInPolygonPacked(px, py, poly.xss, poly.yss) == want, s"($px,$py)")
       }
     }
+    // random convex polygons: random probes against the winding number,
+    // random points along each edge must read as inside
     forSeeds(100) { rng =>
       val nv = 3 + rng.nextInt(7)
       val ring = Array.tabulate(nv) { v =>
@@ -131,14 +156,72 @@ class GeomSpec extends AnyFunSuite with SeededProps {
         (rr * math.cos(ang), rr * math.sin(ang))
       }
       val rings: Geom.Rings = Array(ring)
-      val xss = rings.map(_.map(_._1)); val yss = rings.map(_.map(_._2))
+      val poly = Geom.PackedPoly(rings)
       for (_ <- 0 until 30) {
         val px = rng.nextDouble() * 24 - 12
         val py = rng.nextDouble() * 24 - 12
-        assert(Geom.pointInPolygon(px, py, rings) ==
-          Geom.pointInPolygonPacked(px, py, xss, yss), s"($px,$py)")
+        if (!onBoundary(px, py, rings))
+          assert(poly.contains(px, py) == (Geom.windingNumber(px, py, rings) != 0), s"($px,$py)")
+      }
+      ring.indices.foreach { i =>
+        val (ax, ay) = ring(i); val (bx, by) = ring((i + 1) % nv)
+        val t = rng.nextDouble()
+        val (px, py) = (ax + t * (bx - ax), ay + t * (by - ay))
+        assert(poly.contains(px, py), s"edge $i at t=$t: ($px,$py)")
       }
     }
+  }
+
+  test("PIP fallback: same-winding hole + grazing scanline classifies correctly") {
+    // exterior has a collinear vertex at y=50, so the y=50 scanline is
+    // "ambiguous" and takes the fallback; the hole winds the SAME way as
+    // the exterior (like the Synth 'holed' fixture) — the old summed
+    // winding number returned 2 (inside); per-ring parity must say outside
+    // (the expression-path half lives in SpatialFunctionsSpec)
+    val rings: Geom.Rings = Array(
+      Array((0.0, 0.0), (100.0, 0.0), (100.0, 50.0), (100.0, 100.0), (0.0, 100.0)),
+      Array((20.0, 20.0), (80.0, 20.0), (80.0, 80.0), (20.0, 80.0)))
+    assert(!Geom.pointInPolygon(50.0, 50.0, rings), "inside the hole -> outside")
+    assert(Geom.pointInPolygon(10.0, 50.0, rings), "between hole and shell -> inside")
+    assert(Geom.pointInPolygon(90.0, 50.0, rings))
+    assert(!Geom.pointInPolygon(-5.0, 50.0, rings))
+  }
+
+  test("PIP == JTS covers on random star polygons + holed rings (off-boundary)") {
+    import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
+    val gf = new GeometryFactory()
+    val rng = new graft.gen.Synth.Rng(99L)
+    var checked = 0
+    for (trial <- 0 until 15) {
+      val cx = rng.nextDouble() * 200 - 100
+      val cy = rng.nextDouble() * 200 - 100
+      val k = 3 + rng.nextInt(4)
+      val nv = 12 + rng.nextInt(20)
+      val ring = Array.tabulate(nv) { v =>
+        val ang = 2 * math.Pi * v / nv
+        val r = 30.0 * (1.0 + 0.45 * math.sin(k * ang))
+        (cx + r * math.cos(ang), cy + r * math.sin(ang))
+      }
+      // every other trial adds a SAME-WINDING square hole at the center
+      val rings: Geom.Rings =
+        if (trial % 2 == 0) Array(ring)
+        else Array(ring, Array((cx - 5.0, cy - 5.0), (cx + 5.0, cy - 5.0),
+          (cx + 5.0, cy + 5.0), (cx - 5.0, cy + 5.0)))
+      val poly = Geom.PackedPoly(rings)
+      val jts = graft.operators.VectorOps.toJts(rings)
+      val boundary = jts.getBoundary
+      for (_ <- 0 until 200) {
+        val px = cx + rng.nextDouble() * 120 - 60
+        val py = cy + rng.nextDouble() * 120 - 60
+        val pt = gf.createPoint(new Coordinate(px, py))
+        if (boundary.distance(pt) > 1e-6) { // off-boundary: conventions agree
+          assert(poly.contains(px, py) == jts.covers(pt),
+            s"trial $trial point ($px, $py)")
+          checked += 1
+        }
+      }
+    }
+    assert(checked > 2500)
   }
 
   test("area / perimeter / centroid on known shapes") {
@@ -195,11 +278,26 @@ class GeomSpec extends AnyFunSuite with SeededProps {
   }
 
   test("rectIntersectsPolygon: disjoint, contained, crossing") {
-    assert(Geom.rectIntersectsPolygon(Geom.BBox(2, 2, 3, 3), square))    // inside
-    assert(Geom.rectIntersectsPolygon(Geom.BBox(-2, -2, 1, 1), square))  // crossing
-    assert(!Geom.rectIntersectsPolygon(Geom.BBox(20, 20, 30, 30), square))
-    assert(Geom.rectIntersectsPolygon(Geom.BBox(-5, -5, 15, 15), square)) // contains poly
-    assert(!Geom.rectIntersectsPolygon(Geom.BBox(4.5, 4.5, 5.5, 5.5), holed)) // in hole
+    val sq = Geom.PackedPoly(square)
+    assert(Geom.rectIntersectsPolygon(Geom.BBox(2, 2, 3, 3), sq))    // inside
+    assert(Geom.rectIntersectsPolygon(Geom.BBox(-2, -2, 1, 1), sq))  // crossing
+    assert(!Geom.rectIntersectsPolygon(Geom.BBox(20, 20, 30, 30), sq))
+    assert(Geom.rectIntersectsPolygon(Geom.BBox(-5, -5, 15, 15), sq)) // contains poly
+    assert(!Geom.rectIntersectsPolygon(Geom.BBox(4.5, 4.5, 5.5, 5.5), Geom.PackedPoly(holed))) // in hole
+  }
+
+  test("rectInsidePolygon: interior, crossing, around a hole, past the bbox") {
+    val sq = Geom.PackedPoly(square); val ho = Geom.PackedPoly(holed)
+    assert(Geom.rectInsidePolygon(Geom.BBox(2, 2, 3, 3), sq))
+    assert(!Geom.rectInsidePolygon(Geom.BBox(0, 0, 10, 10), sq))       // vertices on the rect
+    assert(!Geom.rectInsidePolygon(Geom.BBox(-2, -2, 1, 1), sq))       // crossing
+    assert(!Geom.rectInsidePolygon(Geom.BBox(2, 2, 10.5, 3), sq))      // past the bbox
+    assert(Geom.rectInsidePolygon(Geom.BBox(0.5, 0.5, 2.5, 2.5), ho))  // shell only
+    assert(!Geom.rectInsidePolygon(Geom.BBox(1, 1, 9, 9), ho))         // hole inside the rect
+    assert(!Geom.rectInsidePolygon(Geom.BBox(4.5, 4.5, 5.5, 5.5), ho)) // in the hole
+    val el = Geom.PackedPoly(concaveL)
+    assert(Geom.rectInsidePolygon(Geom.BBox(1, 1, 7, 2), el))          // along one arm
+    assert(!Geom.rectInsidePolygon(Geom.BBox(1, 1, 6, 6), el))         // corner in the notch
   }
 }
 
@@ -261,7 +359,7 @@ class GridIndexSpec extends AnyFunSuite with SeededProps {
 
   test("coverPolygon: covers interior points, prunes vs bbox cover") {
     val rings: Geom.Rings = Array(Array((0.0, 0.0), (100.0, 0.0), (0.0, 100.0)))
-    val cover = GridIndex.coverPolygon(rings, 15).toSet
+    val cover = GridIndex.coverPolygon(Geom.PackedPoly(rings), 15).toSet
     val bboxCover = GridIndex.coverBBox(Geom.bbox(rings), 15).toSet
     assert(cover.subsetOf(bboxCover))
     assert(cover.size < bboxCover.size) // triangle: strictly smaller

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.core.{Geom, GridIndex, PixelCodec}
 import graft.operators._
 
-/** Round-2 fix gates: even-n median, hole-winding PIP fallback, negative
-  * GLCM offsets, temporal median/percentile, general polygon clip,
-  * buffer, local thresholds, DEM kernels, scalable FID assignment. */
+/** Round-2 fix gates: even-n median, negative GLCM offsets, temporal
+  * median/percentile, general polygon clip, buffer, local thresholds,
+  * DEM kernels, scalable FID assignment. (The hole-winding PIP fallback
+  * and JTS gates live in GeomSpec and SpatialFunctionsSpec.) */
 class Round2FixSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
@@ -25,27 +26,6 @@ class Round2FixSpec extends AnyFunSuite {
     assert(m(1L) == 2.5, s"even-n median: ${m(1L)}")
     assert(m(2L) == 3.0, s"even-n (counts) median: ${m(2L)}")
     assert(m(3L) == 2.0, s"odd-n median: ${m(3L)}")
-  }
-
-  test("PIP fallback: same-winding hole + grazing scanline classifies correctly") {
-    // exterior has a collinear vertex at y=50, so the y=50 scanline is
-    // "ambiguous" and takes the fallback; the hole winds the SAME way as
-    // the exterior (like the Synth 'holed' fixture) — the old summed
-    // winding number returned 2 (inside); per-ring parity must say outside
-    val rings: Geom.Rings = Array(
-      Array((0.0, 0.0), (100.0, 0.0), (100.0, 50.0), (100.0, 100.0), (0.0, 100.0)),
-      Array((20.0, 20.0), (80.0, 20.0), (80.0, 80.0), (20.0, 80.0)))
-    assert(!Geom.pointInPolygon(50.0, 50.0, rings), "inside the hole -> outside")
-    assert(Geom.pointInPolygon(10.0, 50.0, rings), "between hole and shell -> inside")
-    assert(Geom.pointInPolygon(90.0, 50.0, rings))
-    assert(!Geom.pointInPolygon(-5.0, 50.0, rings))
-    // same scenario through the Catalyst expression path (PipRuntime)
-    val poly = PolyRow(1L, 0, rings.map(_.map { case (x, y) => Pt(x, y) }), 1, "h", 0.0)
-    val pts = Seq((1L, 50.0, 50.0), (2L, 10.0, 50.0), (3L, 90.0, 50.0))
-      .toDF("pt_id", "x", "y")
-    val hit = SpatialJoin.pointsInPolygons(pts, Seq(poly).toDS, res = 12)
-      .select("pt_id").as[Long].collect().toSet
-    assert(hit == Set(2L, 3L), s"expression path: $hit")
   }
 
   test("GLCM: negative offsets are in-bounds and mirror positive ones") {
@@ -258,42 +238,6 @@ class Round2FixSpec extends AnyFunSuite {
     assert(table.read().count() == 10)
     assert(table.committed()("0").rows == 5)
     assert(table.commit(df, "w2").isEmpty) // idempotent re-commit
-  }
-
-  test("PIP == JTS covers on random star polygons + holed rings (off-boundary)") {
-    import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
-    val gf = new GeometryFactory()
-    val rng = new graft.gen.Synth.Rng(99L)
-    var checked = 0
-    for (trial <- 0 until 15) {
-      val cx = rng.nextDouble() * 200 - 100
-      val cy = rng.nextDouble() * 200 - 100
-      val k = 3 + rng.nextInt(4)
-      val nv = 12 + rng.nextInt(20)
-      val ring = Array.tabulate(nv) { v =>
-        val ang = 2 * math.Pi * v / nv
-        val r = 30.0 * (1.0 + 0.45 * math.sin(k * ang))
-        (cx + r * math.cos(ang), cy + r * math.sin(ang))
-      }
-      // every other trial adds a SAME-WINDING square hole at the center
-      val rings: Geom.Rings =
-        if (trial % 2 == 0) Array(ring)
-        else Array(ring, Array((cx - 5.0, cy - 5.0), (cx + 5.0, cy - 5.0),
-          (cx + 5.0, cy + 5.0), (cx - 5.0, cy + 5.0)))
-      val jts = VectorOps.toJts(rings)
-      val boundary = jts.getBoundary
-      for (_ <- 0 until 200) {
-        val px = cx + rng.nextDouble() * 120 - 60
-        val py = cy + rng.nextDouble() * 120 - 60
-        val pt = gf.createPoint(new Coordinate(px, py))
-        if (boundary.distance(pt) > 1e-6) { // off-boundary: conventions agree
-          assert(Geom.pointInPolygon(px, py, rings) == jts.covers(pt),
-            s"trial $trial point ($px, $py)")
-          checked += 1
-        }
-      }
-    }
-    assert(checked > 2500)
   }
 
   test("classifyObjects: single-class model, null features, tie break") {

@@ -68,6 +68,19 @@ class SpatialFunctionsSpec extends AnyFunSuite with SeededProps {
       }
     }
   }
+
+  test("PIP fallback through the expression path: same-winding hole + grazing scanline") {
+    // GeomSpec's fallback case (collinear exterior vertex on y=50, hole
+    // wound like the exterior) through PointInPolygonExpr / PipRuntime
+    val poly = PolyRow(1L, 0, Array(
+      Array(Pt(0, 0), Pt(100, 0), Pt(100, 50), Pt(100, 100), Pt(0, 100)),
+      Array(Pt(20, 20), Pt(80, 20), Pt(80, 80), Pt(20, 80))), 1, "h", 0.0)
+    val pts = Seq((1L, 50.0, 50.0), (2L, 10.0, 50.0), (3L, 90.0, 50.0))
+      .toDF("pt_id", "x", "y")
+    val hit = graft.operators.SpatialJoin.pointsInPolygons(pts, Seq(poly).toDS, res = 12)
+      .select("pt_id").as[Long].collect().toSet
+    assert(hit == Set(2L, 3L), s"expression path: $hit")
+  }
 }
 
 class GraftFunctionsSqlSpec extends AnyFunSuite {

@@ -33,10 +33,12 @@ class ZonalIndexSpec extends AnyFunSuite {
   }
 
   test("rings are held once per polygon part, shared by all its cells") {
+    // one packed polygon (rings + bbox) per part, the same instance in
+    // every cell the part covers
     val distinct = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[ZonalStats.PolyPre, java.lang.Boolean]())
+      new java.util.IdentityHashMap[graft.core.Geom.PackedPoly, java.lang.Boolean]())
     var total = 0
-    index.forEach((_, ps) => { ps.foreach(distinct.add); total += ps.length })
+    index.forEach((_, ps) => { ps.foreach(p => distinct.add(p.poly)); total += ps.length })
     val covered = ZonalStats.polyCells(spark.createDataset(layer.toSeq), cellRes)
       .map(p => (p.poly_id, p.part)).distinct().count()
     assert(distinct.size == covered)
