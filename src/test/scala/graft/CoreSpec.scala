@@ -104,6 +104,44 @@ class GeomSpec extends AnyFunSuite with SeededProps {
     }
   }
 
+  test("PIP: packed form decision-identical to tuple form (incl. boundary/edge points)") {
+    // the tuple-ring entry point packs through PackedPoly; on random
+    // polygons + deliberate on-edge/on-vertex probes it must decide
+    // exactly as the kernel called on hand-packed arrays, including the
+    // boundary band the onSegment guard splits
+    val shapes: Seq[Geom.Rings] = Seq(square, holed, concaveL)
+    shapes.foreach { rings =>
+      val xss = rings.map(_.map(_._1)); val yss = rings.map(_.map(_._2))
+      // probe a dense grid plus every vertex and edge midpoint
+      val probes = (for (x <- -2 to 12; y <- -2 to 12) yield (x * 1.0, y * 0.98)) ++
+        rings.flatMap(_.toSeq) ++
+        rings.flatMap(r => r.indices.map { i =>
+          val (ax, ay) = r(i); val (bx, by) = r((i + 1) % r.length)
+          ((ax + bx) / 2, (ay + by) / 2)
+        })
+      probes.foreach { case (px, py) =>
+        assert(Geom.pointInPolygon(px, py, rings) ==
+          Geom.pointInPolygonPacked(px, py, xss, yss), s"($px,$py)")
+      }
+    }
+    forSeeds(100) { rng =>
+      val nv = 3 + rng.nextInt(7)
+      val ring = Array.tabulate(nv) { v =>
+        val ang = 2 * math.Pi * v / nv
+        val rr = 5 + rng.nextDouble() * 5
+        (rr * math.cos(ang), rr * math.sin(ang))
+      }
+      val rings: Geom.Rings = Array(ring)
+      val xss = rings.map(_.map(_._1)); val yss = rings.map(_.map(_._2))
+      for (_ <- 0 until 30) {
+        val px = rng.nextDouble() * 24 - 12
+        val py = rng.nextDouble() * 24 - 12
+        assert(Geom.pointInPolygon(px, py, rings) ==
+          Geom.pointInPolygonPacked(px, py, xss, yss), s"($px,$py)")
+      }
+    }
+  }
+
   /** Distance from (px, py) to segment a-b: the test-side "on the
     * boundary" reference, independent of the kernel's onSegment. */
   private def segDist(px: Double, py: Double, ax: Double, ay: Double,
