@@ -149,12 +149,14 @@ object SkewBench {
       concat(lit("c"), (col("id") / 999).cast("long"), lit("_"),
         pmod(col("id"), lit(999)) + 1).as("b"))
     val edges = hubEdges.union(chainEdges)
+    // every component has >= 2 nodes, so each one has a non-root row;
+    // the hub's root ("hub" < "n...") carries none, hence the + 1
     def ccRun(): Long = operators.Components
-      .connected(edges, "a", "b").select("component").distinct().count()
+      .connectedRoots(edges, "a", "b").select("component").distinct().count()
     val ccWarm = ccRun() // warm
     val tcc = (1 to 2).map(_ => time(ccRun())).min
-    val hubSize = operators.Components.connected(edges, "a", "b")
-      .groupBy("component").count().agg(max("count")).head().getLong(0)
+    val hubSize = operators.Components.connectedRoots(edges, "a", "b")
+      .where(col("component") === "hub").count() + 1
     println(f"[skew] cc_hub_best=$tcc%.2f s components=$ccWarm " +
       s"(expect 201) hub_component=$hubSize (expect ${nHub + 1}) " +
       s"edges=${nHub + 200 * 999}")

@@ -30,54 +30,104 @@ import org.apache.spark.sql.functions._
  * Iteration state is `localCheckpoint`ed each round to truncate the
  * growing lineage (same pattern a cluster job would use with a
  * checkpoint dir); the previous round's cache is released eagerly.
+ *
+ * This object is also the one home of the in-memory labelers the
+ * distributed and raster paths share: [[UnionFind]] (Edge's per-
+ * partition hysteresis labeling, Rag's hierarchical merge),
+ * [[label4]] (4-connected mask components: ThreshSeg, TopoSnakes,
+ * Hough) and [[growStrong8]] (whole-image 8-connected hysteresis:
+ * Edge.cannyMask, PhaseCong.phaseCongEdges).
  */
 object Components {
 
-  /** Connected components of the undirected graph given by `edges`.
-    * Returns one row per DISTINCT node appearing in any edge:
-    * (id, component) where component = min node id of its component.
-    * Self-loops and duplicate/reversed edges are tolerated. Isolated
-    * nodes never appear in an edge list; callers map them to
-    * themselves (see [[graft.text.TextOps.dedupClusters]]).
+  /** Array union-find over `0 until n`. `find` is iterative (a long
+    * absorption lineage must not grow the stack) with full path
+    * compression; `union` links the larger root under the smaller, so
+    * every root is the minimum index of its set. */
+  private[graft] final class UnionFind(n: Int) {
+    private val parent = Array.tabulate(n)(identity)
+
+    def find(a: Int): Int = {
+      var r = a
+      while (parent(r) != r) r = parent(r)
+      var c = a
+      while (parent(c) != r) { val next = parent(c); parent(c) = r; c = next }
+      r
+    }
+
+    def union(a: Int, b: Int): Unit = {
+      val ra = find(a); val rb = find(b)
+      if (ra < rb) parent(rb) = ra else parent(ra) = rb
+    }
+  }
+
+  /** 4-connected component labeling of a row-major mask: labels are
+    * 0.. in row-major first-encounter order (-1 off the mask), with
+    * each label's pixel count. */
+  private[graft] def label4(fg: Array[Boolean], w: Int, h: Int): (Array[Int], Array[Int]) = {
+    val lab = Array.fill(fg.length)(-1)
+    val areas = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val stack = new java.util.ArrayDeque[Int]()
+    var p = 0
+    while (p < fg.length) {
+      if (fg(p) && lab(p) < 0) {
+        val id = areas.length
+        var area = 0
+        stack.push(p)
+        lab(p) = id
+        while (!stack.isEmpty) {
+          val q = stack.pop()
+          area += 1
+          val x = q % w; val y = q / w
+          if (x > 0 && fg(q - 1) && lab(q - 1) < 0) { lab(q - 1) = id; stack.push(q - 1) }
+          if (x < w - 1 && fg(q + 1) && lab(q + 1) < 0) { lab(q + 1) = id; stack.push(q + 1) }
+          if (y > 0 && fg(q - w) && lab(q - w) < 0) { lab(q - w) = id; stack.push(q - w) }
+          if (y < h - 1 && fg(q + w) && lab(q + w) < 0) { lab(q + w) = id; stack.push(q + w) }
+        }
+        areas += area
+      }
+      p += 1
+    }
+    (lab, areas.toArray)
+  }
+
+  /** Whole-image double-threshold hysteresis, in place over a row-major
+    * class map (0 = none, 1 = weak, 2 = strong): every weak pixel
+    * 8-connected through weak pixels to a strong one becomes strong. */
+  private[graft] def growStrong8(cls: Array[Byte], w: Int, h: Int): Unit = {
+    val stack = new java.util.ArrayDeque[Int]()
+    var p = 0
+    while (p < cls.length) { if (cls(p) == 2) stack.push(p); p += 1 }
+    while (!stack.isEmpty) {
+      val q = stack.pop()
+      val qx = q % w; val qy = q / w
+      var dy = -1
+      while (dy <= 1) {
+        var dx = -1
+        while (dx <= 1) {
+          val nx = qx + dx; val ny = qy + dy
+          if (nx >= 0 && nx < w && ny >= 0 && ny < h) {
+            val n = ny * w + nx
+            if (cls(n) == 1) { cls(n) = 2; stack.push(n) }
+          }
+          dx += 1
+        }
+        dy += 1
+      }
+    }
+  }
+
+  /** The star-fixpoint ROOT MAP: (id, component) for every NON-ROOT
+    * node appearing in an edge, where component = min node id of its
+    * component; a root (= min id) carries no row and maps to itself via
+    * the caller's coalesce. Self-loops and duplicate/reversed edges are
+    * tolerated. Callers LEFT-join the result against their own id
+    * universe (the dedup keep-one stage, hysteresis labels), so no
+    * node-list expansion is built here.
     *
     * @param maxRounds fail-fast bound on large+small star rounds; the
     *   O(log^2 n) guarantee makes 64 unreachable for any realistic
     *   graph (a 4096-node chain converges in < 10). */
-  def connected(edges: DataFrame, srcCol: String, dstCol: String,
-                maxRounds: Int = 64): DataFrame = {
-    val eInit = initEdges(edges, srcCol, dstCol)
-    // checkpoint the (small) distinct node list NOW, off the edge
-    // checkpoint — the final join reads it, so the (large) initial edge
-    // set is free to unpersist after round 1 instead of pinning peak
-    // storage through all O(log n) rounds, and the un-checkpointed e0
-    // plan never re-runs. (This eager job caches eInit's partitions but
-    // does NOT finalize its checkpoint — doCheckpoint stops at the
-    // first marked RDD, and checkpointAllMarkedAncestors is off by
-    // default; the checksum(e) job below is what finalizes eInit, so it
-    // must keep running before round 1.) explode, not a self-union: a
-    // union of two
-    // slim projections of one checkpointed relation trips Spark's
-    // Union.rewriteConstraints ("key not found" on the dropped
-    // attribute) because the checkpoint carries constraints over BOTH
-    // columns — and the explode scans the edges once, not twice.
-    val nodes =
-      if (eInit.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        eInit.select(explode(array(col("u"), col("v"))).as("id"))
-          .distinct().checkpoint()
-      else
-        eInit.select(explode(array(col("u"), col("v"))).as("id"))
-          .distinct().localCheckpoint()
-    nodes.join(starRoots(eInit, maxRounds), Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-  }
-
-  /** The star-fixpoint ROOT MAP alone: (id, component) for every
-    * NON-ROOT node appearing in an edge; a component's root (= min id)
-    * carries no row and maps to itself via the caller's coalesce.
-    * Exactly [[connected]] minus the node-list expansion and the final
-    * nodes-join — for callers that LEFT-join the result against their
-    * own id universe anyway (the dedup keep-one stage), where the
-    * expansion is a redundant extra pass over the edges plus a join. */
   def connectedRoots(edges: DataFrame, srcCol: String, dstCol: String,
                      maxRounds: Int = 64): DataFrame =
     starRoots(initEdges(edges, srcCol, dstCol), maxRounds)
@@ -107,7 +157,9 @@ object Components {
     truncate(e0)
   }
 
-  private def truncate(df: DataFrame): DataFrame =
+  /** Lineage truncation: a RELIABLE lazy checkpoint when the context
+    * has a checkpoint dir, a local one otherwise. */
+  private[operators] def truncate(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(false)
     else df.localCheckpoint(false)
@@ -121,10 +173,10 @@ object Components {
     var rounds = 0
     while (!converged) {
       require(rounds < maxRounds,
-        s"Components.connected did not converge in $maxRounds rounds")
+        s"Components.connectedRoots did not converge in $maxRounds rounds")
       val next = truncate(smallStar(largeStar(e)))
       val sig = checksum(next) // the materializing action for `next`
-      // (count, order-free xxhash sum) equality is the cheap convergence
+      // (count, order-free xxhash XOR) equality is the cheap convergence
       // probe; on a hit, confirm exactly (runs once, at the fixpoint).
       converged = sig == prevSig && next.exceptAll(e).isEmpty
       e.unpersist()
@@ -142,7 +194,9 @@ object Components {
     * of its neighborhood (incl. itself). One groupBy + one join, both
     * keyed on the node id — AQE-splittable if a hub node skews it.
     * Undirection via explode (one scan, two rows/edge), not a
-    * self-union — see the constraint-rewrite note in connected(). */
+    * self-union: a union of two slim projections of one checkpointed
+    * relation trips Spark's Union.rewriteConstraints ("key not found"
+    * on the dropped attribute), and the explode scans the edges once. */
   private def largeStar(e: DataFrame): DataFrame = {
     val und = e.select(explode(array(
         struct(col("u").as("s"), col("v").as("t")),

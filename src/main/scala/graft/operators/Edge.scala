@@ -153,34 +153,8 @@ object Edge {
   def cannyMask(v: Array[Float], w: Int, h: Int, sigma: Double,
                 lowT: Double, highT: Double): Array[Float] = {
     val cls = cannyCls(v, w, h, sigma, lowT, highT)
-    // hysteresis: BFS from strong pixels through weak, 8-connectivity
-    val out = new Array[Float](w * h)
-    val stack = new java.util.ArrayDeque[Int]()
-    var p = 0
-    while (p < cls.length) {
-      if (cls(p) == 2 && out(p) == 0f) {
-        out(p) = 1f; stack.push(p)
-        while (!stack.isEmpty) {
-          val q = stack.pop()
-          val qx = q % w; val qy = q / w
-          var dy = -1
-          while (dy <= 1) {
-            var dx = -1
-            while (dx <= 1) {
-              val nx = qx + dx; val ny = qy + dy
-              if ((dx != 0 || dy != 0) && nx >= 0 && nx < w && ny >= 0 && ny < h) {
-                val n = ny * w + nx
-                if (cls(n) != 0 && out(n) == 0f) { out(n) = 1f; stack.push(n) }
-              }
-              dx += 1
-            }
-            dy += 1
-          }
-        }
-      }
-      p += 1
-    }
-    out
+    Components.growStrong8(cls, w, h)
+    cls.map(c => if (c == 2) 1f else 0f)
   }
 
   /** Distributed Canny for rasters too big for one row: per-tile
@@ -196,10 +170,11 @@ object Edge {
     * [[cannyMask]] on multi-tile images. The BFS flood fill "keep
     * every weak pixel 8-connected to a strong one" is exactly
     * "component contains a strong pixel" over the sparse weak|strong
-    * pixel graph, which [[Components.connected]] (Kiveris alternating-
-    * star) solves in O(log n) bounded-shuffle rounds — edge-pixel id
-    * pairs are all that ever shuffles; the dense pixel payloads never
-    * leave the tile flatMap. */
+    * pixel graph, which [[hysteresis8]] solves with
+    * [[Components.connectedRoots]] (Kiveris alternating-star) in
+    * O(log n) bounded-shuffle rounds — segment-label pairs are all that
+    * ever shuffles; the dense pixel payloads never leave the tile
+    * flatMap. */
   def cannyTiles(tiles: Dataset[MultiTileRow], tileSize: Int, halo: Int,
                  lowT: Double, highT: Double, sigma: Double = 0.0,
                  band: Int = 0)
@@ -241,6 +216,22 @@ object Edge {
     * executor heap. */
   val MaxHysteresisPartitionRows: Int = 1 << 22
 
+  /** Partition ids below this bound fit [[segmentLabel]]'s 23 bits. */
+  private[operators] val MaxLabelPartitions: Long = 1L << 23
+
+  /** The hysteresis label of a local segment: `(pid << 40) | root`,
+    * with the sign bit set when the segment holds a strong pixel, so
+    * every strong label sorts below every weak one. Past 2^23
+    * partitions the partition bits would reach bit 63 and a weak
+    * segment would read as strong, so that fails instead. */
+  private[operators] def segmentLabel(pid: Long, root: Int, strong: Boolean): Long = {
+    require(pid >= 0 && pid < MaxLabelPartitions,
+      s"hysteresis: partition id $pid does not fit the 23-bit label field " +
+        s"(at most $MaxLabelPartitions partitions)")
+    val lab = (pid << 40) | root.toLong
+    if (strong) lab | Long.MinValue else lab
+  }
+
   /** Distributed double-threshold hysteresis: keeps every input pixel
     * whose 8-connected component (through weak-or-strong pixels of the
     * same image) contains a strong pixel — exactly the BFS flood fill,
@@ -264,19 +255,18 @@ object Edge {
     // blocks); only UNRESOLVED cross-partition adjacencies become CC
     // edges, and the stars run on the contracted label graph (one node
     // per local curve segment, not per pixel). Result-identical:
-    // contraction preserves connectivity, so "component contains a
-    // strong pixel" is decided on labels exactly as it was on pixels
-    // (spec-gated against the whole-image kernel as before).
+    // contraction preserves connectivity.
+    //
+    // The strong flag rides in the label's sign bit ([[segmentLabel]]),
+    // so the star fixpoint's min root is negative exactly when its
+    // component holds a strong pixel, and a label with no cross-
+    // partition edge decides on its own sign: one left join keeps the
+    // rows.
     //
     // Checkpointed once (kernel + labeling run once, not once per
-    // downstream consumer). RELIABLE when a checkpoint dir is set,
-    // local otherwise — the same contract as Components.connected:
-    // localCheckpoint blocks are unreplicated, so a cluster run MUST
-    // ride the fault-tolerant path. Lazy (eager=false): the per-tile
-    // kernel must not run at DataFrame-CONSTRUCTION time. (On the
-    // reliable path the first action computes the kernel once for
-    // itself and once for the checkpoint write — accepted and
-    // documented; see ADVICE r05.)
+    // downstream consumer) through [[Components.truncate]]: RELIABLE
+    // when a checkpoint dir is set, local otherwise. Lazy: the per-tile
+    // kernel must not run at DataFrame-CONSTRUCTION time.
     val schema = cand0.schema
     val iImg = schema.fieldIndex("image_id")
     val iX = schema.fieldIndex("x")
@@ -303,19 +293,12 @@ object Edge {
       }
       (rows, idx)
     }
+    // forward 4 of the 8 directions: every local undirected adjacency
+    // considered exactly once
+    val dxs = Array(1, -1, 0, 1); val dys = Array(0, 1, 1, 1)
     val labeled0 = cand0.mapPartitions { it =>
       val (rows, idx) = indexed(it)
-      val parent = Array.tabulate(rows.length)(identity)
-      def find(a: Int): Int = {
-        var r = a
-        while (parent(r) != r) r = parent(r)
-        var c = a
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      // forward 4 of the 8 directions: every local undirected adjacency
-      // considered exactly once
-      val dxs = Array(1, -1, 0, 1); val dys = Array(0, 1, 1, 1)
+      val uf = new Components.UnionFind(rows.length)
       var i = 0
       while (i < rows.length) {
         val img = rows(i).getString(iImg)
@@ -323,38 +306,32 @@ object Edge {
         var d = 0
         while (d < 4) {
           val j = idx.get((img, x + dxs(d), y + dys(d)))
-          if (j != null) {
-            val ra = find(i); val rb = find(j)
-            if (ra != rb) parent(rb) = ra
-          }
+          if (j != null) uf.union(i, j)
           d += 1
         }
         i += 1
       }
+      val strongRoot = new Array[Boolean](rows.length)
+      rows.indices.foreach(k => if (rows(k).getBoolean(iStrong)) strongRoot(uf.find(k)) = true)
       val pid = org.apache.spark.TaskContext.getPartitionId().toLong
       rows.iterator.zipWithIndex.map { case (r, k) =>
-        Row.fromSeq(r.toSeq :+ ((pid << 40) | find(k).toLong))
+        val root = uf.find(k)
+        Row.fromSeq(r.toSeq :+ segmentLabel(pid, root, strongRoot(root)))
       }
     }(org.apache.spark.sql.Encoders.row(labeledSchema))
-    // Lazy RELIABLE checkpoint does not cache, so on the cluster path
-    // (checkpoint dir set) the labeling pass runs once for the first
-    // consuming action and once more for the checkpoint write — an
-    // accepted trade: the pass is one local union-find over candidate
-    // rows (cheap since the two-level contraction), and persisting it
-    // would pin candidate-sized blocks through the whole CC loop for a
-    // one-shot saving. localCheckpoint (the local-mode path) persists
-    // its blocks, so the bench path computes the kernel once.
-    val labeled =
-      if (cand0.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        labeled0.checkpoint(false)
-      else labeled0.localCheckpoint(false)
+    // On the reliable path the lazy checkpoint does not cache, so the
+    // labeling pass runs once for the first consuming action and once
+    // more for the checkpoint write — an accepted trade: the pass is one
+    // local union-find over candidate rows, and persisting it would pin
+    // candidate-sized blocks through the whole CC loop for a one-shot
+    // saving. localCheckpoint persists its blocks.
+    val labeled = Components.truncate(labeled0)
     // cross-partition probes: only neighbors NOT resolved by the local
     // union-find (the partition map is rebuilt from the checkpointed
     // rows, so it matches the labeling pass exactly)
     import cand0.sparkSession.implicits._
     val probes = labeled.mapPartitions { it =>
       val (rows, idx) = indexed(it)
-      val dxs = Array(1, -1, 0, 1); val dys = Array(0, 1, 1, 1)
       rows.iterator.flatMap { r =>
         val img = r.getString(iImg)
         val x = r.getInt(iX); val y = r.getInt(iY)
@@ -370,18 +347,10 @@ object Edge {
         col("y").as("ny"), col("lab").as("dst")), Seq("image_id", "nx", "ny"))
       .where(col("src") =!= col("dst"))
       .select("src", "dst")
-    val cc = Components.connected(edges, "src", "dst") // (id = lab, component)
-    val strongLabs = labeled.where(col("strong")).select(col("lab")).distinct()
-    val keptComps = cc.join(strongLabs, cc("id") === strongLabs("lab"))
-      .select("component").distinct()
-    val keptViaCc = cc.join(keptComps, "component").select(col("id").as("lab"))
-    // a strong label with no cross-partition neighbor never enters the
-    // edge list — it is its own kept component
-    val isolatedStrong = strongLabs
-      .join(cc, strongLabs("lab") === cc("id"), "left_anti")
-    keptViaCc.union(isolatedStrong)
-      .join(labeled, "lab")
-      .drop("lab")
+    val roots = Components.connectedRoots(edges, "src", "dst") // (id = lab, component)
+    labeled.join(roots, labeled("lab") === roots("id"), "left")
+      .where(coalesce(roots("component"), labeled("lab")) < 0)
+      .select(schema.fieldNames.toSeq.map(labeled(_)): _*)
   }
 
   /** Canny over the image table: one binary-mask image row out per input

@@ -154,39 +154,28 @@ object Hough {
   final case class Component(area: Long, x0: Int, y0: Int, x1: Int, y1: Int)
 
   /** 4-connected components of `fg` with at least `minArea` pixels
-    * (remove_small_objects + the polygonize core's labeling, fused). */
+    * (remove_small_objects + the polygonize core's labeling): one
+    * [[Components.label4]] pass, then area and bbox per label, in
+    * row-major first-encounter order. */
   def components(fg: Array[Boolean], w: Int, h: Int, minArea: Long): Seq[Component] = {
-    val label = new Array[Int](w * h)
-    val stack = new java.util.ArrayDeque[Int]()
-    val out = scala.collection.mutable.ArrayBuffer.empty[Component]
-    var next = 0
-    var i = 0
-    while (i < w * h) {
-      if (fg(i) && label(i) == 0) {
-        next += 1
-        var area = 0L
-        var x0 = w; var y0 = h; var x1 = -1; var y1 = -1
-        stack.push(i); label(i) = next
-        while (!stack.isEmpty) {
-          val cur = stack.pop()
-          val cx = cur % w; val cy = cur / w
-          area += 1
-          if (cx < x0) x0 = cx
-          if (cy < y0) y0 = cy
-          if (cx > x1) x1 = cx
-          if (cy > y1) y1 = cy
-          def visit(nx: Int, ny: Int): Unit =
-            if (nx >= 0 && nx < w && ny >= 0 && ny < h) {
-              val n = ny * w + nx
-              if (fg(n) && label(n) == 0) { label(n) = next; stack.push(n) }
-            }
-          visit(cx - 1, cy); visit(cx + 1, cy); visit(cx, cy - 1); visit(cx, cy + 1)
-        }
-        if (area >= minArea) out += Component(area, x0, y0, x1, y1)
+    val (lab, areas) = Components.label4(fg, w, h)
+    val n = areas.length
+    val x0 = Array.fill(n)(w); val y0 = Array.fill(n)(h)
+    val x1 = Array.fill(n)(-1); val y1 = Array.fill(n)(-1)
+    var p = 0
+    while (p < lab.length) {
+      val l = lab(p)
+      if (l >= 0) {
+        val x = p % w; val y = p / w
+        if (x < x0(l)) x0(l) = x
+        if (y < y0(l)) y0(l) = y
+        if (x > x1(l)) x1(l) = x
+        if (y > y1(l)) y1(l) = y
       }
-      i += 1
+      p += 1
     }
-    out.toSeq
+    (0 until n).filter(l => areas(l) >= minArea)
+      .map(l => Component(areas(l).toLong, x0(l), y0(l), x1(l), y1(l)))
   }
 
   /** The houghseg tail: peaks -> burn line mask -> INVERT (segments are

@@ -396,8 +396,10 @@ object PhaseCong {
     *     come from the tile's own window (documented: M is already
     *     window-approximate at boundaries, see [[phaseCongTiles]]);
     *  4. hysteresis as distributed connected components
-    *     ([[Edge.hysteresis8]]) — candidate id pairs are all that
-    *     shuffles — then the reference's zero-pixel mask.
+    *     ([[Edge.hysteresis8]]: per-partition segments whose labels
+    *     carry the strong flag, then [[Components.connectedRoots]] over
+    *     the cross-partition label pairs — all that shuffles), then the
+    *     reference's zero-pixel mask.
     *
     * A single-tile image reproduces [[phaseCongEdges]] exactly
     * (spec-gated). */
@@ -529,26 +531,7 @@ object PhaseCong {
         else if (nms(p2) >= lowT) state(p2) = 1
         p2 += 1
       }
-      val stack = new java.util.ArrayDeque[Int]()
-      p2 = 0
-      while (p2 < w * h) { if (state(p2) == 2) stack.push(p2); p2 += 1 }
-      while (!stack.isEmpty) {
-        val q = stack.pop()
-        val qx = q % w; val qy = q / w
-        var dy = -1
-        while (dy <= 1) {
-          var dx = -1
-          while (dx <= 1) {
-            val xx = qx + dx; val yy = qy + dy
-            if (xx >= 0 && yy >= 0 && xx < w && yy < h) {
-              val r = yy * w + xx
-              if (state(r) == 1) { state(r) = 2; stack.push(r) }
-            }
-            dx += 1
-          }
-          dy += 1
-        }
-      }
+      Components.growStrong8(state, w, h)
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
       p2 = 0
       while (p2 < w * h) {

@@ -114,17 +114,11 @@ object Rag {
     * label. */
   private[graft] def mergeHierarchical(
       edges: Seq[(Long, Long, Double, Long)], thresh: Double): Map[Long, Long] = {
-    // union-find over labels; find is ITERATIVE (a long absorption
-    // lineage — bounded only by the edge cap — must not grow the task
-    // stack) with full path compression
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (c != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
+    // union-find over the sorted distinct labels' indices: min index =
+    // min label, so the min-root union keeps `keep = min` exactly
+    val labels = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted.toArray
+    val uf = new Components.UnionFind(labels.length)
+    def index(l: Long): Int = java.util.Arrays.binarySearch(labels, l)
     // adjacency between CURRENT roots: canonical pair -> (sum, count)
     val adj = scala.collection.mutable.HashMap.empty[(Long, Long), (Double, Long)]
     // incidence: root -> set of neighboring roots
@@ -161,7 +155,7 @@ object Rag {
           else {
             val keep = math.min(la, lb)
             val drop = math.max(la, lb)
-            parent(drop) = keep
+            uf.union(index(keep), index(drop))
             adj.remove((la, lb))
             inc(keep) -= drop
             val dropN = inc.remove(drop).getOrElse(scala.collection.mutable.Set.empty)
@@ -182,9 +176,7 @@ object Rag {
       }
     }
     // canonical min-label map over every label seen
-    val labels = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    // find() roots are min-labeled by construction (keep = min)
-    labels.map(l => l -> find(l)).toMap
+    labels.iterator.map(l => l -> labels(uf.find(index(l)))).toMap
   }
 
   /** Full ragmerge: returns the relabeled per-pixel rows

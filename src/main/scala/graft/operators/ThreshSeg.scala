@@ -29,39 +29,11 @@ import graft.core.{Geom, PixelCodec}
  */
 object ThreshSeg {
 
-  /** 4-connected component labeling; returns (labels, areas). */
-  private[graft] def label4(fg: Array[Boolean], w: Int, h: Int): (Array[Int], Array[Int]) = {
-    val lab = Array.fill(fg.length)(-1)
-    val areas = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val stack = new java.util.ArrayDeque[Int]()
-    var p = 0
-    while (p < fg.length) {
-      if (fg(p) && lab(p) < 0) {
-        val id = areas.length
-        var area = 0
-        stack.push(p)
-        lab(p) = id
-        while (!stack.isEmpty) {
-          val q = stack.pop()
-          area += 1
-          val x = q % w; val y = q / w
-          if (x > 0 && fg(q - 1) && lab(q - 1) < 0) { lab(q - 1) = id; stack.push(q - 1) }
-          if (x < w - 1 && fg(q + 1) && lab(q + 1) < 0) { lab(q + 1) = id; stack.push(q + 1) }
-          if (y > 0 && fg(q - w) && lab(q - w) < 0) { lab(q - w) = id; stack.push(q - w) }
-          if (y < h - 1 && fg(q + w) && lab(q + w) < 0) { lab(q + w) = id; stack.push(q + w) }
-        }
-        areas += area
-      }
-      p += 1
-    }
-    (lab, areas.toArray)
-  }
-
   /** skimage remove_small_holes: fill background components < area. */
   private[graft] def fillSmallHoles(bw: Array[Boolean], w: Int, h: Int,
                                         area: Int): Unit = {
     val bg = bw.map(!_)
-    val (lab, areas) = label4(bg, w, h)
+    val (lab, areas) = Components.label4(bg, w, h)
     var p = 0
     while (p < bw.length) {
       if (!bw(p) && areas(lab(p)) < area) bw(p) = true
@@ -72,7 +44,7 @@ object ThreshSeg {
   /** skimage remove_small_objects: drop foreground components < minSize. */
   private[graft] def removeSmallObjects(bw: Array[Boolean], w: Int, h: Int,
                                             minSize: Int): Unit = {
-    val (lab, areas) = label4(bw, w, h)
+    val (lab, areas) = Components.label4(bw, w, h)
     var p = 0
     while (p < bw.length) {
       if (bw(p) && areas(lab(p)) < minSize) bw(p) = false

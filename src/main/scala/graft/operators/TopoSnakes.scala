@@ -223,7 +223,7 @@ object TopoSnakes {
   /** scipy.ndimage.label: 4-connected, labels 1.. in scan order. */
   private def emitComponents(id: String, fg: Array[Byte], w: Int, h: Int)
       : Seq[(String, Int, Int, Int)] = {
-    val (comp, _) = ThreshSeg.label4(fg.map(_ == 1), w, h)
+    val (comp, _) = Components.label4(fg.map(_ == 1), w, h)
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int, Int)]
     var p = 0
     while (p < comp.length) {

@@ -2781,8 +2781,9 @@ object Queries {
     * (Edge.cannyTiles): the SAME fixture and the SAME closed-form
     * oracle as q_canny, because the tiled path is bit-exact — per-tile
     * finite-support kernels on haloed windows plus hysteresis as
-    * connected components (Components.connected) reproduce the
-    * whole-image flood fill pixel-for-pixel. 80x48 images at
+    * connected components (Edge.hysteresis8 over
+    * Components.connectedRoots) reproduce the whole-image flood fill
+    * pixel-for-pixel. 80x48 images at
     * tileSize=32 run a genuine 3x2 multi-tile layout. */
   def qCannyTiled(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark

@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 import graft.operators.Components
 import graft.text.TextOps
 
-/** Components.connected vs a naive driver-side union-find, across graph
+/** Components.connectedRoots, expanded over the edges' node set on the
+  * test side, vs a naive driver-side union-find, across graph
   * shapes chosen to stress the alternating-star algorithm: chains (worst
   * case for plain label propagation), stars, rings, disjoint mixtures,
   * duplicate/reversed/self-loop edges, and seeded random graphs. */
@@ -30,9 +31,14 @@ class ComponentsSpec extends AnyFunSuite {
     byRoot.flatMap { case (_, ns) => val m = ns.min; ns.map(_ -> m) }.toMap
   }
 
-  private def run(edges: Seq[(String, String)]): Map[String, String] =
-    Components.connected(edges.toDF("a", "b"), "a", "b")
+  /** Every node of `edges` -> its component; a root has no row in the
+    * root map and maps to itself. */
+  private def run(edges: Seq[(String, String)]): Map[String, String] = {
+    val roots = Components.connectedRoots(edges.toDF("a", "b"), "a", "b")
       .as[(String, String)].collect().toMap
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    nodes.map(n => n -> roots.getOrElse(n, n)).toMap
+  }
 
   test("chain, star, ring, disjoint mixture == union-find") {
     val chain = (0 until 40).map(i => (f"c$i%03d", f"c${i + 1}%03d"))
@@ -50,7 +56,7 @@ class ComponentsSpec extends AnyFunSuite {
     assert(got("e") == "c" && got("a") == "a" && got("b") == "a")
   }
 
-  test("connectedRoots: non-root map only; coalesce over nodes == connected") {
+  test("connectedRoots: non-root map only; coalesce over nodes == union-find") {
     val chain = (0 until 25).map(i => (f"c$i%03d", f"c${i + 1}%03d"))
     val edges = chain ++ Seq(("x1", "x2"), ("x2", "x3"), ("y1", "y2"))
     val want = naive(edges)
@@ -111,5 +117,24 @@ class ComponentsSpec extends AnyFunSuite {
     val got = TextOps.dedupClusters(docs, "doc_id", pairs)
       .as[(String, String)].collect().toMap
     assert(got == Map("dA" -> "dA", "dB" -> "dA", "dC" -> "dA", "dD" -> "dD"))
+  }
+
+  test("connected components ride a reliable checkpoint dir when set") {
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    sc.setCheckpointDir(dir)
+    try {
+      val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("u", "v")
+      val roots = Components.connectedRoots(edges, "u", "v")
+        .as[(Long, Long)].collect().toMap
+      val got = Seq(1L, 2L, 3L, 10L, 11L).map(n => n -> roots.getOrElse(n, n)).toMap
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+      // the reliable path actually wrote checkpoint data
+      val wrote = new java.io.File(dir).listFiles()
+      assert(wrote != null && wrote.nonEmpty, "no checkpoint data written")
+    } finally {
+      sc.setCheckpointDir(null)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
   }
 }

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import graft.core.PixelCodec
 import graft.gen.GridImages
-import graft.operators.Rag
+import graft.operators.{ImageOps, Rag}
 
 class RagSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SparkTestSession.spark
@@ -188,5 +189,20 @@ class RagSpec extends AnyFunSuite {
     def causes(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ causes(t.getCause)
     assert(causes(ex).exists(_.contains("no matching raster")), causes(ex).mkString(" | "))
+  }
+
+  test("ragMerge on a single-region segmentation: labels pass through") {
+    val w = 20; val h = 10
+    val seg = Array.fill(w * h)(7f)
+    val img = Array.tabulate(w * h)(p => (p % 13).toFloat)
+    val segDs = spark.createDataset(Seq(
+      ImageOps.fromArray("r0", Array(seg), w, h, 0, 0, 1.0, PixelCodec.FmtRawLe)))(
+      org.apache.spark.sql.Encoders.product[ImageRow])
+    val imgDs = spark.createDataset(Seq(
+      ImageOps.fromArray("r0", Array(img), w, h, 0, 0, 1.0, PixelCodec.FmtRawLe)))(
+      org.apache.spark.sql.Encoders.product[ImageRow])
+    val out = Rag.ragMerge(segDs, imgDs, thresh = 10.0).collect()
+    assert(out.length == w * h)
+    assert(out.forall(_.getLong(3) == 7L), "single region keeps its label")
   }
 }

@@ -4,27 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import graft.core.PixelCodec
 import graft.gen.GridImages
-import graft.operators.{ImageOps, Rag, ThreshSeg, ConvNet}
+import graft.operators.{ImageOps, ThreshSeg, ConvNet}
 
 /** Edge cases of the round-4 operators: degenerate inputs must take the
   * documented path, not a silent wrong answer. */
 class Round4EdgeSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SparkTestSession.spark
-
-  test("ragMerge on a single-region segmentation: labels pass through") {
-    val w = 20; val h = 10
-    val seg = Array.fill(w * h)(7f)
-    val img = Array.tabulate(w * h)(p => (p % 13).toFloat)
-    val segDs = spark.createDataset(Seq(
-      ImageOps.fromArray("r0", Array(seg), w, h, 0, 0, 1.0, PixelCodec.FmtRawLe)))(
-      org.apache.spark.sql.Encoders.product[ImageRow])
-    val imgDs = spark.createDataset(Seq(
-      ImageOps.fromArray("r0", Array(img), w, h, 0, 0, 1.0, PixelCodec.FmtRawLe)))(
-      org.apache.spark.sql.Encoders.product[ImageRow])
-    val out = Rag.ragMerge(segDs, imgDs, thresh = 10.0).collect()
-    assert(out.length == w * h)
-    assert(out.forall(_.getLong(3) == 7L), "single region keeps its label")
-  }
 
   test("threshSeg overlap: both polygons emit; max(poly_id) composes deterministically") {
     val imgs = spark.createDataset(GridImages.threshImages(1).toSeq)(

@@ -9,9 +9,8 @@ import graft.core.{Geom, GridIndex}
 import org.apache.spark.sql.GraftBridge.{expression => exprOf, column => colOf}
 
 /** Scale-lens hardening from the round-5 close: fail-fast caps where a
-  * per-group kernel was unbounded, determinism under ties, the shared
-  * dedupe tripwire on the CNN tile path, and the reliable-checkpoint
-  * path for multi-round components. */
+  * per-group kernel was unbounded, determinism under ties, and the
+  * shared dedupe tripwire on the CNN tile path. */
 class Round5ScaleSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
@@ -93,23 +92,5 @@ class Round5ScaleSpec extends AnyFunSuite {
       ConvNet.segPredictTiles(tiles, net, tileSize = 24).collect()
     }
     assert(deepMsg(e).contains("non-adjacent duplicate"))
-  }
-
-  test("connected components ride a reliable checkpoint dir when set") {
-    val sc = spark.sparkContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    sc.setCheckpointDir(dir)
-    try {
-      val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("u", "v")
-      val got = Components.connected(edges, "u", "v")
-        .as[(Long, Long)].collect().toMap
-      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-      // the reliable path actually wrote checkpoint data
-      val wrote = new java.io.File(dir).listFiles()
-      assert(wrote != null && wrote.nonEmpty, "no checkpoint data written")
-    } finally {
-      sc.setCheckpointDir(null)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
   }
 }

@@ -54,7 +54,7 @@ class TopoSnakesSpec extends AnyFunSuite {
     // control: plain whole-image ACWE from the same init merges the seeds
     val fin = Snakes.acwe(img, w, h, seed.map(v => if (v > 0) 1.toByte else 0.toByte),
       iterations = 30)
-    val (lab, areas) = graft.operators.ThreshSeg.label4(fin.map(_ == 1), w, h)
+    val (lab, areas) = graft.operators.Components.label4(fin.map(_ == 1), w, h)
     assert(areas.length == 1, s"control should merge, got ${areas.length} components")
   }
 

@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
 import graft.SparkTestSession
 
 /** `Edge.hysteresis8` buffers each partition's candidate pixels whole;
-  * past its per-partition row bound it must fail with a message. */
+  * past its per-partition row bound it must fail with a message. Its
+  * segment labels hold the partition id in 23 bits; past that the
+  * label builder must fail too. */
 class HysteresisBoundSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
@@ -25,5 +27,20 @@ class HysteresisBoundSpec extends AnyFunSuite {
     val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
     assert(msgs.exists(m => m != null && m.contains("more than 3 candidate pixels")),
       s"unexpected failure: ${e.getMessage}")
+  }
+
+  test("segmentLabel: every strong label sorts below every weak one; 2^23 partitions trip") {
+    val pids = Seq(0L, 1L, 4096L, Edge.MaxLabelPartitions - 1)
+    val roots = Seq(0, 1, 12345, Int.MaxValue)
+    val labs = for (p <- pids; r <- roots; s <- Seq(true, false))
+      yield (Edge.segmentLabel(p, r, s), p, r, s)
+    val (strong, weak) = labs.partition(_._4)
+    assert(strong.map(_._1).max < weak.map(_._1).min)
+    // distinct (pid, root) pairs keep distinct labels within each class
+    assert(strong.map(_._1).distinct.size == strong.size)
+    assert(weak.map(_._1).distinct.size == weak.size)
+    val e = intercept[IllegalArgumentException](
+      Edge.segmentLabel(Edge.MaxLabelPartitions, 0, strong = false))
+    assert(e.getMessage.contains("23-bit"), e.getMessage)
   }
 }
