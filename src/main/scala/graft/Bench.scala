@@ -27,8 +27,35 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * scaling-pair block under harness-control toggles (documented at the
  * lever in main) — for attributing measured-efficiency shifts to a
  * specific harness control on the same jar.
+ *
+ * A query whose warm-up or timed run throws also gets
+ * "<phase>: <exception class>: <message>" per failure under an additive
+ * `error_detail` map (both paths; absent when nothing failed).
  */
 object Bench {
+
+  /** Per query name, each failed warm-up or timed run as
+    * "<phase>: <exception class>: <message>", in order. */
+  private[graft] final class FailureLog {
+    private val byName =
+      scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
+
+    /** Runs `f`; a throw is recorded and yields None. Catches every
+      * Throwable, as the -1.0 sentinel always has. */
+    def attempt[A](name: String, phase: String)(f: => A): Option[A] =
+      try Some(f) catch { case e: Throwable =>
+        byName(name) = byName.getOrElse(name, Vector.empty) :+
+          s"$phase: ${e.getClass.getName}: ${e.getMessage}"
+        None
+      }
+
+    /** `,"error_detail":{name:[detail, ...]}`, or "" when nothing failed. */
+    def json: String =
+      if (byName.isEmpty) ""
+      else byName.map { case (k, es) =>
+        Verify.jsonString(k) + es.map(Verify.jsonString).mkString(":[", ",", "]")
+      }.mkString(""","error_detail":{""", ",", "}")
+  }
 
   private def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
@@ -223,19 +250,19 @@ object Bench {
         s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(",")}")
       val spark0 = session(cpus)
       val warm = "/root/testdata/sf0.001"
+      val log = new FailureLog
       val out = asked.map { name =>
         val fn = SparkEntry.queries(name)
-        try consume(fn(spark0, warm)) catch { case _: Throwable => }
+        log.attempt(name, "warm")(consume(fn(spark0, warm)))
         // same contract as the headline loop: a throwing query records
         // -1.0 instead of discarding every already-timed number
-        val ts = (1 to 3).map(_ =>
-          try time { consume(fn(spark0, sfDir)) }._1
-          catch { case _: Throwable => -1.0 })
-        name -> (if (ts.exists(_ >= 0)) ts.filter(_ >= 0).min else -1.0)
+        val ts = (1 to 3).flatMap(i =>
+          log.attempt(name, s"run $i")(time { consume(fn(spark0, sfDir)) }._1))
+        name -> (if (ts.nonEmpty) ts.min else -1.0)
       }
       spark0.stop()
       println(out.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-        .mkString("{", ",", "}"))
+        .mkString("{", ",", log.json + "}"))
       return
     }
 
@@ -302,12 +329,12 @@ object Bench {
       .filter(_.getName.endsWith(".parquet"))
       .foreach(f => try consume(spark.read.parquet(f.getPath))
         catch { case _: Throwable => })
+    val log = new FailureLog
     val queryTimes = headline.map { name =>
       val fn = SparkEntry.queries(name)
-      try consume(fn(spark, warmDir)) catch { case _: Throwable => }
-      val t = try time { consume(fn(spark, sfDir)) }._1
-              catch { case _: Throwable => -1.0 }
-      name -> t
+      log.attempt(name, "warm")(consume(fn(spark, warmDir)))
+      name -> log.attempt(name, "run")(time { consume(fn(spark, sfDir)) }._1)
+        .getOrElse(-1.0)
     }
 
     // ---- two-parallelism scaling on the flagship pipeline (N vs 4N
@@ -401,7 +428,7 @@ object Bench {
       f""""t_big_sec":${median(cnnPairs.map(_._2))}%.3f,""" +
       f""""efficiency":$cnnEff%.3f}"""
     val jsonLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs%s$errs%s,"pipeline_sec":$tBig%.3f,"cnn_seg_sec":$tCnn%.3f,"cnn_px_per_sec":$thrCnn%.0f,"scaling":$scaling%s,"cnn_scaling":$cnnScaling%s,"sf":"$sfDir%s"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs%s$errs%s${log.json}%s,"pipeline_sec":$tBig%.3f,"cnn_seg_sec":$tCnn%.3f,"cnn_px_per_sec":$thrCnn%.0f,"scaling":$scaling%s,"cnn_scaling":$cnnScaling%s,"sf":"$sfDir%s"}"""
     println(jsonLine)
     // the stdout line drowns in sbt [info] noise (round-1 BENCH_r01.json
     // came back "parsed": null) — ALSO write the machine-readable copy

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /**
  * Distributed connected components over an undirected edge list — the
@@ -31,6 +32,17 @@ import org.apache.spark.sql.functions._
  * growing lineage (same pattern a cluster job would use with a
  * checkpoint dir); the previous round's cache is released eagerly.
  *
+ * Driver finish: every star round pays a few Spark jobs of fixed cost
+ * whatever the graph size, so a near-duplicate graph of a few dozen
+ * edges spent ~20 jobs and over a second in the loop. The first
+ * checksum already counts the canonical edge set; at or under
+ * [[DriverFinishEdges]] edges the checkpointed set is collected and
+ * [[UnionFind]] solves it in one pass over the dense ranks of the node
+ * ids in Spark's ordering, so the min index is the min id and the root
+ * map is identical to the loop's. Over the bound the star rounds run
+ * unchanged: they are the scale path, with a shuffle bounded by the
+ * current edge count and nothing held on the driver.
+ *
  * This object is also the one home of the in-memory labelers the
  * distributed and raster paths share: [[UnionFind]] (Edge's per-
  * partition hysteresis labeling, Rag's hierarchical merge),
@@ -39,6 +51,11 @@ import org.apache.spark.sql.functions._
  * Edge.cannyMask, PhaseCong.phaseCongEdges).
  */
 object Components {
+
+  /** Largest canonical edge count [[connectedRoots]] finishes on the
+    * driver instead of running star rounds: 64k edges collect as a few
+    * MB of ids, and the union-find over them takes milliseconds. */
+  val DriverFinishEdges: Long = 1L << 16
 
   /** Array union-find over `0 until n`. `find` is iterative (a long
     * absorption lineage must not grow the stack) with full path
@@ -125,12 +142,22 @@ object Components {
     * universe (the dedup keep-one stage, hysteresis labels), so no
     * node-list expansion is built here.
     *
+    * Graphs of at most [[DriverFinishEdges]] canonical edges finish on
+    * the driver (see the object doc); larger ones run the star rounds.
+    *
     * @param maxRounds fail-fast bound on large+small star rounds; the
     *   O(log^2 n) guarantee makes 64 unreachable for any realistic
     *   graph (a 4096-node chain converges in < 10). */
   def connectedRoots(edges: DataFrame, srcCol: String, dstCol: String,
                      maxRounds: Int = 64): DataFrame =
-    starRoots(initEdges(edges, srcCol, dstCol), maxRounds)
+    connectedRoots(edges, srcCol, dstCol, maxRounds, DriverFinishEdges)
+
+  /** [[connectedRoots]] with the driver-finish bound as a parameter, so
+    * specs can force either path (`driverEdges = 0`: star rounds). */
+  private[graft] def connectedRoots(edges: DataFrame, srcCol: String,
+                                    dstCol: String, maxRounds: Int,
+                                    driverEdges: Long): DataFrame =
+    starRoots(initEdges(edges, srcCol, dstCol), maxRounds, driverEdges)
 
   /** Canonical edge relation (u, v): null-free, self-loop-free,
     * distinct, lineage-truncated (see truncate note below). */
@@ -165,10 +192,17 @@ object Components {
     else df.localCheckpoint(false)
 
   /** Alternating large/small-star rounds to the fixpoint; returns the
-    * root map (id, component) over the final star edges. */
-  private def starRoots(eInit: DataFrame, maxRounds: Int): DataFrame = {
+    * root map (id, component) over the final star edges — or, for at
+    * most `driverEdges` edges, the same map from [[driverRoots]]. */
+  private def starRoots(eInit: DataFrame, maxRounds: Int,
+                        driverEdges: Long): DataFrame = {
     var e = eInit
     var prevSig: (Long, Long) = checksum(e)
+    // the finish ranks ids under one type; mixed src/dst types stay on
+    // the star rounds, whose coercion widens them
+    if (prevSig._1 <= driverEdges &&
+        e.schema("u").dataType == e.schema("v").dataType)
+      return driverRoots(e, prevSig._1)
     var converged = prevSig._1 == 0L // empty graph: nothing to iterate
     var rounds = 0
     while (!converged) {
@@ -188,6 +222,31 @@ object Components {
     // At the fixpoint the edge set is a union of stars: every non-root
     // node carries exactly (node -> root). min() is belt and braces.
     e.groupBy(col("u").as("id")).agg(min("v").as("component"))
+  }
+
+  /** The root map of a small canonical edge set, solved on the driver:
+    * the collect reads the checkpoint the first checksum materialised
+    * (the upstream plan does not run again), [[UnionFind]] runs over
+    * the dense ranks of the node ids in Spark's ordering for their type
+    * (UTF8String byte order for strings, as the loop's min() compares),
+    * and the non-root rows come back as a local relation a caller's
+    * join can broadcast. An empty set (`edges` = 0) skips the collect. */
+  private def driverRoots(e: DataFrame, edges: Long): DataFrame = {
+    val rows = if (edges == 0L) Array.empty[Row] else e.collect()
+    e.unpersist()
+    val ends = rows.flatMap(r => Array(r.get(0), r.get(1)))
+    val idType = e.schema("u").dataType
+    val rank = GraftBridge.denseRanks(ends, idType)
+    val n = if (rank.isEmpty) 0 else rank.max + 1
+    val uf = new UnionFind(n)
+    rows.indices.foreach(k => uf.union(rank(2 * k), rank(2 * k + 1)))
+    val ids = new Array[Any](n)
+    ends.indices.foreach(s => ids(rank(s)) = ends(s))
+    val roots = (0 until n).collect {
+      case i if uf.find(i) != i => Row(ids(i), ids(uf.find(i)))
+    }
+    e.sparkSession.createDataFrame(java.util.Arrays.asList(roots: _*),
+      StructType(Seq(StructField("id", idType), StructField("component", idType))))
   }
 
   /** Large-star: every node links its LARGER neighbors to the minimum

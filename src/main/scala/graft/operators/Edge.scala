@@ -171,9 +171,10 @@ object Edge {
     * every weak pixel 8-connected to a strong one" is exactly
     * "component contains a strong pixel" over the sparse weak|strong
     * pixel graph, which [[hysteresis8]] solves with
-    * [[Components.connectedRoots]] (Kiveris alternating-star) in
-    * O(log n) bounded-shuffle rounds — segment-label pairs are all that
-    * ever shuffles; the dense pixel payloads never leave the tile
+    * [[Components.connectedRoots]] over segment labels (a driver
+    * union-find for a small label graph, else Kiveris alternating-star
+    * in O(log n) bounded-shuffle rounds) — segment-label pairs are all
+    * that ever shuffles; the dense pixel payloads never leave the tile
     * flatMap. */
   def cannyTiles(tiles: Dataset[MultiTileRow], tileSize: Int, halo: Int,
                  lowT: Double, highT: Double, sigma: Double = 0.0,

@@ -281,7 +281,10 @@ class SnapshotTable(spark: SparkSession, root: String, partKey: String) {
     * strand old v-dirs that only time travel can see). Time travel to
     * an expired version fails with the usual missing-snapshot error;
     * the live read() is untouched because the newest manifest is always
-    * kept. Returns the deleted snapshot-dir versions. */
+    * kept. Staging dirs (`.staging-v<v>-*`) of a version at or below the
+    * newest published one are deleted too: that version's manifest is
+    * taken, so their writer can never publish. Returns the deleted
+    * snapshot-dir versions. */
   def expireSnapshots(keepLast: Int = 1): Seq[Int] = {
     require(keepLast >= 1, "must keep at least the newest snapshot")
     val all = snapshots()
@@ -296,14 +299,20 @@ class SnapshotTable(spark: SparkSession, root: String, partKey: String) {
     // only dirs AT OR BELOW the newest published version are candidates:
     // a dir above it is an IN-FLIGHT commit/compaction that has written
     // data but not yet published its manifest — sweeping it would let the
-    // writer publish a manifest pointing at deleted files. (.staging-*
-    // dirs — possibly stranded by a crashed writer — are dot-prefixed,
-    // invisible to readers, skipped here for the same in-flight reason.)
-    val deletable = f.listStatus(dataRoot).iterator
-      .map(_.getPath.getName)
+    // writer publish a manifest pointing at deleted files. The same rule
+    // holds for .staging-v<v>-* dirs: at or below the newest version
+    // they are stranded (crashed writer, or a lost publish race), above
+    // it they may still be in flight.
+    val names = f.listStatus(dataRoot).iterator.map(_.getPath.getName).toSeq
+    val Staging = """\.staging-v(\d+)-.*""".r
+    names.foreach {
+      case n @ Staging(v) if v.toInt <= kept.last => f.delete(new Path(dataRoot, n), true)
+      case _ =>
+    }
+    val deletable = names
       .collect { case s if s.startsWith("v") => s.stripPrefix("v").toInt }
       .filter(v => v <= kept.last && !referenced(v))
-      .toSeq.sorted
+      .sorted
     deletable.foreach(v => f.delete(dataDir(v), true))
     deletable
   }

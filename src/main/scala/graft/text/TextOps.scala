@@ -118,9 +118,13 @@ object TextOps {
     * (min doc id); docs in no pair map to themselves. This is the final
     * keep-one stage of a web-scale dedup pipeline — A~B and B~C dedup
     * to ONE survivor even when A and C never became a candidate pair.
-    * Shuffles only (id, id) edges, via [[graft.operators.Components]]
-    * (alternating star algorithm, O(log^2 n) rounds). Returns
-    * (idCol, rep_id).
+    * Shuffles only (id, id) edges, via [[graft.operators.Components]]:
+    * a pair graph of at most `Components.DriverFinishEdges` distinct
+    * edges (the common case: near-duplicates are rare) is collected
+    * once and solved by a driver union-find, and its small root map is
+    * broadcast into the join below; a larger one runs the alternating
+    * star rounds (O(log^2 n) rounds, shuffle bounded by the edge count).
+    * Returns (idCol, rep_id).
     *
     * connectedRoots, not connected: the docs relation IS the node
     * universe here (pairs reference doc ids), so Components' node-list

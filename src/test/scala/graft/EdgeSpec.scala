@@ -173,6 +173,19 @@ class EdgeSpec extends AnyFunSuite {
       lowT = 15, highT = 35, sigma = 1.4)
   }
 
+  test("cannyTiles on the multi-tile step fixture stays within its job count") {
+    import graft.operators.Tiler
+    val ds = spark.createDataset(GridImages.edgeImages(4))(
+      org.apache.spark.sql.Encoders.product[graft.ImageRow])
+    val tiles = Tiler.multiTiles(ds, 32, Tiler.resForCellSize(64.0), halo = 4)
+    val (kept, jobs) = SparkJobs.during(spark)(
+      Edge.cannyTiles(tiles, 32, halo = 4, lowT = 20, highT = 40).collect())
+    assert(kept.nonEmpty)
+    // 4 measured with the driver-side CC finish: this fixture's label
+    // graph has no cross-partition edge, so the finish skips its collect
+    assert(jobs <= 4, s"cannyTiles launched $jobs jobs")
+  }
+
   test("cannyTiles fails fast on a halo smaller than the kernel support") {
     import graft.operators.Tiler
     val ds = spark.createDataset(GridImages.edgeImages(1))(

@@ -143,12 +143,16 @@ class PlanShapeSpec extends AnyFunSuite {
       halo = 16, nscale = 2, norient = 2).toDF())
     assert(!pc.contains("Exchange"), s"phaseCongTiles must not shuffle pixels:\n$pc")
     // distributed Canny: the dense tile payloads die inside the
-    // candidate flatMap (checkpointed); every exchange in the hysteresis
-    // graph carries sparse (image_id, x, y, strong, id) rows only
+    // candidate flatMap (checkpointed as sparse (image_id, x, y, strong,
+    // lab) rows); this small label graph's root map comes back from the
+    // CC driver finish as a local relation, so the kept-row plan
+    // shuffles nothing (a broadcast of the root map at most)
     val ct = plan(graft.operators.Edge.cannyTiles(
       Tiler.multiTiles(images, 64, cellRes, halo = 4), tileSize = 64,
       halo = 4, lowT = 20, highT = 40))
-    assert(ct.contains("Exchange"), "cannyTiles hysteresis should shuffle candidate ids")
+    assert(ct.contains("lab"), s"cannyTiles plan lost its labeled candidates:\n$ct")
+    assert(!ct.linesIterator.exists(l => l.contains("Exchange") && !l.contains("BroadcastExchange")),
+      s"cannyTiles kept-row plan shuffles:\n$ct")
     assert(!ct.contains("bands") && !ct.contains("pixels") && !ct.contains("bytes"),
       s"pixel payloads crossed into the hysteresis graph:\n$ct")
     // full tiled phase-edge chain: the rescale extrema aggregate is the

@@ -228,18 +228,6 @@ class Round2FixSpec extends AnyFunSuite {
     }
   }
 
-  test("SnapshotTable resolves the Hadoop FS from an explicit file:/ scheme") {
-    import graft.plans.SnapshotTable
-    val root = "file://" + java.nio.file.Files
-      .createTempDirectory("graft_fs_").toString + "/t"
-    val table = new SnapshotTable(spark, root, "shard")
-    val df = spark.range(10).selectExpr("id", "cast(id % 2 as string) as shard")
-    assert(table.commit(df, "w1") == Set("0", "1"))
-    assert(table.read().count() == 10)
-    assert(table.committed()("0").rows == 5)
-    assert(table.commit(df, "w2").isEmpty) // idempotent re-commit
-  }
-
   test("classifyObjects: single-class model, null features, tie break") {
     import graft.operators.Training
     val m1 = Training.CentroidModel(Array(7), Array(Array(1.0, 2.0)))

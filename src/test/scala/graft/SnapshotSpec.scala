@@ -212,6 +212,38 @@ class SnapshotSpec extends AnyFunSuite {
     assert(t2.read().count() == 20)
   }
 
+  test("expireSnapshots reclaims stranded staging dirs, keeps in-flight ones") {
+    val root = freshRoot()
+    val t = new SnapshotTable(spark, root, "shard")
+    t.commit(workload(Seq("a")), writer = "w1")
+    t.commit(workload(Seq("b")), writer = "w2")
+    // a writer that staged v2 lost the publish race (or crashed): v2's
+    // manifest exists, so it can never publish; a v3 stager is in flight
+    val stranded = Paths.get(root, "data", ".staging-v2-deadbeef")
+    val inFlight = Paths.get(root, "data", ".staging-v3-cafef00d")
+    Seq(stranded, inFlight).foreach { d =>
+      Files.createDirectories(d)
+      Files.writeString(d.resolve("part-0.parquet"), "staged")
+    }
+    assert(t.expireSnapshots(keepLast = 1).isEmpty) // no v-dir deletable
+    assert(!Files.exists(stranded), "stranded staging dir not reclaimed")
+    assert(Files.exists(inFlight.resolve("part-0.parquet")),
+      "expire swept an in-flight staging dir")
+    assert(t.read().count() == 20)
+  }
+
+  test("SnapshotTable resolves the Hadoop FS from an explicit file:/ scheme") {
+    import graft.plans.SnapshotTable
+    val root = "file://" + java.nio.file.Files
+      .createTempDirectory("graft_fs_").toString + "/t"
+    val table = new SnapshotTable(spark, root, "shard")
+    val df = spark.range(10).selectExpr("id", "cast(id % 2 as string) as shard")
+    assert(table.commit(df, "w1") == Set("0", "1"))
+    assert(table.read().count() == 10)
+    assert(table.committed()("0").rows == 5)
+    assert(table.commit(df, "w2").isEmpty) // idempotent re-commit
+  }
+
   test("NULL partition values fail loudly before anything is published") {
     val root = freshRoot()
     val t = new SnapshotTable(spark, root, "shard")
