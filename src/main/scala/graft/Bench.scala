@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import graft.Harness.{consume, time, withConfs}
 
 /**
  * Benchmark entry (driver-run per round -> BENCH_r{N}.json).
@@ -13,99 +14,41 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * and the scaling efficiency (T_small / T_big) / 4 is reported in the
  * same JSON line (also summarized in BENCH.md / BASELINE.md). The 1v4
  * pair sits below this host's contention knee so the ratio isolates the
- * engine (rationale + raw probes at the scaleCores definition below and
+ * engine (rationale + raw probes at scaleWidths below and
  * in BENCH.md).
  *
  * Warm passes run first so JIT/codegen don't bias either level; the
  * pairs run back-to-back (common-mode host noise cancels in the ratio)
  * and the reported efficiency is the median pair ratio.
  *
- * Dev levers (neither writes BENCH.json): SPARK_GRAFT_ONLY="q_a,q_b"
- * times just those queries (best-of-3 each, no pipeline/CNN blocks) —
- * for A/B-ing one operator without a full bench run; and
- * SPARK_GRAFT_SCALING_ONLY=1|cnn + SPARK_GRAFT_AB=... runs just one
- * scaling-pair block under harness-control toggles (documented at the
- * lever in main) — for attributing measured-efficiency shifts to a
- * specific harness control on the same jar.
+ * Dev runs of single legs (one query's best of 3, one scaling block,
+ * plans) live in `graft.Dev`; sessions and timing in `graft.Harness`.
  *
  * A query whose warm-up or timed run throws also gets
  * "<phase>: <exception class>: <message>" per failure under an additive
- * `error_detail` map (both paths; absent when nothing failed).
+ * `error_detail` map (absent when nothing failed).
  */
 object Bench {
 
-  /** Per query name, each failed warm-up or timed run as
-    * "<phase>: <exception class>: <message>", in order. */
-  private[graft] final class FailureLog {
-    private val byName =
-      scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
+  private val Headline = Seq(
+    "q_zonal_box_stats", "q_zonal_frac", "q_knn", "q_knn_hex",
+    "q_hist_ecdf", "q_temporal_comp", "q_dedup_exact", "q_jaccard_pairs",
+    "q_minhash_pairs", "q_simhash_pairs", "q_ann_topk", "q_ann_lsh",
+    "q_ann_ivf", "q_tokens", "q_windowed", "q_sessions",
+    "q_dedup_clusters") // round 4: minhash pairs -> CC keep-one
 
-    /** Runs `f`; a throw is recorded and yields None. Catches every
-      * Throwable, as the -1.0 sentinel always has. */
-    def attempt[A](name: String, phase: String)(f: => A): Option[A] =
-      try Some(f) catch { case e: Throwable =>
-        byName(name) = byName.getOrElse(name, Vector.empty) :+
-          s"$phase: ${e.getClass.getName}: ${e.getMessage}"
-        None
-      }
-
-    /** `,"error_detail":{name:[detail, ...]}`, or "" when nothing failed. */
-    def json: String =
-      if (byName.isEmpty) ""
-      else byName.map { case (k, es) =>
-        Verify.jsonString(k) + es.map(Verify.jsonString).mkString(":[", ",", "]")
-      }.mkString(""","error_detail":{""", ",", "}")
-  }
-
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Consume a DataFrame COMPLETELY: the noop sink reads every column of
-    * every row, so Catalyst cannot prune work out of the timed plan the
-    * way `count()` can (count over an Aggregate lets ColumnPruning drop
-    * the unreferenced aggregate expressions AND their input columns —
-    * the timed number would describe a lighter query than the one
-    * named). */
-  private def consume(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-    // A/B'd against count(): median pair efficiency 0.880 (noop) vs
-    // 0.884 (count) on the same jar — the consuming action is
-    // measurement-neutral here; noop is kept as the stricter contract.
-
-  // Scan-split controls. abFineSplit is a dev-only lever (false in the
-  // graded path; SPARK_GRAFT_AB=8m-on re-applies the fine-split override
-  // to the flagship legs to reproduce the artifact documented at
-  // pipeline()). abCnnSplit IS the graded CNN legs' split size — its
-  // "32m" default is the measured optimum (A/B at cnnRun); the lever
-  // only exists so scaling-only runs can re-test other sizes ("off" =
-  // default 128 MB bins).
-  @volatile private var abFineSplit = false
-  @volatile private var abCnnSplit = "32m"
-
-  /** Runs `body` with `confs` set on the session, then puts each key
-    * back to its previous value (unset if it had none) — also when
-    * `body` throws, so a failed leg never leaks its overrides into the
-    * next one. Wrap the action too: confs are read at plan time. */
-  private[graft] def withConfs[A](spark: SparkSession, confs: (String, String)*)
-                                 (body: => A): A = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  /** The CNN legs' scan split size. The dedicated 1/4-size CNN table
+    * genuinely bin-packs into a handful of UNEVEN default 128 MB bins
+    * (measured: coalesce(4) inherited a 2-bins-vs-1 skew, ratio 0.60 — a
+    * packing artifact, not an engine cost), so these legs keep a split
+    * override — sized by a three-way A/B on the same jar (median pair
+    * ratio, 3 pairs each): 8 MB 0.829, default 128 MB 0.869, 32 MB 0.901
+    * with the fastest and tightest big legs. 32 MB yields ~50 even bins
+    * (~13 per task at width 4) — enough splits to balance both legs,
+    * coarse enough to avoid the per-split overhead that fine splits levy
+    * on the wide leg (the same trade the flagship A/B at pipeline()
+    * quantified). */
+  private val CnnSplit = "32m"
 
   /** The overrides of a width-`parallelism` leg: shuffle width and, when
     * given, the scan split size; none for `parallelism <= 0`. */
@@ -114,15 +57,42 @@ object Bench {
     else ("spark.sql.shuffle.partitions" -> parallelism.toString) +:
       split.map("spark.sql.files.maxPartitionBytes" -> _).toSeq
 
+  /** N=1 vs 4N=4 (cores_small, cores_big) under `cpus` — both levels sit
+    * far below the sandbox host's contention point (its background load
+    * penalizes wider runs progressively — raw probes in BENCH.md), and
+    * the JVM's GC capacity exceeds the mutator width at BOTH levels, so
+    * the ratio isolates the ENGINE's scaling. Measured pair ratios are
+    * stable at ~0.90 across host-load regimes; wider pairs (2v8, 4v16)
+    * fluctuate 0.64-0.92 with the host, never because of a plan change.
+    * At SPARK_GRAFT_CPUS=2 the pair is 1v2. */
+  private[graft] def scaleWidths(cpus: Int): (Int, Int) = {
+    val big = math.min(4, cpus)
+    (math.max(1, big / 4), big)
+  }
+
+  /** The session both scaling blocks run in: one local[min(16, cpus)]
+    * session with the parallel width controlled by input partitioning.
+    * This sandbox VM's host throttles erratically above ~16 threads and
+    * varies wildly BETWEEN JVM sessions (documented in BENCH.md with raw
+    * probes), so session-per-level measurements would mostly measure host
+    * noise; within one session the same job at two widths is a clean
+    * N-vs-4N comparison. AQE partition coalescing would collapse the big
+    * leg's tiny shuffle stages back to width ~1 — a shared serial fraction
+    * that breaks the "width binds every stage" control — so it is off for
+    * the whole session (both legs, identically). */
+  private[graft] def scalingSession(cpus: Int): SparkSession = {
+    val width = math.min(16, cpus)
+    Harness.session(width, s"graft-bench-$width",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+  }
+
   /** Materialize the synthetic image table to parquet ONCE (the real
     * pipeline reads a table, not driver memory — also keeps task sizes
     * small). Returns (path, decoded-pixel count = sum w*h*bands).
     * The path embeds a fingerprint of the CURRENT generator's image 0,
     * so a change to Synth/PixelCodec invalidates the cache instead of
     * silently benchmarking a previous jar's fixture. */
-  private def materializeImages(spark: SparkSession, nImages: Int): (String, Long) = {
-    import org.apache.spark.sql.Encoders
-    import spark.implicits._
+  private[graft] def materializeImages(spark: SparkSession, nImages: Int): (String, Long) = {
     val probe = gen.Synth.imageAt(0L, seed = 7L, bands = 3)
     val fp = (java.util.Arrays.hashCode(probe.bytes) * 31 + probe.w * 7
       + probe.h).toHexString
@@ -139,88 +109,104 @@ object Bench {
     (path, px)
   }
 
-  /** The flagship pipeline at bench scale: parquet image table ->
-    * decode+tile -> broadcast join -> PIP -> zonal agg. Throughput unit:
-    * decoded pixels/sec. `parallelism` bounds the concurrent tasks of the
-    * heavy stage by coalescing the input (the Spark-native lever for
-    * "how many cores does this job use"). */
+  /** The image table at `path` as a leg reads it: the first `limit` rows
+    * when `limit > 0`, coalesced to `parallelism` partitions when
+    * `parallelism > 0` (the Spark-native lever for "how many cores does
+    * this job use"). */
+  private[graft] def readImages(spark: SparkSession, path: String,
+                                parallelism: Int = 0, limit: Int = 0): Dataset[ImageRow] = {
+    val all = spark.read.parquet(path)
+    val limited = if (limit > 0) all.limit(limit) else all
+    (if (parallelism > 0) limited.coalesce(parallelism) else limited)
+      .as[ImageRow](Encoders.product[ImageRow])
+  }
+
+  /** The flagship chain: decode+tile -> broadcast join -> PIP -> zonal
+    * agg over the synthetic polygon layer. This is the north-rule metric:
+    * spatial-join + tile assignment. The stats() windows are a tiny
+    * constant tail measured via the headline queries, not inside the
+    * scaling unit. */
+  private[graft] def flagship(images: Dataset[ImageRow]): DataFrame = {
+    implicit val spark: SparkSession = images.sparkSession
+    val polys = spark.createDataset(
+      gen.Synth.polygons(nExtra = 64).toSeq)(Encoders.product[PolyRow])
+    val cellRes = operators.Tiler.resForCellSize(64.0)
+    val tiles = operators.Tiler.tiles(images, tileSize = 64, cellRes = cellRes)
+    // no pipParallelism repartition here: at this polygon density the PIP
+    // kernel is light relative to decode, and the extra shuffle costs more
+    // than the skew it fixes (measured; Skew.saltedRepartition is for
+    // PIP-dominated workloads)
+    operators.ZonalStats.histogram(tiles, polys, cellRes)
+  }
+
+  /** The CNN chain: haloed multiTiles -> broadcast-weights forward ->
+    * per-pixel labels (the distributed semseg_pred path). The forward
+    * pass is zero-shuffle, so input partitioning IS the parallel width. */
+  private[graft] def cnnSeg(images: Dataset[ImageRow], net: operators.SegNet): DataFrame = {
+    implicit val spark: SparkSession = images.sparkSession
+    val cellRes = operators.Tiler.resForCellSize(64.0)
+    val tiles = operators.Tiler.multiTiles(images, 64, cellRes, halo = net.halo)
+    operators.ConvNet.segPredictTiles(tiles, net, 64).toDF()
+  }
+
+  /** The flagship leg at bench scale. Throughput unit: decoded
+    * pixels/sec. The parallel width must bind EVERY stage: map stages via
+    * coalesce, shuffle stages via shuffle.partitions (runtime conf,
+    * per-run). NO fine-split scan override here, deliberately: this
+    * table is 256 uniform ~8 MB files, so the default 128 MB bin-packing
+    * already yields even bins that divide both legs' widths — while
+    * forcing 8 MB splits (one per file) measured a SYSTEMATIC penalty on
+    * the wide leg only (A/B on the same jar, 5 paired runs each: median
+    * pair efficiency 0.735 with the override vs 0.880 without; small leg
+    * unchanged, big leg ~13.8 -> ~11.0 s). The CNN legs' 1/4-size table
+    * is the opposite regime (see CnnSplit) — split size must be tuned to
+    * the table, which is exactly the Snapshot.compact co-tuning note at
+    * cluster scale. Confs are restored after the action, so a later
+    * parallelism=0 run in the same session doesn't silently inherit the
+    * last scaling width. Consumed via the noop sink so the final agg
+    * expressions stay in the timed plan. */
   private def pipeline(spark: SparkSession, imagesPath: String,
-                       parallelism: Int = 0, limit: Int = 0): Unit = {
-    implicit val s: SparkSession = spark
-    import org.apache.spark.sql.Encoders
-    // the parallel width must bind EVERY stage: map stages via coalesce,
-    // shuffle stages via shuffle.partitions (runtime conf, per-run).
-    // NO fine-split scan override here, deliberately: this table is 256
-    // uniform ~8 MB files, so the default 128 MB bin-packing already
-    // yields even bins that divide both legs' widths — while forcing
-    // 8 MB splits (one per file) measured a SYSTEMATIC penalty on the
-    // wide leg only (A/B on the same jar, 5 paired runs each: median
-    // pair efficiency 0.735 with the override vs 0.880 without; small
-    // leg unchanged, big leg ~13.8 -> ~11.0 s). cnnRun's 1/4-size table
-    // is the opposite regime (~6 uneven default bins vs coalesce(4)) and
-    // keeps its override — split size must be tuned to the table, which
-    // is exactly the Snapshot.compact co-tuning note at cluster scale.
-    // Restored after the action, so a later parallelism=0 run in the
-    // same session doesn't silently inherit the last scaling width.
-    withConfs(spark, legConfs(parallelism, Option.when(abFineSplit)("8m")): _*) {
-      val images1 = spark.read.parquet(imagesPath)
-      val images0 = if (limit > 0) images1.limit(limit) else images1
-      val images = (if (parallelism > 0) images0.coalesce(parallelism) else images0)
-        .as[ImageRow](Encoders.product[ImageRow])
-      val polys = spark.createDataset(
-        gen.Synth.polygons(nExtra = 64).toSeq)(Encoders.product[PolyRow])
-      val cellRes = operators.Tiler.resForCellSize(64.0)
-      val tiles = operators.Tiler.tiles(images, tileSize = 64, cellRes = cellRes)
-      // no pipParallelism repartition here: at this polygon density the PIP
-      // kernel is light relative to decode, and the extra shuffle costs more
-      // than the skew it fixes (measured; Skew.saltedRepartition is for
-      // PIP-dominated workloads)
-      val hist = operators.ZonalStats.histogram(tiles, polys, cellRes)
-      // the timed unit is the north-rule metric: spatial-join + tile
-      // assignment (decode -> tile -> broadcast join -> PIP -> histogram
-      // agg). The stats() windows are a tiny constant tail measured via the
-      // headline queries, not inside the scaling unit. Consumed via the
-      // noop sink so the final agg expressions stay in the timed plan.
-      consume(hist)
+                       parallelism: Int = 0, limit: Int = 0): Unit =
+    withConfs(spark, legConfs(parallelism, None): _*) {
+      consume(flagship(readImages(spark, imagesPath, parallelism, limit)))
     }
-  }
 
-  /** CNN inference over an image table: haloed multiTiles ->
-    * broadcast-weights forward -> per-pixel labels (the distributed
-    * semseg_pred path). The forward pass is zero-shuffle, so input
-    * partitioning IS the parallel width — the same narrow coalesce
-    * lever as pipeline(). Unlike the flagship table, the dedicated
-    * 1/4-size CNN table genuinely bin-packs into a handful of UNEVEN
-    * default 128 MB bins (measured: coalesce(4) inherited a
-    * 2-bins-vs-1 skew, ratio 0.60 — a packing artifact, not an engine
-    * cost), so these legs keep a split override (abCnnSplit) — sized by
-    * a three-way A/B on the same jar (median pair ratio, 3 pairs each):
-    * 8 MB 0.829, default 128 MB 0.869, 32 MB 0.901 with the fastest
-    * and tightest big legs. 32 MB yields ~50 even bins (~13 per task at
-    * width 4) — enough splits to balance both legs, coarse enough to
-    * avoid the per-split overhead that fine splits levy on the wide
-    * leg (the same trade the flagship A/B at pipeline() quantified). */
+  /** CNN inference over an image table — the same narrow coalesce lever
+    * as pipeline(), with the CnnSplit scan override. */
   private def cnnRun(spark: SparkSession, net: operators.SegNet, p: String,
-                     limit: Int, parallelism: Int = 0): Unit = {
-    import org.apache.spark.sql.Encoders
-    implicit val s: SparkSession = spark
-    withConfs(spark,
-        legConfs(parallelism, Option.when(abCnnSplit != "off")(abCnnSplit)): _*) {
-      val im0 = spark.read.parquet(p)
-      val im1 = if (limit > 0) im0.limit(limit) else im0
-      val im = (if (parallelism > 0) im1.coalesce(parallelism) else im1)
-        .as[ImageRow](Encoders.product[ImageRow])
-      val cellRes = operators.Tiler.resForCellSize(64.0)
-      val tiles = operators.Tiler.multiTiles(im, 64, cellRes, halo = net.halo)
-      consume(operators.ConvNet.segPredictTiles(tiles, net, 64).toDF())
+                     limit: Int, parallelism: Int = 0): Unit =
+    withConfs(spark, legConfs(parallelism, Some(CnnSplit)): _*) {
+      consume(cnnSeg(readImages(spark, p, parallelism, limit), net))
     }
+
+  /** The flagship scaling block: symmetric warm-up — BOTH widths ramp
+    * (JIT, broadcast registration, scheduler) before any timed leg, the
+    * small width on a 1/8 slice, enough for ramp without a full 40 s
+    * leg — then 5 back-to-back (small, big) pairs. */
+  private[graft] def flagshipPairs(spark: SparkSession, path: String, nImages: Int,
+                                   small: Int, big: Int): Seq[(Double, Double)] = {
+    pipeline(spark, path, big)
+    pipeline(spark, path, small, limit = nImages / 8)
+    Harness.pairs(5)(pipeline(spark, path, small))(pipeline(spark, path, big))
   }
 
-  private def time[A](f: => A): (Double, A) = {
-    val t0 = System.nanoTime()
-    val r = f
-    ((System.nanoTime() - t0) / 1e9, r)
+  /** The CNN scaling block: the same paired design as the flagship, on
+    * its OWN table (see main); both widths warm on it first, then 3
+    * pairs. */
+  private[graft] def cnnPairs(spark: SparkSession, net: operators.SegNet, path: String,
+                              small: Int, big: Int): Seq[(Double, Double)] = {
+    cnnRun(spark, net, path, 0, small)
+    cnnRun(spark, net, path, 0, big)
+    Harness.pairs(3)(cnnRun(spark, net, path, 0, small))(cnnRun(spark, net, path, 0, big))
   }
+
+  /** Images in the CNN scaling table: a quarter of the flagship's, at
+    * least 512. */
+  private[graft] def cnnTableImages(nImages: Int): Int = math.max(512, nImages / 4)
+
+  /** The median of each pair's (t_small / t_big) / (big / small). */
+  private[graft] def efficiency(pairs: Seq[(Double, Double)], small: Int, big: Int): Double =
+    Harness.median(pairs.map { case (ts, tb) => ts / tb / (big.toDouble / small) })
 
   def main(args: Array[String]): Unit = {
     // every number below renders through the f interpolator, which uses
@@ -228,100 +214,16 @@ object Bench {
     // would emit unparseable BENCH.json (the exact "parsed: null"
     // failure the file-write guard at the bottom exists to prevent)
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // big enough that compute (decode + PIP), not job overhead, bounds the
-    // wall time at 32 cores — the scaling number is meaningless otherwise
-    val nImages = sys.env.getOrElse("SPARK_GRAFT_BENCH_IMAGES", "16384").toInt
-
-    val headline = Seq(
-      "q_zonal_box_stats", "q_zonal_frac", "q_knn", "q_knn_hex",
-      "q_hist_ecdf", "q_temporal_comp", "q_dedup_exact", "q_jaccard_pairs",
-      "q_minhash_pairs", "q_simhash_pairs", "q_ann_topk", "q_ann_lsh",
-      "q_ann_ivf", "q_tokens", "q_windowed", "q_sessions",
-      "q_dedup_clusters") // round 4: minhash pairs -> CC keep-one
-
-    // ---- dev lever: time ONLY the named queries (best-of-3) and exit
-    sys.env.get("SPARK_GRAFT_ONLY").foreach { names =>
-      // validate up front: a typo'd name must not abort minutes of timing
-      val asked = names.split(",").map(_.trim).filter(_.nonEmpty)
-      val unknown = asked.filterNot(SparkEntry.queries.contains)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(",")}")
-      val spark0 = session(cpus)
-      val warm = "/root/testdata/sf0.001"
-      val log = new FailureLog
-      val out = asked.map { name =>
-        val fn = SparkEntry.queries(name)
-        log.attempt(name, "warm")(consume(fn(spark0, warm)))
-        // same contract as the headline loop: a throwing query records
-        // -1.0 instead of discarding every already-timed number
-        val ts = (1 to 3).flatMap(i =>
-          log.attempt(name, s"run $i")(time { consume(fn(spark0, sfDir)) }._1))
-        name -> (if (ts.nonEmpty) ts.min else -1.0)
-      }
-      spark0.stop()
-      println(out.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-        .mkString("{", ",", log.json + "}"))
-      return
-    }
-
-    // ---- dev lever: ONLY the scaling pairs (no headline, no BENCH.json
-    // overwrite) — for A/B-ing harness controls on the same jar.
-    // SPARK_GRAFT_SCALING_ONLY=1 runs the flagship pairs;
-    // SPARK_GRAFT_SCALING_ONLY=cnn runs the CNN pairs on the dedicated
-    // 1/4-size table. Optional SPARK_GRAFT_AB toggles: "8m-on" (force
-    // 8 MB scan splits on the flagship legs — reproduces the documented
-    // wide-leg artifact), "aqe-coalesce-on", "cnn-split=<size|off>"
-    // (override the CNN legs' split size; "off" = default 128 MB bins).
-    if (sys.env.contains("SPARK_GRAFT_SCALING_ONLY")) {
-      val ab = sys.env.getOrElse("SPARK_GRAFT_AB", "")
-      val sp = session(math.min(16, cpus))
-      if (!ab.contains("aqe-coalesce-on"))
-        sp.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      abFineSplit = ab.contains("8m-on")
-      ab.split(",").find(_.startsWith("cnn-split=")).foreach(v =>
-        abCnnSplit = v.stripPrefix("cnn-split="))
-      val sc = math.min(4, cpus); val ss = math.max(1, sc / 4)
-      val ratio = sc.toDouble / ss // true width ratio (sc/ss), not a literal 4:
-                                   // at SPARK_GRAFT_CPUS=2 the pair is 1v2
-      val prs =
-        if (sys.env("SPARK_GRAFT_SCALING_ONLY") == "cnn") {
-          val net = operators.ConvNet.fixtureNet3
-          val (p3, _) = materializeImages(sp, math.max(512, nImages / 4))
-          cnnRun(sp, net, p3, 0, ss)
-          cnnRun(sp, net, p3, 0, sc)
-          (1 to 3).map { _ =>
-            val ts = time(cnnRun(sp, net, p3, 0, ss))._1
-            val tb = time(cnnRun(sp, net, p3, 0, sc))._1
-            println(f"[ab] pair ts=$ts%.2f tb=$tb%.2f ratio=${ts / tb / ratio}%.3f")
-            (ts, tb)
-          }
-        } else {
-          val (p2, _) = materializeImages(sp, nImages)
-          pipeline(sp, p2, sc)
-          pipeline(sp, p2, ss, limit = nImages / 8)
-          (1 to 5).map { _ =>
-            val ts = time(pipeline(sp, p2, ss))._1
-            val tb = time(pipeline(sp, p2, sc))._1
-            println(f"[ab] pair ts=$ts%.2f tb=$tb%.2f ratio=${ts / tb / ratio}%.3f")
-            (ts, tb)
-          }
-        }
-      val effs = prs.map { case (a, b) => a / b / ratio }.sorted
-      println(f"[ab] '$ab%s' median_eff=${effs(effs.size / 2)}%.3f")
-      sp.stop()
-      return
-    }
+    val sfDir = Harness.sfDir
+    val cpus = Harness.cpus(32)
+    val nImages = Harness.benchImages
 
     // ---- headline queries at full parallelism; each query warms once at
-    // sf0.001 so the timed number is steady-state throughput, not the
-    // one-off codegen/compile of its plan. The sf tables are touched once
-    // up front so the FIRST query over each table doesn't pay the cold
+    // sf0.001 (Harness.WarmDir). The sf tables are touched once up front
+    // so the FIRST query over each table doesn't pay the cold
     // file-listing + page-cache read its siblings then skip — per-query
     // numbers stop depending on their position in the list.
-    var spark = session(cpus)
-    val warmDir = "/root/testdata/sf0.001"
+    var spark = Harness.session(cpus, s"graft-bench-$cpus")
     // listFiles() is null for a missing/typo'd dir — skip pretouch then
     // (each query still records -1.0 individually) instead of NPEing
     // before a single query has run
@@ -329,85 +231,39 @@ object Bench {
       .filter(_.getName.endsWith(".parquet"))
       .foreach(f => try consume(spark.read.parquet(f.getPath))
         catch { case _: Throwable => })
-    val log = new FailureLog
-    val queryTimes = headline.map { name =>
-      val fn = SparkEntry.queries(name)
-      log.attempt(name, "warm")(consume(fn(spark, warmDir)))
-      name -> log.attempt(name, "run")(time { consume(fn(spark, sfDir)) }._1)
-        .getOrElse(-1.0)
-    }
+    val log = new Harness.FailureLog
+    val queryTimes = Headline.map(name =>
+      name -> Harness.warmAndTime(spark, log, name, sfDir, runs = 1))
 
     // ---- two-parallelism scaling on the flagship pipeline (N vs 4N
-    // cores in use). Measured INSIDE ONE local[16] session with the
-    // parallel width controlled by input partitioning: this sandbox VM's
-    // host throttles erratically above ~16 threads and varies wildly
-    // BETWEEN JVM sessions (documented in BENCH.md with raw probes), so
-    // session-per-level measurements would mostly measure host noise.
-    // Within one session the same job at two widths is a clean N-vs-4N
-    // comparison; 5 back-to-back (small, big) pairs, median pair ratio.
+    // cores in use), 5 back-to-back (small, big) pairs, median pair
+    // ratio; see scaleWidths and scalingSession.
     val (path, pixels) = materializeImages(spark, nImages)
     spark.stop()
-    // N=1 vs 4N=4: both levels sit far below the sandbox host's
-    // contention point (its background load penalizes wider runs
-    // progressively — raw probes in BENCH.md), and the JVM's GC capacity
-    // exceeds the mutator width at BOTH levels, so the ratio isolates the
-    // ENGINE's scaling. Measured pair ratios are stable at ~0.90 across
-    // host-load regimes; wider pairs (2v8, 4v16) fluctuate 0.64-0.92 with
-    // the host, never because of a plan change.
-    val scaleCores = math.min(4, cpus)
-    val scaleSmall = math.max(1, scaleCores / 4)
-    spark = session(math.min(16, cpus))
-    // AQE partition coalescing would collapse the big leg's tiny shuffle
-    // stages back to width ~1 — a shared serial fraction that breaks the
-    // "width binds every stage" control. Off for the whole scaling
-    // session (both legs, identically).
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    // symmetric warm-up: BOTH widths ramp (JIT, broadcast registration,
-    // scheduler) before any timed leg — the small width warms on a 1/8
-    // slice, enough for ramp without a full 40 s leg
-    pipeline(spark, path, scaleCores) // warm big
-    pipeline(spark, path, scaleSmall, limit = nImages / 8) // warm small
-    // PAIRED design: each (small, big) pair runs back-to-back so host
-    // noise (which is common-mode across adjacent runs) cancels in the
-    // per-pair ratio; the reported efficiency is the median pair ratio.
-    val pairs = (1 to 5).map { _ =>
-      val ts = time(pipeline(spark, path, scaleSmall))._1
-      val tb = time(pipeline(spark, path, scaleCores))._1
-      (ts, tb)
-    }
-    // ---- CNN inference throughput over the SAME image table: haloed
-    // multiTiles -> broadcast-weights forward -> per-pixel labels (the
-    // distributed semseg_pred path). One warm pass, then timed at the
-    // big width.
+    val (scaleSmall, scaleCores) = scaleWidths(cpus)
+    spark = scalingSession(cpus)
+    val pairs = flagshipPairs(spark, path, nImages, scaleSmall, scaleCores)
+    // ---- CNN inference throughput over the SAME image table. One warm
+    // pass, then timed at the big width.
     val cnnNet = operators.ConvNet.fixtureNet3
     cnnRun(spark, cnnNet, path, 512) // warm
-    val tCnn = time(cnnRun(spark, cnnNet, path, 0))._1
-    // ---- CNN scaling: the same paired 1-vs-4-core design as the
-    // flagship, on its OWN 1/4-size 256-split table: a limit()+
+    val tCnn = time(cnnRun(spark, cnnNet, path, 0))
+    // ---- CNN scaling on its OWN 1/4-size 256-split table: a limit()+
     // repartition subset of the big table adds a common-mode shuffle +
     // full-scan to both pair halves, a serial fraction that depressed
     // the measured ratio to 0.72. The full-table number above is the
     // throughput figure; the ratio needs matched runs, not volume.
-    val cnnScaleImages = math.max(512, nImages / 4)
+    val cnnScaleImages = cnnTableImages(nImages)
     val (cnnScalePath, _) = materializeImages(spark, cnnScaleImages)
-    cnnRun(spark, cnnNet, cnnScalePath, 0, scaleSmall) // warm small on this table
-    cnnRun(spark, cnnNet, cnnScalePath, 0, scaleCores) // and big — symmetric ramp
-    val cnnPairs = (1 to 3).map { _ =>
-      val ts = time(cnnRun(spark, cnnNet, cnnScalePath, 0, scaleSmall))._1
-      val tb = time(cnnRun(spark, cnnNet, cnnScalePath, 0, scaleCores))._1
-      (ts, tb)
-    }
+    val cnnPairs = Bench.cnnPairs(spark, cnnNet, cnnScalePath, scaleSmall, scaleCores)
     spark.stop()
-    def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
-    val tSmall = median(pairs.map(_._1))
-    val tBig = median(pairs.map(_._2))
-    val eff = median(pairs.map { case (ts, tb) =>
-      (ts / tb) / (scaleCores.toDouble / scaleSmall) })
+    val tSmall = Harness.median(pairs.map(_._1))
+    val tBig = Harness.median(pairs.map(_._2))
+    val eff = efficiency(pairs, scaleSmall, scaleCores)
     val thrBig = pixels / tBig
     val thrSmall = pixels / tSmall
 
-    val qs = queryTimes.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
+    val qs = Harness.timesJson(queryTimes)
     // failed queries (-1.0 sentinel) stay visible in the map but must
     // NOT shrink the total — a crash would otherwise read as a speedup
     val failed = queryTimes.filter(_._2 < 0).map(_._1)
@@ -420,15 +276,14 @@ object Bench {
       f""""pixels":$pixels,"px_per_sec_small":$thrSmall%.0f,""" +
       f""""px_per_sec_big":$thrBig%.0f,"efficiency":$eff%.3f}"""
     val thrCnn = pixels / tCnn
-    val cnnEff = median(cnnPairs.map { case (ts, tb) =>
-      (ts / tb) / (scaleCores.toDouble / scaleSmall) })
+    val cnnEff = efficiency(cnnPairs, scaleSmall, scaleCores)
     val cnnScaling = f"""{"cores_small":$scaleSmall,"cores_big":$scaleCores,""" +
       f""""images":$cnnScaleImages,""" +
-      f""""t_small_sec":${median(cnnPairs.map(_._1))}%.3f,""" +
-      f""""t_big_sec":${median(cnnPairs.map(_._2))}%.3f,""" +
+      f""""t_small_sec":${Harness.median(cnnPairs.map(_._1))}%.3f,""" +
+      f""""t_big_sec":${Harness.median(cnnPairs.map(_._2))}%.3f,""" +
       f""""efficiency":$cnnEff%.3f}"""
     val jsonLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs%s$errs%s${log.json}%s,"pipeline_sec":$tBig%.3f,"cnn_seg_sec":$tCnn%.3f,"cnn_px_per_sec":$thrCnn%.0f,"scaling":$scaling%s,"cnn_scaling":$cnnScaling%s,"sf":"$sfDir%s"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs%s$errs%s${log.json("error_detail")}%s,"pipeline_sec":$tBig%.3f,"cnn_seg_sec":$tCnn%.3f,"cnn_px_per_sec":$thrCnn%.0f,"scaling":$scaling%s,"cnn_scaling":$cnnScaling%s,"sf":"$sfDir%s"}"""
     println(jsonLine)
     // the stdout line drowns in sbt [info] noise (round-1 BENCH_r01.json
     // came back "parsed": null) — ALSO write the machine-readable copy

@@ -47,7 +47,7 @@ import graft.functions.SpatialFunctions._
  * extra scan is far cheaper than re-running the ring join. Under AQE
  * even that scan disappears: the empty bad-query broadcast propagates
  * to an `EmptyRelation` at runtime and the whole brute side is
- * eliminated (observed in SkewBench's final adaptive plans). If the
+ * eliminated (observed in `Dev skew`'s final adaptive plans). If the
  * r1/res choice is so wrong that MOST queries miss the guard, that
  * broadcast is the failure you want: raise r1 (documented user error —
  * the guard exists to keep the common case exact, not to rescue a

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
  * hard-point 3).
  *
  * Two mechanisms, used at different spots:
- *  - AQE skew-join splitting handles SHUFFLE joins automatically (enabled
- *    via `skewSession` config); the kNN candidate join is the main
- *    beneficiary — dense cells produce oversized shuffle partitions that
- *    AQE splits at runtime.
+ *  - AQE skew-join splitting handles SHUFFLE joins automatically (on by
+ *    default in Spark 4.1 whenever AQE is); the kNN candidate join is the
+ *    main beneficiary — dense cells produce oversized shuffle partitions
+ *    that AQE splits at runtime.
  *  - Salted repartitioning handles the cases AQE can't see: a groupBy or
  *    a mapPartitions stage downstream of a BROADCAST join (no shuffle for
  *    AQE to re-plan). The tile relation after the polygon-cell broadcast
@@ -40,13 +40,4 @@ object Skew {
   def hotKeys(df: DataFrame, keyCol: String, topN: Int = 10): Array[(Long, Long)] =
     df.groupBy(keyCol).count().orderBy(desc("count")).limit(topN)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-
-  /** Session configs for the scale path (AQE + skew splitting). Local
-    * sessions enable the same flags a cluster submit would. */
-  def skewSession(builder: SparkSession.Builder): SparkSession.Builder =
-    builder
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "3")
 }

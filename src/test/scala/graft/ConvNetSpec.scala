@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import graft.core.PixelCodec
 import graft.gen.GridImages
 import graft.operators.{ConvNet, ConvLayer, SegNet, Tiler, ImageOps}
@@ -288,5 +288,32 @@ class ConvNetSpec extends AnyFunSuite {
     val a2 = ConvNet.forward(in2, w, h, ConvNet.fixtureNet, scratch)
     assert(a.zip(aRef).forall { case (x, y) => x.sameElements(y) })
     assert(a2.zip(aRef).forall { case (x, y) => x.sameElements(y) })
+  }
+
+  test("collectChips fails fast on a seg/image shape mismatch") {
+    val imgs = spark.createDataset(GridImages.images(1, 2).toSeq)(
+      org.apache.spark.sql.Encoders.product[ImageRow])
+    val badMask = spark.createDataset(Seq(
+      ImageOps.fromArray("g000", Array(Array.fill(100)(1f)), 10, 10,
+        0, 0, 1.0, PixelCodec.FmtRawLe)))(
+      org.apache.spark.sql.Encoders.product[ImageRow])
+    val ex = intercept[org.apache.spark.SparkException] {
+      ConvNet.collectChips(imgs, badMask, chipSize = 16).collect()
+    }
+    assert(ex.getMessage.contains("mask") || ex.getCause != null)
+  }
+
+  test("segPredictTiles trips on non-adjacent duplicate tiles") {
+    val ds = spark.createDataset(GridImages.images(2).toSeq)(
+      Encoders.product[ImageRow])
+    val net = ConvNet.fixtureNet
+    // tileSize 24 at cellRes 16 -> multi-cell tiles (duplicate rows);
+    // repartitioning breaks tiler adjacency, the shared tripwire fires
+    val tiles = Tiler.multiTiles(ds, tileSize = 24, cellRes = 16,
+      halo = net.halo).repartition(5)
+    val e = intercept[Exception] {
+      ConvNet.segPredictTiles(tiles, net, tileSize = 24).collect()
+    }
+    assert(Causes.messages(e).contains("non-adjacent duplicate"))
   }
 }

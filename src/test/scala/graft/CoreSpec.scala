@@ -408,6 +408,18 @@ class GridIndexSpec extends AnyFunSuite with SeededProps {
         assert(cover.contains(GridIndex.cellId(x, y, 15)))
     }
   }
+
+  test("coverBBox fail-fasts on a cell cover past the per-feature cap") {
+    // whole-world bbox at the finest res: the Long product vastly
+    // exceeds MaxCoverCells and must fail loudly, not allocate
+    val huge = Geom.BBox(-260000, -260000, 260000, 260000)
+    val e = intercept[IllegalArgumentException] {
+      GridIndex.coverBBox(huge, GridIndex.MaxRes)
+    }
+    assert(e.getMessage.contains("coarsen the grid res"))
+    // normal covers still work
+    assert(GridIndex.coverBBox(Geom.BBox(0, 0, 100, 100), 14).nonEmpty)
+  }
 }
 
 class S2Spec extends AnyFunSuite with SeededProps {

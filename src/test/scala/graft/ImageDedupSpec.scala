@@ -1,10 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.PixelCodec
-import graft.gen.Synth
+import graft.gen.{GridImages, Synth}
 import graft.operators.{ImageDedup, Skew}
 
 class ImageDedupSpec extends AnyFunSuite {
@@ -59,6 +59,20 @@ class ImageDedupSpec extends AnyFunSuite {
     val all2 = spark.createDataset(Seq(mk("a", b1a), mk("b", b1a)))
     val g2 = ImageDedup.dedupExact(all2).as[(String, Long)].collect().toSet
     assert(g2 == Set(("a", 2L)))
+  }
+
+  test("dedupExact maxGroup fail-fast bounds the per-group kernel") {
+    val base = GridImages.images(1, bands = 1).head
+    val copies = (0 until 5).map(i => base.copy(image_id = s"c$i"))
+    val ds = spark.createDataset(copies)(Encoders.product[ImageRow])
+    // 5 identical images in one (w, h, phash) group; cap of 3 trips
+    val e = intercept[Exception] {
+      ImageDedup.dedupExact(ds, maxGroup = 3).collect()
+    }
+    assert(Causes.messages(e).contains("exceeds 3 images"))
+    // and above the cap the digest path still groups correctly
+    val ok = ImageDedup.dedupExact(ds).as[(String, Long)].collect().toSet
+    assert(ok == Set(("c0", 5L)))
   }
 }
 

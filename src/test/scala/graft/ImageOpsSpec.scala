@@ -263,4 +263,36 @@ class ImageOpsSpec extends AnyFunSuite {
       cb(0)(k) == 0f && cb(1)(k) == 0f && cb(2)(k) == 0f),
       "constant raster: all stops collapse, v <= head clamps black")
   }
+
+  test("fillNodata: a gap wider than maxSearchDist stays nodata") {
+    val w = 20; val h = 9
+    val nd = -1f
+    val base = Array.fill(w * h)(5f)
+    // a 9-wide, full-height nodata band: its center column is > 3 away
+    // from any valid pixel in EVERY direction (incl. diagonals)
+    for (y <- 0 until h; x <- 6 to 14) base(y * w + x) = nd
+    val ds = spark.createDataset(Seq(
+      ImageOps.fromArray("n0", Array(base), w, h, 0, 0, 1.0, PixelCodec.FmtRawLe)))(
+      org.apache.spark.sql.Encoders.product[ImageRow])
+    val got = ImageOps.fillNodata(ds, nd, maxSearchDist = 3).collect().head
+    val pix = PixelCodec.decode(got.bytes, got.fmt, got.w, got.h).bands(0)
+    // columns 9..11 of the interior rows are unreachable horizontally;
+    // rows 4 (center) can't reach vertically either at x=10
+    assert(pix(4 * w + 10) == nd, "unreachable pixel must stay nodata")
+    // band borders DO fill (distance 1-3 from valid columns)
+    assert(pix(4 * w + 6) != nd && pix(4 * w + 14) != nd)
+  }
+
+  test("writeIdField: tied orderCol values get deterministic fids") {
+    val rows = Seq(("a", 1), ("a", 2), ("a", 3), ("b", 4), ("a", 5))
+    def run(parts: Int): Map[Int, Long] =
+      VectorOps.writeIdField(
+          rows.toDF("k", "payload").repartition(parts), "k")
+        .select("payload", "fid").as[(Int, Long)].collect()
+        .map { case (p, f) => p -> f }.toMap
+    val r1 = run(1); val r7 = run(7)
+    assert(r1 == r7, s"tie order must not depend on partitioning: $r1 vs $r7")
+    // 'b' sorts after every 'a'
+    assert(r1(4) == 5L)
+  }
 }

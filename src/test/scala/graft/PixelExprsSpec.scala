@@ -202,4 +202,14 @@ class PixelExprsSpec extends AnyFunSuite {
       assert(msgs(ex).exists(_.contains("differ in length")), s"$e: $ex")
     }
   }
+
+  test("seriesComposite fail-fasts past 64k snapshots") {
+    val df = Seq(1).toDF("i")
+      .select(array_repeat(array(lit(1f)), 65537).as("arrays"))
+    val e = intercept[Exception] {
+      df.select(colOf(graft.functions.SeriesCompositeExpr(
+        exprOf(col("arrays")), 1, 50.0))).collect()
+    }
+    assert(Causes.messages(e).contains("pre-aggregate"))
+  }
 }

@@ -20,3 +20,11 @@ object SparkJobs {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
+
+/** Every message down a throwable's cause chain, concatenated: Spark
+  * wraps a task's exception, so a spec looks for the contract text
+  * anywhere in the chain. */
+object Causes {
+  def messages(x: Throwable): String =
+    Option(x).map(t => t.getMessage + messages(t.getCause)).getOrElse("")
+}

@@ -87,4 +87,23 @@ class ThreshSegSpec extends AnyFunSuite {
     assert(b(0) && b(2 * w + 2))
     assert(!b(0 * w + 5) && !b(0 * w + 6) && !b(4 * w + 0) && !b(4 * w + 6))
   }
+
+  test("threshSeg overlap: both polygons emit; max(poly_id) composes deterministically") {
+    val imgs = spark.createDataset(GridImages.threshImages(1).toSeq)(
+      org.apache.spark.sql.Encoders.product[ImageRow])
+    // two polys over the SAME blob1 (ids 5 and 9)
+    val polys = spark.createDataset(Seq(
+      GridImages.pixelRectPoly(0L, 5L, GridImages.snakePolyA(0L)),
+      GridImages.pixelRectPoly(0L, 9L, GridImages.snakePolyA(0L))))(
+      org.apache.spark.sql.Encoders.product[PolyRow])
+    val rows = ThreshSeg.threshSeg(imgs, polys, minArea = 4.0).collect()
+    val b1 = GridImages.snakeB1(0L)
+    val area = (b1._3 - b1._1 + 1) * (b1._4 - b1._2 + 1)
+    assert(rows.count(_.getLong(1) == 5L) == area)
+    assert(rows.count(_.getLong(1) == 9L) == area)
+    // documented overlap composition
+    val composed = rows.groupBy(r => (r.getInt(3), r.getInt(4)))
+      .view.mapValues(_.map(_.getLong(1)).max).toMap
+    assert(composed.values.forall(_ == 9L))
+  }
 }

@@ -1,27 +1,19 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Geom, GridIndex, PixelCodec}
 import graft.gen.Synth
 import graft.operators.{Tiler, ZonalStats, SpatialJoin, Knn}
 
+/** The session every spec shares, built by the mains' own builder. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // saveAsTable targets (bucketed-table specs) land in /tmp, never cwd
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(4, "graft-test",
+    "spark.sql.shuffle.partitions" -> "8",
+    // saveAsTable targets (bucketed-table specs) land in /tmp, never cwd
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
 }
 
 /** Flagship acceptance gate (SURVEY §7 Stage 2): the distributed
@@ -131,6 +123,19 @@ class ZonalSpec extends AnyFunSuite {
       val variance = values.map(v => (v - mean) * (v - mean)).sum / n
       assert(math.abs(r.getAs[Double]("std") - math.sqrt(variance)) < 1e-3, s"std $k")
     }
+  }
+
+  test("ZonalStats.quantize bins continuous floats, passes nodata through") {
+    val t = TileRow("q0", 0L, 0, 0, 0.0, 4.0, 1.0, 0,
+      Array(0.1f, 0.9f, 1.6f, Float.NaN, -0.3f, 7f), 3, 2, 7f)
+    val out = ZonalStats.quantize(
+      spark.createDataset(Seq(t))(Encoders.product[TileRow]), width = 0.5)
+      .collect().head.pixels
+    // bin centers at width 0.5 anchored at 0: [0,0.5)->0.25 etc.
+    assert(out(0) == 0.25f && out(1) == 0.75f && out(2) == 1.75f)
+    assert(out(3).isNaN)          // NaN untouched
+    assert(out(4) == -0.25f)      // negative values bin correctly
+    assert(out(5) == 7f)          // nodata sentinel untouched
   }
 }
 
