@@ -121,9 +121,9 @@ object Bench {
       .as[ImageRow](Encoders.product[ImageRow])
   }
 
-  /** The flagship chain: decode+tile -> broadcast join -> PIP -> zonal
-    * agg over the synthetic polygon layer. This is the north-rule metric:
-    * spatial-join + tile assignment. The stats() windows are a tiny
+  /** The flagship chain: decode+tile -> polygon cell-index probe -> PIP
+    * -> zonal agg over the synthetic polygon layer. This is the north-rule
+    * metric: spatial-join + tile assignment. The stats() windows are a tiny
     * constant tail measured via the headline queries, not inside the
     * scaling unit. */
   private[graft] def flagship(images: Dataset[ImageRow]): DataFrame = {

@@ -97,7 +97,7 @@ object GridIndex {
   }
 
   /** Hard per-feature cell-cover cap (16M cells = a 128 MB Long array).
-    * boundedCollect caps feature COUNT; this caps cells-per-feature so a
+    * PolyLayer.collect caps feature COUNT; this caps cells-per-feature so a
     * continent-sized bbox at fine res fails loudly instead of silently
     * truncating the Long product to Int (negative allocation size) or
     * OOMing the broadcast build side. */

@@ -3,14 +3,14 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{PolyRow, TileRow}
-import graft.core.{Geom, GridIndex}
 
 /**
  * GLCM texture statistics per polygon (reference texture_stats,
  * shape.py:1566-1731; GLCM via skimage greycomatrix shape.py:1704-1711):
  * contrast, dissimilarity, homogeneity, ASM, energy, correlation.
  *
- * Distributed shape: like ZonalStats.histogram but emitting PAIR
+ * Distributed shape: like ZonalStats.histogram (one flatMap probing the
+ * driver-built polygon cell index, [[PolyLayer]]) but emitting PAIR
  * histograms (q1, q2, cnt) for pixel pairs at offset (dx, dy). The pair
  * ORIGIN must fall inside the polygon AND the owning cell (so tile
  * overlap never double-counts); the PARTNER only needs the polygon —
@@ -39,74 +39,64 @@ object Glcm {
     require(halo >= math.max(math.abs(dx), math.abs(dy)) || halo == 0,
       s"halo $halo too small for offset ($dx, $dy) cross-tile pairs")
     import spark.implicits._
-    val pc = ZonalStats.polyCells(polys, cellRes)
-    val joined = tiles.joinWith(broadcast(pc), tiles("cell_id") === pc("cell_id"))
+    val index = PolyLayer.broadcastIndex(polys, cellRes)
     val lv = levels
-    joined.flatMap { case (t, p) =>
-      val cb = GridIndex.cellBounds(p.cell_id)
-      val poly = Geom.PackedPoly(p.rings)
-      // interior-tile shortcut (the ZonalStats.histogram fast path):
-      // when the rect spanned by ALL pixel centers this call can touch
-      // (core + one offset of halo) sits entirely inside the polygon,
-      // every PIP below is true — large polygons pay zero per-pixel
-      // geometry for interior tiles
+    tiles.flatMap { t =>
+      // the interior-tile shortcut covers ALL pixel centers this tile
+      // can touch: core + one offset of halo
       val pad = (math.max(math.abs(dx), math.abs(dy)) + 0.5) * t.px
-      val centers = Geom.BBox(
-        t.x_min + 0.5 * t.px - pad, t.y_max - (t.th - 0.5) * t.px - pad,
-        t.x_min + (t.tw - 0.5) * t.px + pad, t.y_max - 0.5 * t.px + pad)
-      val fullInside = Geom.rectInsidePolygon(centers, poly)
-      val acc = new scala.collection.mutable.HashMap[(Int, Int), Long]
-      def quant(v: Float): Int = math.min(lv - 1, math.max(0, (v / maxVal * lv).toInt))
-      // nodata pixels form NO pair (the reference masks them out of the
-      // GLCM, shape.py:1690-1694): unguarded, quant(NaN) = 0 and a
-      // sentinel clamps to 0 — phantom level-0 mass in every stat
-      val nod = t.nodata
-      def valid(v: Float): Boolean =
-        !v.isNaN && java.lang.Float.compare(v, nod) != 0
-      // origin: owning-cell bounds (dedupe) + polygon; partner: polygon
-      // only (it may sit in a neighbor cell — that's what the halo is for)
-      def insideOrigin(row: Int, c: Int): Boolean = {
-        val cx = t.x_min + (c + 0.5) * t.px
-        val cy = t.y_max - (row + 0.5) * t.px
-        cx >= cb.x0 && cx < cb.x1 && cy >= cb.y0 && cy < cb.y1 &&
-          (fullInside || poly.contains(cx, cy))
-      }
-      def insidePartner(row: Int, c: Int): Boolean =
-        fullInside || {
-          val cx = t.x_min + (c + 0.5) * t.px
-          val cy = t.y_max - (row + 0.5) * t.px
-          poly.contains(cx, cy)
-        }
-      // core region inside the (possibly halo-expanded) pixel array —
-      // the ONE shared definition (Tiler.coreWindow), so the cropping
-      // arithmetic cannot drift from the tiler's halo clipping and the
-      // halo-mismatch tripwire guards this consumer too
-      val (cLeft, rTop, coreW, coreH) =
-        if (halo == 0) (0, 0, t.tw, t.th)
-        else Tiler.coreWindow(t.tx, t.ty, t.tw, t.th, tileSize, halo)
-      // origins scan the core; partner indices bounds-check against the
-      // FULL array (halo included), handling negative offsets too
-      var row = rTop
-      while (row < rTop + coreH) {
-        val pr = row + dy
-        if (pr >= 0 && pr < t.th) {
-          var c = cLeft
-          while (c < cLeft + coreW) {
-            val pc2 = c + dx
-            if (pc2 >= 0 && pc2 < t.tw &&
-              valid(t.pixels(row * t.tw + c)) && valid(t.pixels(pr * t.tw + pc2)) &&
-              insideOrigin(row, c) && insidePartner(pr, pc2)) {
-              val a = quant(t.pixels(row * t.tw + c))
-              val b = quant(t.pixels(pr * t.tw + pc2))
-              acc.update((a, b), acc.getOrElse((a, b), 0L) + 1L)
-              acc.update((b, a), acc.getOrElse((b, a), 0L) + 1L) // symmetric
+      // origin: core region, owning cell (dedupe) and polygon — the
+      // window; partner: polygon only (it may sit in a neighbor cell —
+      // that's what the halo is for)
+      val hits = PolyLayer.tileHits(index.value, t.cell_id, t.x_min, t.y_max, t.px,
+        t.tw, t.th, pad)
+      if (hits.isEmpty) Iterator.empty
+      else {
+        def quant(v: Float): Int = math.min(lv - 1, math.max(0, (v / maxVal * lv).toInt))
+        // nodata pixels form NO pair (the reference masks them out of the
+        // GLCM, shape.py:1690-1694): unguarded, quant(NaN) = 0 and a
+        // sentinel clamps to 0 — phantom level-0 mass in every stat
+        val nod = t.nodata
+        def valid(v: Float): Boolean =
+          !v.isNaN && java.lang.Float.compare(v, nod) != 0
+        // core region inside the (possibly halo-expanded) pixel array —
+        // the ONE shared definition (Tiler.coreWindow), so the cropping
+        // arithmetic cannot drift from the tiler's halo clipping and the
+        // halo-mismatch tripwire guards this consumer too
+        val (cLeft, rTop, coreW, coreH) =
+          if (halo == 0) (0, 0, t.tw, t.th)
+          else Tiler.coreWindow(t.tx, t.ty, t.tw, t.th, tileSize, halo)
+        hits.iterator.flatMap { case (p, win) =>
+          val poly = p.poly
+          def inPoly(row: Int, c: Int): Boolean =
+            win.fullInside || poly.contains(t.x_min + (c + 0.5) * t.px,
+              t.y_max - (row + 0.5) * t.px)
+          val acc = new scala.collection.mutable.HashMap[(Int, Int), Long]
+          // origins scan the core; partner indices bounds-check against the
+          // FULL array (halo included), handling negative offsets too
+          var row = math.max(rTop, win.rowLo)
+          while (row <= math.min(rTop + coreH - 1, win.rowHi)) {
+            val pr = row + dy
+            if (pr >= 0 && pr < t.th) {
+              var c = math.max(cLeft, win.colLo)
+              while (c <= math.min(cLeft + coreW - 1, win.colHi)) {
+                val pc2 = c + dx
+                if (pc2 >= 0 && pc2 < t.tw &&
+                  valid(t.pixels(row * t.tw + c)) && valid(t.pixels(pr * t.tw + pc2)) &&
+                  inPoly(row, c) && inPoly(pr, pc2)) {
+                  val a = quant(t.pixels(row * t.tw + c))
+                  val b = quant(t.pixels(pr * t.tw + pc2))
+                  acc.update((a, b), acc.getOrElse((a, b), 0L) + 1L)
+                  acc.update((b, a), acc.getOrElse((b, a), 0L) + 1L) // symmetric
+                }
+                c += 1
+              }
             }
-            c += 1
+            row += 1
           }
+          acc.iterator.map { case ((a, b), n) => (p.polyId, t.band, a, b, n) }
         }
-        row += 1
       }
-      acc.iterator.map { case ((a, b), n) => (p.poly_id, t.band, a, b, n) }
     }.toDF("poly_id", "band", "q1", "q2", "cnt")
       .groupBy("poly_id", "band", "q1", "q2").agg(sum("cnt").as("cnt"))
   }

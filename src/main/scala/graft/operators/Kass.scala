@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.{ImageRow, PolyRow}
-import graft.core.{Geom, PixelCodec}
 
 /**
  * Parametric (Kass) active contour — the reference's `snake`
@@ -29,9 +28,10 @@ import graft.core.{Geom, PixelCodec}
  *    ring resampled to nPoints along its perimeter (nPoints = 0 keeps
  *    the vertices as-is).
  *
- * Spark shape: same as Snakes.msSnake — bounded broadcast polygons,
- * images the distributed axis, per-pair local iteration, no shuffle
- * before the output.
+ * Spark shape: same as Snakes.msSnake — bounded broadcast polygons
+ * ([[PolyLayer.collect]], windows from [[PolyLayer.perImage]]), images
+ * the distributed axis, per-pair local iteration, no shuffle before the
+ * output.
  */
 object Kass {
 
@@ -288,53 +288,29 @@ object Kass {
             convergence: Double = 0.1, bc: String = "periodic")
            (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val polyList = RasterOps.boundedCollect(polys, "snake polygon")
-      .map { p =>
-        val rings: Geom.Rings = p.rings.map(_.map(q => (q.x, q.y)))
-        (p.poly_id, rings, Geom.bbox(rings))
-      }.sortBy(_._1)
-    val polyB = spark.sparkContext.broadcast(polyList)
-    images.flatMap { im =>
-      val imgBB = Geom.BBox(im.x_min, im.y_max - im.h * im.px,
-        im.x_min + im.w * im.px, im.y_max)
-      val hits = polyB.value.filter { case (_, _, bb) =>
-        Geom.BBox(bb.x0 - buf1, bb.y0 - buf1, bb.x1 + buf1, bb.y1 + buf1)
-          .intersects(imgBB)
-      }
-      if (hits.isEmpty) Iterator.empty
-      else {
-        val pix = PixelCodec.decode(im.bytes, im.fmt, im.w, im.h).bands(band)
-        hits.iterator.flatMap { case (polyId, rings, bb) =>
-          val cx0 = math.max(0, math.floor((bb.x0 - buf1 - im.x_min) / im.px).toInt)
-          val cx1 = math.min(im.w - 1, math.ceil((bb.x1 + buf1 - im.x_min) / im.px).toInt - 1)
-          val cy0 = math.max(0, math.floor((im.y_max - (bb.y1 + buf1)) / im.px).toInt)
-          val cy1 = math.min(im.h - 1, math.ceil((im.y_max - (bb.y0 - buf1)) / im.px).toInt - 1)
-          val ww = cx1 - cx0 + 1; val wh = cy1 - cy0 + 1
-          if (ww <= 0 || wh <= 0) Iterator.empty
-          else {
-            val win = new Array[Float](ww * wh)
-            var rI = 0
-            while (rI < wh) {
-              var cI = 0
-              while (cI < ww) {
-                win(rI * ww + cI) = pix((cy0 + rI) * im.w + cx0 + cI)
-                cI += 1
-              }
-              rI += 1
-            }
-            // ring vertices -> window-local continuous (row, col)
-            val initRing = rings(0).map { case (wx, wy) =>
-              ((im.y_max - wy) / im.px - 0.5 - cy0, (wx - im.x_min) / im.px - 0.5 - cx0)
-            }
-            val init = resample(initRing, nPoints)
-            val fin = evolve(win, ww, wh, init, alpha, beta, wLine, wEdge,
-              gamma, maxPxMove, iterations, convergence, bc)
-            fin.iterator.zipWithIndex.map { case ((rr, cc), idx) =>
-              (im.image_id, polyId, idx, rr + cy0, cc + cx0)
-            }
+    PolyLayer.perImage(images, polys, buf1, band) {
+      case (im, pix, part, PolyLayer.ImageWindow(cx0, cy0, ww, wh)) =>
+        val win = new Array[Float](ww * wh)
+        var rI = 0
+        while (rI < wh) {
+          var cI = 0
+          while (cI < ww) {
+            win(rI * ww + cI) = pix((cy0 + rI) * im.w + cx0 + cI)
+            cI += 1
           }
+          rI += 1
         }
-      }
+        // ring vertices -> window-local continuous (row, col)
+        val (xs, ys) = (part.poly.xss(0), part.poly.yss(0))
+        val initRing = Array.tabulate(xs.length) { k =>
+          ((im.y_max - ys(k)) / im.px - 0.5 - cy0, (xs(k) - im.x_min) / im.px - 0.5 - cx0)
+        }
+        val init = resample(initRing, nPoints)
+        val fin = evolve(win, ww, wh, init, alpha, beta, wLine, wEdge,
+          gamma, maxPxMove, iterations, convergence, bc)
+        fin.iterator.zipWithIndex.map { case ((rr, cc), idx) =>
+          (im.image_id, part.polyId, idx, rr + cy0, cc + cx0)
+        }
     }.toDF("image_id", "poly_id", "idx", "row", "col")
   }
 }

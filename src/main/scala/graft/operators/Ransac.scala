@@ -110,7 +110,7 @@ object Ransac {
         // fail-fast bound, not a generic OOM: a low thresh can make
         // nearly every pixel an edge pixel, and one strip of a huge
         // image buffers on a single task (the same contract as
-        // iterFit's maxPointsPerImage and boundedCollect)
+        // iterFit's maxPointsPerImage and PolyLayer.collect)
         val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int, Int, Int)]
         while (it.hasNext) {
           buf += it.next()

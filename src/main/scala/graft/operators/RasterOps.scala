@@ -23,20 +23,6 @@ object RasterOps {
 
   private val tileKey = Seq("image_id", "tx", "ty")
 
-  /** Driver-safe bounded collect for small-by-contract feature layers
-    * (rasterize burn layers, training-label maps): materializes at most
-    * max+1 rows — a layer over the contract fails FAST with a clear
-    * message instead of silently OOM-ing the driver. Layers above the
-    * bound belong in a cell-keyed broadcast join (ZonalStats.polyCells). */
-  private[operators] def boundedCollect[T](ds: Dataset[T], what: String,
-                                           max: Int = 1 << 20): Array[T] = {
-    val rows = ds.limit(max + 1).collect()
-    require(rows.length <= max,
-      s"$what layer exceeds the driver-broadcast contract ($max features); " +
-        "route it through a cell-keyed broadcast join instead")
-    rows
-  }
-
   /** mask_raster (raster.py:1031-1134): keep pixels == mval, else `fill`.
     * Native per-tile loop (PixelExprs) — the transform() HOF form paid an
     * interpreted lambda per pixel, measured ~4x the whole decode cost. */
@@ -125,9 +111,10 @@ object RasterOps {
 
   /**
    * zonal_rgb_idx (shape.py:1413-1502): per-polygon MEANS of all 11 RGB
-   * indices over the pixels inside each polygon. All-bands tiles join
-   * the broadcast polygon-cell prefilter, the PIP-passing pixels emit
-   * (poly_id, r, g, b) rows, and the index means are ONE grouped
+   * indices over the pixels inside each polygon. All-bands tiles probe
+   * the driver-built polygon cell index ([[PolyLayer.broadcastIndex]])
+   * in one flatMap, the PIP-passing pixels each (tile, cell) row owns
+   * emit (poly_id, r, g, b) rows, and the index means are ONE grouped
    * aggregate of codegen'd exprs — Catalyst's partial aggregation folds
    * the per-pixel rows map-side, so the only shuffle carries
    * (poly, 11 partial sums), never pixels. `shift` adds a constant to
@@ -136,32 +123,36 @@ object RasterOps {
    */
   def zonalRgbIndices(tiles: Dataset[graft.MultiTileRow], polys: Dataset[PolyRow],
                       cellRes: Int, shift: Double = 0.0)
-                     (implicit spark: SparkSession): DataFrame = {
+                     (implicit spark: SparkSession): DataFrame =
+    zonalRgbIndices(tiles, polys, cellRes, shift, PolyLayer.MaxBroadcastRingBytes)
+
+  private[operators] def zonalRgbIndices(tiles: Dataset[graft.MultiTileRow],
+                                         polys: Dataset[PolyRow], cellRes: Int,
+                                         shift: Double, maxRingBytes: Long)
+                                        (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val pc = ZonalStats.polyCells(polys, cellRes)
-    val px = tiles.joinWith(broadcast(pc), tiles("cell_id") === pc("cell_id"))
-      .flatMap { case (t, p) =>
-        val cb = GridIndex.cellBounds(p.cell_id)
-        val poly = Geom.PackedPoly(p.rings)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Double, Double)]
-        var row = 0
-        while (row < t.th) {
-          val cy = t.y_max - (row + 0.5) * t.px
-          var c = 0
-          while (c < t.tw) {
-            val cx = t.x_min + (c + 0.5) * t.px
-            if (cx >= cb.x0 && cx < cb.x1 && cy >= cb.y0 && cy < cb.y1 &&
-              poly.contains(cx, cy)) {
-              val i = row * t.tw + c
-              out += ((p.poly_id, t.bands(0)(i).toDouble,
-                t.bands(1)(i).toDouble, t.bands(2)(i).toDouble))
+    val index = PolyLayer.broadcastIndex(polys, cellRes, maxRingBytes)
+    val px = tiles.flatMap { t =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Double, Double)]
+      PolyLayer.tileHits(index.value, t.cell_id, t.x_min, t.y_max, t.px, t.tw, t.th).foreach {
+        case (p, win) =>
+          var row = win.rowLo
+          while (row <= win.rowHi) {
+            val cy = t.y_max - (row + 0.5) * t.px
+            var c = win.colLo
+            while (c <= win.colHi) {
+              if (win.fullInside || p.poly.contains(t.x_min + (c + 0.5) * t.px, cy)) {
+                val i = row * t.tw + c
+                out += ((p.polyId, t.bands(0)(i).toDouble,
+                  t.bands(1)(i).toDouble, t.bands(2)(i).toDouble))
+              }
+              c += 1
             }
-            c += 1
+            row += 1
           }
-          row += 1
-        }
-        out
-      }.toDF("poly_id", "r", "g", "b")
+      }
+      out
+    }.toDF("poly_id", "r", "g", "b")
     val aggs = rgbIndices(col("r") + shift, col("g") + shift, col("b") + shift)
       .map { case (n, e) => round(avg(e), 4).as(n) }
     px.groupBy("poly_id").agg(aggs.head, aggs.tail: _*)
@@ -304,35 +295,29 @@ object RasterOps {
   /** rasterize (raster.py:1773-1831): burn polygons into an image-aligned
     * grid — the inverse of polygonize. Produces mask tiles (1 inside,
     * 0 outside; `burnClass` uses the polygon class value). The polygon
-    * layer broadcasts as a cell -> features map, so the burn is a typed
-    * map over tiles with ZERO shuffle (the old groupByKey-on-tile-key
-    * variant shuffled every pixel payload just to merge per-poly burns).
+    * layer broadcasts as a driver-built cell index
+    * ([[PolyLayer.broadcastIndex]]), so the burn is a typed map over
+    * tiles with ZERO shuffle. Each (tile, cell) row burns only the
+    * pixels it owns under the Tiler's ownership rule, so a tile that
+    * spans several cells burns each pixel in exactly one of its rows.
     * Overlapping features burn in (poly_id, part) order — deterministic. */
   def rasterize(tiles: Dataset[TileRow], polys: Dataset[PolyRow], cellRes: Int,
                 burnClass: Boolean = false)
                (implicit spark: SparkSession): Dataset[TileRow] = {
     import spark.implicits._
-    val byCell: Map[Long, Array[(Long, Int, Geom.PackedPoly, Float)]] =
-      boundedCollect(polys, "rasterize burn").flatMap { p =>
-        val poly = Geom.PackedPoly(p.rings)
-        val burn = if (burnClass) p.cls.toFloat else 1f
-        GridIndex.coverPolygon(poly, cellRes)
-          .map(c => c -> (p.poly_id, p.part, poly, burn))
-      }.groupBy(_._1).map { case (c, xs) =>
-        c -> xs.map(_._2).sortBy(f => (f._1, f._2))
-      }
-    val byCellB = spark.sparkContext.broadcast(byCell)
+    val index = PolyLayer.broadcastIndex(polys, cellRes)
     tiles.map { t =>
       val out = new Array[Float](t.pixels.length)
-      byCellB.value.getOrElse(t.cell_id, Array.empty).foreach {
-        case (_, _, poly, burn) =>
-          var r = 0
-          while (r < t.th) {
+      PolyLayer.tileHits(index.value, t.cell_id, t.x_min, t.y_max, t.px, t.tw, t.th).foreach {
+        case (p, win) =>
+          val burn = if (burnClass) p.cls.toFloat else 1f
+          var r = win.rowLo
+          while (r <= win.rowHi) {
             val cy = t.y_max - (r + 0.5) * t.px
-            var c = 0
-            while (c < t.tw) {
-              val cx = t.x_min + (c + 0.5) * t.px
-              if (poly.contains(cx, cy)) out(r * t.tw + c) = burn
+            var c = win.colLo
+            while (c <= win.colHi) {
+              if (win.fullInside || p.poly.contains(t.x_min + (c + 0.5) * t.px, cy))
+                out(r * t.tw + c) = burn
               c += 1
             }
             r += 1

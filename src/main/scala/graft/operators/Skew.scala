@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
  *    main beneficiary — dense cells produce oversized shuffle partitions
  *    that AQE splits at runtime.
  *  - Salted repartitioning handles the cases AQE can't see: a groupBy or
- *    a mapPartitions stage downstream of a BROADCAST join (no shuffle for
- *    AQE to re-plan). The tile relation after the polygon-cell broadcast
- *    join is exactly that: dense cells concentrate (tile x poly) pairs in
- *    few input partitions. `saltedRepartition` spreads rows of hot keys
+ *    a mapPartitions stage that probes a BROADCAST variable (no shuffle
+ *    for AQE to re-plan). The tile relation probing the polygon cell
+ *    index (`PolyLayer`) is exactly that: dense cells concentrate
+ *    (tile x poly) pairs in few input partitions. `saltedRepartition` spreads rows of hot keys
  *    across `factor` buckets with a deterministic per-row salt; because
  *    the zonal kernels aggregate by (poly, band, value) AFTER partial
  *    histograms, re-bucketing is semantics-free.

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{ImageRow, PolyRow}
-import graft.core.{Geom, PixelCodec}
+import graft.core.PixelCodec
 
 /**
  * Morphological active contours — the reference's `ms_snake`
@@ -30,10 +30,11 @@ import graft.core.{Geom, PixelCodec}
  *    alternation counter starts at SI.IS per operator call
  * Morphology treats out-of-bounds as 0 (scipy border_value=0).
  *
- * Spark shape: polygons are a bounded broadcast layer (like rasterize's
- * burn layer); images are the distributed axis — each image decodes
- * once in a flatMap and runs every intersecting polygon's bounded
- * window kernel locally. Nothing shuffles but the emitted segment
+ * Spark shape: polygons are a bounded broadcast layer
+ * ([[PolyLayer.collect]]); images are the distributed axis — each image
+ * decodes once in a flatMap and runs the bounded window kernel of every
+ * polygon whose buffered bbox meets it ([[PolyLayer.perImage]])
+ * locally. Nothing shuffles but the emitted segment
  * pixels (or their aggregates); at 10^12 images the job is a pure map
  * over the image table.
  */
@@ -495,84 +496,59 @@ object Snakes {
              (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     require(algo == "ACWE" || algo == "GAC", s"algo: $algo")
-    val polyList = RasterOps.boundedCollect(polys, "snake polygon")
-      .map(p => (p.poly_id, Geom.PackedPoly(p.rings)))
-      .sortBy(_._1)
-    val polyB = spark.sparkContext.broadcast(polyList)
-    images.flatMap { im =>
-      val imgBB = Geom.BBox(im.x_min, im.y_max - im.h * im.px,
-        im.x_min + im.w * im.px, im.y_max)
-      val hits = polyB.value.filter { case (_, poly) =>
-        val bb = poly.box
-        Geom.BBox(bb.x0 - buf1, bb.y0 - buf1, bb.x1 + buf1, bb.y1 + buf1)
-          .intersects(imgBB)
-      }
-      if (hits.isEmpty) Iterator.empty
-      else {
-        val pix = PixelCodec.decode(im.bytes, im.fmt, im.w, im.h).bands(band)
-        hits.iterator.flatMap { case (polyId, poly) =>
-          val bb = poly.box
-          // window = buffered bbox in pixel indices, clamped (the
-          // reference clamps negative offsets the same way)
-          val cx0 = math.max(0, math.floor((bb.x0 - buf1 - im.x_min) / im.px).toInt)
-          val cx1 = math.min(im.w - 1, math.ceil((bb.x1 + buf1 - im.x_min) / im.px).toInt - 1)
-          val cy0 = math.max(0, math.floor((im.y_max - (bb.y1 + buf1)) / im.px).toInt)
-          val cy1 = math.min(im.h - 1, math.ceil((im.y_max - (bb.y0 - buf1)) / im.px).toInt - 1)
-          val ww = cx1 - cx0 + 1; val wh = cy1 - cy0 + 1
-          if (ww <= 0 || wh <= 0) Iterator.empty
-          else {
-            val win = new Array[Float](ww * wh)
-            val init = new Array[Byte](ww * wh)
-            var r = 0
-            while (r < wh) {
-              var c = 0
-              while (c < ww) {
-                val gx = cx0 + c; val gy = cy0 + r
-                win(r * ww + c) = pix(gy * im.w + gx)
-                val wx = im.x_min + (gx + 0.5) * im.px
-                val wy = im.y_max - (gy + 0.5) * im.px
-                if (poly.contains(wx, wy)) init(r * ww + c) = 1
-                c += 1
-              }
-              r += 1
-            }
-            if (buf2 != 0) {
-              // reference: EDT in map units, then grow (buf2>0, distance
-              // from the outside to the poly <= buf2) or shrink (buf2<0,
-              // distance inside the poly >= |buf2|)
-              val src =
-                if (buf2 < 0) init
-                else init.map(b => (1 - b).toByte)
-              val dsq = edtSq(src, ww, wh)
-              val lim = (buf2 / im.px) * (buf2 / im.px)
-              var p = 0
-              while (p < init.length) {
-                init(p) =
-                  if (buf2 > 0) { if (dsq(p) <= lim) 1 else 0 }
-                  else { if (dsq(p) >= lim) 1 else 0 }
-                p += 1
-              }
-            }
-            val fin =
-              if (algo == "ACWE")
-                acwe(win, ww, wh, init, iterations, smoothing, lambda1, lambda2)
-              else {
-                val gimg = inverseGaussianGradient(win, ww, wh, alpha, sigma)
-                val th =
-                  if (threshold.isNaN) percentile(gimg, 40.0) else threshold
-                gac(gimg, ww, wh, init, iterations, smoothing, th, balloon)
-              }
-            val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Int, Int)]
-            var p = 0
-            while (p < fin.length) {
-              if (fin(p) == 1)
-                out += ((im.image_id, polyId, cx0 + p % ww, cy0 + p / ww))
-              p += 1
-            }
-            out.iterator
+    // window = buffered bbox in pixel indices, clamped (the reference
+    // clamps negative offsets the same way)
+    PolyLayer.perImage(images, polys, buf1, band) {
+      case (im, pix, part, PolyLayer.ImageWindow(cx0, cy0, ww, wh)) =>
+        val win = new Array[Float](ww * wh)
+        val init = new Array[Byte](ww * wh)
+        var r = 0
+        while (r < wh) {
+          var c = 0
+          while (c < ww) {
+            val gx = cx0 + c; val gy = cy0 + r
+            win(r * ww + c) = pix(gy * im.w + gx)
+            val wx = im.x_min + (gx + 0.5) * im.px
+            val wy = im.y_max - (gy + 0.5) * im.px
+            if (part.poly.contains(wx, wy)) init(r * ww + c) = 1
+            c += 1
+          }
+          r += 1
+        }
+        if (buf2 != 0) {
+          // reference: EDT in map units, then grow (buf2>0, distance
+          // from the outside to the poly <= buf2) or shrink (buf2<0,
+          // distance inside the poly >= |buf2|)
+          val src =
+            if (buf2 < 0) init
+            else init.map(b => (1 - b).toByte)
+          val dsq = edtSq(src, ww, wh)
+          val lim = (buf2 / im.px) * (buf2 / im.px)
+          var p = 0
+          while (p < init.length) {
+            init(p) =
+              if (buf2 > 0) { if (dsq(p) <= lim) 1 else 0 }
+              else { if (dsq(p) >= lim) 1 else 0 }
+            p += 1
           }
         }
-      }
+        val fin =
+          if (algo == "ACWE")
+            acwe(win, ww, wh, init, iterations, smoothing, lambda1, lambda2)
+          else {
+            val gimg = inverseGaussianGradient(win, ww, wh, alpha, sigma)
+            val th =
+              if (threshold.isNaN) percentile(gimg, 40.0) else threshold
+            gac(gimg, ww, wh, init, iterations, smoothing, th, balloon)
+          }
+        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Int, Int)]
+        var p = 0
+        while (p < fin.length) {
+          if (fin(p) == 1)
+            out += ((im.image_id, part.polyId, cx0 + p % ww, cy0 + p / ww))
+          p += 1
+        }
+        out.iterator
     }.toDF("image_id", "poly_id", "x", "y")
   }
 }

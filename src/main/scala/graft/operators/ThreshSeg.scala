@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.{ImageRow, PolyRow}
-import graft.core.{Geom, PixelCodec}
 
 /**
  * thresh_seg (/root/reference/geospatial_learn/shape.py:2246-2410):
@@ -12,8 +11,9 @@ import graft.core.{Geom, PixelCodec}
  * and emit the surviving foreground pixels labeled by feature.
  *
  * Spark shape: identical to [[Snakes.msSnake]] — polygons ride a
- * bounded broadcast, each (image x hitting polygon) window is a bounded
- * per-row kernel inside one flatMap, zero shuffle until the final
+ * bounded broadcast ([[PolyLayer.collect]]), each (image x hitting
+ * polygon) window ([[PolyLayer.perImage]]) is a bounded per-row
+ * kernel inside one flatMap, zero shuffle until the final
  * grouped composition. The per-window Otsu uses the engine's EXACT
  * distinct-value argmax (the documented deviation from skimage's
  * 256-bin histogram, same as RasterOps.otsuThreshold) — deterministic
@@ -81,72 +81,53 @@ object ThreshSeg {
   def threshSeg(images: Dataset[ImageRow], polys: Dataset[PolyRow],
                 band: Int = 0, buf: Double = 0.0, minArea: Double = 4.0,
                 holeArea: Int = 4)
-               (implicit spark: SparkSession): DataFrame = {
+               (implicit spark: SparkSession): DataFrame =
+    threshSeg(images, polys, band, buf, minArea, holeArea, PolyLayer.MaxBroadcastRingBytes)
+
+  private[operators] def threshSeg(images: Dataset[ImageRow], polys: Dataset[PolyRow],
+                                   band: Int, buf: Double, minArea: Double,
+                                   holeArea: Int, maxRingBytes: Long)
+                                  (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val polyList = RasterOps.boundedCollect(polys, "thresh_seg polygon")
-      .map(p => (p.poly_id, Geom.PackedPoly(p.rings)))
-      .sortBy(_._1)
-    val polyB = spark.sparkContext.broadcast(polyList)
-    images.flatMap { im =>
-      val imgBB = Geom.BBox(im.x_min, im.y_max - im.h * im.px,
-        im.x_min + im.w * im.px, im.y_max)
-      val hits = polyB.value.filter { case (_, poly) =>
-        val bb = poly.box
-        Geom.BBox(bb.x0 - buf, bb.y0 - buf, bb.x1 + buf, bb.y1 + buf)
-          .intersects(imgBB)
-      }
-      if (hits.isEmpty) Iterator.empty
-      else {
-        val pix = PixelCodec.decode(im.bytes, im.fmt, im.w, im.h).bands(band)
-        hits.iterator.flatMap { case (polyId, poly) =>
-          val bb = poly.box
-          val cx0 = math.max(0, math.floor((bb.x0 - buf - im.x_min) / im.px).toInt)
-          val cx1 = math.min(im.w - 1, math.ceil((bb.x1 + buf - im.x_min) / im.px).toInt - 1)
-          val cy0 = math.max(0, math.floor((im.y_max - (bb.y1 + buf)) / im.px).toInt)
-          val cy1 = math.min(im.h - 1, math.ceil((im.y_max - (bb.y0 - buf)) / im.px).toInt - 1)
-          val ww = cx1 - cx0 + 1; val wh = cy1 - cy0 + 1
-          if (ww <= 0 || wh <= 0) Iterator.empty
-          else {
-            // src * rasterized-mask (reference shape.py:2360-2361)
-            val win = new Array[Float](ww * wh)
-            var r = 0
-            while (r < wh) {
-              var c = 0
-              while (c < ww) {
-                val gx = cx0 + c; val gy = cy0 + r
-                val wx = im.x_min + (gx + 0.5) * im.px
-                val wy = im.y_max - (gy + 0.5) * im.px
-                win(r * ww + c) =
-                  if (poly.contains(wx, wy)) pix(gy * im.w + gx)
-                  else 0f
-                c += 1
-              }
-              r += 1
-            }
-            // reference skips max==0; NaN-only windows (a polygon whose
-            // window is all nodata) must skip too — otsuLocal drops NaNs
-            // and would face an empty histogram
-            if (win.forall(v => v == 0f || v.isNaN)) Iterator.empty
-            else {
-              val thr = otsuLocal(win)
-              val bw = win.map(_ > thr)
-              fillSmallHoles(bw, ww, wh, holeArea)
-              // reference: round(min_area/px^2), fall back to 4 iff <= 0
-              val minPx0 = math.round(minArea / (im.px * im.px)).toInt
-              removeSmallObjects(bw, ww, wh, if (minPx0 <= 0) 4 else minPx0)
-              val out = scala.collection.mutable.ArrayBuffer
-                .empty[(String, Long, Double, Int, Int)]
-              var p = 0
-              while (p < bw.length) {
-                if (bw(p))
-                  out += ((im.image_id, polyId, thr, cx0 + p % ww, cy0 + p / ww))
-                p += 1
-              }
-              out.iterator
-            }
+    PolyLayer.perImage(images, polys, buf, band, maxRingBytes) {
+      case (im, pix, part, PolyLayer.ImageWindow(cx0, cy0, ww, wh)) =>
+        // src * rasterized-mask (reference shape.py:2360-2361)
+        val win = new Array[Float](ww * wh)
+        var r = 0
+        while (r < wh) {
+          var c = 0
+          while (c < ww) {
+            val gx = cx0 + c; val gy = cy0 + r
+            val wx = im.x_min + (gx + 0.5) * im.px
+            val wy = im.y_max - (gy + 0.5) * im.px
+            win(r * ww + c) =
+              if (part.poly.contains(wx, wy)) pix(gy * im.w + gx)
+              else 0f
+            c += 1
           }
+          r += 1
         }
-      }
+        // reference skips max==0; NaN-only windows (a polygon whose
+        // window is all nodata) must skip too — otsuLocal drops NaNs
+        // and would face an empty histogram
+        if (win.forall(v => v == 0f || v.isNaN)) Iterator.empty
+        else {
+          val thr = otsuLocal(win)
+          val bw = win.map(_ > thr)
+          fillSmallHoles(bw, ww, wh, holeArea)
+          // reference: round(min_area/px^2), fall back to 4 iff <= 0
+          val minPx0 = math.round(minArea / (im.px * im.px)).toInt
+          removeSmallObjects(bw, ww, wh, if (minPx0 <= 0) 4 else minPx0)
+          val out = scala.collection.mutable.ArrayBuffer
+            .empty[(String, Long, Double, Int, Int)]
+          var p = 0
+          while (p < bw.length) {
+            if (bw(p))
+              out += ((im.image_id, part.polyId, thr, cx0 + p % ww, cy0 + p / ww))
+            p += 1
+          }
+          out.iterator
+        }
     }.toDF("image_id", "poly_id", "thr", "x", "y")
   }
 }

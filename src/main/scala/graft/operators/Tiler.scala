@@ -15,9 +15,11 @@ import graft.core.{PixelCodec, GridIndex, Geom}
  * `flatMap` (Generator-shaped, SURVEY §2.10): pixel decode happens here,
  * executor-side, never on the driver. Tiles are keyed by every planar
  * grid cell they overlap; DOWNSTREAM OWNERSHIP RULE: a pixel belongs to
- * a (tile, cell) row iff its center lies inside that cell's bounds —
- * so multi-cell tiles never double-count and no distinct/shuffle is
- * needed to dedupe.
+ * a (tile, cell) row iff its center lies inside that cell's half-open
+ * bounds [x0, x1) x [y0, y1) — so multi-cell tiles never double-count
+ * and no distinct/shuffle is needed to dedupe. Every tile x polygon
+ * operator applies it through `PolyLayer.tileHits`;
+ * `RasterOps.rasterToPoints` applies it as column math.
  *
  * Scale notes: payload per row is <= tileSize^2 floats (~256 KB at 256),
  * well inside executor memory at any partition count; the fan-out factor

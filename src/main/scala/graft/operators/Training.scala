@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{MultiTileRow, PolyRow, TileRow}
-import graft.core.{Geom, GridIndex}
 
 /**
  * The reference's ML pipeline capability (SURVEY §3.3):
@@ -42,37 +41,32 @@ object Training {
   }
 
   /** get_training: per-pixel (label, features) rows — the flagship zonal
-    * join over all-bands tiles. Broadcast polygon-cell prefilter + PIP;
-    * the ONLY exchange in the plan is the broadcast itself. */
+    * probe over all-bands tiles: one flatMap reads the driver-built
+    * polygon cell index ([[PolyLayer.broadcastIndex]]; each part carries
+    * its class) and emits the PIP-passing pixels each (tile, cell) row
+    * owns. No exchange and no join in the plan. */
   def extractSamples(tiles: Dataset[MultiTileRow], polys: Dataset[PolyRow], cellRes: Int)
                     (implicit spark: SparkSession): Dataset[Sample] = {
     import spark.implicits._
-    val pc = ZonalStats.polyCells(polys, cellRes)
-    val clsById = RasterOps.boundedCollect(polys, "training-label")
-      .map(p => (p.poly_id, p.part) -> p.cls).toMap
-    val clsB = spark.sparkContext.broadcast(clsById)
-    tiles.joinWith(broadcast(pc), tiles("cell_id") === pc("cell_id"))
-      .flatMap { case (t, p) =>
-        val cb = GridIndex.cellBounds(p.cell_id)
-        val poly = Geom.PackedPoly(p.rings)
-        val label = clsB.value((p.poly_id, p.part))
-        val out = scala.collection.mutable.ArrayBuffer.empty[Sample]
-        var row = 0
-        while (row < t.th) {
-          val cy = t.y_max - (row + 0.5) * t.px
-          var c = 0
-          while (c < t.tw) {
-            val cx = t.x_min + (c + 0.5) * t.px
-            if (cx >= cb.x0 && cx < cb.x1 && cy >= cb.y0 && cy < cb.y1 &&
-              poly.contains(cx, cy)) {
-              out += Sample(label, t.bands.map(_(row * t.tw + c)))
+    val index = PolyLayer.broadcastIndex(polys, cellRes)
+    tiles.flatMap { t =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[Sample]
+      PolyLayer.tileHits(index.value, t.cell_id, t.x_min, t.y_max, t.px, t.tw, t.th).foreach {
+        case (p, win) =>
+          var row = win.rowLo
+          while (row <= win.rowHi) {
+            val cy = t.y_max - (row + 0.5) * t.px
+            var c = win.colLo
+            while (c <= win.colHi) {
+              if (win.fullInside || p.poly.contains(t.x_min + (c + 0.5) * t.px, cy))
+                out += Sample(p.cls, t.bands.map(_(row * t.tw + c)))
+              c += 1
             }
-            c += 1
+            row += 1
           }
-          row += 1
-        }
-        out
       }
+      out
+    }
   }
 
   /** create_model: class centroids with one grouped aggregate. */

@@ -11,10 +11,11 @@ import graft.core.{Geom, GridIndex}
  * /root/reference/geospatial_learn/shape.py:837-1090, stat dispatch
  * shape.py:1023-1068).
  *
- * Engine plan (SURVEY §3.1): the polygon side explodes into its covering
- * grid cells and is BROADCAST (small); the tile side — arbitrarily huge —
- * joins on `cell_id` with zero shuffle, then a typed flatMap applies the
- * exact per-pixel test (cell-ownership + nodata + PIP) and emits
+ * Engine plan (SURVEY §3.1): the polygon side (small) is covered into
+ * grid cells on the driver and broadcast as a cell index
+ * ([[PolyLayer]]); the tile side — arbitrarily huge — probes it by
+ * `cell_id` with zero shuffle inside one mapPartitions, which applies
+ * the exact per-pixel test (cell-ownership + nodata + PIP) and emits
  * per-(poly, band, value) HISTOGRAM partials. Every zonal statistic is
  * then derived from the merged histogram with built-in aggregates, so
  * partial/final aggregation, codegen and AQE all come from Catalyst.
@@ -26,8 +27,8 @@ import graft.core.{Geom, GridIndex}
  * Scale: the only shuffle in the whole pipeline is the final
  * groupBy(poly_id, band, value) over histogram partials — rows whose
  * count is bounded by (polygons x bands x distinct-values), i.e. tiny
- * compared to pixels. Dense-cell skew lands on the broadcast-join's
- * streamed side only, which AQE splits; no single reducer ever sees a
+ * compared to pixels. Dense-cell skew lands on the tile side only
+ * (`pipParallelism` salts it); no single reducer ever sees a
  * pixel-proportional row count.
  */
 object ZonalStats {
@@ -35,24 +36,16 @@ object ZonalStats {
   final case class PolyCell(cell_id: Long, poly_id: Long, part: Int,
                             rings: Array[Array[Pt]])
 
-  /** One polygon part packed for PIP ([[Geom.PackedPoly]]) and the grid
-    * cells at `res` it covers: bbox cover refined by exact rect-polygon
-    * intersection, mirroring the reference's bbox prefilter
-    * shape.py:942-976. The ONE cover definition: [[polyCells]] flatMaps
-    * it and the driver-built index of [[histogram]] calls it. */
-  private def cover(p: PolyRow, res: Int): (Geom.PackedPoly, Array[Long]) = {
-    val poly = Geom.PackedPoly(p.rings)
-    (poly, GridIndex.coverPolygon(poly, res))
-  }
-
   /** Explode polygons into covering cells at `res` — the build side of
-    * the join-shaped prefilters. [[histogram]] builds the same cover on
-    * the driver instead, with no Spark job. */
+    * the relational point join ([[SpatialJoin]]). The raster x polygon
+    * operators build the same cover on the driver instead
+    * ([[PolyLayer.byCell]]), with no Spark job. */
   def polyCells(polys: Dataset[PolyRow], res: Int)
                (implicit spark: SparkSession): Dataset[PolyCell] = {
     import spark.implicits._
     polys.flatMap { p =>
-      cover(p, res)._2.map(c => PolyCell(c, p.poly_id, p.part, p.rings))
+      GridIndex.coverPolygon(Geom.PackedPoly(p.rings), res)
+        .map(c => PolyCell(c, p.poly_id, p.part, p.rings))
     }
   }
 
@@ -88,96 +81,23 @@ object ZonalStats {
     }
   }
 
-  /** One pre-resolved polygon part of the prefilter index: rings packed
-    * with their bbox ONCE per polygon at build time and shared by every
-    * cell the polygon covers (the broadcast serializes a shared reference
-    * once, so rings ship once per polygon, not once per (cell, polygon)). */
-  private[operators] final case class PolyPre(polyId: Long, poly: Geom.PackedPoly)
-
-  /** Hard cap on the (cell, polygon) entries of the driver-held prefilter
-    * index — the smallness contract of the zonal polygon layer, made
-    * loud: a layer whose cell cover exceeds it fails fast instead of
-    * OOM-ing the driver. */
-  val MaxBroadcastPolyCells: Int = 1 << 22
-
-  /** Byte budget of the index's rings, next to the entry cap: 16 bytes
-    * (x, y doubles) per vertex of every polygon part that covers a cell.
-    * A few very detailed polygons fit the entry cap yet hold far more
-    * bytes; they fail here. The index holds each vertex once (packed
-    * x and y arrays), so 256 MiB of vertices is ~256 MiB of heap and of
-    * broadcast blocks. */
-  val MaxBroadcastRingBytes: Long = 1L << 28
-
-  /** Driver-side prefilter index over an already collected polygon
-    * layer: cell_id -> the polygon parts covering it, in layer order.
-    * Fails past `maxEntries` (cell, polygon) entries or `maxRingBytes`
-    * bytes of vertices, counted while covering. */
-  private[operators] def buildIndex(polys: Array[PolyRow], res: Int,
-                                    maxEntries: Int, maxRingBytes: Long)
-      : java.util.HashMap[Long, Array[PolyPre]] = {
-    val byCell = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[PolyPre]]()
-    var entries = 0L
-    var ringBytes = 0L
-    polys.foreach { p =>
-      val (poly, cells) = cover(p, res)
-      if (cells.nonEmpty) {
-        entries += cells.length
-        require(entries <= maxEntries,
-          s"zonal prefilter index exceeds $maxEntries (cell, polygon) " +
-            "entries — coarsen cellRes or shard the polygon layer")
-        ringBytes += 16L * p.rings.map(_.length.toLong).sum
-        require(ringBytes <= maxRingBytes,
-          s"zonal prefilter index rings exceed $maxRingBytes bytes of vertices " +
-            "— simplify or shard the polygon layer")
-        val pre = PolyPre(p.poly_id, poly)
-        cells.foreach { c =>
-          byCell.computeIfAbsent(c, _ => scala.collection.mutable.ArrayBuffer.empty[PolyPre]) += pre
-        }
-      }
-    }
-    val index = new java.util.HashMap[Long, Array[PolyPre]](byCell.size * 2)
-    byCell.forEach((c, b) => index.put(c, b.toArray))
-    index
-  }
-
   /**
-   * Tiles x polygons histogram, executed as a broadcast-VARIABLE map
-   * join: the polygon layer (small by the zonal contract) is collected
-   * once with `limit(cap + 1)` — no Spark job for a local layer, at most
-   * the scan's jobs for a file-backed one — and covered into cells ON THE
-   * DRIVER ([[buildIndex]], bounded by [[MaxBroadcastPolyCells]] entries
-   * and [[MaxBroadcastRingBytes]] of vertices, both loud), then shipped
-   * via sparkContext.broadcast with each polygon's rings once. The tile
-   * side streams through ONE mapPartitions that accumulates
-   * per-(poly, band) histograms for the whole partition and emits only
-   * the merged partials. vs a plan-level joinWith(broadcast(pc)):
-   *  - pixels never enter Tungsten rows between the tiler and the
-   *    kernel (EliminateSerialization fuses the two typed operators —
-   *    the join forced a serialize + per-matched-pair deserialize of
-   *    every pixel array);
-   *  - the pre-shuffle row count drops from (pairs x distinct values)
-   *    to (polys x bands x values x partitions);
-   *  - ring/bbox conversion happens once per polygon, not once per
-   *    joined pair.
-   * Output rows and the final groupBy are IDENTICAL to the join form
-   * (oracle-checked); the pass runs two Spark jobs (the aggregate's
-   * shuffle-map and result stages), and the only shuffle is the
-   * summary-sized histogram merge.
+   * Tiles x polygons histogram over the driver-built cell index
+   * ([[PolyLayer.broadcastIndex]]): the tile side streams through ONE
+   * mapPartitions that accumulates per-(poly, band) histograms for the
+   * whole partition and emits only the merged partials, so the
+   * pre-shuffle row count is (polys x bands x values x partitions), not
+   * (pairs x distinct values). The pass runs two Spark jobs (the
+   * aggregate's shuffle-map and result stages), and the only shuffle is
+   * the summary-sized histogram merge.
    */
   def histogram(tiles: Dataset[TileRow], polys: Dataset[PolyRow], cellRes: Int,
                 pipParallelism: Int = 0)
                (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    // driver-held build side (bounded, fail-fast); more polygons than the
-    // entry cap fail too, so the limit never truncates silently
-    val layer = polys.limit(MaxBroadcastPolyCells + 1).collect()
-    require(layer.length <= MaxBroadcastPolyCells,
-      s"zonal polygon layer exceeds $MaxBroadcastPolyCells polygon parts " +
-        "— shard the polygon layer")
-    val bc = spark.sparkContext.broadcast(
-      buildIndex(layer, cellRes, MaxBroadcastPolyCells, MaxBroadcastRingBytes))
+    val bc = PolyLayer.broadcastIndex(polys, cellRes)
     // Dense cells concentrate (tile x poly) pairs in few input partitions
-    // and the map-side join gives AQE no shuffle to split — the salted
+    // and the map-side probe gives AQE no shuffle to split — the salted
     // repartition below is the north rule's fix. Worth it exactly when the
     // per-pair PIP kernel dominates the one-off payload shuffle.
     val src = if (pipParallelism > 0) tiles.repartition(pipParallelism) else tiles
@@ -214,99 +134,55 @@ object ZonalStats {
         flat.clear(); over.clear(); overCount = 0L
       }
       it.foreach { t =>
-        val entries = idx.get(t.cell_id)
-        if (entries != null) {
-          val cb = GridIndex.cellBounds(t.cell_id)
-          var ei = 0
-          while (ei < entries.length) {
-            val p = entries(ei)
+        PolyLayer.tileHits(idx, t.cell_id, t.x_min, t.y_max, t.px, t.tw, t.th).foreach {
+          case (p, win) =>
             val poly = p.poly
-            val pb = poly.box
-            // interior-tile shortcut: when the rect spanned by the tile's
-            // pixel CENTERS sits entirely inside the polygon, every center
-            // passes PIP — large polygons pay zero per-pixel geometry
-            val fullInside = Geom.rectInsidePolygon(Geom.BBox(
-              t.x_min + 0.5 * t.px, t.y_max - (t.th - 0.5) * t.px,
-              t.x_min + (t.tw - 0.5) * t.px, t.y_max - 0.5 * t.px), poly)
-            // Hoist the per-pixel ownership + bbox bounds out of the inner
-            // loop: the row predicate (cy in cell & poly-bbox y-range) and
-            // col predicate (cx in cell & poly-bbox x-range) are monotone
-            // in row/col, so each holds on a contiguous index range found
-            // by scanning the EXACT per-pixel expressions once per pair
-            // (bit-identical acceptance set, O(tw+th) instead of tw*th).
-            var rowLo = 0
-            while (rowLo < t.th && !rowOk(t, rowLo, cb, pb)) rowLo += 1
-            var rowHi = t.th - 1
-            while (rowHi >= rowLo && !rowOk(t, rowHi, cb, pb)) rowHi -= 1
-            var colLo = 0
-            while (colLo < t.tw && !colOk(t, colLo, cb, pb)) colLo += 1
-            var colHi = t.tw - 1
-            while (colHi >= colLo && !colOk(t, colHi, cb, pb)) colHi -= 1
-            if (rowLo <= rowHi && colLo <= colHi) {
-              val key = (p.polyId, t.band)
-              var arr = flat.get(key)
-              if (arr == null) { arr = new Array[Long](256); flat.put(key, arr) }
-              var acc = over.get(key)
-              val nod = t.nodata
-              val nodNaN = nod.isNaN
-              var row = rowLo
-              while (row <= rowHi) {
-                val cy = t.y_max - (row + 0.5) * t.px
-                val base = row * t.tw
-                var col = colLo
-                while (col <= colHi) {
-                  val v = t.pixels(base + col)
-                  val isNodata = if (nodNaN) v.isNaN else v == nod
-                  if (!isNodata && (fullInside ||
-                      poly.contains(t.x_min + (col + 0.5) * t.px, cy))) {
-                    val iv = v.toInt
-                    if (iv >= 0 && iv < 256 && iv.toFloat == v) arr(iv) += 1L
-                    else {
+            val fullInside = win.fullInside
+            val key = (p.polyId, t.band)
+            var arr = flat.get(key)
+            if (arr == null) { arr = new Array[Long](256); flat.put(key, arr) }
+            var acc = over.get(key)
+            val nod = t.nodata
+            val nodNaN = nod.isNaN
+            var row = win.rowLo
+            while (row <= win.rowHi) {
+              val cy = t.y_max - (row + 0.5) * t.px
+              val base = row * t.tw
+              var col = win.colLo
+              while (col <= win.colHi) {
+                val v = t.pixels(base + col)
+                val isNodata = if (nodNaN) v.isNaN else v == nod
+                if (!isNodata && (fullInside ||
+                    poly.contains(t.x_min + (col + 0.5) * t.px, cy))) {
+                  val iv = v.toInt
+                  if (iv >= 0 && iv < 256 && iv.toFloat == v) arr(iv) += 1L
+                  else {
+                    if (acc == null) {
+                      acc = over.get(key)
                       if (acc == null) {
-                        acc = over.get(key)
-                        if (acc == null) {
-                          acc = scala.collection.mutable.LongMap.empty[Long]
-                          over.put(key, acc)
-                        }
+                        acc = scala.collection.mutable.LongMap.empty[Long]
+                        over.put(key, acc)
                       }
-                      // canonical bits (not raw): merges NaN payloads the
-                      // way a Float-keyed HashMap's equals would
-                      val bits = java.lang.Float.floatToIntBits(v).toLong
-                      val prev = acc.getOrElse(bits, 0L)
-                      if (prev == 0L) overCount += 1
-                      acc.update(bits, prev + 1L)
                     }
+                    // canonical bits (not raw): merges NaN payloads the
+                    // way a Float-keyed HashMap's equals would
+                    val bits = java.lang.Float.floatToIntBits(v).toLong
+                    val prev = acc.getOrElse(bits, 0L)
+                    if (prev == 0L) overCount += 1
+                    acc.update(bits, prev + 1L)
                   }
-                  col += 1
                 }
-                row += 1
+                col += 1
               }
+              row += 1
             }
-            ei += 1
-          }
-          if (overCount > (1L << 20)) flush()
         }
+        if (overCount > (1L << 20)) flush()
       }
       flush()
       out.iterator
     }.toDF("poly_id", "band", "value", "cnt")
       .groupBy("poly_id", "band", "value").agg(sum("cnt").as("cnt"))
-  }
-
-  /** The EXACT per-row ownership/bbox predicate of the histogram kernel
-    * (hoisted — see the range scan above). */
-  @inline private def rowOk(t: TileRow, row: Int, cb: Geom.BBox,
-                            pb: Geom.BBox): Boolean = {
-    val cy = t.y_max - (row + 0.5) * t.px
-    cy >= cb.y0 && cy < cb.y1 && cy >= pb.y0 && cy <= pb.y1
-  }
-
-  /** The EXACT per-col ownership/bbox predicate (pixel belongs to exactly
-    * one (tile, cell) row). */
-  @inline private def colOk(t: TileRow, col: Int, cb: Geom.BBox,
-                            pb: Geom.BBox): Boolean = {
-    val cx = t.x_min + (col + 0.5) * t.px
-    cx >= cb.x0 && cx < cb.x1 && cx >= pb.x0 && cx <= pb.x1
   }
 
   /** Fold partial histograms (per batch / per shard) back into one

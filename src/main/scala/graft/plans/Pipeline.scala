@@ -13,8 +13,8 @@ import graft.operators.{Tiler, ZonalStats}
  * The image table is INGESTED with a materialized `shard` PARTITION
  * column (shard id = crc32(image_id) mod nShards — at 10^12-image scale
  * this is the ingest-shard key). Each shard runs the full decode -> tile
- * -> broadcast join -> PIP -> histogram slice and commits its histogram
- * rows to a SnapshotTable keyed by shard. A killed run leaves a manifest
+ * -> polygon cell-index probe -> PIP -> histogram slice and commits its
+ * histogram rows to a SnapshotTable keyed by shard. A killed run leaves a manifest
  * covering the finished shards only; `run` derives pending work by
  * anti-joining the shard list against the manifest and processes just
  * that.

@@ -10,8 +10,9 @@ import graft.operators.{Tiler, ZonalStats}
  * Structured-Streaming ingest for the image table. The reference is
  * purely batch (SURVEY §1.4/§2.9 — no streams), so this is forward
  * capability, not parity: a parquet-directory stream of north-rule image
- * rows is decoded/tiled per micro-batch with the SAME Tiler, joined to
- * the broadcast polygon cells, and the running zonal histogram is kept
+ * rows is decoded/tiled per micro-batch with the SAME Tiler, probed
+ * against the broadcast polygon cell index (`ZonalStats.histogram`), and
+ * the running zonal histogram is kept
  * as streaming state by the partial-aggregate update (output: histogram
  * deltas written per batch into batch_id partitions with dynamic
  * overwrite — a replayed batch replaces its own delta, so the

@@ -420,6 +420,36 @@ class GridIndexSpec extends AnyFunSuite with SeededProps {
     // normal covers still work
     assert(GridIndex.coverBBox(Geom.BBox(0, 0, 100, 100), 14).nonEmpty)
   }
+
+  test("geo cells: east-west ground distance exact; adjacency holds at every latitude") {
+    for (lat <- Seq(-60.0, -30.0, 0.0, 45.0, 66.5)) {
+      val lng = 10.0
+      val dLng = 1000.0 / (GeoScale.MetersPerDegree * math.cos(math.toRadians(lat)))
+      val (x1, y1) = GeoScale.toPlanar(lat, lng)
+      val (x2, y2) = GeoScale.toPlanar(lat, lng + dLng)
+      // 1000 ground meters stay 1000 planar meters at EVERY latitude —
+      // the 111320*cos(lat) property the reference relies on
+      assert(math.abs((x2 - x1) * GeoScale.MetersPerUnit - 1000.0) < 1e-6, s"lat $lat")
+      assert(y1 == y2)
+      // 1 km apart -> same or neighboring hex at res 7 (~4.6 km hexes)
+      assert(Hex.gridDistance(Hex.cellId(x1, y1, 7), Hex.cellId(x2, y2, 7)) <= 1)
+      // and same or edge-adjacent res-13 grid cell (8.2 km ground cells)
+      val g1 = GridIndex.cellId(x1, y1, 13); val g2 = GridIndex.cellId(x2, y2, 13)
+      assert(math.abs(GridIndex.ix(g1) - GridIndex.ix(g2)) <= 1 &&
+        GridIndex.iy(g1) == GridIndex.iy(g2))
+    }
+    // whole-Earth containment: every point lands inside its cell's bounds
+    // (nothing clamps — the 64 m world unit fits lng ±180, lat ±90)
+    val rng = new graft.gen.Synth.Rng(7L)
+    for (_ <- 0 until 500) {
+      val lat = rng.nextDouble() * 179.98 - 89.99
+      val lng = rng.nextDouble() * 359.98 - 179.99
+      val (x, y) = GeoScale.toPlanar(lat, lng)
+      val c = GridIndex.cellId(x, y, 13)
+      val bb = GridIndex.cellBounds(c)
+      assert(x >= bb.x0 && x < bb.x1 && y >= bb.y0 && y < bb.y1, s"($lat, $lng)")
+    }
+  }
 }
 
 class S2Spec extends AnyFunSuite with SeededProps {

@@ -350,9 +350,27 @@ class PlanShapeSpec extends AnyFunSuite {
     val cellRes = Tiler.resForCellSize(64.0)
     val tiles = Tiler.multiTiles(images, 64, cellRes)
     val p = plan(Training.extractSamples(tiles, polys, cellRes).toDF())
-    assert(p.contains("BroadcastHashJoin"), s"expected broadcast prefilter:\n$p")
-    assert(!p.contains("Exchange hashpartitioning"),
-      s"extractSamples must not hash-shuffle pixels:\n$p")
+    // the polygon side is a driver-built cell index probed inside the
+    // tile flatMap: no exchange of any kind and no join operator
+    assert(!p.contains("Exchange") && !p.contains("Join"),
+      s"extractSamples must not join or shuffle:\n$p")
+  }
+
+  test("zonalRgbIndices, pairHistogram: no join; the only exchange is the final aggregate's") {
+    import graft.operators.{Glcm, RasterOps, Tiler}
+    val images = spark.createDataset(Synth.images(4, seed = 2L, bands = 3).toSeq)
+    val polys = spark.createDataset(Synth.polygons(2).toSeq)
+    val cellRes = Tiler.resForCellSize(64.0)
+    val rgb = plan(RasterOps.zonalRgbIndices(Tiler.multiTiles(images, 64, cellRes),
+      polys, cellRes, shift = 1.0))
+    val glcm = plan(Glcm.pairHistogram(Tiler.tiles(images, 64, cellRes, halo = 1),
+      polys, cellRes, halo = 1, tileSize = 64))
+    for (p <- Seq(rgb, glcm)) {
+      assert(!p.contains("Join"), s"plan-level polygon join:\n$p")
+      assert("Exchange".r.findAllIn(p).size == 1 &&
+        p.contains("Exchange hashpartitioning(poly_id"),
+        s"expected exactly the final aggregate's exchange:\n$p")
+    }
   }
 }
 

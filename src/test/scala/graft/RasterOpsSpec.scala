@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.{Geom, GridIndex, PixelCodec}
-import graft.gen.Synth
+import graft.gen.{GridImages, Synth}
 import graft.operators._
 
 object TileFixtures {
@@ -133,6 +133,32 @@ class RasterOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("rasterize: a tile spanning two cells burns each pixel once (ownership rule)") {
+    // 80x48 image at x 16..96: the 64-px tile 0 spans the 64-unit cells at
+    // x 0 and x 64, so 2 tiles make 3 (tile, cell) rows
+    val (x0, y0) = (16.0, 240.0)
+    val img = GridImages.imageAt(0, 1, xMin0 = x0, yMax0 = y0)
+    val cellRes = Tiler.resForCellSize(64.0)
+    val tiles = Tiler.tiles(Seq(img).toDS, 64, cellRes)
+    assert(tiles.count() == 3)
+    val all = PolyRow(1, 0, Array(Array(Pt(0, 150), Pt(200, 150), Pt(200, 300), Pt(0, 300))),
+      1, "all", 0.0)
+    val tri = PolyRow(2, 0, Array(Array(Pt(20, 195), Pt(95, 200), Pt(50, 238))), 2, "tri", 0.0)
+    def naive(ps: Seq[PolyRow]): Long =
+      (for (y <- 0 until GridImages.H; x <- 0 until GridImages.W
+            if ps.exists(p => Geom.pointInPolygon(x0 + x + 0.5, y0 - y - 0.5,
+              p.rings.map(_.map(q => (q.x, q.y)))))) yield 1L).sum
+    assert(naive(Seq(all)) == GridImages.W * GridImages.H)
+    for (ps <- Seq(Seq(all), Seq(tri), Seq(all, tri))) {
+      val burned = RasterOps.rasterize(tiles, ps.toDS, cellRes).collect()
+        .map(_.pixels.count(_ == 1f).toLong).sum
+      assert(burned == naive(ps), s"polygons ${ps.map(_.name)}")
+    }
+    val byClass = RasterOps.rasterize(tiles, Seq(tri).toDS, cellRes, burnClass = true)
+      .collect().map(_.pixels.count(_ == 2f).toLong).sum
+    assert(byClass == naive(Seq(tri)))
+  }
+
   test("applyLut remaps listed values, passes others; otsu splits bimodal") {
     val lutted = RasterOps.applyLut(Seq(tile(p0)).toDS.toDF(), Map(1f -> 100f, 16f -> 0f))
       .select("pixels").as[Array[Float]].head()
@@ -232,6 +258,105 @@ class ShapePropsGlcmSpec extends AnyFunSuite {
     assert(math.abs(energy - math.sqrt(asm)) < 1e-4)
     assert(props.getAs[Double]("homogeneity") <= 1.0)
   }
+
+  test("GLCM: negative offsets are in-bounds and mirror positive ones") {
+    val res = Tiler.resForCellSize(16.0)
+    val px = Array.tabulate(16)(i => (i % 7).toFloat) // 4x4 tile
+    val tile = TileRow("i", GridIndex.cellId(2.0, 2.0, res), 0, 0,
+      0.0, 4.0, 1.0, 0, px, 4, 4, Float.NaN)
+    val poly = PolyRow(1L, 0,
+      Array(Array(Pt(-1, -1), Pt(5, -1), Pt(5, 5), Pt(-1, 5))), 1, "p", 0.0)
+    def hist(dx: Int, dy: Int) =
+      Glcm.pairHistogram(Seq(tile).toDS, Seq(poly).toDS, res, dx, dy, 8, 8f)
+        .as[(Long, Int, Int, Int, Long)].collect().toSet
+    // symmetric GLCM: offset (dx,dy) and (-dx,-dy) produce identical matrices
+    assert(hist(-1, 0) == hist(1, 0))
+    assert(hist(0, -1) == hist(0, 1))
+    assert(hist(-1, -1) == hist(1, 1)) // would have thrown AIOOBE before
+  }
+
+  test("GLCM halo tiles == naive full-window pairs (pairs cross the tile edge)") {
+    val cellRes = Tiler.resForCellSize(64.0)
+    val imgs = GridImages.images(3, bands = 1)
+    val tiles = Tiler.tiles(spark.createDataset(imgs.toSeq), 64, cellRes, halo = 1)
+    for ((dx, dy) <- Seq((1, 0), (0, 1), (1, 1), (-1, 1))) {
+      val got = Glcm.pairHistogram(tiles, Seq(allPoly).toDS, cellRes,
+        dx, dy, levels = 32, maxVal = 256f, halo = 1, tileSize = 64)
+        .as[(Long, Int, Int, Int, Long)].collect()
+        .map { case (_, _, q1, q2, c) => (q1, q2) -> c }.toMap
+      val naive = naivePairs(imgs, GridImages.W, GridImages.H, dx, dy)
+      assert(got == naive, s"offset ($dx, $dy)")
+    }
+  }
+
+  test("GLCM halo + PARTIAL polygon mask == naive masked pairs") {
+    // polygon covers only part of each image and crosses the 64-px tile
+    // boundary of image 0 — origin/partner membership must follow the
+    // mask exactly, including pairs whose partner sits in halo pixels
+    val poly = PolyRow(0L, 0, Array(Array(
+      Pt(40, -40), Pt(330, -40), Pt(330, -5), Pt(40, -5))), 1, "part", 0.0)
+    val imgs = GridImages.images(2, bands = 1)
+    def inPoly(i: Int, x: Int, y: Int): Boolean = {
+      val wx = GridImages.xMin(i.toLong) + x + 0.5
+      val wy = GridImages.yMax(i.toLong) - y - 0.5
+      wx > 40 && wx < 330 && wy > -40 && wy < -5
+    }
+    val acc = scala.collection.mutable.Map.empty[(Int, Int), Long].withDefaultValue(0L)
+    imgs.zipWithIndex.foreach { case (img, i) =>
+      val b = PixelCodec.decode(img.bytes, img.fmt, GridImages.W, GridImages.H).bands(0)
+      for (y <- 0 until GridImages.H; x <- 0 until GridImages.W - 1)
+        if (inPoly(i, x, y) && inPoly(i, x + 1, y)) {
+          val a = (b(y * GridImages.W + x) / 8).toInt
+          val q = (b(y * GridImages.W + x + 1) / 8).toInt
+          acc((a, q)) += 1; acc((q, a)) += 1
+        }
+    }
+    val cellRes = Tiler.resForCellSize(64.0)
+    val tiles = Tiler.tiles(spark.createDataset(imgs.toSeq), 64, cellRes, halo = 1)
+    val got = Glcm.pairHistogram(tiles, Seq(poly).toDS, cellRes,
+      dx = 1, dy = 0, levels = 32, maxVal = 256f, halo = 1, tileSize = 64)
+      .as[(Long, Int, Int, Int, Long)].collect()
+      .map { case (_, _, q1, q2, c) => (q1, q2) -> c }.toMap
+    assert(got == acc.toMap)
+    assert(got.nonEmpty)
+  }
+
+  test("GLCM core-origin dedupe: cell spanning TWO tiles still counts pairs once") {
+    // 128-unit cells over 64-px tiles: both tiles of a cell see shared
+    // halo pixels INSIDE the cell — only core origins may count them
+    val w = 128; val h = 32
+    val b = Array.tabulate(w * h)(p => (((p % w) * 7 + (p / w) * 13) % 97).toFloat)
+    val img = ImageRow("two", PixelCodec.encode(PixelCodec.FmtRawLe, w, h, Array(b)),
+      w, h, PixelCodec.FmtRawLe, "c", 0L, 0.0, 0.0, 1.0)
+    val cellRes = Tiler.resForCellSize(128.0)
+    val tiles = Tiler.tiles(Seq(img).toDS, 64, cellRes, halo = 1)
+    val got = Glcm.pairHistogram(tiles, Seq(allPoly).toDS, cellRes,
+      dx = 1, dy = 0, levels = 32, maxVal = 256f, halo = 1, tileSize = 64)
+      .as[(Long, Int, Int, Int, Long)].collect()
+      .map { case (_, _, q1, q2, c) => (q1, q2) -> c }.toMap
+    assert(got == naivePairs(Seq(img), w, h, 1, 0))
+  }
+
+  private def naivePairs(imgs: Seq[ImageRow], w: Int, h: Int,
+                         dx: Int, dy: Int): Map[(Int, Int), Long] = {
+    val acc = scala.collection.mutable.Map.empty[(Int, Int), Long].withDefaultValue(0L)
+    imgs.foreach { img =>
+      val b = PixelCodec.decode(img.bytes, img.fmt, w, h).bands(0)
+      for (y <- 0 until h; x <- 0 until w) {
+        val py = y + dy; val px = x + dx
+        if (py >= 0 && py < h && px >= 0 && px < w) {
+          val a = (b(y * w + x) / 8).toInt
+          val q = (b(py * w + px) / 8).toInt
+          acc((a, q)) += 1; acc((q, a)) += 1
+        }
+      }
+    }
+    acc.toMap
+  }
+
+  private def allPoly = PolyRow(0L, 0, Array(Array(
+    Pt(-1000, -1000), Pt(5000, -1000), Pt(5000, 1000), Pt(-1000, 1000))),
+    1, "all", 0.0)
 }
 
 class TrainingSpec extends AnyFunSuite {

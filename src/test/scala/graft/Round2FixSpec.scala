@@ -6,43 +6,14 @@ import org.apache.spark.sql.functions._
 import graft.core.{Geom, GridIndex, PixelCodec}
 import graft.operators._
 
-/** Round-2 fix gates: even-n median, negative GLCM offsets, temporal
-  * median/percentile, general polygon clip, buffer, local thresholds,
-  * DEM kernels, scalable FID assignment. (The hole-winding PIP fallback
-  * and JTS gates live in GeomSpec and SpatialFunctionsSpec.) */
+/** Round-2 fix gates: temporal median/percentile, general polygon clip,
+  * buffer, local thresholds, DEM kernels, scalable FID assignment. (The
+  * hole-winding PIP fallback and JTS gates live in GeomSpec and
+  * SpatialFunctionsSpec, the even-n median in ZonalSpec, the negative
+  * GLCM offsets in ShapePropsGlcmSpec.) */
 class Round2FixSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
-
-  test("zonal median: np convention for EVEN pixel counts") {
-    // n = 4 distinct values -> mean of the two middles, not the upper one
-    val hist = Seq(
-      (1L, 0, 1f, 1L), (1L, 0, 2f, 1L), (1L, 0, 3f, 1L), (1L, 0, 9f, 1L),
-      (2L, 0, 1f, 2L), (2L, 0, 5f, 2L), // even via counts: 1,1,5,5 -> 3
-      (3L, 0, 1f, 1L), (3L, 0, 2f, 1L), (3L, 0, 7f, 1L) // odd -> 2
-    ).toDF("poly_id", "band", "value", "cnt")
-    val m = ZonalStats.stats(hist).select("poly_id", "median")
-      .as[(Long, Double)].collect().toMap
-    assert(m(1L) == 2.5, s"even-n median: ${m(1L)}")
-    assert(m(2L) == 3.0, s"even-n (counts) median: ${m(2L)}")
-    assert(m(3L) == 2.0, s"odd-n median: ${m(3L)}")
-  }
-
-  test("GLCM: negative offsets are in-bounds and mirror positive ones") {
-    val res = Tiler.resForCellSize(16.0)
-    val px = Array.tabulate(16)(i => (i % 7).toFloat) // 4x4 tile
-    val tile = TileRow("i", GridIndex.cellId(2.0, 2.0, res), 0, 0,
-      0.0, 4.0, 1.0, 0, px, 4, 4, Float.NaN)
-    val poly = PolyRow(1L, 0,
-      Array(Array(Pt(-1, -1), Pt(5, -1), Pt(5, 5), Pt(-1, 5))), 1, "p", 0.0)
-    def hist(dx: Int, dy: Int) =
-      Glcm.pairHistogram(Seq(tile).toDS, Seq(poly).toDS, res, dx, dy, 8, 8f)
-        .as[(Long, Int, Int, Int, Long)].collect().toSet
-    // symmetric GLCM: offset (dx,dy) and (-dx,-dy) produce identical matrices
-    assert(hist(-1, 0) == hist(1, 0))
-    assert(hist(0, -1) == hist(0, 1))
-    assert(hist(-1, -1) == hist(1, 1)) // would have thrown AIOOBE before
-  }
 
   test("temporalComposite median/percentile == naive np.nanpercentile") {
     val res = Tiler.resForCellSize(16.0)

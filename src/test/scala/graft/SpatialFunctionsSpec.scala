@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core.{Geom, GridIndex, S2, Hex}
+import graft.core.{GeoScale, Geom, GridIndex, S2, Hex}
 import graft.functions.SpatialFunctions._
 import graft.gen.Synth
 
@@ -80,6 +80,21 @@ class SpatialFunctionsSpec extends AnyFunSuite with SeededProps {
     val hit = graft.operators.SpatialJoin.pointsInPolygons(pts, Seq(poly).toDS, res = 12)
       .select("pt_id").as[Long].collect().toSet
     assert(hit == Set(2L, 3L), s"expression path: $hit")
+  }
+
+  test("geo cell Columns mirror the core math bit for bit") {
+    import graft.functions.SpatialFunctions._
+    val df = spark.range(300).select(
+      ((col("id") % 140) - 70 + lit(0.25)).cast("double").as("lat"),
+      (((col("id") * 7) % 360) - 180 + lit(0.5)).cast("double").as("lng"))
+    val rows = df.select(col("lat"), col("lng"),
+      gridCellIdGeo(col("lat"), col("lng"), 13).as("g"),
+      hexCellIdGeo(col("lat"), col("lng"), 7).as("h")).collect()
+    rows.foreach { r =>
+      val (x, y) = GeoScale.toPlanar(r.getDouble(0), r.getDouble(1))
+      assert(r.getLong(2) == GridIndex.cellId(x, y, 13))
+      assert(r.getLong(3) == Hex.cellId(x, y, 7))
+    }
   }
 }
 

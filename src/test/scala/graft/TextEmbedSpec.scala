@@ -341,4 +341,28 @@ class EmbedOpsSpec extends AnyFunSuite {
       s"recall=$recall gotKeys=${got.keys.toSeq.sorted} " +
         s"got0=${got.getOrElse(0L, Set.empty[Long])} want0=${want(0L)}")
   }
+
+  test("native DotExpr / LshSigExpr == the HOF column forms bit for bit") {
+    import graft.text.EmbedOps
+    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(50)
+    val hofDot = aggregate(zip_with(col("embedding"), col("embedding"),
+      (x, y) => x.cast("double") * y.cast("double")), lit(0.0), (acc, v) => acc + v)
+    val hofSig = (0 until 16).map { p =>
+      val proj = aggregate(zip_with(col("embedding"),
+        sequence(lit(0), size(col("embedding")) - 1),
+        (v, i) => v.cast("double") *
+          (shiftrightunsigned(lit(1103515245L) * (lit(p.toLong * EmbedOps.PlaneStride) + i) + lit(12345L), 16)
+            .bitwiseAND(lit(1L)).cast("double") * 2.0 - 1.0)),
+        lit(0.0), (acc, x) => acc + x)
+      when(proj > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
+    }.reduce(_ + _)
+    val rows = e.select(
+      EmbedOps.dot(col("embedding"), col("embedding")).as("d"), hofDot.as("dh"),
+      EmbedOps.lshSignature(col("embedding"), 16).as("s"), hofSig.as("sh")).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(r.getDouble(0) == r.getDouble(1))
+      assert(r.getLong(2) == r.getLong(3))
+    }
+  }
 }

@@ -137,6 +137,20 @@ class ZonalSpec extends AnyFunSuite {
     assert(out(4) == -0.25f)      // negative values bin correctly
     assert(out(5) == 7f)          // nodata sentinel untouched
   }
+
+  test("zonal median: np convention for EVEN pixel counts") {
+    // n = 4 distinct values -> mean of the two middles, not the upper one
+    val hist = Seq(
+      (1L, 0, 1f, 1L), (1L, 0, 2f, 1L), (1L, 0, 3f, 1L), (1L, 0, 9f, 1L),
+      (2L, 0, 1f, 2L), (2L, 0, 5f, 2L), // even via counts: 1,1,5,5 -> 3
+      (3L, 0, 1f, 1L), (3L, 0, 2f, 1L), (3L, 0, 7f, 1L) // odd -> 2
+    ).toDF("poly_id", "band", "value", "cnt")
+    val m = ZonalStats.stats(hist).select("poly_id", "median")
+      .as[(Long, Double)].collect().toMap
+    assert(m(1L) == 2.5, s"even-n median: ${m(1L)}")
+    assert(m(2L) == 3.0, s"even-n (counts) median: ${m(2L)}")
+    assert(m(3L) == 2.0, s"odd-n median: ${m(3L)}")
+  }
 }
 
 class SpatialJoinSpec extends AnyFunSuite {
