@@ -328,33 +328,40 @@ object RasterOps {
   }
 
   /** clip_raster (raster.py:1932-2047): crop tiles to the polygon bbox
-    * and nodata-fill pixels outside the polygon (cutline mask). */
+    * and nodata-fill pixels outside the polygon (cutline mask). The
+    * polygon's one-part cell index ([[PolyLayer.byCell]]) is broadcast;
+    * each (tile, cell) row keeps only the in-polygon pixels it owns
+    * under the Tiler's ownership rule ([[PolyLayer.tileHits]], as
+    * [[rasterize]]), so a tile that spans several cells keeps each pixel
+    * in exactly one of its rows. */
   def clipRaster(tiles: Dataset[TileRow], poly: PolyRow, cellRes: Int)
                 (implicit spark: SparkSession): Dataset[TileRow] = {
     import spark.implicits._
-    val packed = Geom.PackedPoly(poly.rings)
-    val bb = packed.box
-    val cells = GridIndex.coverPolygon(packed, cellRes)
-    val packedB = spark.sparkContext.broadcast(packed)
+    val byCell = PolyLayer.byCell(Array(PolyLayer.Part(poly.poly_id, poly.part, poly.cls,
+      Geom.PackedPoly(poly.rings))), cellRes)
+    val cells = byCell.keySet.toArray
+    val index = spark.sparkContext.broadcast(byCell)
     tiles
       // Column predicate, NOT a typed lambda: isin stays visible to
       // Catalyst so a parquet-backed tile table prunes row groups /
       // partitions on cell_id instead of decoding everything
       .where(col("cell_id").isin(cells: _*))
       .map { t =>
-        val out = t.pixels.clone()
-        val pp = packedB.value
-        var r = 0
-        while (r < t.th) {
-          val cy = t.y_max - (r + 0.5) * t.px
-          var c = 0
-          while (c < t.tw) {
-            val cx = t.x_min + (c + 0.5) * t.px
-            if (cx < bb.x0 || cx > bb.x1 || cy < bb.y0 || cy > bb.y1 ||
-              !pp.contains(cx, cy)) out(r * t.tw + c) = t.nodata
-            c += 1
-          }
-          r += 1
+        val out = Array.fill(t.pixels.length)(t.nodata)
+        PolyLayer.tileHits(index.value, t.cell_id, t.x_min, t.y_max, t.px, t.tw, t.th).foreach {
+          case (p, win) =>
+            var r = win.rowLo
+            while (r <= win.rowHi) {
+              val cy = t.y_max - (r + 0.5) * t.px
+              var c = win.colLo
+              while (c <= win.colHi) {
+                val i = r * t.tw + c
+                if (win.fullInside || p.poly.contains(t.x_min + (c + 0.5) * t.px, cy))
+                  out(i) = t.pixels(i)
+                c += 1
+              }
+              r += 1
+            }
         }
         t.copy(pixels = out)
       }

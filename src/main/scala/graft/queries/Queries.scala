@@ -411,7 +411,7 @@ object Queries {
     * Independence note: engine and oracle deliberately share this
     * interval+blend SHAPE (the np.interp contract), so this pair alone
     * could not catch a shared misreading — the independent third
-    * implementation is Round5FixSpec's LITERAL np.interp replay
+    * implementation is RasterOpsSpec's LITERAL np.interp replay
     * (searchsorted + index arithmetic, no intervals), which pins the
     * semantics outside the oracle contract. */
   def qHistMatch(spark: SparkSession, dir: String): DataFrame = {

@@ -92,10 +92,6 @@ object EmbedOps {
       s"bandBits must be in [1, 63], got $bandBits (64 would mask to 0 " +
         "and funnel every vector into one bucket)")
     require(planes % bandBits == 0)
-    val nBands = planes / bandBits
-    val mask = (1L << bandBits) - 1
-    def bandAt(s: Column, b: Int): Column =
-      shiftrightunsigned(s, b * bandBits).bitwiseAND(lit(mask))
     // Null-signature vectors (a null element — no usable direction) are
     // dropped by the band join itself: a NULL sig yields NULL band
     // hashes, and NULL equi-join keys never match, so they can neither
@@ -105,27 +101,11 @@ object EmbedOps {
     // planes x dims lsh_signature loop a second time per row.
     val sig = corpus.select(col("vec_id"),
       lshSignature(col("embedding"), planes).as("sig"))
-    val banded = sig.select(col("vec_id"), col("sig"),
-      posexplode(array((0 until nBands).map(b => bandAt(col("sig"), b)): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
     // id-only candidate pairs, deduped across bands BEFORE any vector
     // work — a pair colliding in all 4 bands verifies once, not 4 times,
-    // and the band join shuffles 16-byte id+sig rows, never embeddings.
-    // The cross-band dedup is a pure COLUMN-MATH filter: both signatures
-    // ride the row, so keep a pair only at its FIRST agreeing band ("no
-    // earlier band agrees" is closed-form over the same band extraction)
-    // — the pair set is identical to the distinct() exchange this
-    // replaced, without shuffling the candidate relation at all.
-    val firstAgree = (0 until nBands).foldRight(lit(-1)) { (b, rest) =>
-      when(bandAt(col("sig1"), b) === bandAt(col("sig2"), b), lit(b)).otherwise(rest)
-    }
-    val cand = banded.select(col("band"), col("bh"), col("vec_id").as("v1"),
-        col("sig").as("sig1"))
-      .join(banded.select(col("band"), col("bh"), col("vec_id").as("v2"),
-        col("sig").as("sig2")), Seq("band", "bh"))
-      .where(col("v1") < col("v2"))
-      .where(col("band") === firstAgree)
-      .select("v1", "v2")
+    // and the band join shuffles 16-byte id+sig rows, never embeddings
+    val cand = TextOps.bitBandPairs(sig, "vec_id", "sig", Seq.fill(planes / bandBits)(bandBits))
+      .select(col("d1").as("v1"), col("d2").as("v2"))
     // embeddings + precomputed norms join back once per distinct pair
     val withNorm = corpus.select(col("vec_id"), col("embedding"),
       norm(col("embedding")).as("nrm"))

@@ -207,8 +207,11 @@ object TextOps {
     // 512-byte signature 16x per side) — and a pair colliding in k bands
     // dedupes to ONE row before the signatures join back, so the
     // 64-element agreement scan runs once per pair, not once per shared
-    // band (the lshCosinePairs shape; the sig aggregate's exchange is
-    // computed once and reused across all three consumers).
+    // band (the sig aggregate's exchange is computed once and reused
+    // across all three consumers). Not `bitBandPairs`: its first-agreeing-
+    // band filter needs the signature on every band row, and a minhash
+    // signature is the numHashes-long array kept off them, so pairs
+    // dedupe with distinct().
     // native band fold + agreement count (BandKeysExpr / SigAgreeExpr):
     // the interpreted transform+aggregate+slice fold ran a lambda per
     // signature element per DOC, and the zip_with agreement chain a
@@ -288,9 +291,9 @@ object TextOps {
    * construction (no silent under-recall when the caller asks for a wide
    * radius). Candidates verify with bit_count(xor).
    *
-   * Scale: candidate pairs only materialize inside a (chunk, value)
-   * bucket — never a cross join. Wider radii mean narrower chunks and
-   * therefore fuller buckets; maxHamming <= 15 keeps chunks >= 4 bits.
+   * Scale: the chunks are the bands of [[bitBandPairs]]. Wider radii
+   * mean narrower chunks and therefore fuller buckets; maxHamming <= 15
+   * keeps chunks >= 4 bits.
    *
    * `df` must have columns (id, sig); returns (d1, d2, hamming), d1 < d2.
    */
@@ -299,33 +302,9 @@ object TextOps {
     require(maxHamming >= 0 && maxHamming <= 15,
       s"maxHamming must be in [0, 15] (chunks stay >= 4 bits): $maxHamming")
     val nChunks = maxHamming + 1
-    val base = 64 / nChunks
-    val rem = 64 % nChunks
-    val withSig = df.select(col(idCol).as("__id"), col(sigCol).as("__sig"))
-    // chunk i: width base (+1 for the first `rem`), at the cumulative offset
-    def chunkAt(sig: org.apache.spark.sql.Column, i: Int) = {
-      val width = base + (if (i < rem) 1 else 0)
-      val offset = i * base + math.min(i, rem)
-      if (width == 64) sig
-      else shiftrightunsigned(sig, offset).bitwiseAND(lit((1L << width) - 1))
-    }
-    val chunkCols = (0 until nChunks).map(i => chunkAt(col("__sig"), i))
-    val chunked = withSig.select(col("__id"), col("__sig"),
-      posexplode(array(chunkCols: _*)))
-      .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "ch")
-    val a = chunked.select(col("chunk"), col("ch"), col("__id").as("d1"), col("__sig").as("s1"))
-    val b = chunked.select(col("chunk"), col("ch"), col("__id").as("d2"), col("__sig").as("s2"))
-    // A pair colliding in k chunks would reach the result k times; the
-    // dedup is a pure COLUMN-MATH filter — keep the row only at the pair's
-    // FIRST agreeing chunk (both signatures ride the row, so "no earlier
-    // chunk agrees" is closed-form) — instead of the groupBy(d1, d2)
-    // exchange this replaced. Row set and hamming values are identical
-    // (hamming is a function of the pair, so min(hamming) == hamming).
-    val firstAgree = (0 until nChunks).foldRight(lit(-1)) { (i, rest) =>
-      when(chunkAt(col("s1"), i) === chunkAt(col("s2"), i), lit(i)).otherwise(rest)
-    }
-    a.join(b, Seq("chunk", "ch")).where(col("d1") < col("d2"))
-      .where(col("chunk") === firstAgree)
+    // chunk i: width 64 / nChunks, +1 for the first 64 % nChunks chunks
+    val widths = (0 until nChunks).map(i => 64 / nChunks + (if (i < 64 % nChunks) 1 else 0))
+    bitBandPairs(df, idCol, sigCol, widths)
       .select(col("d1"), col("d2"),
         bit_count(col("s1").bitwiseXOR(col("s2"))).as("hamming"))
       // coalesce(.., false) instead of a bare <=: the bare predicate is
@@ -333,9 +312,45 @@ object TextOps {
       // and pushes isnotnull(<sigCol expr>) below each side's projection
       // — re-running the full signature expression (simhash64's text
       // walk) a SECOND time per row as a filter. Rows here always carry
-      // non-null signatures (they survived the non-null chunk-key join),
+      // non-null signatures (they survived the non-null band-key join),
       // so the value is identical; only the inference is blocked.
       .where(coalesce(col("hamming") <= maxHamming, lit(false)))
+  }
+
+  /**
+   * Bit-band candidate pairs over a 64-bit signature column, the one
+   * blocking join of [[hammingPairs]] and `EmbedOps.lshCosinePairs`: the
+   * signature splits into consecutive bit fields of `widths` (low bits
+   * first), each row explodes into its (band, field value) keys, and the
+   * self-join on (band, key) keeps d1 < d2. Returns (d1, d2, s1, s2),
+   * the pair's ids and signatures, for pairs agreeing on >= 1 field.
+   *
+   * Scale: candidate pairs only materialize inside a (band, key) bucket —
+   * never a cross join — and the join shuffles 16-byte id+sig rows.
+   * A pair colliding in k bands would reach the result k times; it is
+   * kept only at its FIRST agreeing band, a pure COLUMN-MATH filter
+   * (both signatures ride the row, so "no earlier band agrees" is
+   * closed-form), instead of a distinct() exchange over the candidates.
+   */
+  private[text] def bitBandPairs(df: DataFrame, idCol: String, sigCol: String,
+                                 widths: Seq[Int]): DataFrame = {
+    val offsets = widths.scanLeft(0)(_ + _)
+    def field(sig: Column, i: Int): Column =
+      if (widths(i) == 64) sig
+      else shiftrightunsigned(sig, offsets(i)).bitwiseAND(lit((1L << widths(i)) - 1))
+    val banded = df.select(col(idCol).as("__id"), col(sigCol).as("__sig"))
+      .select(col("__id"), col("__sig"),
+        posexplode(array(widths.indices.map(field(col("__sig"), _)): _*)))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
+    val firstAgree = widths.indices.foldRight(lit(-1)) { (i, rest) =>
+      when(field(col("s1"), i) === field(col("s2"), i), lit(i)).otherwise(rest)
+    }
+    banded.select(col("band"), col("key"), col("__id").as("d1"), col("__sig").as("s1"))
+      .join(banded.select(col("band"), col("key"), col("__id").as("d2"),
+        col("__sig").as("s2")), Seq("band", "key"))
+      .where(col("d1") < col("d2"))
+      .where(col("band") === firstAgree)
+      .select("d1", "d2", "s1", "s2")
   }
 
   /** SimHash near-dup candidates at FULL recall for the requested radius:

@@ -12,6 +12,7 @@ import graft.operators.{Augment, ChipRow, ConvNet, Tiler}
 class AugmentSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
+  import TileFixtures.img1
 
   /** 3x2 asymmetric chip: band values = y*10 + x, mask = 100 + y*10+x. */
   private def tiny: ChipRow = {
@@ -290,5 +291,29 @@ class AugmentSpec extends AnyFunSuite {
     val b = ConvTrain.iouChipsSmp(spark.createDataset(Seq(chip))(
       Encoders.product[graft.operators.ChipRow]), bnet)
     assert(math.abs(b - (1 + 1e-7) / (3 + 1e-7)) < 1e-18, s"binary smp IoU $b")
+  }
+
+  test("cv2normTiles: NaN nodata survives the rng==0 branch and the stats") {
+    import graft.operators.{Augment, Tiler}
+    // constant valid value + NaN fill: stats must ignore the NaNs and
+    // the rescale must NOT rewrite them to 0f (NaN == NaN is false, so
+    // a plain equality nodata guard is dead for the tiler's default
+    // sentinel)
+    val px = Array.tabulate(16)(i => if (i % 3 == 0) Float.NaN else 7f)
+    val img = img1("n", px, 4, 4)
+    val tiles = Tiler.tiles(Seq(img).toDS, tileSize = 2, cellRes = 4)
+    val out = Augment.cv2normTiles(tiles).collect()
+    assert(out.nonEmpty)
+    for (t <- out; i <- t.pixels.indices) {
+      val v = t.pixels(i)
+      assert(v.isNaN || v == 0f, s"got $v") // valid 7f -> 0f (rng==0)
+    }
+    assert(out.exists(_.pixels.exists(_.isNaN)), "NaN nodata was rewritten")
+    // finite-sentinel behavior unchanged: sentinel preserved, ramp to [0,1]
+    val img2 = img1("m", Array(-9999f, 0f, 5f, 10f), 2, 2)
+    val t2 = Tiler.tiles(Seq(img2).toDS, tileSize = 2, cellRes = 4,
+      nodata = -9999f)
+    val o2 = Augment.cv2normTiles(t2).collect().head
+    assert(o2.pixels.sorted.sameElements(Array(-9999f, 0f, 0.5f, 1f)))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import graft.core.PixelCodec
 import graft.gen.Synth
 import graft.operators.{ImageOps, Tiler, RasterOps, VectorOps}
@@ -10,6 +11,7 @@ import graft.core.Geom
 class ImageOpsSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
+  import TileFixtures.img1
 
   lazy val imgs = Synth.images(6, seed = 77L, bands = 2)
   lazy val ds = spark.createDataset(imgs.toSeq)
@@ -294,5 +296,247 @@ class ImageOpsSpec extends AnyFunSuite {
     assert(r1 == r7, s"tie order must not depend on partitioning: $r1 vs $r7")
     // 'b' sorts after every 'a'
     assert(r1(4) == 5L)
+  }
+
+  test("localThreshold niblack/sauvola: step edge behaves per formula") {
+    val w = 32; val h = 16
+    val b = Array.tabulate(w * h)(i => if (i % w < 16) 0f else 100f)
+    val img = ImageRow("t", PixelCodec.encode(PixelCodec.FmtRawLe, w, h, Array(b)),
+      w, h, PixelCodec.FmtRawLe, "c", 0L, 0.0, h.toDouble, 1.0)
+    def mask(algo: String) = {
+      val out = ImageOps.localThreshold(Seq(img).toDS, algo, window = 7, k = 0.2)
+        .collect().head
+      PixelCodec.decode(out.bytes, out.fmt, w, h).bands(0)
+    }
+    val nb = mask("niblack")
+    // deep in flat regions t == m == v -> 0; just right of the edge the
+    // local mean dips below 100 -> 1
+    assert(nb(8 * w + 2) == 0f && nb(8 * w + 29) == 0f)
+    assert(nb(8 * w + 17) == 1f)
+    val sv = mask("sauvola")
+    // flat bright: t = 100*(1 + 0.2*(0/128 - 1)) = 80 < 100 -> 1; flat dark 0
+    assert(sv(8 * w + 29) == 1f && sv(8 * w + 2) == 0f)
+  }
+
+  test("localThreshold: a NaN pixel corrupts ONLY its window, not all down-right") {
+    val w = 32; val h = 16
+    val base = Array.tabulate(w * h)(i => if (i % w < 16) 0f else 100f)
+    val img0 = ImageRow("t", PixelCodec.encode(PixelCodec.FmtRawLe, w, h,
+      Array(base)), w, h, PixelCodec.FmtRawLe, "c", 0L, 0.0, h.toDouble, 1.0)
+    val bNaN = base.updated(2 * w + 2, Float.NaN) // NaN at (2, 2)
+    val imgN = img0.copy(bytes =
+      PixelCodec.encode(PixelCodec.FmtRawLe, w, h, Array(bNaN)))
+    def mask(img: ImageRow) = {
+      val out = ImageOps.localThreshold(Seq(img).toDS, "sauvola",
+        window = 7, k = 0.2).collect().head
+      PixelCodec.decode(out.bytes, out.fmt, w, h).bands(0)
+    }
+    val clean = mask(img0); val dirty = mask(imgN)
+    // inside the NaN's 7x7 window: threshold NaN -> v > NaN false -> 0
+    assert(dirty(2 * w + 2) == 0f && dirty(4 * w + 4) == 0f)
+    // OUTSIDE the window the outputs must be identical — the prefix-sum
+    // poisoning bug zeroed everything down-right of the NaN
+    var i = 0
+    while (i < w * h) {
+      val x = i % w; val y = i / w
+      if (math.abs(x - 2) > 3 || math.abs(y - 2) > 3)
+        assert(dirty(i) == clean(i), s"($x, $y) diverged outside the window")
+      i += 1
+    }
+  }
+
+  test("demProcess: plane gradient gives known slope/aspect; hillshade bounded") {
+    val w = 16; val h = 16
+    val b = Array.tabulate(w * h)(i => (2 * (i % w)).toFloat) // dz/dx = 2
+    val img = ImageRow("d", PixelCodec.encode(PixelCodec.FmtRawLe, w, h, Array(b)),
+      w, h, PixelCodec.FmtRawLe, "c", 0L, 0.0, h.toDouble, 1.0)
+    def band(prop: String) = {
+      val out = ImageOps.demProcess(Seq(img).toDS, prop).collect().head
+      PixelCodec.decode(out.bytes, out.fmt, w, h).bands(0)
+    }
+    val sl = band("slope"); val as = band("aspect"); val hs = band("hillshade")
+    val i = 8 * w + 8 // interior
+    assert(math.abs(sl(i) - math.toDegrees(math.atan(2.0))) < 1e-4)
+    assert(math.abs(as(i) - 270.0) < 1e-4, s"aspect ${as(i)}") // faces -x = west
+    assert(hs.forall(v => v >= 0f && v <= 255f))
+    // flat image: slope 0, aspect flagged, hillshade constant
+    val flat = ImageRow("f", PixelCodec.encode(PixelCodec.FmtRawLe, 8, 8,
+      Array(Array.fill(64)(5f))), 8, 8, PixelCodec.FmtRawLe, "c", 0L, 0.0, 8.0, 1.0)
+    val fsl = ImageOps.demProcess(Seq(flat).toDS, "slope").collect().head
+    assert(PixelCodec.decode(fsl.bytes, fsl.fmt, 8, 8).bands(0).forall(_ == 0f))
+    val fas = ImageOps.demProcess(Seq(flat).toDS, "aspect").collect().head
+    assert(PixelCodec.decode(fas.bytes, fas.fmt, 8, 8).bands(0).forall(_ == -9999f))
+  }
+
+  test("demProcess TRI/TPI/Roughness: plane gradient closed forms") {
+    val w = 16; val h = 16
+    val img = img1("d", Array.tabulate(w * h)(i => (2 * (i % w)).toFloat), w, h)
+    def band(prop: String) = {
+      val out = ImageOps.demProcess(Seq(img).toDS, prop).collect().head
+      PixelCodec.decode(out.bytes, out.fmt, w, h).bands(0)
+    }
+    val i = 8 * w + 8 // interior: left col -2 x3, right col +2 x3, own col 0 x2
+    assert(math.abs(band("TRI")(i) - math.sqrt(24.0)) < 1e-6)
+    assert(band("TPI")(i) == 0f) // symmetric neighbors: mean == center
+    assert(band("Roughness")(i) == 4f) // 3x3 spans x-1..x+1 -> 2*(2px)
+    // flat image: all three are zero everywhere (borders clamp)
+    val flat = img1("f", Array.fill(64)(5f), 8, 8)
+    for (p <- Seq("TRI", "TPI", "Roughness")) {
+      val o = ImageOps.demProcess(Seq(flat).toDS, p).collect().head
+      assert(PixelCodec.decode(o.bytes, o.fmt, 8, 8).bands(0).forall(_ == 0f), p)
+    }
+    // corner pixel of the ramp: clamping halves the spread
+    assert(band("Roughness")(0) == 2f)
+  }
+
+  test("colorRelief: end-stop clamps and exact mid-segment interpolation") {
+    val ramp = Seq((0.0, 0.0, 0.0, 240.0), (48.0, 48.0, 192.0, 96.0),
+      (96.0, 240.0, 48.0, 0.0))
+    val img = img1("c", Array(0f, 24f, 48f, 72f, 96f, 120f), 6, 1)
+    val out = ImageOps.colorRelief(Seq(img).toDS, ramp).collect().head
+    val dec = PixelCodec.decode(out.bytes, out.fmt, 6, 1)
+    def rgb(i: Int) = (dec.bands(0)(i), dec.bands(1)(i), dec.bands(2)(i))
+    assert(rgb(0) == ((0f, 0f, 240f)))       // first stop
+    assert(rgb(1) == ((24f, 96f, 168f)))     // mid of segment 1
+    assert(rgb(2) == ((48f, 192f, 96f)))     // exact stop 2
+    assert(rgb(3) == ((144f, 120f, 48f)))    // mid of segment 2
+    assert(rgb(4) == ((240f, 48f, 0f)))      // last stop
+    assert(rgb(5) == ((240f, 48f, 0f)))      // above ramp clamps
+  }
+
+  test("coreWindow tripwire: under-claimed halo fails fast") {
+    import graft.operators.Tiler
+    // tiler ran with halo 8 (interior window 32+16=48 wide); a consumer
+    // claiming halo 4 must trip, not silently shift every coordinate
+    val e = intercept[IllegalArgumentException] {
+      Tiler.coreWindow(1, 1, 48, 48, 32, 4)
+    }
+    assert(e.getMessage.contains("larger halo"))
+    // truthful halo passes, including image-edge-clipped windows
+    assert(Tiler.coreWindow(1, 1, 48, 48, 32, 8) == ((8, 8, 32, 32)))
+    assert(Tiler.coreWindow(0, 0, 40, 40, 32, 8) == ((0, 0, 32, 32)))
+  }
+
+  test("clipToPolygons: concave clip conserves area; outside drops") {
+    val subject = PolyRow(1L, 0,
+      Array(Array(Pt(0, 0), Pt(100, 0), Pt(100, 100), Pt(0, 100))), 1, "s", 0.0)
+    // concave L fully inside the subject
+    val ell = PolyRow(7L, 0, Array(Array(
+      Pt(10, 10), Pt(60, 10), Pt(60, 30), Pt(30, 30), Pt(30, 70), Pt(10, 70))),
+      1, "ell", 0.0)
+    val far = PolyRow(8L, 0,
+      Array(Array(Pt(500, 500), Pt(600, 500), Pt(600, 600), Pt(500, 600))), 1, "f", 0.0)
+    val out = VectorOps.clipToPolygons(Seq(subject).toDS, Seq(ell, far)).collect()
+    assert(out.forall(_.poly_id == 1L * 100000 + 7L))
+    val ellArea = Geom.area(ell.rings.map(_.map(q => (q.x, q.y))))
+    val clippedArea = out.map(p => Geom.area(p.rings.map(_.map(q => (q.x, q.y))))).sum
+    assert(math.abs(clippedArea - ellArea) < 1e-9, s"$clippedArea vs $ellArea")
+    // partial overlap: clip half in, half out
+    val half = PolyRow(9L, 0,
+      Array(Array(Pt(80, 10), Pt(120, 10), Pt(120, 50), Pt(80, 50))), 1, "h", 0.0)
+    val out2 = VectorOps.clipToPolygons(Seq(subject).toDS, Seq(half)).collect()
+    val a2 = out2.map(p => Geom.area(p.rings.map(_.map(q => (q.x, q.y))))).sum
+    assert(math.abs(a2 - 20.0 * 40.0) < 1e-9, s"partial clip area $a2")
+  }
+
+  test("clipToPolygons on rect layers == clipToRects (independent paths)") {
+    val polys = graft.gen.Synth.polygons(nExtra = 4)
+    val rects = Seq(
+      (0L, Geom.BBox(-100.0, -100.0, 50.0, 50.0)),
+      (1L, Geom.BBox(800.0, 800.0, 1000.0, 1000.0)))
+    val viaRects = VectorOps.clipToRects(spark.createDataset(polys.toSeq), rects)
+      .collect().groupBy(_.poly_id).map { case (id, ps) =>
+        id -> ps.map(p => Geom.area(p.rings.map(_.map(q => (q.x, q.y))))).sum
+      }
+    val rectPolys = rects.map { case (id, b) =>
+      PolyRow(id, 0, Array(Array(Pt(b.x0, b.y0), Pt(b.x1, b.y0),
+        Pt(b.x1, b.y1), Pt(b.x0, b.y1))), 1, s"r$id", 0.0)
+    }
+    val viaJts = VectorOps.clipToPolygons(spark.createDataset(polys.toSeq), rectPolys)
+      .collect().groupBy(_.poly_id).map { case (id, ps) =>
+        id -> ps.map(p => Geom.area(p.rings.map(_.map(q => (q.x, q.y))))).sum
+      }
+    assert(viaJts.keySet == viaRects.keySet)
+    viaJts.foreach { case (id, a) =>
+      assert(math.abs(a - viaRects(id)) < 1e-9, s"poly $id: $a vs ${viaRects(id)}")
+    }
+  }
+
+  test("buffer: dilated square area between polygonized and exact bounds") {
+    val sq = PolyRow(1L, 0,
+      Array(Array(Pt(0, 0), Pt(10, 0), Pt(10, 10), Pt(0, 10))), 1, "sq", 0.0)
+    val d = 2.0
+    val buf = VectorOps.buffer(Seq(sq).toDS, d).collect()
+    val a = buf.map(p => Geom.area(p.rings.map(_.map(q => (q.x, q.y))))).sum
+    val exact = 100.0 + 4 * 10 * d + math.Pi * d * d
+    assert(a > exact - 0.5 && a <= exact + 1e-6, s"buffered area $a vs $exact")
+    // erosion
+    val shrunk = VectorOps.buffer(Seq(sq).toDS, -2.0).collect()
+    val a2 = shrunk.map(p => Geom.area(p.rings.map(_.map(q => (q.x, q.y))))).sum
+    assert(math.abs(a2 - 36.0) < 1e-9, s"eroded area $a2")
+  }
+
+  test("writeIdField: dense 1..n ids in order, no global single-partition sort") {
+    val df = spark.range(1000).select((col("id") * 37 % 1000).as("k"))
+    val out = VectorOps.writeIdField(df.repartition(8), "k").collect()
+    assert(out.length == 1000)
+    val byK = out.sortBy(_.getLong(0)).map(_.getLong(1))
+    assert(byK.sameElements(1L to 1000L), "fid must follow k order densely")
+  }
+
+  test("sqlFilter runs user SQL over the layer view; filterLabel leaves non-matches NULL") {
+    val layer = Seq((1L, "a", 10), (2L, "b", 300), (3L, "a", 500))
+      .toDF("id", "grp", "m")
+    val filtered = VectorOps.sqlFilter(layer,
+      "SELECT id, m FROM layer WHERE grp = 'a' AND m > 100").collect()
+    assert(filtered.map(r => (r.getLong(0), r.getInt(1))).toSeq == Seq((3L, 500)))
+    val labeled = VectorOps.filterLabel(layer, col("m") >= 300, "lab", "keep")
+      .select("id", "lab").collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(labeled == Set((1L, null), (2L, "keep"), (3L, "keep")),
+      "matching rows labeled, non-matching rows NULL (OGR leaves the field unset)")
+  }
+
+  test("sqlFilter: view dropped after the call; returned plan stays live") {
+    import graft.operators.VectorOps
+    val a = Seq((1, "x"), (2, "y")).toDF("id", "v")
+    val b = Seq((9, "z")).toDF("id", "v")
+    val fa = VectorOps.sqlFilter(a, "SELECT id FROM layer WHERE id > 1")
+    // the view must not leak into the session catalog...
+    assert(!spark.catalog.tableExists("layer"))
+    // ...and a second call over a DIFFERENT layer must not disturb the
+    // first call's already-analyzed (view-inlined) plan
+    val fb = VectorOps.sqlFilter(b, "SELECT id FROM layer")
+    assert(fa.collect().map(_.getInt(0)).toSeq == Seq(2))
+    assert(fb.collect().map(_.getInt(0)).toSeq == Seq(9))
+  }
+
+  test("toGeoJson escapes names and emits null for non-finite measures") {
+    import graft.operators.VectorOps
+    import graft.{PolyRow, Pt}
+    val p = PolyRow(1, 0,
+      Array(Array(Pt(0, 0), Pt(1, 0), Pt(1, 1), Pt(0, 1))),
+      2, "O\"Brien\\tract", Double.NaN)
+    val js = VectorOps.toGeoJson(Seq(p).toDS).select("geojson")
+      .collect().head.getString(0)
+    // must parse as strict JSON: quotes/backslashes escaped, NaN -> null
+    assert(js.contains("O\\\"Brien\\\\tract"), js)
+    assert(js.contains("\"measure\":null"), js)
+    assert(!js.contains("NaN"), js)
+  }
+
+  test("clipToRects: a rect entirely inside a hole clips to nothing") {
+    import graft.operators.VectorOps
+    import graft.{PolyRow, Pt}
+    import graft.core.Geom
+    val holed = PolyRow(1, 0, Array(
+      Array(Pt(0, 0), Pt(100, 0), Pt(100, 100), Pt(0, 100)),
+      Array(Pt(40, 40), Pt(60, 40), Pt(60, 60), Pt(40, 60))), 1, "n", 0.0)
+    val out = VectorOps.clipToRects(Seq(holed).toDS,
+      Seq((7L, Geom.BBox(45, 45, 55, 55)))).collect()
+    assert(out.isEmpty, s"phantom zero-area feature emitted: ${out.length}")
+    // a rect straddling the hole boundary still clips normally
+    val out2 = VectorOps.clipToRects(Seq(holed).toDS,
+      Seq((8L, Geom.BBox(30, 30, 50, 50)))).collect()
+    assert(out2.length == 1)
   }
 }

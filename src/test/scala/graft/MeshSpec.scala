@@ -7,6 +7,8 @@ import graft.operators.{Mesh, Tiler}
 
 class MeshSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SparkTestSession.spark
+  import spark.implicits._
+  import TileFixtures.img1
 
   lazy val meshImgs = spark.createDataset(GridImages.meshImages(6).toSeq)(
     org.apache.spark.sql.Encoders.product[ImageRow])
@@ -193,5 +195,16 @@ class MeshSpec extends AnyFunSuite {
     def msg(x: Throwable): String =
       Option(x).map(t => t.getMessage + msg(t.getCause)).getOrElse("")
     assert(msg(e).contains("non-adjacent duplicate tile"))
+  }
+
+  test("maskOrientation drops all-dark images instead of emitting NaN") {
+    import graft.operators.{Mesh, Tiler}
+    val dark = img1("dk", Array.fill(64)(0f), 8, 8)
+    val lit0 = img1("lt", Array.tabulate(64)(i => if (i % 8 == i / 8) 5f else 0f), 8, 8)
+    val tiles = Tiler.tiles(Seq(dark, lit0).toDS, 8, Tiler.resForCellSize(8.0))
+    val rows = Mesh.maskOrientation(tiles).collect()
+    assert(rows.map(_.getString(0)).toSet == Set("lt"),
+      "all-dark image must be dropped, not NaN")
+    assert(!rows.exists(r => r.getDouble(1).isNaN))
   }
 }

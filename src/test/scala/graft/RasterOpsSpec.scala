@@ -20,6 +20,11 @@ object TileFixtures {
     9, 10, 11, 12,
     13, 14, 15, 16)
   val p1: Array[Float] = p0.map(_ * 2)
+
+  /** Single-band raw image at the origin with 1-unit pixels. */
+  def img1(id: String, b: Array[Float], w: Int, h: Int): ImageRow =
+    ImageRow(id, PixelCodec.encode(PixelCodec.FmtRawLe, w, h, Array(b)),
+      w, h, PixelCodec.FmtRawLe, "c", 0L, 0.0, h.toDouble, 1.0)
 }
 
 class RasterOpsSpec extends AnyFunSuite {
@@ -159,6 +164,31 @@ class RasterOpsSpec extends AnyFunSuite {
     assert(byClass == naive(Seq(tri)))
   }
 
+  test("clipRaster: a tile spanning two cells keeps each pixel once (ownership rule)") {
+    // the rasterize fixture above: 3 (tile, cell) rows over an 80x48 image
+    val (x0, y0) = (16.0, 240.0)
+    val img = GridImages.imageAt(0, 1, xMin0 = x0, yMax0 = y0)
+    val cellRes = Tiler.resForCellSize(64.0)
+    val tiles = Tiler.tiles(Seq(img).toDS, 64, cellRes)
+    val all = PolyRow(1, 0, Array(Array(Pt(0, 150), Pt(200, 150), Pt(200, 300), Pt(0, 300))),
+      1, "all", 0.0)
+    val tri = PolyRow(2, 0, Array(Array(Pt(20, 195), Pt(95, 200), Pt(50, 238))), 2, "tri", 0.0)
+    for (p <- Seq(all, tri)) {
+      // (world x, world y, value) of every kept pixel, duplicates included
+      val kept = RasterOps.clipRaster(tiles, p, cellRes).collect().toSeq.flatMap { t =>
+        for (r <- 0 until t.th; c <- 0 until t.tw if !t.pixels(r * t.tw + c).isNaN)
+          yield (t.x_min + c + 0.5, t.y_max - r - 0.5, t.pixels(r * t.tw + c))
+      }.sorted
+      val want = (for (y <- 0 until GridImages.H; x <- 0 until GridImages.W
+                       if Geom.pointInPolygon(x0 + x + 0.5, y0 - y - 0.5,
+                         p.rings.map(_.map(q => (q.x, q.y)))))
+        yield (x0 + x + 0.5, y0 - y - 0.5, GridImages.value(0, 0, x, y))).sorted
+      val (nKept, nWant) = (kept.length, want.length)
+      assert(nKept == nWant, s"${p.name}: $nKept pixels kept, want $nWant")
+      assert(kept == want, p.name)
+    }
+  }
+
   test("applyLut remaps listed values, passes others; otsu splits bimodal") {
     val lutted = RasterOps.applyLut(Seq(tile(p0)).toDS.toDF(), Map(1f -> 100f, 16f -> 0f))
       .select("pixels").as[Array[Float]].head()
@@ -168,11 +198,85 @@ class RasterOpsSpec extends AnyFunSuite {
     val thr = RasterOps.otsuThreshold(Seq(bimodal).toDS.toDF())
     assert(thr >= 11 && thr < 200, s"thr=$thr")
   }
+
+  test("temporalComposite median/percentile == naive np.nanpercentile") {
+    val res = Tiler.resForCellSize(16.0)
+    val cell = GridIndex.cellId(2.0, 2.0, res)
+    def tile(t: Int, vals: Array[Float]) =
+      (TileRow("i", cell, 0, 0, 0.0, 2.0, 1.0, 0, vals, 2, 2, Float.NaN), t)
+    val series = Seq(
+      tile(0, Array(1f, 10f, Float.NaN, 4f)),
+      tile(1, Array(5f, 20f, Float.NaN, 2f)),
+      tile(2, Array(3f, 30f, 7f, 8f)),
+      tile(3, Array(9f, 40f, 5f, 6f)))
+    val df2 = series.toDF("tile", "t").select(col("tile.*"), col("t"))
+    def got(stat: String, q: Double = 50.0) =
+      RasterOps.temporalComposite(df2, stat, q)
+        .select("pixels").as[Array[Float]].head()
+    def naive(q: Double): Array[Float] = Array.tabulate(4) { i =>
+      val vs = series.map(_._1.pixels(i)).filterNot(_.isNaN).sorted
+      val pos = (vs.length - 1) * q / 100.0
+      val lo = pos.toInt; val frac = pos - lo
+      (vs(lo) + (vs(math.min(lo + 1, vs.length - 1)) - vs(lo)) * frac).toFloat
+    }
+    assert(got("median").sameElements(naive(50.0)))
+    assert(got("percentile", 25.0).sameElements(naive(25.0)))
+    assert(got("percentile", 90.0).sameElements(naive(90.0)))
+  }
+
+  test("otsu: quantized path stays near the exact threshold") {
+    val res = Tiler.resForCellSize(16.0)
+    val cell = GridIndex.cellId(2.0, 2.0, res)
+    // bimodal float values (distinct per pixel -> forces the binned path)
+    val vals = Array.tabulate(256)(i =>
+      if (i < 128) 10f + i * 0.001f else 200f + i * 0.001f)
+    val t = TileRow("i", cell, 0, 0, 0.0, 16.0, 1.0, 0, vals, 16, 16, Float.NaN)
+    val thr = RasterOps.otsuThreshold(Seq(t).toDF(), levels = 64)
+    assert(thr > 10.3 && thr < 200.0, s"threshold $thr must split the modes")
+  }
+
+  test("qHistMatch equals a literal np.interp quantile-map replay") {
+    // Third implementation: the DuckDB oracle shares the relational
+    // interval-join shape with the query, so a shared-logic slip would
+    // pass both — this replay computes np.interp(s_quantiles,
+    // t_quantiles, t_values) directly (left clamp + bracketing linear
+    // blend), with the same left-to-right cumulative sums, the same
+    // mult-before-div blend association and the same HALF_UP round, so
+    // the comparison is exact double equality.
+    import graft.queries.Queries
+    val dir = "/root/testdata/sf0.001"
+    val src = spark.read.parquet(s"$dir/lineitem.parquet")
+      .selectExpr("cast(l_quantity as int) as v").collect().map(_.getInt(0))
+    val tmpl = spark.read.parquet(s"$dir/orders.parquet")
+      .selectExpr("cast(floor(o_totalprice / 10000.0) as int) as tb")
+      .collect().map(_.getInt(0))
+    def cdf(xs: Array[Int]): (Array[Int], Array[Double]) = {
+      val g = xs.groupBy(identity).toArray.sortBy(_._1)
+      val cum = g.map(_._2.length.toLong).scanLeft(0L)(_ + _).tail
+      (g.map(_._1), cum.map(c => c * 1.0 / xs.length))
+    }
+    val (sv, sq) = cdf(src)
+    val (tv, tq) = cdf(tmpl)
+    def interp(x: Double): Double =
+      if (x <= tq(0)) tv(0).toDouble
+      else {
+        val j = tq.indexWhere(x <= _) // >= 1; both CDFs end at exactly 1.0
+        tv(j - 1) + (tv(j) - tv(j - 1)) * (x - tq(j - 1)) / (tq(j) - tq(j - 1))
+      }
+    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+    val expected = sv.zip(sq).map { case (v, q) => (v, r6(interp(q))) }.toMap
+    val got = Queries.qHistMatch(spark, dir).collect()
+      .map(r => (r.getInt(0), r.getDouble(1))).toMap
+    assert(got.keySet == expected.keySet)
+    for ((v, m) <- expected) assert(got(v) == m, s"v=$v")
+  }
 }
 
 class PolygonizeSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
+  import TileFixtures.img1
 
   def image(w: Int, h: Int, px: Array[Float]): ImageRow = {
     val enc = PixelCodec.encode(PixelCodec.FmtRawLe, w, h, Array(px))
@@ -213,6 +317,17 @@ class PolygonizeSpec extends AnyFunSuite {
     }
     // 4 background corner regions
     assert(regions.count(_.value == 0f) == 4)
+  }
+
+  test("polygonize: NaN nodata pixels form no region") {
+    import graft.operators.Polygonize
+    val w = 8; val h = 8
+    // left half value 64, right half NaN
+    val b = Array.tabulate(w * h)(i => if (i % w < 4) 64f else Float.NaN)
+    val img = img1("pz", b, w, h)
+    val rs = Polygonize.polygonize(Seq(img).toDS, quant = 32f).collect()
+    assert(rs.length == 1, s"NaN pixels must form no region: ${rs.length}")
+    assert(rs.head.pixel_count == 32L)
   }
 }
 
@@ -393,5 +508,25 @@ class TrainingSpec extends AnyFunSuite {
         assert(v == (if (worldX < 16) 1f else 2f), s"x=$worldX")
       }
     }
+  }
+
+  test("classifyObjects: single-class model, null features, tie break") {
+    import graft.operators.Training
+    val m1 = Training.CentroidModel(Array(7), Array(Array(1.0, 2.0)))
+    val df = Seq((1L, 0.0, 0.0), (2L, 9.0, 9.0)).toDF("id", "f0", "f1")
+    // one-class model: everything gets the only label (least() edge case)
+    assert(Training.classifyObjects(df, m1, Seq("f0", "f1"))
+      .select("pred").as[Int].collect().forall(_ == 7))
+    // equidistant centroids: smallest label wins (predict() convention)
+    val m2 = Training.CentroidModel(Array(3, 1),
+      Array(Array(2.0, 0.0), Array(0.0, 2.0)))
+    val tie = Seq((1L, 1.0, 1.0)).toDF("id", "f0", "f1")
+    assert(Training.classifyObjects(tie, m2, Seq("f0", "f1"))
+      .select("pred").as[Int].head() == 1)
+    // null feature -> null prediction, never silently the last label
+    val withNull = Seq((1L, Some(1.0), None: Option[Double]))
+      .toDF("id", "f0", "f1")
+    assert(Training.classifyObjects(withNull, m2, Seq("f0", "f1"))
+      .select("pred").collect().head.isNullAt(0))
   }
 }

@@ -246,6 +246,20 @@ class TextOpsSpec extends AnyFunSuite {
     val row0 = r1.find(_.getLong(0) == 0L).get
     assert(row0.getInt(2) == base.split(" ").length)
   }
+
+  test("hammingPairs fuzz: full recall on 64 random signatures, radii 1..15") {
+    val rng = new graft.gen.Synth.Rng(123L)
+    val sigs = (0 until 64).map(i => (i.toLong, rng.nextLong()))
+    val df = sigs.toDF("id", "sig")
+    val naive = (for {
+      (a, sa) <- sigs; (b, sb) <- sigs if a < b
+    } yield (a, b, java.lang.Long.bitCount(sa ^ sb))).toSet
+    for (radius <- Seq(1, 5, 11, 15)) {
+      val got = graft.text.TextOps.hammingPairs(df, "id", "sig", radius)
+        .as[(Long, Long, Int)].collect().toSet
+      assert(got == naive.filter(_._3 <= radius), s"radius $radius")
+    }
+  }
 }
 
 class EmbedOpsSpec extends AnyFunSuite {

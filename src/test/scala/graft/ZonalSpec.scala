@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Geom, GridIndex, PixelCodec}
 import graft.gen.Synth
-import graft.operators.{Tiler, ZonalStats, SpatialJoin, Knn}
+import graft.operators.{Tiler, ZonalStats, SpatialJoin}
 
 /** The session every spec shares, built by the mains' own builder. */
 object SparkTestSession {
@@ -208,87 +208,5 @@ class SpatialJoinSpec extends AnyFunSuite {
       s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
     // every feature must actually match something, incl. the polar band
     assert(Seq(0L, 1L, 2L, 3L).forall(id => want.exists(_._2 == id)))
-  }
-}
-
-class KnnSpec extends AnyFunSuite {
-  implicit lazy val spark: SparkSession = SparkTestSession.spark
-  import spark.implicits._
-
-  test("knnJoin == naive exact kNN incl. sparse-query fallback and ties") {
-    val pts = Synth.points(3000, seed = 11L)
-    val queries = Synth.points(40, seed = 99L)
-      .map(p => (p.pt_id, p.x, p.y))
-    val ptDf = spark.createDataset(pts.toSeq).toDF()
-    val qDf = queries.toDF("q_id", "x", "y")
-
-    val k = 5
-    val got = Knn.knnJoin(qDf, ptDf, k = k, res = 12, r1 = 2)
-      .select("q_id", "pt_id", "rn").as[(Long, Long, Int)]
-      .collect().groupBy(_._1)
-      .map { case (q, rows) => q -> rows.sortBy(_._3).map(_._2).toSeq }
-
-    val want = queries.map { case (qid, qx, qy) =>
-      qid -> pts.map(p => (p.pt_id, (p.x - qx) * (p.x - qx) + (p.y - qy) * (p.y - qy)))
-        .sortBy { case (id, d2) => (d2, id) }.take(k).map(_._1).toSeq
-    }.toMap
-
-    assert(got.keySet == want.keySet)
-    for ((q, ids) <- want) assert(got(q) == ids, s"query $q")
-  }
-
-  test("knnJoinGreatCircle == naive haversine kNN (high latitude + antimeridian)") {
-    // identical formula via the same JVM libm -> bit-identical doubles
-    def hav(qlat: Double, qlng: Double, plat: Double, plng: Double): Double = {
-      val dphi = math.toRadians(plat - qlat) / 2
-      val dlmb = math.toRadians(plng - qlng) / 2
-      val a = math.sin(dphi) * math.sin(dphi) +
-        math.cos(math.toRadians(qlat)) * math.cos(math.toRadians(plat)) *
-          math.sin(dlmb) * math.sin(dlmb)
-      2 * 6371000.0 * math.asin(math.min(1.0, math.sqrt(a)))
-    }
-    val pts = (0 until 800).map { i =>
-      (i.toLong, (i * 37 % 178) - 89 + (i % 7) * 0.071, (i * 97 % 358) - 179 + (i % 11) * 0.043)
-    }
-    val queries = (0 until 60).map { i =>
-      (1000L + i, (i * 53 % 178) - 89 + 0.37, (i * 41 % 358) - 179 + 0.21)
-    } ++ Seq((2000L, 89.5, 10.0), // polar: guard collapses -> brute path
-      (2001L, -89.2, -170.0), (2002L, 0.0, 179.9)) // antimeridian wrap
-    val ptDf = pts.toDF("pt_id", "lat", "lng")
-    val qDf = queries.toDF("q_id", "lat", "lng")
-    val got = Knn.knnJoinGreatCircle(qDf, ptDf, k = 5, cellDeg = 15.0, r1 = 2)
-      .select("q_id", "pt_id", "rn").as[(Long, Long, Int)]
-      .collect().groupBy(_._1)
-      .map { case (q, rows) => q -> rows.sortBy(_._3).map(_._2).toSeq }
-    val want = queries.map { case (qid, qlat, qlng) =>
-      qid -> pts.map(p => (p._1, hav(qlat, qlng, p._2, p._3)))
-        .sortBy { case (id, d) => (d, id) }.take(5).map(_._1).toSeq
-    }.toMap
-    assert(got.keySet == want.keySet)
-    for ((q, ids) <- want) assert(got(q) == ids, s"query $q")
-  }
-
-  test("null-id queries are dropped, not merged into one brute window") {
-    val pts = Synth.points(300, seed = 5L)
-    val ptDf = spark.createDataset(pts.toSeq).toDF()
-    val qDf = Seq((Some(1L), 50.0, 50.0), (None, 10.0, 10.0), (None, 90.0, 90.0))
-      .toDF("q_id", "x", "y")
-    val got = Knn.knnJoin(qDf, ptDf, k = 3, res = 12, r1 = 2)
-      .select("q_id").as[Option[Long]].collect()
-    assert(got.forall(_.contains(1L)), s"null-id rows leaked: ${got.toSeq}")
-    assert(got.length == 3)
-  }
-
-  test("brute-force fallback path triggers for isolated queries") {
-    // single far-away query with tiny r1: guarantee must fail -> fallback
-    val pts = Synth.points(500, seed = 3L)
-    val ptDf = spark.createDataset(pts.toSeq).toDF()
-    val qDf = Seq((0L, 90000.0, 90000.0)).toDF("q_id", "x", "y")
-    val got = Knn.knnJoin(qDf, ptDf, k = 3, res = 14, r1 = 1)
-      .select("pt_id").as[Long].collect().toSet
-    val want = pts.map(p => (p.pt_id,
-      (p.x - 90000.0) * (p.x - 90000.0) + (p.y - 90000.0) * (p.y - 90000.0)))
-      .sortBy { case (id, d2) => (d2, id) }.take(3).map(_._1).toSet
-    assert(got == want)
   }
 }
