@@ -9,6 +9,9 @@ package graft
  * (x_min, y_max, px) — the reference's geotransform is exactly
  * (x_min, px, 0, y_max, 0, -px)
  * (/root/reference/geospatial_learn/raster.py:260-266).
+ * Every row's `phash` is `PixelCodec.phash64` of its DECODED band 0:
+ * rows are built only by `operators.ImageOps.fromArray`, which hashes
+ * what a reader decodes.
  *
  * `TileRow` is what the `flatMap` tiler emits (FIXTURES.md §2): one row
  * per (image, tile, overlapping grid cell, band). Pixel payloads stay

@@ -191,8 +191,11 @@ object PixelCodec {
   /**
    * 64-bit perceptual hash (average hash): box-downsample band 0 to 8x8,
    * threshold at the mean. Bit i (row-major) set iff cell mean > image
-   * mean. Stable under the qnt8 lossy round-trip by construction (the
-   * quantization error is far below typical cell-vs-mean contrast).
+   * mean. NOT stable under the qnt8 round-trip in general: a cell mean
+   * within quantization error of the image mean flips its bit (seen on
+   * box-resized noise images). So an image row's phash is taken over the
+   * pixels a reader DECODES — the rule `graft.operators.ImageOps.fromArray`,
+   * the one builder of image rows, applies.
    */
   def phash64(w: Int, h: Int, band0: Array[Float]): Long = {
     val cells = new Array[Double](64)

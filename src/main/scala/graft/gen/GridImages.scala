@@ -2,6 +2,7 @@ package graft.gen
 
 import graft.ImageRow
 import graft.core.PixelCodec
+import graft.operators.ImageOps
 
 /**
  * Deterministic image table whose band-b pixel at (x, y) of image i is the
@@ -33,18 +34,24 @@ object GridImages {
   def xMin(i: Long): Double = (i % 8) * 256.0
   def yMax(i: Long): Double = (i / 8) * 256.0
 
-  def imageAt(i: Long, bands: Int,
-              xMin0: Double = Double.NaN, yMax0: Double = Double.NaN): ImageRow = {
-    val bs = Array.tabulate(bands)(b =>
-      Array.tabulate(W * H)(p => value(i, b, p % W, p / W)))
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, bs)
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"grid image $i",
-      PixelCodec.phash64(W, H, bs(0)),
-      x_min = if (xMin0.isNaN) xMin(i) else xMin0,
-      y_max = if (yMax0.isNaN) yMax(i) else yMax0,
-      px = 1.0)
+  /** Fixture image `g<i>`: `bands` bands whose pixel (x, y) of band b is
+    * `v(b, x, y)`, `w`×`h` with px = 1 at the standard placement unless
+    * `x0`/`y1` are given, encoded raw-le for even i and rle for odd i (or
+    * raw-le for every i with `rawLe`) — both lossless, so decoded pixels
+    * equal the formula. Built by `ImageOps.fromArray`, like every row. */
+  private def fixture(i: Long, caption: String, bands: Int = 1,
+                      rawLe: Boolean = false, w: Int = W, h: Int = H,
+                      x0: Double = Double.NaN, y1: Double = Double.NaN)
+                     (v: (Int, Int, Int) => Float): ImageRow = {
+    val bs = Array.tabulate(bands)(b => Array.tabulate(w * h)(p => v(b, p % w, p / w)))
+    val fmt = if (rawLe || i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
+    ImageOps.fromArray(f"g$i%03d", bs, w, h, if (x0.isNaN) xMin(i) else x0,
+      if (y1.isNaN) yMax(i) else y1, 1.0, fmt, caption)
   }
+
+  def imageAt(i: Long, bands: Int,
+              xMin0: Double = Double.NaN, yMax0: Double = Double.NaN): ImageRow =
+    fixture(i, s"grid image $i", bands, x0 = xMin0, y1 = yMax0)(value(i, _, _, _))
 
   def images(n: Int, bands: Int = 2): IndexedSeq[ImageRow] =
     (0 until n).map(i => imageAt(i.toLong, bands))
@@ -55,14 +62,8 @@ object GridImages {
     * stripes and the oracle counts them in closed form. */
   def stripeValue(i: Long, y: Int): Float = (((i * 5 + y / 6) % 7) * 13).toFloat
 
-  def striped(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H)(p => stripeValue(i.toLong, p / W))
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"striped $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
-  }
+  def striped(n: Int): IndexedSeq[ImageRow] =
+    (0 until n).map(i => fixture(i, s"striped $i")((_, _, y) => stripeValue(i, y)))
 
   // ---- step-edge fixture (Canny / Hough / RANSAC family) ----
   // Piecewise-constant vertical strips + one horizontal value change
@@ -91,14 +92,8 @@ object GridImages {
     v.toFloat
   }
 
-  def edgeImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H)(p => edgeValue(i.toLong, p % W, p / W))
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"edge fixture $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
-  }
+  def edgeImages(n: Int): IndexedSeq[ImageRow] =
+    (0 until n).map(i => fixture(i, s"edge fixture $i")((_, x, y) => edgeValue(i, x, y)))
 
   /** DuckDB CTE of the closed-form Canny edge set for `edgeImages(n)`
     * at sigma=0, lowT=20, highT=40: (i, image_id, x, y). */
@@ -131,14 +126,8 @@ object GridImages {
   def lineValue(i: Long, x: Int, y: Int): Float =
     if (x % 16 == lineA(i) || y % 12 == lineB(i)) 90f else 10f
 
-  def lineImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H)(p => lineValue(i.toLong, p % W, p / W))
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"line fixture $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
-  }
+  def lineImages(n: Int): IndexedSeq[ImageRow] =
+    (0 until n).map(i => fixture(i, s"line fixture $i")((_, x, y) => lineValue(i, x, y)))
 
   // ---- RANSAC fixture ----
   // Two 40-px strips per image; each strip plants a dominant VERTICAL
@@ -161,13 +150,7 @@ object GridImages {
   }
 
   def ransacImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H)(p =>
-      if (ransacBright(i.toLong, p % W, p / W)) 90f else 10f)
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"ransac fixture $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
+    fixture(i, s"ransac fixture $i")((_, x, y) => if (ransacBright(i, x, y)) 90f else 10f)
   }
 
   /** DuckDB CTE of the fixture's bright pixels: (i, s, x, y, ord). */
@@ -209,13 +192,7 @@ object GridImages {
 
   def iterRanImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
     val bright = iterRanPts(i.toLong).toSet
-    val b0 = Array.tabulate(W * H)(p =>
-      if (bright((p % W, p / W))) 90f else 10f)
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"iter_ransac fixture $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
+    fixture(i, s"iter_ransac fixture $i")((_, x, y) => if (bright((x, y))) 90f else 10f)
   }
 
   /** DuckDB CTE of the iter_ransac fixture points: (i, x, y). */
@@ -272,12 +249,7 @@ object GridImages {
   }
 
   def snakeImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H)(p => snakeValue(i.toLong, p % W, p / W))
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"snake fixture $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
+    fixture(i, s"snake fixture $i")((_, x, y) => snakeValue(i, x, y))
   }
 
   /** World-coordinate polygon burning EXACTLY the pixel rect
@@ -360,12 +332,7 @@ object GridImages {
   }
 
   def threshImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H)(p => threshValue(i.toLong, p % W, p / W))
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"thresh fixture $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
+    fixture(i, s"thresh fixture $i")((_, x, y) => threshValue(i, x, y))
   }
 
   // ---- meshgrid fixture ----
@@ -388,14 +355,8 @@ object GridImages {
     if (x >= x0 && x <= x1 && y >= y0 && y <= y1) 90f else 0f
   }
 
-  def meshImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H)(p => meshValue(i.toLong, p % W, p / W))
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"mesh fixture $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
-  }
+  def meshImages(n: Int): IndexedSeq[ImageRow] =
+    (0 until n).map(i => fixture(i, s"mesh fixture $i")((_, x, y) => meshValue(i, x, y)))
 
   /** DuckDB CTE of the mesh rect corners (pixel indices): (i, m_x0,
     * m_y0, m_x1, m_y1). */
@@ -414,11 +375,8 @@ object GridImages {
     * unpadded and a DuckDB oracle can replay the DFT as explicit trig
     * sums). */
   def pcImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(16 * 16)(p => value(i.toLong, 0, p % 16, p / 16))
-    val enc = PixelCodec.encode(PixelCodec.FmtRawLe, 16, 16, Array(b0))
-    ImageRow(f"g$i%03d", enc, 16, 16, PixelCodec.FmtRawLe, s"pc fixture $i",
-      PixelCodec.phash64(16, 16, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
+    fixture(i, s"pc fixture $i", rawLe = true, w = 16, h = 16)(
+      (_, x, y) => value(i, 0, x, y))
   }
 
   /** Standard grid images with ISOLATED nodata holes burned at the
@@ -429,15 +387,8 @@ object GridImages {
   def holeAt(x: Int, y: Int): Boolean = x % 7 == 3 && y % 5 == 2 && y <= 42
 
   def holeImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H) { p =>
-      val x = p % W; val y = p / W
-      if (holeAt(x, y)) HoleNodata else value(i.toLong, 0, x, y)
-    }
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"hole fixture $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
+    fixture(i, s"hole fixture $i")(
+      (_, x, y) => if (holeAt(x, y)) HoleNodata else value(i, 0, x, y))
   }
 
   /** Binary blob mask of the snake fixture (1 inside blob1/blob2, else
@@ -445,12 +396,8 @@ object GridImages {
     * configuration the background skeleton never touches the blobs, so
     * the final components are exactly the two rectangles. */
   def snakeSegImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H)(p =>
-      if (snakeValue(i.toLong, p % W, p / W) > 10f) 1f else 0f)
-    val enc = PixelCodec.encode(PixelCodec.FmtRawLe, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, PixelCodec.FmtRawLe, s"snake seg $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
+    fixture(i, s"snake seg $i", rawLe = true)(
+      (_, x, y) => if (snakeValue(i, x, y) > 10f) 1f else 0f)
   }
 
   /** Snake blobs on a ZERO background (toposeg's nodata regime: the
@@ -459,13 +406,7 @@ object GridImages {
     * ACWE step sheds the ring exactly — so toposeg's final components
     * are the two blob rectangles, closed-form. */
   def snakeZeroImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H)(p =>
-      if (snakeValue(i.toLong, p % W, p / W) > 10f) 90f else 0f)
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"snake zero $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
+    fixture(i, s"snake zero $i")((_, x, y) => if (snakeValue(i, x, y) > 10f) 90f else 0f)
   }
 
   // ---- do_ac fixture ----
@@ -502,14 +443,8 @@ object GridImages {
     else 90f
   }
 
-  def doAcImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H)(p => doAcValue(i.toLong, p % W, p / W))
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"do_ac fixture $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
-  }
+  def doAcImages(n: Int): IndexedSeq[ImageRow] =
+    (0 until n).map(i => fixture(i, s"do_ac fixture $i")((_, x, y) => doAcValue(i, x, y)))
 
   // ---- ragmerge fixture ----
   // Three regions: A (label 1, top-left of the T-split), B (2,
@@ -533,21 +468,11 @@ object GridImages {
     else 22f
 
   def ragSegImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H)(p => ragSegValue(i.toLong, p % W, p / W))
-    val enc = PixelCodec.encode(PixelCodec.FmtRawLe, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, PixelCodec.FmtRawLe, s"rag seg $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
+    fixture(i, s"rag seg $i", rawLe = true)((_, x, y) => ragSegValue(i, x, y))
   }
 
-  def ragImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H)(p => ragImgValue(i.toLong, p % W, p / W))
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"rag raster $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
-  }
+  def ragImages(n: Int): IndexedSeq[ImageRow] =
+    (0 until n).map(i => fixture(i, s"rag raster $i")((_, x, y) => ragImgValue(i, x, y)))
 
   // ---- training-mask fixture (CNN chip collection / maskblock) ----
   // Zero background with labeled patches: pixel (x, y) of mask i is
@@ -559,14 +484,8 @@ object GridImages {
     if ((x / 16 + y / 12 + i) % 4 == 0) ((x / 8 + y / 6 + i) % 3 + 1).toFloat
     else 0f
 
-  def maskImages(n: Int): IndexedSeq[ImageRow] = (0 until n).map { i =>
-    val b0 = Array.tabulate(W * H)(p => maskValue(i.toLong, p % W, p / W))
-    val fmt = if (i % 2 == 0) PixelCodec.FmtRawLe else PixelCodec.FmtRle
-    val enc = PixelCodec.encode(fmt, W, H, Array(b0))
-    ImageRow(f"g$i%03d", enc, W, H, fmt, s"mask $i",
-      PixelCodec.phash64(W, H, b0), x_min = xMin(i.toLong),
-      y_max = yMax(i.toLong), px = 1.0)
-  }
+  def maskImages(n: Int): IndexedSeq[ImageRow] =
+    (0 until n).map(i => fixture(i, s"mask $i")((_, x, y) => maskValue(i, x, y)))
 
   /** DuckDB CTE of the mask-fixture pixels: (i, x, y, mv). */
   def maskSql(n: Int): String =

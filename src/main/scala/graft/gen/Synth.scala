@@ -2,6 +2,7 @@ package graft.gen
 
 import graft.{ImageRow, PolyRow, PointRow, Pt}
 import graft.core.PixelCodec
+import graft.operators.ImageOps
 
 /**
  * Deterministic synthetic data per FIXTURES.md — seeded, no wall clock,
@@ -101,11 +102,8 @@ object Synth {
         (c._1 + rng.nextDouble() * 64 - 32, c._2 + rng.nextDouble() * 64 - 32)
       } else (rng.nextDouble() * 8000 - 4000, rng.nextDouble() * 8000 - 4000)
     val bs = Array.tabulate(bands)(b => pixels(seed ^ i, w, h, b))
-    val enc = PixelCodec.encode(fmt, w, h, bs)
-    val dec = PixelCodec.decode(enc, fmt, w, h) // phash over DECODED pixels
-    ImageRow(f"img$i%08d", enc, w, h, fmt, caption(i, rng),
-      PixelCodec.phash64(w, h, dec.bands(0)),
-      x_min = math.floor(ox), y_max = math.floor(oy) + h, px = 1.0)
+    ImageOps.fromArray(f"img$i%08d", bs, w, h, xMin = math.floor(ox),
+      yMax = math.floor(oy) + h, px = 1.0, fmt = fmt, caption = caption(i, rng))
   }
 
   /** Polygon layer per FIXTURES.md §3: boxes, rotated convex, concave "L",

@@ -153,8 +153,7 @@ object Augment {
       val rng = mx - mn
       val out = dec.bands.map(_.map(v =>
         if (rng == 0) 0f else ((v - mn) / rng).toFloat))
-      img.copy(bytes = PixelCodec.encode(img.fmt, img.w, img.h, out),
-        phash = PixelCodec.phash64(img.w, img.h, out(0)))
+      ImageOps.withPixels(img)(out)
     }
   }
 

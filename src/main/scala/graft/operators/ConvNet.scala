@@ -278,8 +278,7 @@ object ConvNet {
         val dec = PixelCodec.decode(img.bytes, img.fmt, img.w, img.h)
         val planes = forward(dec.bands, img.w, img.h, n, scratch)
         val cls = Array.tabulate(img.w * img.h)(i => decide(planes, i, n.classes))
-        img.copy(bytes = PixelCodec.encode(img.fmt, img.w, img.h, Array(cls)),
-          phash = PixelCodec.phash64(img.w, img.h, cls))
+        ImageOps.withPixels(img)(Array(cls))
       }
     }
   }
@@ -570,8 +569,7 @@ object ConvNet {
         }
         cy += blockSize
       }
-      img.copy(bytes = PixelCodec.encode(img.fmt, img.w, img.h, Array(out)),
-        phash = PixelCodec.phash64(img.w, img.h, out))
+      ImageOps.withPixels(img)(Array(out))
     }
   }
 }

@@ -54,37 +54,44 @@ object Edge {
     val src = new Array[Double](v.length)
     var i = 0
     while (i < v.length) { src(i) = v(i).toDouble; i += 1 }
-    if (sigma <= 0) return src
-    val k = gaussianKernel(sigma)
-    val r = (k.length - 1) / 2
-    val tmp = new Array[Double](v.length)
+    if (sigma <= 0) src
+    else { val k = gaussianKernel(sigma); sepFilter(src, w, h, k, k) }
+  }
+
+  /** Separable correlation with replicate ('nearest') padding: `kx` along
+    * x, then `ky` along y, taps in kernel order. The one copy shared by
+    * [[gaussianBlur]] and `Snakes.inverseGaussianGradient`. */
+  private[operators] def sepFilter(img: Array[Double], w: Int, h: Int,
+                                   kx: Array[Double], ky: Array[Double]): Array[Double] = {
+    val rx = kx.length / 2; val ry = ky.length / 2
+    val tmp = new Array[Double](img.length)
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
         var acc = 0.0
-        var j = -r
-        while (j <= r) {
-          val xx = math.max(0, math.min(w - 1, x + j))
-          acc += k(j + r) * src(y * w + xx)
-          j += 1
+        var k = -rx
+        while (k <= rx) {
+          val xx = math.min(w - 1, math.max(0, x + k))
+          acc += img(y * w + xx) * kx(k + rx)
+          k += 1
         }
         tmp(y * w + x) = acc
         x += 1
       }
       y += 1
     }
-    val out = new Array[Double](v.length)
+    val out = new Array[Double](img.length)
     y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
         var acc = 0.0
-        var j = -r
-        while (j <= r) {
-          val yy = math.max(0, math.min(h - 1, y + j))
-          acc += k(j + r) * tmp(yy * w + x)
-          j += 1
+        var k = -ry
+        while (k <= ry) {
+          val yy = math.min(h - 1, math.max(0, y + k))
+          acc += tmp(yy * w + x) * ky(k + ry)
+          k += 1
         }
         out(y * w + x) = acc
         x += 1
@@ -94,14 +101,11 @@ object Edge {
     out
   }
 
-  /** Stages 1-3 of the pure kernel (blur, Sobel, NMS, double
-    * threshold): the per-pixel class map — 0 = not-edge, 1 = weak,
-    * 2 = strong. Shared verbatim by [[cannyMask]] (whole-image BFS
-    * hysteresis) and [[cannyTiles]] (distributed hysteresis), so the
-    * two paths cannot drift. */
-  def cannyCls(v: Array[Float], w: Int, h: Int, sigma: Double,
-               lowT: Double, highT: Double): Array[Byte] = {
-    val img = gaussianBlur(v, w, h, sigma)
+  /** 3x3 Sobel with replicate padding over a double image: (gx, gy,
+    * magnitude sqrt(gx^2 + gy^2)). Canny's gradient stage and `Rag`'s
+    * boundary edge map. */
+  private[operators] def sobel(img: Array[Double], w: Int, h: Int)
+      : (Array[Double], Array[Double], Array[Double]) = {
     @inline def at(x: Int, y: Int): Double =
       img(math.max(0, math.min(h - 1, y)) * w + math.max(0, math.min(w - 1, x)))
     val gx = new Array[Double](w * h)
@@ -121,12 +125,23 @@ object Edge {
       }
       y += 1
     }
+    (gx, gy, mag)
+  }
+
+  /** Stages 1-3 of the pure kernel (blur, Sobel, NMS, double
+    * threshold): the per-pixel class map — 0 = not-edge, 1 = weak,
+    * 2 = strong. Shared verbatim by [[cannyMask]] (whole-image BFS
+    * hysteresis) and [[cannyTiles]] (distributed hysteresis), so the
+    * two paths cannot drift. */
+  def cannyCls(v: Array[Float], w: Int, h: Int, sigma: Double,
+               lowT: Double, highT: Double): Array[Byte] = {
+    val (gx, gy, mag) = sobel(gaussianBlur(v, w, h, sigma), w, h)
     // non-max suppression; out-of-image neighbors are 0
     @inline def m(x: Int, y: Int): Double =
       if (x < 0 || x >= w || y < 0 || y >= h) 0.0 else mag(y * w + x)
     // 0 = not-edge, 1 = weak, 2 = strong
     val cls = new Array[Byte](w * h)
-    y = 0
+    var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
@@ -356,8 +371,7 @@ object Edge {
 
   /** Canny over the image table: one binary-mask image row out per input
     * row (band `band` drives the edges; caption and geo carried through;
-    * phash recomputed on the mask so the lossy invariant stays
-    * checkable). */
+    * the rle mask row is built by `ImageOps.withPixels`). */
   def canny(images: Dataset[ImageRow], lowT: Double, highT: Double,
             sigma: Double = 0.0, band: Int = 0)
            (implicit spark: SparkSession): Dataset[ImageRow] = {
@@ -365,9 +379,7 @@ object Edge {
     images.map { img =>
       val dec = PixelCodec.decode(img.bytes, img.fmt, img.w, img.h)
       val mask = cannyMask(dec.bands(band), img.w, img.h, sigma, lowT, highT)
-      val enc = PixelCodec.encode(PixelCodec.FmtRle, img.w, img.h, Array(mask))
-      img.copy(bytes = enc, fmt = PixelCodec.FmtRle,
-        phash = PixelCodec.phash64(img.w, img.h, mask))
+      ImageOps.withPixels(img)(Array(mask), fmt = PixelCodec.FmtRle)
     }
   }
 }

@@ -17,17 +17,13 @@ import graft.core.PixelCodec
 object ImageOps {
 
   /** batch_translate (raster.py:473-523): format transcode — decode with
-    * the row's fmt, re-encode with `toFmt`, phash recomputed from the
-    * DECODED pixels so the lossy invariant stays checkable. */
+    * the row's fmt, re-encode with `toFmt` ([[fromArray]]'s phash rule). */
   def transcode(images: Dataset[ImageRow], toFmt: String)
                (implicit spark: SparkSession): Dataset[ImageRow] = {
     import spark.implicits._
     images.map { img =>
-      val dec = PixelCodec.decode(img.bytes, img.fmt, img.w, img.h)
-      val enc = PixelCodec.encode(toFmt, img.w, img.h, dec.bands)
-      val dec2 = PixelCodec.decode(enc, toFmt, img.w, img.h)
-      img.copy(bytes = enc, fmt = toFmt,
-        phash = PixelCodec.phash64(img.w, img.h, dec2.bands(0)))
+      withPixels(img)(PixelCodec.decode(img.bytes, img.fmt, img.w, img.h).bands,
+        fmt = toFmt)
     }
   }
 
@@ -65,21 +61,37 @@ object ImageOps {
             r += 1
           }
         }
-        val enc = PixelCodec.encode(fmt, w, h, bands)
-        ImageRow(id, enc, w, h, fmt, caption,
-          PixelCodec.phash64(w, h, bands(0)), x0, y1, px)
+        fromArray(id, bands, w, h, x0, y1, px, fmt, caption)
       }
   }
 
   /** bbox2raster (raster.py:209-282): construct an ImageRow from a pixel
-    * array + bbox (geo struct derived from the bbox + pixel size). */
+    * array + bbox (geo struct derived from the bbox + pixel size).
+    *
+    * The one place pixels become an image row: every operator, generator
+    * and fixture builds its rows here (or through [[withPixels]]). `bands`
+    * are encoded with `fmt`, and `phash` is the average hash of band 0 AS
+    * A READER DECODES IT — `bands(0)` itself for the lossless fmts (no
+    * decode), band 0 of the decoded bytes for a lossy one. So every
+    * row's phash is the hash of its decoded band 0, which
+    * `ImageDedup.dedupExact` (groups by phash) and `phashPairs` rely on. */
   def fromArray(imageId: String, bands: Array[Array[Float]], w: Int, h: Int,
                 xMin: Double, yMax: Double, px: Double, fmt: String,
                 caption: String = ""): ImageRow = {
     val enc = PixelCodec.encode(fmt, w, h, bands)
+    val band0 =
+      if (PixelCodec.isLossy(fmt)) PixelCodec.decode(enc, fmt, w, h).bands(0)
+      else bands(0)
     ImageRow(imageId, enc, w, h, fmt, caption,
-      PixelCodec.phash64(w, h, bands(0)), xMin, yMax, px)
+      PixelCodec.phash64(w, h, band0), xMin, yMax, px)
   }
+
+  /** `img` with new pixels (and size, pixel size or fmt), built by
+    * [[fromArray]]; id, caption and origin carried over. */
+  private[graft] def withPixels(img: ImageRow)(bands: Array[Array[Float]],
+      w: Int = img.w, h: Int = img.h, px: Double = img.px,
+      fmt: String = img.fmt): ImageRow =
+    fromArray(img.image_id, bands, w, h, img.x_min, img.y_max, px, fmt, img.caption)
 
   /** write_vrt (raster.py:424-442): a virtual mosaic is just a union-all
     * scan — multiple parquet paths read as one relation. */
@@ -148,9 +160,7 @@ object ImageOps {
           (s / n).toFloat
         }
       }
-      val enc = PixelCodec.encode(img.fmt, nw, nh, out)
-      img.copy(bytes = enc, w = nw, h = nh,
-        phash = PixelCodec.phash64(nw, nh, out(0)), px = img.px * factor)
+      withPixels(img)(out, nw, nh, px = img.px * factor)
     }
   }
 
@@ -227,8 +237,7 @@ object ImageOps {
         }
         filled
       }
-      img.copy(bytes = PixelCodec.encode(img.fmt, img.w, img.h, out),
-        phash = PixelCodec.phash64(img.w, img.h, out(0)))
+      withPixels(img)(out)
     }
   }
 
@@ -270,9 +279,7 @@ object ImageOps {
           }
         }
       }
-      val enc = PixelCodec.encode(img.fmt, nw, nh, out)
-      img.copy(bytes = enc, w = nw, h = nh,
-        phash = PixelCodec.phash64(nw, nh, out(0)), px = newPx)
+      withPixels(img)(out, nw, nh, px = newPx)
     }
   }
 
@@ -287,7 +294,7 @@ object ImageOps {
     images.map { img =>
       val dec = PixelCodec.decode(img.bytes, img.fmt, img.w, img.h)
       val kept = dec.bands.zipWithIndex.collect { case (b, i) if i % stride == 0 => b }
-      img.copy(bytes = PixelCodec.encode(img.fmt, img.w, img.h, kept))
+      withPixels(img)(kept)
     }
   }
 
@@ -332,8 +339,7 @@ object ImageOps {
           s.toFloat
         }
       }
-      img.copy(bytes = PixelCodec.encode(img.fmt, img.w, img.h, out),
-        phash = PixelCodec.phash64(img.w, img.h, out(0)))
+      withPixels(img)(out)
     }
   }
 
@@ -429,8 +435,7 @@ object ImageOps {
           if (b(i) > t) 1f else 0f
         }
       }
-      img.copy(bytes = PixelCodec.encode(img.fmt, w, h, out),
-        phash = PixelCodec.phash64(w, h, out(0)))
+      withPixels(img)(out)
     }
   }
 
@@ -543,8 +548,7 @@ object ImageOps {
           (hi - lo).toFloat
         }
       }
-      img.copy(bytes = PixelCodec.encode(img.fmt, w, h, Array(out)),
-        phash = PixelCodec.phash64(w, h, out))
+      withPixels(img)(Array(out))
     }
   }
 
@@ -565,8 +569,7 @@ object ImageOps {
     images.map { img =>
       val dec = PixelCodec.decode(img.bytes, img.fmt, img.w, img.h)
       val (r, g, bl) = applyRamp(dec.bands(0), img.w * img.h, stops)
-      img.copy(bytes = PixelCodec.encode(img.fmt, img.w, img.h, Array(r, g, bl)),
-        phash = PixelCodec.phash64(img.w, img.h, r))
+      withPixels(img)(Array(r, g, bl))
     }
   }
 
@@ -643,8 +646,7 @@ object ImageOps {
         (e.toDouble, colors(k)._1, colors(k)._2, colors(k)._3)
       }
       val (r, g, bl) = applyRamp(b, img.w * img.h, stops)
-      img.copy(bytes = PixelCodec.encode(img.fmt, img.w, img.h, Array(r, g, bl)),
-        phash = PixelCodec.phash64(img.w, img.h, r))
+      withPixels(img)(Array(r, g, bl))
     }
   }
 
@@ -695,8 +697,7 @@ object ImageOps {
       }
       val out = Array.tabulate(nb)(b =>
         Array.tabulate(w * h)(i => (means(b)(i) * ovMean(i)).toFloat))
-      img.copy(bytes = PixelCodec.encode(img.fmt, w, h, out),
-        phash = PixelCodec.phash64(w, h, out(0)))
+      withPixels(img)(out)
     }
   }
 
@@ -738,8 +739,7 @@ object ImageOps {
           case "close"  => pass(pass(b, maxOp = true), maxOp = false)
         }
       }
-      img.copy(bytes = PixelCodec.encode(img.fmt, w, h, out),
-        phash = PixelCodec.phash64(w, h, out(0)))
+      withPixels(img)(out)
     }
   }
 

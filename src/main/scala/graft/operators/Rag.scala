@@ -45,27 +45,6 @@ import graft.core.PixelCodec
  */
 object Rag {
 
-  private def sobelMag(b: Array[Float], w: Int, h: Int): Array[Double] = {
-    val mag = new Array[Double](w * h)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        def at(xx: Int, yy: Int): Double =
-          b(math.min(h - 1, math.max(0, yy)) * w +
-            math.min(w - 1, math.max(0, xx))).toDouble
-        val gx = (at(x + 1, y - 1) + 2 * at(x + 1, y) + at(x + 1, y + 1)) -
-          (at(x - 1, y - 1) + 2 * at(x - 1, y) + at(x - 1, y + 1))
-        val gy = (at(x - 1, y + 1) + 2 * at(x, y + 1) + at(x + 1, y + 1)) -
-          (at(x - 1, y - 1) + 2 * at(x, y - 1) + at(x + 1, y - 1))
-        mag(y * w + x) = math.sqrt(gx * gx + gy * gy)
-        x += 1
-      }
-      y += 1
-    }
-    mag
-  }
-
   /** Distributed RAG rows: (image_id, lo, hi, s, c) aggregated. */
   def buildBoundary(segs: Dataset[ImageRow], images: Dataset[ImageRow],
                     band: Int = 0)
@@ -76,7 +55,7 @@ object Rag {
         require(sg.w == im.w && sg.h == im.h, s"seg/raster shape mismatch ${sg.image_id}")
         val lab = PixelCodec.decode(sg.bytes, sg.fmt, sg.w, sg.h).bands(0)
         val pix = PixelCodec.decode(im.bytes, im.fmt, im.w, im.h).bands(band)
-        val edge = sobelMag(pix, im.w, im.h)
+        val edge = Edge.sobel(pix.map(_.toDouble), im.w, im.h)._3
         val acc = scala.collection.mutable.HashMap.empty[(Long, Long), (Double, Long)]
         def add(p: Int, q: Int): Unit = {
           val a = lab(p).toLong; val b = lab(q).toLong

@@ -315,47 +315,6 @@ object Snakes {
     }
   }
 
-  /** Separable correlation with mode='nearest' along x then y. */
-  private def sepFilter(img: Array[Double], w: Int, h: Int,
-                        kx: Array[Double], ky: Array[Double]): Array[Double] = {
-    val rx = kx.length / 2; val ry = ky.length / 2
-    val tmp = new Array[Double](img.length)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        var acc = 0.0
-        var k = -rx
-        while (k <= rx) {
-          val xx = math.min(w - 1, math.max(0, x + k))
-          acc += img(y * w + xx) * kx(k + rx)
-          k += 1
-        }
-        tmp(y * w + x) = acc
-        x += 1
-      }
-      y += 1
-    }
-    val out = new Array[Double](img.length)
-    y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        var acc = 0.0
-        var k = -ry
-        while (k <= ry) {
-          val yy = math.min(h - 1, math.max(0, y + k))
-          acc += tmp(yy * w + x) * ky(k + ry)
-          k += 1
-        }
-        out(y * w + x) = acc
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
   /** morphsnakes inverse_gaussian_gradient:
     * 1/sqrt(1 + alpha * gaussian_gradient_magnitude(I, sigma)),
     * nearest-edge padding, truncate 4.0. */
@@ -367,8 +326,8 @@ object Snakes {
     // scipy correlates with the kernel as produced (no flip on the
     // symmetric order-0; the antisymmetric order-1 kernel is applied as
     // a correlation, matching gaussian_filter1d's convention)
-    val dx = sepFilter(d, w, h, g1, g0)
-    val dy = sepFilter(d, w, h, g0, g1)
+    val dx = Edge.sepFilter(d, w, h, g1, g0)
+    val dy = Edge.sepFilter(d, w, h, g0, g1)
     Array.tabulate(img.length) { p =>
       (1.0 / math.sqrt(1.0 + alpha * math.sqrt(dx(p) * dx(p) + dy(p) * dy(p)))).toFloat
     }

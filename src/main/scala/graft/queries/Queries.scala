@@ -875,8 +875,7 @@ object Queries {
         val l = lo(i, b); val h = hi(i, b)
         bnd.map(v => math.min(h, math.max(l, v)))
       }
-      im.copy(bytes = graft.core.PixelCodec.encode(im.fmt, im.w, im.h, nb),
-        phash = graft.core.PixelCodec.phash64(im.w, im.h, nb(0)))
+      ImageOps.withPixels(im)(nb)
     }(Encoders.product[ImageRow])
 
   /** The flagship pipeline, oracle-checked end to end: encoded grid
@@ -2125,9 +2124,7 @@ object Queries {
     val dupes = base.map { img =>
       val dec = graft.core.PixelCodec.decode(img.bytes, img.fmt, img.w, img.h)
       val fmt2 = if (img.fmt == "rle") "raw-le" else "rle"
-      img.copy(image_id = img.image_id + "_dup",
-        bytes = graft.core.PixelCodec.encode(fmt2, img.w, img.h, dec.bands), fmt = fmt2,
-        phash = graft.core.PixelCodec.phash64(img.w, img.h, dec.bands(0)))
+      ImageOps.withPixels(img)(dec.bands, fmt = fmt2).copy(image_id = img.image_id + "_dup")
     }
     val all = spark.createDataset((base ++ dupes).toSeq)(Encoders.product[ImageRow])
     ImageDedup.phashPairs(all, maxHamming = 2)
@@ -2167,9 +2164,7 @@ object Queries {
     val dupes = base.take(10).map { img =>
       val dec = graft.core.PixelCodec.decode(img.bytes, img.fmt, img.w, img.h)
       val fmt2 = if (img.fmt == "rle") "raw-le" else "rle"
-      img.copy(image_id = "z" + img.image_id,
-        bytes = graft.core.PixelCodec.encode(fmt2, img.w, img.h, dec.bands), fmt = fmt2,
-        phash = graft.core.PixelCodec.phash64(img.w, img.h, dec.bands(0)))
+      ImageOps.withPixels(img)(dec.bands, fmt = fmt2).copy(image_id = "z" + img.image_id)
     }
     val all = spark.createDataset((base ++ dupes).toSeq)(Encoders.product[ImageRow])
     ImageDedup.dedupExact(all)
@@ -2466,8 +2461,7 @@ object Queries {
         var b = 0
         while (b < 3) { dec.bands(b)(y * im.w + x) = rgb(b); b += 1 }
       }
-      im.copy(bytes = graft.core.PixelCodec.encode(im.fmt, im.w, im.h, dec.bands),
-        phash = graft.core.PixelCodec.phash64(im.w, im.h, dec.bands(0)))
+      ImageOps.withPixels(im)(dec.bands)
     }(Encoders.product[ImageRow])
     val tiles = Tiler.multiTiles(imgs, 64, cellRes)
     // sMax = 220 / vMax = 90 are BINDING on this fixture (raw s reaches

@@ -43,6 +43,20 @@ class ImageDedupSpec extends AnyFunSuite {
     assert(groups.count(_._2 == 1L) == 12) // the untouched originals
   }
 
+  test("dedupExact groups a resized lossy image with its lossless transcode") {
+    import graft.operators.ImageOps
+    // resize re-encodes qnt8; the raw-le transcode of its output decodes
+    // to the same pixels, so both rows must land in one group
+    val r = new scala.util.Random(10)
+    val src = ImageOps.fromArray("q", Array(Array.fill(32 * 32)(r.nextInt(200).toFloat)),
+      32, 32, 0.0, 32.0, 1.0, PixelCodec.FmtQnt8)
+    val resized = ImageOps.resize(spark.createDataset(Seq(src)), 2)
+    val copy = ImageOps.transcode(resized, PixelCodec.FmtRawLe)
+      .map(_.copy(image_id = "q_raw"))
+    val groups = ImageDedup.dedupExact(resized.union(copy)).as[(String, Long)].collect()
+    assert(groups.toSet == Set(("q", 2L)), groups.toSeq)
+  }
+
   test("dedupExact compares every band, not just band 0") {
     // two 2-band images identical in band 0 (same phash, dims) but
     // different in band 1 must NOT merge

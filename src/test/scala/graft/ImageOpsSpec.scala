@@ -539,4 +539,56 @@ class ImageOpsSpec extends AnyFunSuite {
       Seq((8L, Geom.BBox(30, 30, 50, 50)))).collect()
     assert(out2.length == 1)
   }
+
+  test("every pixel-writing operator stores the phash of the pixels a reader decodes") {
+    import graft.operators.{Augment, ConvNet, Edge}
+    import org.apache.spark.sql.Dataset
+    val fmts = Seq(PixelCodec.FmtRawLe, PixelCodec.FmtRle, PixelCodec.FmtQnt8)
+    // one finite 3-band source per fmt (qnt8 rejects NaN)
+    val w = 32; val h = 24
+    val rnd = new scala.util.Random(7)
+    val bands = Array.fill(3)(Array.fill(w * h)(rnd.nextInt(200).toFloat))
+    val sources = spark.createDataset(fmts.map(f =>
+      ImageOps.fromArray(s"src_$f", bands, w, h, 0.0, h.toDouble, 1.0, f)))
+    val tiles = Tiler.tiles(sources, 16, Tiler.resForCellSize(64.0))
+    val lut = Seq((0.0, 0.0, 0.0, 255.0), (100.0, 255.0, 128.0, 0.0), (200.0, 255.0, 255.0, 255.0))
+    type Op = Dataset[ImageRow] => Dataset[ImageRow]
+    val ops = Seq[(String, Op)](
+      ("fromArray", identity),
+      ("resize", ImageOps.resize(_, 2)),
+      ("fillNodata", ImageOps.fillNodata(_, nodata = 0f, smoothingIterations = 1)),
+      ("warpResample near", ImageOps.warpResample(_, 1.5)),
+      ("warpResample bilinear", ImageOps.warpResample(_, 0.75, "bilinear")),
+      ("frameSample", ImageOps.frameSample(_, 2)),
+      ("convolve3x3", ImageOps.convolve3x3(_, Array.tabulate(9)(k => (k + 1) / 45f))),
+      ("localThreshold", ImageOps.localThreshold(_, "sauvola", window = 5)),
+      ("demProcess hillshade", ImageOps.demProcess(_, "hillshade")),
+      ("demProcess aspect", ImageOps.demProcess(_, "aspect")),
+      ("colorRelief", ImageOps.colorRelief(_, lut)),
+      ("colorRaster", ImageOps.colorRaster(_)),
+      ("queganFilter", ImageOps.queganFilter(_, 5)),
+      ("morphology", ImageOps.morphology(_, "close")),
+      ("cv2norm", Augment.cv2norm(_)),
+      ("segPredict", ConvNet.segPredict(_, ConvNet.fixtureNet3)),
+      ("maskBlock", ConvNet.maskBlock(_, 8)),
+      ("canny", Edge.canny(_, 20.0, 60.0, sigma = 1.0))
+    ) ++ fmts.flatMap(f => Seq[(String, Op)](
+      (s"transcode $f", ImageOps.transcode(_, f)),
+      (s"assemble $f", _ => ImageOps.assemble(tiles, w, h, f))))
+    // the rows whose stored phash is not the phash of their decoded band 0
+    def wrong(name: String, out: Dataset[ImageRow]): Seq[String] = out.collect().toSeq
+      .filter(r => r.phash != PixelCodec.phash64(r.w, r.h,
+        PixelCodec.decode(r.bytes, r.fmt, r.w, r.h).bands(0)))
+      .map(r => s"$name: ${r.image_id} (${r.fmt})")
+    // measured: resized 32x32 qnt8 images whose pre-encode phash is one
+    // bit away from the phash of their decoded pixels
+    val probes = Seq(10, 20, 24).map { seed =>
+      val r = new scala.util.Random(seed)
+      ImageOps.fromArray(s"probe_$seed", Array(Array.fill(32 * 32)(r.nextInt(200).toFloat)),
+        32, 32, 0.0, 32.0, 1.0, PixelCodec.FmtQnt8)
+    }
+    val bad = ops.flatMap { case (name, op) => wrong(name, op(sources)) } ++
+      wrong("resize probes", ImageOps.resize(spark.createDataset(probes), 2))
+    assert(bad.isEmpty, s"stored phash != phash of decoded pixels:\n${bad.mkString("\n")}")
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import graft.gen.Synth
-import graft.operators.{Tiler, ZonalStats, SpatialJoin}
+import graft.operators.{Knn, Tiler, ZonalStats, SpatialJoin}
 import graft.queries.Queries
 import graft.sources.ImageTable
 import java.nio.file.Files
@@ -92,6 +92,22 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(p.contains("ReusedExchange"),
         s"$name: guarantee check recomputes the ring join instead of reusing its exchange:\n$p")
     }
+  }
+
+  test("great-circle kNN guarantee tail: ring join computed ONCE (ReusedExchange)") {
+    // the gate q_knn_geo cannot carry at sf0.001: KnnSpec's shared planar
+    // fixture read as degrees (lat = y / 1250, lng = x / 1250), so most
+    // queries sit among the points and meet the guard, while the far
+    // marker query (~80°N) can only be answered by the brute pass
+    val deg = 1250.0
+    def asDegrees(ps: Seq[PointRow], id: String) =
+      ps.map(p => (p.pt_id, p.y / deg, p.x / deg)).toDF(id, "lat", "lng")
+    val q = Knn.knnJoinGreatCircle(asDegrees(Synth.points(40, seed = 99L), "q_id"),
+      asDegrees(Synth.points(3000, seed = 11L), "pt_id"), k = 5, cellDeg = 0.5, r1 = 2)
+    q.collect() // finalize the adaptive plan
+    val p = plan(q)
+    assert(p.contains("ReusedExchange"),
+      s"great-circle guarantee check recomputes the ring join instead of reusing its exchange:\n$p")
   }
 
   test("cosineTopK: corpus x queries rows pruned to top-k BELOW the exchange") {
