@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, sum}
 
@@ -12,9 +13,11 @@ import org.apache.spark.sql.functions.{col, sum}
  *  - the current weight set is BROADCAST each epoch (weights are
  *    broadcastable by the SegNet contract);
  *  - every partition runs forward + backprop over its chips and
- *    accumulates ONE local gradient array, then emits it as
- *    (layer, idx, value) scalar rows — the shuffle carries
- *    O(partitions x params) doubles, never pixels or activations;
+ *    accumulates ONE local gradient array per trained net, then emits
+ *    it as (candidate, layer, idx, value) scalar rows — the shuffle
+ *    carries O(partitions x params) doubles, never pixels or
+ *    activations. Every trainer runs this one epoch job (`epoch`):
+ *    one net for the trainSeg* loops, K candidates for gridSearch;
  *  - the driver collects the O(params) aggregated rows, applies the
  *    SGD step, and rebroadcasts. Epochs are sequential by the nature
  *    of gradient descent; within an epoch the work is embarrassingly
@@ -382,6 +385,32 @@ object ConvTrain {
       }
   }
 
+  /** Forward pass + snapped residuals for one chip: every layer's
+    * output, the loss gradient wrt the final logits, and the chip's
+    * pixel-loss sum. Shared by chipGrad (which backprops the residuals)
+    * and chipLoss (which keeps only the sum). */
+  private def forwardResiduals(ch: ChipRow, net: SegNet, gradScale: Double,
+                               lossFn: Loss, ctx: CoupledCtx,
+                               probe: BoundaryProbe)
+      : (Array[Array[Array[Float]]], Array[Array[Double]], Double) = {
+    val n = ch.w * ch.h
+    val outs = forwardAll(ch.bands, ch.w, ch.h, net)
+    val last = outs(outs.length - 1)
+    val outC = net.layers.last.outC
+    val pq = if (isCoupled(lossFn)) new Array[Double](outC) else null
+    val aux = if (isCoupled(lossFn)) new Array[Double](2) else null
+    val gcs = if (isCoupled(lossFn)) new Array[Double](outC) else null
+    val delta = Array.fill(outC)(new Array[Double](n))
+    var loss = 0.0
+    var p = 0
+    while (p < n) {
+      loss += pixelResiduals(lossFn, net.classes, outC, last, p, ch.mask(p),
+        gradScale, delta, ctx, pq, aux, gcs, probe)
+      p += 1
+    }
+    (outs, delta, loss)
+  }
+
   /** Forward + backprop for one chip; gradients accumulate into
     * gW/gB (per layer, ConvLayer's flattened [outC][inC][k][k] weight
     * layout). Returns the chip's loss. */
@@ -395,21 +424,9 @@ object ConvTrain {
     val layers = net.layers.toArray
     require(!isCoupled(lossFn) || ctx != null,
       s"$lossFn is batch-globally coupled: run batchStats first")
-    val outs = forwardAll(ch.bands, w, h, net)
-    val last = outs(layers.length - 1)
-    val outC = layers.last.outC
-    val pq = if (isCoupled(lossFn)) new Array[Double](outC) else null
-    val aux = if (isCoupled(lossFn)) new Array[Double](2) else null
-    val gcs = if (isCoupled(lossFn)) new Array[Double](outC) else null
-    // snapped residuals = loss gradient wrt the final logits
-    var loss = 0.0
-    var delta: Array[Array[Double]] = Array.fill(outC)(new Array[Double](n))
-    var p0 = 0
-    while (p0 < n) {
-      loss += pixelResiduals(lossFn, net.classes, outC, last, p0, ch.mask(p0),
-        gradScale, delta, ctx, pq, aux, gcs, probe)
-      p0 += 1
-    }
+    val (outs, delta0, loss) =
+      forwardResiduals(ch, net, gradScale, lossFn, ctx, probe)
+    var delta = delta0
     var li = layers.length - 1
     while (li >= 0) {
       val l = layers(li); val r = l.radius; val k = l.k
@@ -490,6 +507,17 @@ object ConvTrain {
                         beta2: Double = 0.999, eps: Double = 1e-8)
       extends Optimizer
 
+  /** The quantization grain 2^gradBits — the one home of the bound
+    * every trainer and gradPlan check before launching any job: past
+    * 24 bits the snapped terms would leave the exactly-summable dyadic
+    * grid (|v| * 2^bits < 2^53) the determinism contract relies on. */
+  private def gradScale(gradBits: Int): Double = {
+    require(gradBits >= 0 && gradBits <= 24,
+      s"gradBits $gradBits outside [0, 24] — snapped terms would leave " +
+        "the dyadic grid and gradient sums turn partition-order sensitive")
+    math.pow(2.0, gradBits)
+  }
+
   /** Full-batch gradient descent over a chips table with the given
     * optimizer. Returns the trained net and the per-epoch loss (the
     * loss is measured at the epoch's STARTING weights — it is the
@@ -499,15 +527,15 @@ object ConvTrain {
                   opt: Optimizer, gradBits: Int = 8,
                   lossFn: Loss = SquaredError)
                  (implicit spark: SparkSession): (SegNet, Seq[Double]) = {
-    require(epochs >= 1 && gradBits >= 0 && gradBits <= 24)
-    val gradScale = math.pow(2.0, gradBits)
+    require(epochs >= 1)
+    val scale = gradScale(gradBits)
     val lr0 = opt match { case Sgd(l) => l; case Adam(l, _, _, _) => l }
     var net = net0
     val losses = Seq.newBuilder[Double]
     val st = new OptState(net0)
     var e = 0
     while (e < epochs) {
-      val (stepped, loss) = runEpoch(chips, net, gradScale, lossFn, opt,
+      val (stepped, loss) = runEpoch(chips, net, scale, lossFn, opt,
         lr0, st, "training epoch saw zero chips (empty dataset or batch)")
       net = stepped
       losses += loss
@@ -528,38 +556,19 @@ object ConvTrain {
     var p1 = 1.0; var p2 = 1.0
   }
 
-  /** ONE full-batch epoch, shared by trainSegOpt and the checkpointed
-    * loop so the optimizer-step arithmetic exists exactly once: the
-    * coupled stats pass (when the loss needs it) and the gradient pass
-    * share a single weight broadcast; the driver collects O(params)
-    * rows, applies the step at learning rate `lr` (passed separately
-    * so the checkpointed lr drop overrides the optimizer's own), and
-    * snap-quantizes the update. Returns the stepped net and the
-    * ASSEMBLED epoch loss (measured at the starting weights) —
-    * an empty epoch fails loudly with `emptyMsg` since it would record
-    * a fabricated 0.0 loss AND still snap-quantize the weights. */
-  private def runEpoch(data: Dataset[ChipRow], net: SegNet, gradScale: Double,
+  /** ONE full-batch epoch of one net, shared by trainSegOpt, the
+    * checkpointed loop and the mini-batch loop so the optimizer-step
+    * arithmetic exists exactly once: the K = 1 epoch job, then the
+    * step at learning rate `lr` (passed separately so the checkpointed
+    * lr drop overrides the optimizer's own), snap-quantized. Returns
+    * the stepped net and the ASSEMBLED epoch loss (measured at the
+    * starting weights). */
+  private def runEpoch(data: Dataset[ChipRow], net: SegNet, scale: Double,
                        lossFn: Loss, opt: Optimizer, lr: Double,
                        st: OptState, emptyMsg: String)
                       (implicit spark: SparkSession): (SegNet, Double) = {
-    val bc = spark.sparkContext.broadcast(net)
-    // fail paths (empty shard, coupled-loss weight-mass probe) must not
-    // leak the broadcast on callers that catch-and-retry
-    try {
-    val ctx = if (isCoupled(lossFn))
-      coupledCtx(lossFn, batchStats(data, net, gradScale, lossFn, bc))
-    else null
-    val (df, _) = gradRows(data, net, gradScale, lossFn, ctx, bc)
-    val parts = df.collect() // O(params) by construction
-    require(parts.nonEmpty, emptyMsg)
-    var loss = 0.0
-    val grads = net.layers.map(l =>
-      new Array[Double](l.weights.length + l.bias.length)).toArray
-    parts.foreach { r =>
-      val li = r.getInt(0)
-      if (li < 0) loss = r.getDouble(2)
-      else grads(li)(r.getInt(1)) = r.getDouble(2)
-    }
+    val (perNet, losses) = epoch(data, Array(net), Array(scale), lossFn, emptyMsg)
+    val grads = perNet(0)
     opt match {
       case Adam(_, b1, b2, _) => st.p1 *= b1; st.p2 *= b2
       case _ =>
@@ -573,8 +582,7 @@ object ConvTrain {
         st.mom1(li)(i) = m; st.mom2(li)(i) = v
         lr * (m / (1 - st.p1)) / (math.sqrt(v / (1 - st.p2)) + eps)
     }
-    (applyStep(net, gradScale, step), assembleLoss(lossFn, loss, ctx))
-    } finally bc.destroy()
+    (applyStep(net, scale, step), losses(0))
   }
 
   /** One optimizer step applied to every parameter:
@@ -616,13 +624,8 @@ object ConvTrain {
     * macro-averages, which keeps per-class visibility and cannot be
     * gamed by a dominant background class. The faithful smp definition
     * is available as [[iouChipsSmp]]; on data where the two rank epochs
-    * differently, trainSegOpt's checkpoint choice follows THIS metric.
-    * Distributed exactly like the gradient pass:
-    * weights broadcast, every partition folds its chips into ONE
-    * per-class (inter, n_pred, n_mask) count triple, the exchange
-    * carries 3 longs per (partition, class), the driver reduces
-    * O(classes) rows. Counts are integers, so the score is
-    * parallelism-invariant to the bit.
+    * differently, trainSegCheckpoint's checkpoint choice follows THIS
+    * metric. Both run the one distributed fold [[iouCounts]].
     *
     * Single-logit nets score ONE binary-foreground class (pred =
     * decide's logit > 0, mask foreground = mv > 0 — the same convention
@@ -630,55 +633,18 @@ object ConvTrain {
     * and reward a degenerate epoch at checkpoint selection. */
   def iouChips(chips: Dataset[ChipRow], net: SegNet)
               (implicit spark: SparkSession): Double = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(net)
-    // try/finally like trainStep/gridSearch: the forwardAll band-count
-    // require (or any task failure) must not leak the broadcast on
-    // callers that catch-and-retry epochs
-    try {
-    val rows = chips.mapPartitions { it =>
-      val nt = bc.value
-      val classes = nt.classes
-      val binary = nt.layers.last.outC == 1
-      val nCls = if (binary) 1 else classes.length
-      val inter = new Array[Long](nCls)
-      val nPred = new Array[Long](nCls)
-      val nMask = new Array[Long](nCls)
-      var any = false
-      it.foreach { ch =>
-        any = true
-        val planes = forwardAll(ch.bands, ch.w, ch.h, nt).last
-        var p = 0
-        while (p < ch.w * ch.h) {
-          val pv = ConvNet.decide(planes, p, classes)
-          val mv = ch.mask(p)
-          var c = 0
-          while (c < nCls) {
-            val ip = if (binary) pv == 1f else pv == classes(c)
-            val im = if (binary) mv > 0 else mv == classes(c)
-            if (ip && im) inter(c) += 1
-            if (ip) nPred(c) += 1
-            if (im) nMask(c) += 1
-            c += 1
-          }
-          p += 1
-        }
+    val ious = iouCounts(chips, net, (planes, p, classes, pred) => {
+      val pv = ConvNet.decide(planes, p, classes)
+      if (planes.length == 1) pred(0) = pv == 1f
+      else {
+        var c = 0
+        while (c < pred.length) { pred(c) = pv == classes(c); c += 1 }
       }
-      // an empty partition must emit NOTHING: all-zero rows would read
-      // as uni == 0 -> IoU 1.0, fabricating a perfect score on an
-      // empty chip set
-      if (!any) Iterator.empty
-      else (0 until nCls).iterator.map(c => (c, inter(c), nPred(c), nMask(c)))
-    }.toDF("c", "inter", "np", "nm")
-      .groupBy("c")
-      .agg(sum("inter").as("inter"), sum("np").as("np"), sum("nm").as("nm"))
-      .collect() // O(classes) rows by construction
-    val ious = rows.map { r =>
-      val inter = r.getLong(1); val uni = r.getLong(2) + r.getLong(3) - inter
+    }).map { case (inter, nPred, nMask) =>
+      val uni = nPred + nMask - inter
       if (uni == 0L) 1.0 else inter.toDouble / uni
     }
     if (ious.isEmpty) 0.0 else ious.sum / ious.length
-    } finally bc.destroy()
   }
 
   /** The reference's metric VERBATIM: smp.utils.metrics.IoU(
@@ -696,62 +662,83 @@ object ConvTrain {
     * its single-batch limit — documented boundary). */
   def iouChipsSmp(chips: Dataset[ChipRow], net: SegNet)
                  (implicit spark: SparkSession): Double = {
+    val counts = iouCounts(chips, net, (planes, p, _, pred) => {
+      // sigmoid(l) > 0.5 <=> l > 0
+      if (planes.length == 1) pred(0) = planes(0)(p) > 0f
+      else {
+        val nCls = pred.length
+        var m = planes(0)(p).toDouble
+        var c = 1
+        while (c < nCls) { if (planes(c)(p) > m) m = planes(c)(p); c += 1 }
+        var z = 0.0
+        c = 0
+        while (c < nCls) { z += math.exp(planes(c)(p) - m); c += 1 }
+        c = 0
+        while (c < nCls) { pred(c) = math.exp(planes(c)(p) - m) / z > 0.5; c += 1 }
+      }
+    })
+    if (counts.isEmpty) 0.0 // empty chip set
+    else {
+      val inter = counts.map(_._1).sum
+      val uni = counts.map(_._2).sum + counts.map(_._3).sum - inter
+      (inter + 1e-7) / (uni + 1e-7)
+    }
+  }
+
+  /** The one distributed IoU fold: weights broadcast, every partition
+    * folds its chips into ONE per-class (inter, n_pred, n_mask) count
+    * triple, the exchange carries 3 longs per (partition, class), the
+    * driver gets O(classes) rows. `predict(planes, p, classes, pred)`
+    * sets pred(c) for pixel p; a single-logit net scores one
+    * binary-foreground class (mask foreground = mv > 0). Counts are
+    * integers, so every score built on them is parallelism-invariant
+    * to the bit. Returns one triple per class (none for an empty chip
+    * set). */
+  private def iouCounts(chips: Dataset[ChipRow], net: SegNet,
+                        predict: (Array[Array[Float]], Int, Array[Int],
+                          Array[Boolean]) => Unit)
+                       (implicit spark: SparkSession): Array[(Long, Long, Long)] = {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(net)
-    try {
-      val rows = chips.mapPartitions { it =>
-        val nt = bc.value
+    withNets(Array(net)) { bc =>
+      chips.mapPartitions { it =>
+        val nt = bc.value(0)
         val classes = nt.classes
         val binary = nt.layers.last.outC == 1
         val nCls = if (binary) 1 else classes.length
-        var inter = 0L; var nPred = 0L; var nMask = 0L
+        val pred = new Array[Boolean](nCls)
+        val inter = new Array[Long](nCls)
+        val nPred = new Array[Long](nCls)
+        val nMask = new Array[Long](nCls)
         var any = false
         it.foreach { ch =>
           any = true
           val planes = forwardAll(ch.bands, ch.w, ch.h, nt).last
           var p = 0
           while (p < ch.w * ch.h) {
+            predict(planes, p, classes, pred)
             val mv = ch.mask(p)
-            if (binary) {
-              val pr = planes(0)(p) > 0f // sigmoid(l) > 0.5 <=> l > 0
-              val gt = mv > 0
-              if (pr && gt) inter += 1
-              if (pr) nPred += 1
-              if (gt) nMask += 1
-            } else {
-              var m = planes(0)(p).toDouble
-              var c = 1
-              while (c < nCls) {
-                if (planes(c)(p) > m) m = planes(c)(p); c += 1
-              }
-              var z = 0.0
-              c = 0
-              while (c < nCls) { z += math.exp(planes(c)(p) - m); c += 1 }
-              c = 0
-              while (c < nCls) {
-                val pr = math.exp(planes(c)(p) - m) / z > 0.5
-                val gt = mv == classes(c)
-                if (pr && gt) inter += 1
-                if (pr) nPred += 1
-                if (gt) nMask += 1
-                c += 1
-              }
+            var c = 0
+            while (c < nCls) {
+              val im = if (binary) mv > 0 else mv == classes(c)
+              if (pred(c) && im) inter(c) += 1
+              if (pred(c)) nPred(c) += 1
+              if (im) nMask(c) += 1
+              c += 1
             }
             p += 1
           }
         }
-        if (!any) Iterator.empty else Iterator((inter, nPred, nMask))
-      }.toDF("inter", "np", "nm")
-        .agg(sum("inter"), sum("np"), sum("nm"))
-        .collect() // one row by construction
-      val r = rows.head
-      if (r.isNullAt(0)) 0.0 // empty chip set
-      else {
-        val inter = r.getLong(0)
-        val uni = r.getLong(1) + r.getLong(2) - inter
-        (inter + 1e-7) / (uni + 1e-7)
-      }
-    } finally bc.destroy()
+        // an empty partition must emit NOTHING: all-zero rows would read
+        // as uni == 0 -> IoU 1.0, fabricating a perfect score on an
+        // empty chip set
+        if (!any) Iterator.empty
+        else (0 until nCls).iterator.map(c => (c, inter(c), nPred(c), nMask(c)))
+      }.toDF("c", "inter", "np", "nm")
+        .groupBy("c")
+        .agg(sum("inter").as("inter"), sum("np").as("np"), sum("nm").as("nm"))
+        .collect() // O(classes) rows by construction
+        .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+    }
   }
 
   /** The reference's FULL training loop (convnet.py:327-374): train on
@@ -772,7 +759,8 @@ object ConvTrain {
                          isVal: ChipRow => Boolean = null)
                         (implicit spark: SparkSession)
       : (SegNet, Seq[EpochLog]) = {
-    require(epochs >= 1 && gradBits >= 0 && gradBits <= 24)
+    require(epochs >= 1)
+    val scale = gradScale(gradBits)
     // default split: the checkerboard at the dataset's nominal chip
     // size (a null sentinel because a default expression cannot see
     // `chips`; pass an explicit isVal to override)
@@ -794,7 +782,6 @@ object ConvTrain {
       // same contract as the empty-train require below
       require(!valid.isEmpty,
         "trainSegCheckpoint: validation split is empty — isVal matched no chips")
-      val gradScale = math.pow(2.0, gradBits)
       var net = net0
       var lr = opt match { case Sgd(l) => l; case Adam(l, _, _, _) => l }
       var best = net0
@@ -805,7 +792,7 @@ object ConvTrain {
       var e = 0
       while (e < epochs) {
         if (e == lrDropEpoch) lr = lrDropTo
-        val (stepped, loss) = runEpoch(train, net, gradScale, lossFn, opt,
+        val (stepped, loss) = runEpoch(train, net, scale, lossFn, opt,
           lr, st, "training epoch saw zero chips (empty train split)")
         net = stepped
         val score = iouChips(valid, net)
@@ -818,80 +805,114 @@ object ConvTrain {
     } finally { train.unpersist(false); valid.unpersist(false) }
   }
 
-  /** One epoch's gradient aggregation: per-PARTITION accumulators emit
-    * (layer, idx, v) rows — bias entries at idx >= weights.length, the
-    * partition's loss at layer -1 — so the exchange carries
-    * O(partitions x params) doubles, never pixels or activations.
-    * Returns the aggregated frame plus the weight broadcast (caller
-    * destroys it after consuming the frame). */
-  private def gradRows(chips: Dataset[ChipRow], net: SegNet, gradScale: Double,
-                       lossFn: Loss = SquaredError, ctx: CoupledCtx = null,
-                       bcIn: org.apache.spark.broadcast.Broadcast[SegNet] = null)
-                      (implicit spark: SparkSession)
-      : (DataFrame, org.apache.spark.broadcast.Broadcast[SegNet]) = {
+  /** Broadcasts the K weight sets for one job family and destroys the
+    * broadcast when it returns — fail paths (an empty split, the
+    * coupled-loss weight-mass probe, a task failure) must not leak it
+    * on callers that catch-and-retry. */
+  private def withNets[T](nets: Array[SegNet])(f: Broadcast[Array[SegNet]] => T)
+                         (implicit spark: SparkSession): T = {
+    val bc = spark.sparkContext.broadcast(nets)
+    try f(bc) finally bc.destroy()
+  }
+
+  /** One training epoch of K candidate nets, the ONE epoch job of every
+    * trainer (K = 1 for trainSegOpt, trainSegCheckpoint and
+    * trainSegBatched; K candidates for gridSearch): the coupled stats
+    * pass when the loss needs it, then the gradient pass, both on one
+    * weight broadcast and each ONE read of `data` whatever K is. The
+    * driver collects O(K x params) rows. Returns per-candidate
+    * gradients (per layer, [weights ++ bias]) and ASSEMBLED losses at
+    * the starting weights — an empty pass fails loudly with `emptyMsg`
+    * since it would record a fabricated 0.0 loss AND still
+    * snap-quantize the weights. */
+  private def epoch(data: Dataset[ChipRow], nets: Array[SegNet],
+                    scales: Array[Double], lossFn: Loss, emptyMsg: String)
+                   (implicit spark: SparkSession)
+      : (Array[Array[Array[Double]]], Array[Double]) =
+    withNets(nets) { bc =>
+      val ctxs = coupledCtxs(data, bc, scales, lossFn)
+      val rows = gradAgg(data, bc, scales, lossFn, ctxs).collect()
+      require(rows.nonEmpty, emptyMsg)
+      val grads = nets.map(_.layers.map(l =>
+        new Array[Double](l.weights.length + l.bias.length)).toArray)
+      val losses = new Array[Double](nets.length)
+      rows.foreach { r =>
+        val ci = r.getInt(0); val li = r.getInt(1)
+        if (li < 0) losses(ci) = assembleLoss(lossFn, r.getDouble(3), ctxs(ci))
+        else grads(ci)(li)(r.getInt(2)) = r.getDouble(3)
+      }
+      (grads, losses)
+    }
+
+  /** The gradient pass as a plan (no job): every partition backprops
+    * each chip through all K broadcast nets into K local accumulators
+    * and emits (ci, li, idx, v) rows — bias entries at
+    * idx >= weights.length, candidate ci's loss at li = -1 — so the
+    * exchange carries O(partitions x K x params) doubles, never pixels
+    * or activations. Gradient terms are exact dyadics, so the candidate
+    * key cannot change any sum. `ctxs(ci)` is candidate ci's coupled
+    * constants (null for an uncoupled loss). */
+  private def gradAgg(data: Dataset[ChipRow], bc: Broadcast[Array[SegNet]],
+                      scales: Array[Double], lossFn: Loss,
+                      ctxs: Array[CoupledCtx])
+                     (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val bc = if (bcIn != null) bcIn else spark.sparkContext.broadcast(net)
-    val df = chips.mapPartitions { it =>
-      val nt = bc.value
-      val gW = nt.layers.map(l => new Array[Double](l.weights.length)).toArray
-      val gB = nt.layers.map(l => new Array[Double](l.bias.length)).toArray
-      var loss = 0.0
+    data.mapPartitions { it =>
+      val nts = bc.value
+      val k = nts.length
+      val gW = nts.map(_.layers.map(l => new Array[Double](l.weights.length)).toArray)
+      val gB = nts.map(_.layers.map(l => new Array[Double](l.bias.length)).toArray)
+      val loss = new Array[Double](k)
       var any = false
       while (it.hasNext) {
-        loss += chipGrad(it.next(), nt, gradScale, gW, gB, lossFn, ctx)
-        any = true
+        val ch = it.next(); any = true
+        var ci = 0
+        while (ci < k) {
+          loss(ci) += chipGrad(ch, nts(ci), scales(ci), gW(ci), gB(ci),
+            lossFn, ctxs(ci))
+          ci += 1
+        }
       }
       if (!any) Iterator.empty
-      else Iterator.single((-1, 0, loss)) ++
-        gW.iterator.zipWithIndex.flatMap { case (g, li) =>
-          g.iterator.zipWithIndex.map { case (v, i) => (li, i, v) } } ++
-        gB.iterator.zipWithIndex.flatMap { case (g, li) =>
-          val off = nt.layers(li).weights.length
-          g.iterator.zipWithIndex.map { case (v, i) => (li, off + i, v) } }
-    }.toDF("li", "idx", "v")
-      .groupBy("li", "idx").agg(sum("v").as("v"))
-    (df, bc)
+      else (0 until k).iterator.flatMap { ci =>
+        Iterator.single((ci, -1, 0, loss(ci))) ++
+          gW(ci).iterator.zipWithIndex.flatMap { case (g, li) =>
+            g.iterator.zipWithIndex.map { case (v, i) => (ci, li, i, v) } } ++
+          gB(ci).iterator.zipWithIndex.flatMap { case (g, li) =>
+            val off = nts(ci).layers(li).weights.length
+            g.iterator.zipWithIndex.map { case (v, i) => (ci, li, off + i, v) } }
+      }
+    }.toDF("ci", "li", "idx", "v")
+      .groupBy("ci", "li", "idx").agg(sum("v").as("v"))
   }
 
-  /** The epoch aggregation as a PLAN (no jobs launched) — for
-    * shuffle-shape gating: the only exchange carries exactly
-    * (li int, idx int, v double). Returns the weight broadcast too so
-    * the caller can destroy it once done with the plan (the other
-    * gradRows callers all pair the broadcast with a destroy). */
+  /** The epoch aggregation of one net as a PLAN (no jobs launched) —
+    * for shuffle-shape gating: the only exchange carries exactly
+    * (ci int, li int, idx int, v double) with ci = 0. Returns the
+    * weight broadcast too so the caller can destroy it once done with
+    * the plan. */
   def gradPlan(chips: Dataset[ChipRow], net: SegNet, gradBits: Int = 8)
               (implicit spark: SparkSession)
-      : (DataFrame, org.apache.spark.broadcast.Broadcast[SegNet]) = {
-    // same snap()-exactness bound as every other gradBits entry point
-    // (trainSegOpt, trainSegCheckpoint, gridSearch candidates)
-    require(gradBits >= 0 && gradBits <= 24,
-      s"gradBits $gradBits outside [0, 24] — snapped terms would leave " +
-        "the dyadic grid and gradient sums turn partition-order sensitive")
-    val (df, bc) = gradRows(chips, net, math.pow(2.0, gradBits))
-    (df.orderBy(col("li"), col("idx")), bc)
+      : (DataFrame, Broadcast[Array[SegNet]]) = {
+    val scale = gradScale(gradBits)
+    val bc = spark.sparkContext.broadcast(Array(net))
+    (gradAgg(chips, bc, Array(scale), SquaredError, new Array[CoupledCtx](1))
+      .orderBy(col("li"), col("idx")), bc)
   }
 
-  /** Loss only (no backprop) — the holdout metric. A per-CHIP loss is
-    * undefined for the coupled losses (their value is assembled from
-    * batch-global sums, not a pixel sum), so those fail fast here: use
-    * batchStats + assembleLoss for a coupled holdout score. */
+  /** Loss only (no backprop) — the holdout metric. A coupled loss's
+    * value is assembled from batch-global sums, not a pixel sum, so
+    * with its batch `ctx` this returns the chip's raw pixel-sum
+    * ingredient (the BCE/NLL terms of LossBinary / LossMulti, always 0
+    * for Dice) for assembleLoss; without a ctx a per-chip coupled loss
+    * is undefined and fails fast. */
   private[graft] def chipLoss(ch: ChipRow, net: SegNet, gradScale: Double,
-                              lossFn: Loss = SquaredError): Double = {
-    require(!isCoupled(lossFn),
+                              lossFn: Loss = SquaredError,
+                              ctx: CoupledCtx = null): Double = {
+    require(!isCoupled(lossFn) || ctx != null,
       s"$lossFn is batch-globally coupled: a per-chip loss is undefined — " +
         "assemble the batch loss from batchStats instead")
-    val n = ch.w * ch.h
-    val outs = forwardAll(ch.bands, ch.w, ch.h, net)
-    val last = outs(net.layers.length - 1)
-    val outC = net.layers.last.outC
-    val d = Array.fill(outC)(new Array[Double](n)) // residual scratch
-    var loss = 0.0
-    var p = 0
-    while (p < n) {
-      loss += pixelResiduals(lossFn, net.classes, outC, last, p, ch.mask(p),
-        gradScale, d)
-      p += 1
-    }
-    loss
+    forwardResiduals(ch, net, gradScale, lossFn, ctx, null)._3
   }
 
   /** One chip's contribution to the coupled-loss batch stats: forward
@@ -932,141 +953,19 @@ object ConvTrain {
     (n.toLong, wSum)
   }
 
-  /** The coupled-loss stats pass as a plan (no job): per-partition
-    * forward-only accumulators emit one (c, i, p, t, n, w) row per
-    * class — the exchange carries O(partitions x classes) scalars,
-    * never pixels. n and w ride the c == 0 row only. */
-  private[graft] def statsRows(chips: Dataset[ChipRow], net: SegNet,
-                               gradScale: Double, lossFn: Loss,
-                               bcIn: org.apache.spark.broadcast.Broadcast[SegNet] = null)
-                              (implicit spark: SparkSession)
-      : (DataFrame, org.apache.spark.broadcast.Broadcast[SegNet]) = {
+  /** The coupled-loss stats pass as a plan (no job): every partition
+    * folds each chip through all K broadcast nets (K x classes
+    * forward-only scalar accumulators) and emits one
+    * (ci, c, i, p, t, n, w) row per (candidate, class) — the exchange
+    * carries O(partitions x K x classes) scalars, never pixels, and
+    * the data is read ONCE whatever K is. n and w ride the c == 0 row
+    * only. */
+  private[graft] def statsRows(data: Dataset[ChipRow],
+                               bc: Broadcast[Array[SegNet]],
+                               scales: Array[Double], lossFn: Loss)
+                              (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val bc = if (bcIn != null) bcIn else spark.sparkContext.broadcast(net)
-    val outC = net.layers.last.outC
-    val df = chips.mapPartitions { it =>
-      val nt = bc.value
-      val i = new Array[Double](outC)
-      val p = new Array[Double](outC)
-      val t = new Array[Double](outC)
-      var n = 0L; var w = 0.0
-      var any = false
-      while (it.hasNext) {
-        val (cn, cwm) = chipStats(it.next(), nt, gradScale, lossFn, i, p, t)
-        n += cn; w += cwm; any = true
-      }
-      if (!any) Iterator.empty
-      else (0 until outC).iterator.map(c =>
-        (c, i(c), p(c), t(c), if (c == 0) n else 0L, if (c == 0) w else 0.0))
-    }.toDF("c", "i", "p", "t", "n", "w")
-      .groupBy("c").agg(sum("i").as("i"), sum("p").as("p"),
-        sum("t").as("t"), sum("n").as("n"), sum("w").as("w"))
-    (df, bc)
-  }
-
-  /** Batch-global stats for a coupled loss: ONE forward-only job whose
-    * shuffle carries scalar partials; the driver collects O(classes)
-    * rows. */
-  /** Net-shape preconditions of the coupled losses. */
-  private def checkLossShape(lossFn: Loss, outC: Int): Unit = lossFn match {
-    case LossBinary(_) => require(outC == 1,
-      "LossBinary (loss.py:8-29) is the single-logit loss")
-    case LossMulti(_, cw) =>
-      require(outC >= 2, "LossMulti needs a multi-channel net")
-      require(cw == null || cw.length == outC,
-        s"classWeights length ${if (cw == null) 0 else cw.length} != $outC")
-    case _ =>
-  }
-
-  /** Zero-mass batches make LossMulti's wt/wSum residual 0/0 = NaN —
-    * refuse them loudly (torch's weighted-mean NLL also NaNs). */
-  private def checkWeightMass(lossFn: Loss, w: Double): Unit = lossFn match {
-    case LossMulti(_, _) => require(w > 0,
-      "LossMulti saw zero target-weight mass in this batch (no in-class " +
-        "pixels, or classWeights zeroes out every present class)")
-    case _ =>
-  }
-
-  private[graft] def batchStats(chips: Dataset[ChipRow], net: SegNet,
-                                gradScale: Double, lossFn: Loss,
-                                bcIn: org.apache.spark.broadcast.Broadcast[SegNet] = null)
-                               (implicit spark: SparkSession): BatchStats = {
-    val outC = net.layers.last.outC
-    checkLossShape(lossFn, outC)
-    val (df, bc) = statsRows(chips, net, gradScale, lossFn, bcIn)
-    val rows = df.collect() // O(classes) rows by construction
-    if (bcIn == null) bc.destroy()
-    require(rows.nonEmpty,
-      "coupled-loss stats pass saw zero chips (empty dataset or batch)")
-    val i = new Array[Double](outC)
-    val p = new Array[Double](outC)
-    val t = new Array[Double](outC)
-    var n = 0L; var w = 0.0
-    rows.foreach { r =>
-      val c = r.getInt(0)
-      i(c) = r.getDouble(1); p(c) = r.getDouble(2); t(c) = r.getDouble(3)
-      n += r.getLong(4); w += r.getDouble(5)
-    }
-    checkWeightMass(lossFn, w)
-    BatchStats(i, p, t, n, w)
-  }
-
-  /** Epoch loss from the gradient pass's pixel-sum plus the global
-    * stats — the coupled losses' value is not a plain pixel sum. */
-  private[graft] def assembleLoss(lossFn: Loss, pixelSum: Double,
-                                  ctx: CoupledCtx): Double = lossFn match {
-    case Dice(_) => 1.0 - ctx.nn / ctx.dd
-    case LossBinary(w) =>
-      (1.0 - w) * (pixelSum / ctx.nD) -
-        w * math.log(ctx.iEps(0) / ctx.uEps(0))
-    case LossMulti(w, _) =>
-      var j = 0.0
-      var c = 0
-      while (c < ctx.iEps.length) {
-        j += math.log(ctx.iEps(c) / ctx.uEps(c)); c += 1
-      }
-      (1.0 - w) * (if (ctx.wSum > 0) pixelSum / ctx.wSum else 0.0) - w * j
-    case _ => pixelSum
-  }
-
-  /** Raw snapped pixel-sum ingredient of a coupled batch loss (the
-    * BCE/NLL terms of LossBinary / LossMulti) for one chip — NOT a
-    * loss by itself; feed the batch total to assembleLoss with the
-    * batch ctx. Dice has no pixel term (always 0). */
-  private def chipPixelSum(ch: ChipRow, net: SegNet, gradScale: Double,
-                           lossFn: Loss, ctx: CoupledCtx): Double = {
-    require(isCoupled(lossFn) && ctx != null,
-      "chipPixelSum is the coupled-loss ingredient: run batchStats first")
-    val n = ch.w * ch.h
-    val outs = forwardAll(ch.bands, ch.w, ch.h, net)
-    val last = outs(net.layers.length - 1)
-    val outC = net.layers.last.outC
-    val pq = new Array[Double](outC)
-    val aux = new Array[Double](2)
-    val gcs = new Array[Double](outC)
-    val d = Array.fill(outC)(new Array[Double](n)) // residual scratch
-    var ps = 0.0
-    var p = 0
-    while (p < n) {
-      ps += pixelResiduals(lossFn, net.classes, outC, last, p, ch.mask(p),
-        gradScale, d, ctx, pq, aux, gcs)
-      p += 1
-    }
-    ps
-  }
-
-  /** Per-candidate batch stats for a coupled loss in ONE data pass:
-    * every partition folds its chips through ALL K candidate nets
-    * (K x classes scalar accumulators) and emits (ci, c, i, p, t, n, w)
-    * rows — the same one-read-per-epoch contract as the gridSearch
-    * gradient pass, K x FLOPs but never a second scan. */
-  private def gridStats(data: Dataset[ChipRow],
-                        bc: org.apache.spark.broadcast.Broadcast[Array[SegNet]],
-                        scales: Array[Double], lossFn: Loss)
-                       (implicit spark: SparkSession): Array[BatchStats] = {
-    import spark.implicits._
-    val k0 = bc.value.length
-    val rows = data.mapPartitions { it =>
+    data.mapPartitions { it =>
       val nts = bc.value
       val k = nts.length
       val outCs = nts.map(_.layers.last.outC)
@@ -1095,27 +994,88 @@ object ConvTrain {
     }.toDF("ci", "c", "i", "p", "t", "n", "w")
       .groupBy("ci", "c").agg(sum("i").as("i"), sum("p").as("p"),
         sum("t").as("t"), sum("n").as("n"), sum("w").as("w"))
+  }
+
+  /** Net-shape preconditions of the coupled losses. */
+  private def checkLossShape(lossFn: Loss, outC: Int): Unit = lossFn match {
+    case LossBinary(_) => require(outC == 1,
+      "LossBinary (loss.py:8-29) is the single-logit loss")
+    case LossMulti(_, cw) =>
+      require(outC >= 2, "LossMulti needs a multi-channel net")
+      require(cw == null || cw.length == outC,
+        s"classWeights length ${if (cw == null) 0 else cw.length} != $outC")
+    case _ =>
+  }
+
+  /** Zero-mass batches make LossMulti's wt/wSum residual 0/0 = NaN —
+    * refuse them loudly (torch's weighted-mean NLL also NaNs). */
+  private def checkWeightMass(lossFn: Loss, w: Double): Unit = lossFn match {
+    case LossMulti(_, _) => require(w > 0,
+      "LossMulti saw zero target-weight mass in this batch (no in-class " +
+        "pixels, or classWeights zeroes out every present class)")
+    case _ =>
+  }
+
+  /** Batch-global stats of a coupled loss for each of the K broadcast
+    * nets: ONE forward-only job (statsRows) whose shuffle carries
+    * scalar partials; the driver collects O(K x classes) rows. Every
+    * net's shape is checked before the job launches. */
+  private[graft] def batchStats(data: Dataset[ChipRow],
+                                bc: Broadcast[Array[SegNet]],
+                                scales: Array[Double], lossFn: Loss)
+                               (implicit spark: SparkSession): Array[BatchStats] = {
+    // per-candidate head widths (the executor side supports differing
+    // outCs; the driver arrays must match it)
+    val outCs = bc.value.map(_.layers.last.outC)
+    outCs.foreach(checkLossShape(lossFn, _))
+    val rows = statsRows(data, bc, scales, lossFn)
       .collect() // O(K x classes) rows by construction
     require(rows.nonEmpty,
-      "coupled-loss stats pass saw zero chips (empty dataset or split)")
-    // per-candidate head widths (the executor side already supports
-    // differing outCs; the driver arrays must match it)
-    val outCs0 = bc.value.map(_.layers.last.outC)
-    val i = Array.tabulate(k0)(ci => new Array[Double](outCs0(ci)))
-    val p = Array.tabulate(k0)(ci => new Array[Double](outCs0(ci)))
-    val t = Array.tabulate(k0)(ci => new Array[Double](outCs0(ci)))
-    val n = new Array[Long](k0)
-    val w = new Array[Double](k0)
+      "coupled-loss stats pass saw zero chips (empty dataset, batch or split)")
+    val k = outCs.length
+    val i = Array.tabulate(k)(ci => new Array[Double](outCs(ci)))
+    val p = Array.tabulate(k)(ci => new Array[Double](outCs(ci)))
+    val t = Array.tabulate(k)(ci => new Array[Double](outCs(ci)))
+    val n = new Array[Long](k)
+    val w = new Array[Double](k)
     rows.foreach { r =>
       val ci = r.getInt(0); val c = r.getInt(1)
       i(ci)(c) = r.getDouble(2); p(ci)(c) = r.getDouble(3)
       t(ci)(c) = r.getDouble(4)
       n(ci) += r.getLong(5); w(ci) += r.getDouble(6)
     }
-    Array.tabulate(k0) { ci =>
+    Array.tabulate(k) { ci =>
       checkWeightMass(lossFn, w(ci))
       BatchStats(i(ci), p(ci), t(ci), n(ci), w(ci))
     }
+  }
+
+  /** Per-candidate coupled-loss constants from one stats pass over
+    * `data` — or all nulls for an uncoupled loss, which needs none and
+    * launches no job. */
+  private def coupledCtxs(data: Dataset[ChipRow], bc: Broadcast[Array[SegNet]],
+                          scales: Array[Double], lossFn: Loss)
+                         (implicit spark: SparkSession): Array[CoupledCtx] =
+    if (isCoupled(lossFn))
+      batchStats(data, bc, scales, lossFn).map(coupledCtx(lossFn, _))
+    else new Array[CoupledCtx](scales.length)
+
+  /** Epoch loss from the gradient pass's pixel-sum plus the global
+    * stats — the coupled losses' value is not a plain pixel sum. */
+  private[graft] def assembleLoss(lossFn: Loss, pixelSum: Double,
+                                  ctx: CoupledCtx): Double = lossFn match {
+    case Dice(_) => 1.0 - ctx.nn / ctx.dd
+    case LossBinary(w) =>
+      (1.0 - w) * (pixelSum / ctx.nD) -
+        w * math.log(ctx.iEps(0) / ctx.uEps(0))
+    case LossMulti(w, _) =>
+      var j = 0.0
+      var c = 0
+      while (c < ctx.iEps.length) {
+        j += math.log(ctx.iEps(c) / ctx.uEps(c)); c += 1
+      }
+      (1.0 - w) * (if (ctx.wSum > 0) pixelSum / ctx.wSum else 0.0) - w * j
+    case _ => pixelSum
   }
 
   /** Mini-batch SGD — the torch-DataLoader loop shape (convnet.py's
@@ -1136,6 +1096,7 @@ object ConvTrain {
                       lossFn: Loss = SquaredError)
                      (implicit spark: SparkSession): (SegNet, Seq[Double]) = {
     require(epochs >= 1 && batches >= 1)
+    val scale = gradScale(gradBits)
     // persist each batch once: the typed-lambda filter is opaque to
     // pushdown, so WITHOUT the persist every one of the epochs*batches
     // steps would rescan the ENTIRE upstream chip lineage to keep
@@ -1156,14 +1117,15 @@ object ConvTrain {
       require(parts.nonEmpty, "trainSegBatched: no batch holds any chip")
       var net = net0
       val losses = Seq.newBuilder[Double]
+      val st = new OptState(net0) // SGD keeps no moments
       var e = 0
       while (e < epochs) {
         var b = 0
         while (b < parts.length) {
-          val (n2, l2) =
-            trainSegOpt(parts(b), net, epochs = 1, Sgd(lr), gradBits, lossFn)
-          net = n2
-          losses ++= l2
+          val (stepped, loss) = runEpoch(parts(b), net, scale, lossFn,
+            Sgd(lr), lr, st, "training epoch saw zero chips (empty dataset or batch)")
+          net = stepped
+          losses += loss
           b += 1
         }
         e += 1
@@ -1206,21 +1168,22 @@ object ConvTrain {
 
   /** GridSearchCV / create_model_optuna analog (learning.py:671-676,
     * convnet.py:50-428's optuna loop) as ONE data-parallel job family:
-    * every epoch reads the training chips ONCE and computes gradients
-    * for ALL K candidates in that single pass (all K weight sets ride
-    * one broadcast; each partition keeps K gradient accumulators) — at
-    * the 100 TB design point hyper-parameter search costs K x params in
-    * shuffle bytes and K x FLOPs, NOT K extra passes over the data. The
-    * reference forks joblib workers per candidate and re-reads the
-    * training set in each (the process-boundary it documents);
-    * selection here is on a deterministic holdout split (even grid
-    * parity trains, odd validates — the CV stand-in the fixture oracle
-    * can replay), lowest holdout loss wins, ties to the first
-    * candidate in input order. A coupled `lossFn` (Dice — the
-    * reference's actual optuna objective loss — LossBinary, LossMulti)
-    * trains and selects with the same one-read-per-epoch contract:
-    * the stats pass folds all K candidates in a single scan, and the
-    * holdout score is the assembled batch loss over the odd split. */
+    * every epoch is the shared K-candidate epoch job, which reads the
+    * training chips ONCE and computes gradients for ALL K candidates in
+    * that single pass (all K weight sets ride one broadcast; each
+    * partition keeps K gradient accumulators) — at the 100 TB design
+    * point hyper-parameter search costs K x params in shuffle bytes and
+    * K x FLOPs, NOT K extra passes over the data. The reference forks
+    * joblib workers per candidate and re-reads the training set in each
+    * (the process-boundary it documents); selection here is on a
+    * deterministic holdout split (even grid parity trains, odd
+    * validates — the CV stand-in the fixture oracle can replay), lowest
+    * holdout loss wins, ties to the first candidate in input order. A
+    * coupled `lossFn` (Dice — the reference's actual optuna objective
+    * loss — LossBinary, LossMulti) trains and selects with the same
+    * one-read-per-epoch contract: the stats pass folds all K candidates
+    * in a single scan, and the holdout score is the assembled batch
+    * loss over the odd split. */
   def gridSearch(chips: Dataset[ChipRow], net0: SegNet,
                  cands: Seq[Candidate], epochs: Int,
                  lossFn: Loss = SquaredError)
@@ -1228,123 +1191,62 @@ object ConvTrain {
       : (CandidateResult, Seq[CandidateResult]) = {
     import spark.implicits._
     require(cands.nonEmpty && epochs >= 1)
-    cands.foreach(c => require(c.gradBits >= 0 && c.gradBits <= 24,
-      s"candidate ${c.name}: gradBits ${c.gradBits} outside [0, 24] — " +
-        "the snap() exactness bound (|v| * 2^bits < 2^53) the " +
-        "determinism contract relies on"))
+    val scales = cands.map(c => gradScale(c.gradBits)).toArray
     checkLossShape(lossFn, net0.layers.last.outC)
     val cs = nominalChipSize(chips)
     val train = chips.filter(ch => !isHoldout(ch, cs))
     val hold = chips.filter(ch => isHoldout(ch, cs))
-    val scales = cands.map(c => math.pow(2.0, c.gradBits)).toArray
     var nets = cands.map(_ => net0).toArray
     val lossTrails = Array.fill(cands.length)(Seq.newBuilder[Double])
     var e = 0
     while (e < epochs) {
-      val bc = spark.sparkContext.broadcast(nets)
-      try { // fail paths (empty splits) must not leak the epoch broadcast
-      // a coupled loss adds ONE forward-only stats read per epoch (all
-      // K candidates in that single pass), sharing the epoch broadcast
-      val ctxs: Array[CoupledCtx] =
-        if (isCoupled(lossFn))
-          gridStats(train, bc, scales, lossFn).map(coupledCtx(lossFn, _))
-        else null
-      val agg = train.mapPartitions { it =>
-        val nts = bc.value
-        val k = nts.length
-        val gW = Array.tabulate(k)(ci =>
-          nts(ci).layers.map(l => new Array[Double](l.weights.length)).toArray)
-        val gB = Array.tabulate(k)(ci =>
-          nts(ci).layers.map(l => new Array[Double](l.bias.length)).toArray)
-        val loss = new Array[Double](k)
-        var any = false
-        while (it.hasNext) {
-          val ch = it.next(); any = true
-          var ci = 0
-          while (ci < k) {
-            loss(ci) += chipGrad(ch, nts(ci), scales(ci), gW(ci), gB(ci),
-              lossFn, if (ctxs == null) null else ctxs(ci))
-            ci += 1
-          }
-        }
-        if (!any) Iterator.empty
-        else (0 until k).iterator.flatMap { ci =>
-          Iterator.single((ci, -1, 0, loss(ci))) ++
-            gW(ci).iterator.zipWithIndex.flatMap { case (g, li) =>
-              g.iterator.zipWithIndex.map { case (v, i) => (ci, li, i, v) } } ++
-            gB(ci).iterator.zipWithIndex.flatMap { case (g, li) =>
-              val off = nts(ci).layers(li).weights.length
-              g.iterator.zipWithIndex.map { case (v, i) => (ci, li, off + i, v) } }
-        }
-      }.toDF("ci", "li", "idx", "v")
-        .groupBy("ci", "li", "idx").agg(sum("v").as("v"))
-        .collect() // O(K x params)
-      // an empty train split would leave every candidate untrained and
-      // silently crown net0 — fail loudly, matching the coupled path's
-      // gridStats require (which already fired above when isCoupled)
-      require(agg.nonEmpty,
+      val (grads, losses) = epoch(train, nets, scales, lossFn,
         "grid-search gradient pass saw zero chips (empty train split)")
-      val grads = nets.map(_.layers.map(l =>
-        new Array[Double](l.weights.length + l.bias.length)).toArray)
-      agg.foreach { r =>
-        val ci = r.getInt(0); val li = r.getInt(1)
-        if (li < 0) lossTrails(ci) += assembleLoss(lossFn, r.getDouble(3),
-          if (ctxs == null) null else ctxs(ci))
-        else grads(ci)(li)(r.getInt(2)) = r.getDouble(3)
-      }
+      lossTrails.zip(losses).foreach { case (trail, l) => trail += l }
       nets = Array.tabulate(nets.length) { ci =>
         val c = cands(ci)
         applyStep(nets(ci), scales(ci), (li, i) => c.lr * grads(ci)(li)(i))
       }
-      } finally bc.destroy()
       e += 1
     }
     // holdout loss for every candidate in ONE validation pass (a
     // coupled loss needs its holdout-batch stats first — one more
     // forward-only read — then the pixel-sum pass; Dice's pixel term
     // is identically 0, so its score comes from the stats alone)
-    val bcF = spark.sparkContext.broadcast(nets)
-    try {
-    val holdCtxs: Array[CoupledCtx] =
-      if (isCoupled(lossFn))
-        gridStats(hold, bcF, scales, lossFn).map(coupledCtx(lossFn, _))
-      else null
-    val holdLoss: Map[Int, Double] = lossFn match {
-      case Dice(_) => cands.indices.map(ci => ci -> 0.0).toMap
-      case _ =>
-        val m = hold.mapPartitions { it =>
-          val nts = bcF.value
-          val loss = new Array[Double](nts.length)
-          var any = false
-          while (it.hasNext) {
-            val ch = it.next(); any = true
-            var ci = 0
-            while (ci < nts.length) {
-              loss(ci) +=
-                (if (holdCtxs == null) chipLoss(ch, nts(ci), scales(ci), lossFn)
-                 else chipPixelSum(ch, nts(ci), scales(ci), lossFn,
-                   holdCtxs(ci)))
-              ci += 1
+    val holdLoss = withNets(nets) { bc =>
+      val ctxs = coupledCtxs(hold, bc, scales, lossFn)
+      val sums = new Array[Double](nets.length)
+      lossFn match {
+        case Dice(_) =>
+        case _ =>
+          val rows = hold.mapPartitions { it =>
+            val nts = bc.value
+            val loss = new Array[Double](nts.length)
+            var any = false
+            while (it.hasNext) {
+              val ch = it.next(); any = true
+              var ci = 0
+              while (ci < nts.length) {
+                loss(ci) += chipLoss(ch, nts(ci), scales(ci), lossFn, ctxs(ci))
+                ci += 1
+              }
             }
-          }
-          if (!any) Iterator.empty
-          else loss.iterator.zipWithIndex.map { case (v, ci) => (ci, v) }
-        }.toDF("ci", "v").groupBy("ci").agg(sum("v").as("v"))
-          .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-        // an empty holdout would give every candidate a fabricated
-        // perfect 0.0 and silently select the first — fail loudly
-        // (the coupled path already failed inside gridStats)
-        require(m.nonEmpty, "holdout split is empty — cannot select a candidate")
-        m
+            if (!any) Iterator.empty
+            else loss.iterator.zipWithIndex.map { case (v, ci) => (ci, v) }
+          }.toDF("ci", "v").groupBy("ci").agg(sum("v").as("v")).collect()
+          // an empty holdout would give every candidate a fabricated
+          // perfect 0.0 and silently select the first — fail loudly
+          // (the coupled path already failed inside the stats pass)
+          require(rows.nonEmpty, "holdout split is empty — cannot select a candidate")
+          rows.foreach(r => sums(r.getInt(0)) = r.getDouble(1))
+      }
+      Array.tabulate(nets.length)(ci => assembleLoss(lossFn, sums(ci), ctxs(ci)))
     }
     val results = cands.indices.map { ci =>
       CandidateResult(cands(ci).name, cands(ci).lr, cands(ci).gradBits,
-        lossTrails(ci).result(),
-        assembleLoss(lossFn, holdLoss.getOrElse(ci, 0.0),
-          if (holdCtxs == null) null else holdCtxs(ci)), nets(ci))
+        lossTrails(ci).result(), holdLoss(ci), nets(ci))
     }
     val winner = results.zipWithIndex.minBy { case (r, i) => (r.holdoutLoss, i) }._1
     (winner, results)
-    } finally bcF.destroy()
   }
 }

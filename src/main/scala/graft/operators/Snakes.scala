@@ -48,6 +48,10 @@ object Snakes {
     Array((-1, -1), (0, 0), (1, 1)),
     Array((1, -1), (0, 0), (-1, 1)))
 
+  // 3x3 box structuring element (dx, dy): the GAC balloon step
+  private val Box: Array[(Int, Int)] =
+    (for (dy <- -1 to 1; dx <- -1 to 1) yield (dx, dy)).toArray
+
   private def erodeLine(u: Array[Byte], w: Int, h: Int,
                         se: Array[(Int, Int)], out: Array[Byte]): Unit = {
     var y = 0
@@ -185,56 +189,6 @@ object Snakes {
     u
   }
 
-  private def erode8(u: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val out = new Array[Byte](u.length)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        var v: Byte = 1
-        var dy = -1
-        while (dy <= 1 && v == 1) {
-          var dx = -1
-          while (dx <= 1 && v == 1) {
-            val xx = x + dx; val yy = y + dy
-            if (xx < 0 || xx >= w || yy < 0 || yy >= h || u(yy * w + xx) == 0) v = 0
-            dx += 1
-          }
-          dy += 1
-        }
-        out(y * w + x) = v
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
-  private def dilate8(u: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val out = new Array[Byte](u.length)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        var v: Byte = 0
-        var dy = -1
-        while (dy <= 1 && v == 0) {
-          var dx = -1
-          while (dx <= 1 && v == 0) {
-            val xx = x + dx; val yy = y + dy
-            if (xx >= 0 && xx < w && yy >= 0 && yy < h && u(yy * w + xx) == 1) v = 1
-            dx += 1
-          }
-          dy += 1
-        }
-        out(y * w + x) = v
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
   /** np.gradient of a float grid (actual values, not the mask). */
   private def gradF(g: Array[Float], w: Int, h: Int,
                     gx: Array[Double], gy: Array[Double]): Unit = {
@@ -270,14 +224,16 @@ object Snakes {
     gradF(gimg, w, h, dgx, dgy)
     val gx2 = new Array[Int](u.length); val gy2 = new Array[Int](u.length)
     val balloonThresh = if (balloon != 0) threshold / math.abs(balloon) else 0.0
+    val pushed = new Array[Byte](u.length) // u after one balloon step
     var call = 0
     var it = 0
     while (it < iterations) {
       if (balloon != 0) {
-        val aux = if (balloon > 0) dilate8(u, w, h) else erode8(u, w, h)
+        if (balloon > 0) dilateLine(u, w, h, Box, pushed)
+        else erodeLine(u, w, h, Box, pushed)
         var p = 0
         while (p < u.length) {
-          if (gimg(p) > balloonThresh) u(p) = aux(p)
+          if (gimg(p) > balloonThresh) u(p) = pushed(p)
           p += 1
         }
       }

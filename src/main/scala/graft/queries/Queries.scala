@@ -4151,11 +4151,11 @@ object Queries {
     * objective, convnet.py:322): 2 lr candidates, 2 coupled SGD epochs
     * each on the even-parity split, holdout = the assembled dice loss
     * over the odd split. All K candidates' stats and gradients come
-    * from one read per epoch (gridStats + the K-accumulator gradient
-    * pass). The oracle replays both candidates' coupled training, both
-    * holdout stats passes, the argmin winner, and the winner's
-    * weights — everything exact (dice's loss is a ratio of exact
-    * dyadic sums, no rounding anywhere). */
+    * from one read per epoch (ConvTrain's shared K-candidate stats
+    * and gradient passes). The oracle replays both candidates' coupled
+    * training, both holdout stats passes, the argmin winner, and the
+    * winner's weights — everything exact (dice's loss is a ratio of
+    * exact dyadic sums, no rounding anywhere). */
   def qGridDice(spark: SparkSession, dir: String): DataFrame = {
     implicit val s: SparkSession = spark
     import spark.implicits._

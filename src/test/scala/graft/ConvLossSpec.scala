@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import graft.gen.GridImages
 import graft.operators.{ChipRow, ConvNet, ConvTrain, SegNet}
 
@@ -24,6 +24,14 @@ class ConvLossSpec extends AnyFunSuite {
     val masks = spark.createDataset(GridImages.maskImages(1).toSeq)(
       Encoders.product[ImageRow])
     ConvNet.collectChipsLabeled(imgs, masks, chipSize = 16, includeZero = true)
+  }
+
+  /** One net's batch stats through the K-candidate stats pass (K = 1). */
+  private def batchStats1(chips: Dataset[ChipRow], net: SegNet, scale: Double,
+                          lossFn: ConvTrain.Loss): ConvTrain.BatchStats = {
+    val bc = spark.sparkContext.broadcast(Array(net))
+    try ConvTrain.batchStats(chips, bc, Array(scale), lossFn).head
+    finally bc.destroy()
   }
 
   private lazy val chipSeq: Seq[ChipRow] =
@@ -233,18 +241,18 @@ class ConvLossSpec extends AnyFunSuite {
         ConvTrain.Dice())
     }
     intercept[IllegalArgumentException] { // LossBinary on a 2-channel net
-      ConvTrain.batchStats(fixtureChips(), ConvNet.fixtureNetSoft, 256.0,
+      batchStats1(fixtureChips(), ConvNet.fixtureNetSoft, 256.0,
         ConvTrain.LossBinary(0.5))
     }
     intercept[IllegalArgumentException] { // classWeights length mismatch
-      ConvTrain.batchStats(fixtureChips(), ConvNet.fixtureNetSoft, 256.0,
+      batchStats1(fixtureChips(), ConvNet.fixtureNetSoft, 256.0,
         ConvTrain.LossMulti(0.5, Array(1.0)))
     }
     intercept[IllegalArgumentException] { // per-chip loss undefined
       ConvTrain.chipLoss(ch, ConvNet.fixtureNetSoft, 256.0, ConvTrain.Dice())
     }
     intercept[IllegalArgumentException] { // zero weight mass -> NaN grads
-      ConvTrain.batchStats(fixtureChips(), ConvNet.fixtureNetSoft, 256.0,
+      batchStats1(fixtureChips(), ConvNet.fixtureNetSoft, 256.0,
         ConvTrain.LossMulti(0.5, Array(0.0, 0.0)))
     }
   }
@@ -404,7 +412,7 @@ class ConvLossSpec extends AnyFunSuite {
     }
     // the holdout score is the assembled dice loss over the odd split
     val hold = chips.filter(ConvTrain.isHoldout(_, 16))
-    val st = ConvTrain.batchStats(hold, w1.net, math.pow(2.0, 20),
+    val st = batchStats1(hold, w1.net, math.pow(2.0, 20),
       ConvTrain.Dice())
     val expected = ConvTrain.assembleLoss(ConvTrain.Dice(), 0.0,
       ConvTrain.coupledCtx(ConvTrain.Dice(), st))
@@ -422,14 +430,16 @@ class ConvLossSpec extends AnyFunSuite {
   }
 
   test("coupled stats exchange carries scalar rows only (plan gate)") {
-    val (df, bc) = ConvTrain.statsRows(fixtureChips(), ConvNet.fixtureNetSoft,
-      math.pow(2.0, 20), ConvTrain.Dice())
+    val bc = spark.sparkContext.broadcast(Array(ConvNet.fixtureNetSoft))
+    val df = ConvTrain.statsRows(fixtureChips(), bc,
+      Array(math.pow(2.0, 20)), ConvTrain.Dice())
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("Exchange"),
       "stats pass should aggregate through one scalar exchange")
-    // the shuffled relation is exactly the six scalar columns
+    // the shuffled relation is exactly the candidate key plus the six
+    // scalar columns
     assert(df.schema.fieldNames.sameElements(
-      Array("c", "i", "p", "t", "n", "w")))
+      Array("ci", "c", "i", "p", "t", "n", "w")))
     bc.destroy()
   }
 }

@@ -118,6 +118,28 @@ class ConvTrainSpec extends AnyFunSuite {
     assert(winTie.name == "x", "equal candidates must tie to input order")
   }
 
+  test("gridSearch: candidates are independent inside one pass") {
+    val chips = fixtureChips(1)
+    val train = chips.filter(ch => !ConvTrain.isHoldout(ch, 16))
+    val lr = math.pow(2.0, -25)
+    val (_, all) = ConvTrain.gridSearch(chips, ConvNet.fixtureNet,
+      Seq(ConvTrain.Candidate("a", lr), ConvTrain.Candidate("b", lr / 2)),
+      epochs = 2)
+    val (refNet, refLosses) = ConvTrain.trainSeg(train, ConvNet.fixtureNet,
+      epochs = 2, lr = lr / 2)
+    val b = all(1)
+    assert(b.name == "b")
+    assert(b.trainLosses == refLosses)
+    b.net.layers.zip(refNet.layers).foreach { case (x, y) =>
+      assert(java.util.Arrays.equals(x.weights, y.weights))
+      assert(java.util.Arrays.equals(x.bias, y.bias))
+    }
+    // the two candidates really trained apart: b's step is half a's
+    assert(!b.net.layers.head.weights.sameElements(all(0).net.layers.head.weights))
+    assert(!b.net.layers.head.weights.sameElements(
+      ConvNet.fixtureNet.layers.head.weights))
+  }
+
   test("trainSegBatched: batches=1 == trainSeg; 2 batches = 2 steps") {
     val chips = fixtureChips(1)
     val lr = math.pow(2.0, -25)
@@ -220,6 +242,32 @@ class ConvTrainSpec extends AnyFunSuite {
     assert(j1 == j4,
       s"4-candidate search ran $j4 jobs vs $j1 for one candidate — " +
         "candidates must share each epoch's data pass, not add passes")
+  }
+
+  test("every trainer rejects gradBits outside [0, 24] before launching a Spark job") {
+    val chips = fixtureChips(1)
+    val sc = spark.sparkContext
+    val lr = math.pow(2.0, -25)
+    val net = ConvNet.fixtureNet
+    val trainers: Seq[(String, Int => Any)] = Seq(
+      "trainSegOpt" -> (b =>
+        ConvTrain.trainSegOpt(chips, net, 1, ConvTrain.Sgd(lr), gradBits = b)),
+      "trainSegCheckpoint" -> (b =>
+        ConvTrain.trainSegCheckpoint(chips, net, 1, ConvTrain.Sgd(lr), gradBits = b)),
+      "trainSegBatched" -> (b =>
+        ConvTrain.trainSegBatched(chips, net, 1, batches = 2, lr, gradBits = b)),
+      "gridSearch" -> (b => ConvTrain.gridSearch(chips, net,
+        Seq(ConvTrain.Candidate("a", lr, gradBits = b)), epochs = 1)),
+      "gradPlan" -> (b => ConvTrain.gradPlan(chips, net, gradBits = b)))
+    for ((name, run) <- trainers; bits <- Seq(-1, 25)) {
+      val group = s"gradbits-$name-$bits"
+      sc.setJobGroup(group, s"$name at gradBits $bits", interruptOnCancel = false)
+      try intercept[IllegalArgumentException](run(bits))
+      finally sc.clearJobGroup()
+      val jobs = sc.statusTracker.getJobIdsForGroup(group).length
+      assert(jobs == 0,
+        s"$name ran $jobs Spark jobs before rejecting gradBits $bits")
+    }
   }
 
   test("empty epoch and empty holdout fail loudly, never fabricate 0.0") {
