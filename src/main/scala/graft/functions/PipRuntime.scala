@@ -5,10 +5,9 @@ import graft.core.Geom
 
 /**
  * Allocation-free point-in-polygon over Catalyst's nested ArrayData —
- * the codegen target of PointInPolygonExpr (SURVEY §4.2: upgrade custom
- * expressions from CodegenFallback once correct). Reads ring vertices
- * directly from the unsafe representation: no per-row Array[(Double,
- * Double)] materialization, so the expression stays cheap inside
+ * the static call behind `st_point_in_polygon` (SURVEY §4.2). Reads ring
+ * vertices directly from the unsafe representation: no per-row
+ * Array[(Double, Double)] materialization, so the call stays cheap inside
  * WholeStageCodegen's hot loop.
  *
  * Only the vertex walk is its own: each edge goes through the packed

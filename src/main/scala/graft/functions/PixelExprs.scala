@@ -1,23 +1,22 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /**
  * Native per-pixel tile transforms. The `transform`/`zip_with`
  * higher-order-function forms of these ops evaluate an interpreted
  * lambda PER PIXEL — measured at ~4x the whole decode+mask cost at
- * bench volume — while these expressions run one static-call loop per
- * tile inside WholeStageCodegen and emit an UnsafeArrayData directly.
+ * bench volume — while these kernels run one static-call loop per tile
+ * inside WholeStageCodegen ([[PxFunctions]]) and emit an UnsafeArrayData
+ * directly.
  *
  * Comparison semantics mirror Spark SQL's float ordering EXACTLY
  * (SQLOrderingUtil: NaN == NaN and greater than everything,
  * -0.0 == 0.0) — parity with the HOF forms is spec-gated over
- * NaN / ±0.0 / ordinary values (PixelExprsSpec).
+ * NaN / ±0.0 / ordinary values (PixelExprsSpec). Constants (mask values,
+ * thresholds, LUTs, HSV bounds) reach the kernels as Catalyst literals,
+ * whose codegen keeps NaN and ±0.0 bit for bit.
  *
  * Inputs are ARRAY<FLOAT> pixel payloads. Element nulls (parquet reads
  * arrays back as containsNull=true) follow the lambda forms' exact
@@ -429,249 +428,78 @@ object PxRuntime {
   }
 }
 
-private[graft] object PixelExprs {
-  val PxType: DataType = ArrayType(FloatType, containsNull = false)
-  val PxTypeNullable: DataType = ArrayType(FloatType, containsNull = true)
-  def checkPx(what: String, ts: (String, DataType)*): TypeCheckResult = {
-    val bad = ts.filterNot(t => t._2 == PxType || t._2 == PxTypeNullable)
-    if (bad.isEmpty) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$what needs ARRAY<FLOAT> pixels; got " +
-        bad.map { case (n, t) => s"$n: $t" }.mkString(", "))
-  }
-  /** Output element nullability follows the inputs (the fill-on-null
-    * maskEquals op overrides to non-null). */
-  def outType(ins: DataType*): DataType =
-    if (ins.contains(PxTypeNullable)) PxTypeNullable else PxType
-
-  /** Java source literal for an arbitrary float constant — NaN/Infinity
-    * have no Java literal form ("NaNf" fails Janino and would silently
-    * fall the whole stage back to interpreted eval). */
-  def jlit(f: Float): String =
-    s"java.lang.Float.intBitsToFloat(${java.lang.Float.floatToIntBits(f)})"
-
-  /** Double twin of [[jlit]] — same bit-exact literal reasoning. */
-  def dlit(d: Double): String =
-    s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToLongBits(d)}L)"
-}
-
-case class MaskEqualsExpr(child: Expression, mval: Float, fill: Float)
-    extends UnaryExpression {
-  override def dataType: DataType = PixelExprs.PxType // null elements fill
-  override def checkInputDataTypes(): TypeCheckResult =
-    PixelExprs.checkPx("px_mask_equals", "pixels" -> child.dataType)
-  override def nullSafeEval(v: Any): Any =
-    PxRuntime.maskEquals(v.asInstanceOf[ArrayData], mval, fill)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.PxRuntime.maskEquals($c, ${PixelExprs.jlit(mval)}, ${PixelExprs.jlit(fill)})")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "px_mask_equals"
-}
-
-case class MaskRuleExpr(child: Expression, rule: Int, thr: Float, repl: Float)
-    extends UnaryExpression {
-  require(rule >= 0 && rule <= 2)
-  override def dataType: DataType = PixelExprs.outType(child.dataType)
-  override def checkInputDataTypes(): TypeCheckResult =
-    PixelExprs.checkPx("px_mask_rule", "pixels" -> child.dataType)
-  override def nullSafeEval(v: Any): Any =
-    PxRuntime.maskRule(v.asInstanceOf[ArrayData], rule, thr, repl)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.PxRuntime.maskRule($c, $rule, ${PixelExprs.jlit(thr)}, ${PixelExprs.jlit(repl)})")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "px_mask_rule"
-}
-
-case class ApplyLutExpr(child: Expression, keys: Array[Float], vals: Array[Float])
-    extends UnaryExpression {
-  require(keys.length == vals.length)
-  override def dataType: DataType = PixelExprs.outType(child.dataType)
-  override def checkInputDataTypes(): TypeCheckResult =
-    PixelExprs.checkPx("px_apply_lut", "pixels" -> child.dataType)
-  override def nullSafeEval(v: Any): Any =
-    PxRuntime.applyLut(v.asInstanceOf[ArrayData], keys, vals)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kRef = ctx.addReferenceObj("lutKeys", keys, "float[]")
-    val vRef = ctx.addReferenceObj("lutVals", vals, "float[]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.PxRuntime.applyLut($c, $kRef, $vRef)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "px_apply_lut"
-}
-
-case class ZipMulExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = PixelExprs.outType(left.dataType, right.dataType)
-  override def checkInputDataTypes(): TypeCheckResult =
-    PixelExprs.checkPx("px_mul", "left" -> left.dataType, "right" -> right.dataType)
-  override def nullSafeEval(a: Any, b: Any): Any =
-    PxRuntime.zipMul(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.PxRuntime.zipMul($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-  override def prettyName: String = "px_mul"
-}
-
-case class CombineSceneExpr(first: Expression, second: Expression,
-                            third: Expression) extends TernaryExpression {
-  override def dataType: DataType = PixelExprs.outType(first.dataType, second.dataType)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (third.dataType != FloatType)
-      TypeCheckResult.TypeCheckFailure(
-        s"px_combine_scene nodata must be FLOAT, got ${third.dataType}")
-    else PixelExprs.checkPx("px_combine_scene",
-      "left" -> first.dataType, "right" -> second.dataType)
-  override def nullSafeEval(a: Any, b: Any, nd: Any): Any =
-    PxRuntime.combineScene(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      nd.asInstanceOf[Float])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b, nd) => s"graft.functions.PxRuntime.combineScene($a, $b, $nd)")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-                                                 t: Expression) =
-    copy(first = f, second = s, third = t)
-  override def prettyName: String = "px_combine_scene"
-}
-
-/** Per-row sentinel normalization: pixels equal to the tile's declared
-  * nodata become NaN (PxRuntime.nodataToNan) — the pre-pass that makes
-  * mixed-sentinel series composite correctly through the NaN-skipping
-  * kernels. */
-case class NodataToNanExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = left.dataType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (right.dataType != FloatType)
-      TypeCheckResult.TypeCheckFailure(
-        s"px_nodata_to_nan sentinel must be FLOAT, got ${right.dataType}")
-    else PixelExprs.checkPx("px_nodata_to_nan", "pixels" -> left.dataType)
-  override def nullSafeEval(a: Any, nd: Any): Any =
-    PxRuntime.nodataToNan(a.asInstanceOf[ArrayData], nd.asInstanceOf[Float])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, nd) => s"graft.functions.PxRuntime.nodataToNan($a, $nd)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-  override def prettyName: String = "px_nodata_to_nan"
-}
-
-case class SeriesCompositeExpr(child: Expression, op: Int, q: Double)
-    extends UnaryExpression {
-  require(op >= 0 && op <= 5)
-  override def nullable: Boolean = true
-  override def dataType: DataType = PixelExprs.PxTypeNullable
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(ArrayType(FloatType, _), _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"px_series_composite needs ARRAY<ARRAY<FLOAT>>, got $t")
-  }
-  override def nullSafeEval(v: Any): Any =
-    PxRuntime.seriesComposite(v.asInstanceOf[ArrayData], op, q)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_r =
-        graft.functions.PxRuntime.seriesComposite($c, $op, ${q}D);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r; }""")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "px_series_composite"
-}
-
-case class MosaicCompositeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def nullable: Boolean = true
-  override def dataType: DataType = PixelExprs.PxTypeNullable
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(ArrayType(FloatType, _), _), ArrayType(FloatType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"px_mosaic needs (ARRAY<ARRAY<FLOAT>>, ARRAY<FLOAT> per-layer nodata), got ($l, $r)")
-  }
-  override def nullSafeEval(a: Any, nd: Any): Any =
-    PxRuntime.mosaicComposite(a.asInstanceOf[ArrayData], nd.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, nd) => s"""
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_r =
-        graft.functions.PxRuntime.mosaicComposite($a, $nd);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r; }""")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-  override def prettyName: String = "px_mosaic"
-}
-
-case class NdviExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = PixelExprs.outType(first.dataType, second.dataType)
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val px = PixelExprs.checkPx("px_ndvi", "a" -> first.dataType, "b" -> second.dataType)
-    if (px != TypeCheckResult.TypeCheckSuccess) px
-    else if (third.dataType == FloatType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"px_ndvi nodata must be FLOAT, got ${third.dataType}")
-  }
-  override def nullSafeEval(a: Any, b: Any, nd: Any): Any =
-    PxRuntime.ndvi(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      nd.asInstanceOf[Float])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, nd) => s"graft.functions.PxRuntime.ndvi($a, $b, $nd)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
-    copy(first = a, second = b, third = c)
-  override def prettyName: String = "px_ndvi"
-}
-
-/** HSV in-range mask (colour_thresh's convert+inRange core) — see
-  * PxRuntime.hsvInRange for the documented colour conventions. The six
-  * bounds are literal parameters (finite by contract) so the whole
-  * check stays inside one codegen'd static call per tile. */
-case class HsvMaskExpr(first: Expression, second: Expression, third: Expression,
-                       hMin: Double, hMax: Double, sMin: Double, sMax: Double,
-                       vMin: Double, vMax: Double)
-    extends TernaryExpression {
-  require(Seq(hMin, hMax, sMin, sMax, vMin, vMax).forall(x => !x.isNaN && !x.isInfinite),
-    "px_hsv_in_range bounds must be finite")
-  override def dataType: DataType =
-    PixelExprs.outType(first.dataType, second.dataType, third.dataType)
-  override def checkInputDataTypes(): TypeCheckResult =
-    PixelExprs.checkPx("px_hsv_in_range", "r" -> first.dataType,
-      "g" -> second.dataType, "b" -> third.dataType)
-  override def nullSafeEval(r: Any, g: Any, b: Any): Any =
-    PxRuntime.hsvInRange(r.asInstanceOf[ArrayData], g.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData], hMin, hMax, sMin, sMax, vMin, vMax)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (r, g, b) =>
-      s"graft.functions.PxRuntime.hsvInRange($r, $g, $b, " +
-        s"${PixelExprs.dlit(hMin)}, ${PixelExprs.dlit(hMax)}, ${PixelExprs.dlit(sMin)}, " +
-        s"${PixelExprs.dlit(sMax)}, ${PixelExprs.dlit(vMin)}, ${PixelExprs.dlit(vMax)})")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
-    copy(first = a, second = b, third = c)
-  override def prettyName: String = "px_hsv_in_range"
-}
-
-/** Codegen'd pixel-array sum (double, index order) — replaces the
-  * interpreted `aggregate(pixels, 0.0, (a, x) => a + x)` HOF fold
-  * (bit-parity spec-gated in PixelExprsSpec). */
-case class PxSumExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    PixelExprs.checkPx("px_sum", "px" -> child.dataType)
-  override def nullSafeEval(v: Any): Any =
-    PxRuntime.sumOrNull(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Double ${ev.value}_r = graft.functions.PxRuntime.sumOrNull($c);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r.doubleValue(); }""")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-  override def prettyName: String = "px_sum"
-}
-
-/** Public Column helpers for the native pixel expressions. */
+/** Public Column helpers for the native pixel kernels: each is one
+  * [[Kernel]] call into [[PxRuntime]] over ARRAY<FLOAT> pixels. */
 object PxFunctions {
-  import org.apache.spark.sql.{Column, GraftBridge}
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+
+  private val Px = ArrayType(FloatType)
+  private val Series = ArrayType(ArrayType(FloatType))
+  private val PxOut = ArrayType(FloatType, containsNull = false)
+  private def pxOp(name: String, method: String, inputs: DataType*) =
+    Kernel(name, PxRuntime.getClass, method, PxOut, inputs)
+
+  private[graft] val Sum = Kernel("px_sum", PxRuntime.getClass, "sumOrNull", DoubleType,
+    Seq(Px), orNull = true)
+
   /** Sum of a pixel array in double, strict index order. */
-  def pxSum(c: Column): Column =
-    GraftBridge.column(PxSumExpr(GraftBridge.expression(c)))
+  def pxSum(c: Column): Column = Sum(Seq(c))
+
+  /** Pixels equal to `mval` stay, every other pixel (and a null element)
+    * becomes `fill`. */
+  def maskEquals(px: Column, mval: Float, fill: Float): Column =
+    Kernel("px_mask_equals", PxRuntime.getClass, "maskEquals", PxOut, Seq(Px),
+      fillsNulls = true)(Seq(px), mval, fill)
+
+  /** rule 0 "==", 1 "<", 2 ">" against `thr`: matching pixels become `repl`. */
+  def maskRule(px: Column, rule: Int, thr: Float, repl: Float): Column = {
+    require(rule >= 0 && rule <= 2)
+    pxOp("px_mask_rule", "maskRule", Px)(Seq(px), rule, thr, repl)
+  }
+
+  /** Exact-key LUT (keys sorted by [[PxRuntime.cmp]]); unmapped values pass. */
+  def applyLut(px: Column, keys: Array[Float], vals: Array[Float]): Column = {
+    require(keys.length == vals.length)
+    pxOp("px_apply_lut", "applyLut", Px)(Seq(px), keys, vals)
+  }
+
+  /** Element-wise product of two equal-length pixel arrays. */
+  def mul(a: Column, b: Column): Column = pxOp("px_mul", "zipMul", Px, Px)(Seq(a, b))
+
+  /** Where `a` is 0, NaN or the FLOAT `nodata`, take `b`. */
+  def combineScene(a: Column, b: Column, nodata: Column): Column =
+    pxOp("px_combine_scene", "combineScene", Px, Px, FloatType)(Seq(a, b, nodata))
+
+  /** Pixels equal to the FLOAT `nodata` become NaN. */
+  def nodataToNan(a: Column, nodata: Column): Column =
+    pxOp("px_nodata_to_nan", "nodataToNan", Px, FloatType)(Seq(a, nodata))
+
+  /** Series fold over ARRAY<ARRAY<FLOAT>>: op 0 sum, 1 mean, 2 min, 3 max,
+    * 4 percentile `q`, 5 std (see [[PxRuntime.seriesComposite]]). */
+  def seriesComposite(arrays: Column, op: Int, q: Double): Column = {
+    require(op >= 0 && op <= 5)
+    Kernel("px_series_composite", PxRuntime.getClass, "seriesComposite",
+      ArrayType(FloatType), Seq(Series), orNull = true)(Seq(arrays), op, q)
+  }
+
+  /** First non-nodata pixel across layers, per-layer ARRAY<FLOAT> nodata. */
+  def mosaic(arrays: Column, nodata: Column): Column =
+    Kernel("px_mosaic", PxRuntime.getClass, "mosaicComposite", ArrayType(FloatType),
+      Seq(Series, Px), orNull = true)(Seq(arrays, nodata))
+
+  /** (a - b) / (a + b), the FLOAT `nodata` where a + b == 0. */
+  def ndvi(a: Column, b: Column, nodata: Column): Column =
+    pxOp("px_ndvi", "ndvi", Px, Px, FloatType)(Seq(a, b, nodata))
+
+  /** 1 where the (r, g, b) pixel's OpenCV HSV lies inside the closed
+    * bounds, else 0 (see [[PxRuntime.hsvInRange]]). The bounds are
+    * constants of the call, so they must be finite. */
+  def hsvInRange(r: Column, g: Column, b: Column, hMin: Double, hMax: Double,
+                 sMin: Double, sMax: Double, vMin: Double, vMax: Double): Column = {
+    require(Seq(hMin, hMax, sMin, sMax, vMin, vMax).forall(x => !x.isNaN && !x.isInfinite),
+      "px_hsv_in_range bounds must be finite")
+    pxOp("px_hsv_in_range", "hsvInRange", Px, Px, Px)(Seq(r, g, b),
+      hMin, hMax, sMin, sMax, vMin, vMax)
+  }
 }

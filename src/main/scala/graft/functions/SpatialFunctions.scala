@@ -3,11 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, BinaryExpression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.GraftBridge.{expression => exprOf, column => colOf}
-import graft.core.{Geom, GridIndex, S2, Hex}
+import graft.core.{GridIndex, S2, Hex}
 
 /**
  * Column-level spatial functions (SURVEY §2.10).
@@ -18,11 +14,29 @@ import graft.core.{Geom, GridIndex, S2, Hex}
  * "functions, not UDFs". It mirrors graft.core.GridIndex bit-for-bit
  * (property-tested in SpatialFunctionsSpec).
  *
- * PIP and the spherical encoders are custom Catalyst expressions with
- * doGenCode static-call codegen (k-ring generators stay CodegenFallback:
- * they feed an explode, not a hot scalar loop).
+ * PIP, the hex and spherical encoders and the k-rings are [[Kernel]]
+ * calls into the core objects (and [[PipRuntime]]): static calls inside
+ * WholeStageCodegen. Their coordinate inputs accept anything the
+ * analyzer casts to DOUBLE (INT, DECIMAL), and a k-ring's cell anything
+ * it casts to BIGINT.
  */
 object SpatialFunctions {
+
+  private val Coords = Seq(DoubleType, DoubleType, IntegerType)
+  private def cellKernel(name: String, runtime: Class[_]) =
+    Kernel(name, runtime, "cellId", LongType, Coords, cast = true)
+  private def ringKernel(name: String, runtime: Class[_]) =
+    Kernel(name, runtime, "kRing", Kernel.LongArray, Seq(LongType, IntegerType), cast = true)
+
+  /** SQL-only form of [[gridCellId]] (the Column form stays built-in math). */
+  private[graft] val GridCellId = cellKernel("grid_cell_id", GridIndex.getClass)
+  private[graft] val S2CellId = cellKernel("s2_cell_id", S2.getClass)
+  private[graft] val HexCellId = cellKernel("hex_cell_id", Hex.getClass)
+  private[graft] val GridKRing = ringKernel("grid_k_ring", GridIndex.getClass)
+  private[graft] val HexKRing = ringKernel("hex_k_ring", Hex.getClass)
+  private[graft] val PointInPolygon = Kernel("st_point_in_polygon", PipRuntime.getClass,
+    "eval", BooleanType, Seq(DoubleType, DoubleType, ArrayType(ArrayType(StructType(Seq(
+      StructField("x", DoubleType), StructField("y", DoubleType)))))), cast = true)
 
   /** Planar grid cell id as pure column math; mirrors GridIndex.cellId. */
   def gridCellId(x: Column, y: Column, res: Int): Column = {
@@ -36,11 +50,11 @@ object SpatialFunctions {
 
   /** S2 cell id at `level` from (lat, lng) degree columns. */
   def s2CellId(lat: Column, lng: Column, level: Int): Column =
-    colOf(S2CellIdExpr(exprOf(lat), exprOf(lng), exprOf(lit(level))))
+    S2CellId(Seq(lat, lng, lit(level)))
 
   /** H3-style hex cell id at `res` from planar (x, y) columns. */
   def hexCellId(x: Column, y: Column, res: Int): Column =
-    colOf(HexCellIdExpr(exprOf(x), exprOf(y), exprOf(lit(res))))
+    HexCellId(Seq(x, y, lit(res)))
 
   // ---- latitude-aware entry points (reference raster.py:647-648:
   //      meters-per-degree-longitude = 111320 * cos(lat)) — pure column
@@ -64,132 +78,15 @@ object SpatialFunctions {
 
   /** Array of grid cells within Chebyshev distance k (kNN expansion). */
   def gridKRing(cell: Column, k: Int): Column =
-    colOf(GridKRingExpr(exprOf(cell), exprOf(lit(k))))
+    GridKRing(Seq(cell, lit(k)))
 
   /** Array of hex cells within hex distance k. */
   def hexKRing(cell: Column, k: Int): Column =
-    colOf(HexKRingExpr(exprOf(cell), exprOf(lit(k))))
+    HexKRing(Seq(cell, lit(k)))
 
   /** Exact point-in-polygon over a rings column
     * ARRAY<ARRAY<STRUCT<x:DOUBLE, y:DOUBLE>>> (ray cast + winding
     * fallback; boundary = inside). */
   def pointInPolygon(x: Column, y: Column, rings: Column): Column =
-    colOf(PointInPolygonExpr(exprOf(x), exprOf(y), exprOf(rings)))
-
-  /** Internal-row rings -> Geom.Rings. Shared by expressions. */
-  private[graft] def ringsFromCatalyst(rd: ArrayData): Geom.Rings = {
-    val nRings = rd.numElements()
-    val out = new Array[Array[(Double, Double)]](nRings)
-    var r = 0
-    while (r < nRings) {
-      val ringData = rd.getArray(r)
-      val n = ringData.numElements()
-      val ring = new Array[(Double, Double)](n)
-      var i = 0
-      while (i < n) {
-        val row = ringData.getStruct(i, 2)
-        ring(i) = (row.getDouble(0), row.getDouble(1))
-        i += 1
-      }
-      out(r) = ring
-      r += 1
-    }
-    out
-  }
-}
-
-/** SQL-door form of gridCellId (the Column API composes built-ins and
-  * stays preferable; SQL function resolution needs a self-contained
-  * resolved expression). Codegen'd static call. */
-case class GridCellIdExpr(x: Expression, y: Expression, res: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes = Seq(DoubleType, DoubleType, IntegerType)
-  override def first: Expression = x
-  override def second: Expression = y
-  override def third: Expression = res
-  override def dataType: DataType = LongType
-  override def nullSafeEval(xv: Any, yv: Any, rv: Any): Any =
-    GridIndex.cellId(xv.asInstanceOf[Double], yv.asInstanceOf[Double], rv.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"graft.core.GridIndex.cellId($a, $b, $c)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
-    copy(x = a, y = b, res = c)
-  override def prettyName: String = "grid_cell_id"
-}
-
-/** Codegen'd via a static call — stays inside WholeStageCodegen. */
-case class S2CellIdExpr(lat: Expression, lng: Expression, level: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes = Seq(DoubleType, DoubleType, IntegerType)
-  override def first: Expression = lat
-  override def second: Expression = lng
-  override def third: Expression = level
-  override def dataType: DataType = LongType
-  override def nullSafeEval(latV: Any, lngV: Any, levV: Any): Any =
-    S2.cellId(latV.asInstanceOf[Double], lngV.asInstanceOf[Double], levV.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"graft.core.S2.cellId($a, $b, $c)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
-    copy(lat = a, lng = b, level = c)
-  override def prettyName: String = "s2_cell_id"
-}
-
-case class HexCellIdExpr(x: Expression, y: Expression, res: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes = Seq(DoubleType, DoubleType, IntegerType)
-  override def first: Expression = x
-  override def second: Expression = y
-  override def third: Expression = res
-  override def dataType: DataType = LongType
-  override def nullSafeEval(xv: Any, yv: Any, rv: Any): Any =
-    Hex.cellId(xv.asInstanceOf[Double], yv.asInstanceOf[Double], rv.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"graft.core.Hex.cellId($a, $b, $c)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
-    copy(x = a, y = b, res = c)
-  override def prettyName: String = "hex_cell_id"
-}
-
-case class GridKRingExpr(cell: Expression, k: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def left: Expression = cell
-  override def right: Expression = k
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(c: Any, kv: Any): Any =
-    new GenericArrayData(GridIndex.kRing(c.asInstanceOf[Long], kv.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(cell = l, k = r)
-  override def prettyName: String = "grid_k_ring"
-}
-
-case class HexKRingExpr(cell: Expression, k: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def left: Expression = cell
-  override def right: Expression = k
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(c: Any, kv: Any): Any =
-    new GenericArrayData(Hex.kRing(c.asInstanceOf[Long], kv.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(cell = l, k = r)
-  override def prettyName: String = "hex_k_ring"
-}
-
-/** Allocation-free eval over ArrayData (PipRuntime) + codegen via a
-  * static call: the refine predicate of the prefilter join runs inside
-  * WholeStageCodegen with zero per-row materialization. */
-case class PointInPolygonExpr(x: Expression, y: Expression, rings: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes = Seq(DoubleType, DoubleType, ArrayType(ArrayType(StructType(Seq(StructField("x", DoubleType), StructField("y", DoubleType))))))
-  override def first: Expression = x
-  override def second: Expression = y
-  override def third: Expression = rings
-  override def dataType: DataType = BooleanType
-  override def nullSafeEval(xv: Any, yv: Any, rv: Any): Any =
-    PipRuntime.eval(xv.asInstanceOf[Double], yv.asInstanceOf[Double],
-      rv.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c) => s"graft.functions.PipRuntime.eval($a, $b, $c)")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression) =
-    copy(x = a, y = b, rings = c)
-  override def prettyName: String = "st_point_in_polygon"
+    PointInPolygon(Seq(x, y, rings))
 }

@@ -767,16 +767,7 @@ object ConvTrain {
     val isV: ChipRow => Boolean =
       if (isVal != null) isVal
       else { val cs = nominalChipSize(chips); ch => isHoldout(ch, cs) }
-    // persist both splits once: the typed isV filter is opaque to
-    // pushdown, so each of the epochs x (train gradient + valid IoU)
-    // passes would otherwise rescan the ENTIRE upstream chip lineage —
-    // the same repeated-full-scan cost trainSegBatched's persist note
-    // quantifies (50 epochs = ~100 full-table reads at 100 TB)
-    val train = chips.filter(ch => !isV(ch))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val valid = chips.filter(ch => isV(ch))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    withSplits(chips, isV) { (train, valid) =>
       // an empty validation split would score every epoch 0 and the loop
       // would silently return the untrained fail-safe — fail loudly, the
       // same contract as the empty-train require below
@@ -802,7 +793,22 @@ object ConvTrain {
         e += 1
       }
       (if (everSaved) best else net, logs.result())
-    } finally { train.unpersist(false); valid.unpersist(false) }
+    }
+  }
+
+  /** `f` over the (train, holdout) split of `chips` by `isHold`, both
+    * persisted MEMORY_AND_DISK and unpersisted when `f` returns or
+    * throws. The typed filter is opaque to pushdown, so each of the
+    * epochs x (gradient + holdout) passes would otherwise rescan the
+    * ENTIRE upstream chip lineage — the same repeated-full-scan cost
+    * trainSegBatched's persist note quantifies (50 epochs = ~100
+    * full-table reads at 100 TB). */
+  private def withSplits[T](chips: Dataset[ChipRow], isHold: ChipRow => Boolean)
+                           (f: (Dataset[ChipRow], Dataset[ChipRow]) => T): T = {
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val train = chips.filter(ch => !isHold(ch)).persist(level)
+    val hold = chips.filter(ch => isHold(ch)).persist(level)
+    try f(train, hold) finally { train.unpersist(false); hold.unpersist(false) }
   }
 
   /** Broadcasts the K weight sets for one job family and destroys the
@@ -1194,59 +1200,59 @@ object ConvTrain {
     val scales = cands.map(c => gradScale(c.gradBits)).toArray
     checkLossShape(lossFn, net0.layers.last.outC)
     val cs = nominalChipSize(chips)
-    val train = chips.filter(ch => !isHoldout(ch, cs))
-    val hold = chips.filter(ch => isHoldout(ch, cs))
-    var nets = cands.map(_ => net0).toArray
-    val lossTrails = Array.fill(cands.length)(Seq.newBuilder[Double])
-    var e = 0
-    while (e < epochs) {
-      val (grads, losses) = epoch(train, nets, scales, lossFn,
-        "grid-search gradient pass saw zero chips (empty train split)")
-      lossTrails.zip(losses).foreach { case (trail, l) => trail += l }
-      nets = Array.tabulate(nets.length) { ci =>
-        val c = cands(ci)
-        applyStep(nets(ci), scales(ci), (li, i) => c.lr * grads(ci)(li)(i))
+    withSplits(chips, isHoldout(_, cs)) { (train, hold) =>
+      var nets = cands.map(_ => net0).toArray
+      val lossTrails = Array.fill(cands.length)(Seq.newBuilder[Double])
+      var e = 0
+      while (e < epochs) {
+        val (grads, losses) = epoch(train, nets, scales, lossFn,
+          "grid-search gradient pass saw zero chips (empty train split)")
+        lossTrails.zip(losses).foreach { case (trail, l) => trail += l }
+        nets = Array.tabulate(nets.length) { ci =>
+          val c = cands(ci)
+          applyStep(nets(ci), scales(ci), (li, i) => c.lr * grads(ci)(li)(i))
+        }
+        e += 1
       }
-      e += 1
-    }
-    // holdout loss for every candidate in ONE validation pass (a
-    // coupled loss needs its holdout-batch stats first — one more
-    // forward-only read — then the pixel-sum pass; Dice's pixel term
-    // is identically 0, so its score comes from the stats alone)
-    val holdLoss = withNets(nets) { bc =>
-      val ctxs = coupledCtxs(hold, bc, scales, lossFn)
-      val sums = new Array[Double](nets.length)
-      lossFn match {
-        case Dice(_) =>
-        case _ =>
-          val rows = hold.mapPartitions { it =>
-            val nts = bc.value
-            val loss = new Array[Double](nts.length)
-            var any = false
-            while (it.hasNext) {
-              val ch = it.next(); any = true
-              var ci = 0
-              while (ci < nts.length) {
-                loss(ci) += chipLoss(ch, nts(ci), scales(ci), lossFn, ctxs(ci))
-                ci += 1
+      // holdout loss for every candidate in ONE validation pass (a
+      // coupled loss needs its holdout-batch stats first — one more
+      // forward-only read — then the pixel-sum pass; Dice's pixel term
+      // is identically 0, so its score comes from the stats alone)
+      val holdLoss = withNets(nets) { bc =>
+        val ctxs = coupledCtxs(hold, bc, scales, lossFn)
+        val sums = new Array[Double](nets.length)
+        lossFn match {
+          case Dice(_) =>
+          case _ =>
+            val rows = hold.mapPartitions { it =>
+              val nts = bc.value
+              val loss = new Array[Double](nts.length)
+              var any = false
+              while (it.hasNext) {
+                val ch = it.next(); any = true
+                var ci = 0
+                while (ci < nts.length) {
+                  loss(ci) += chipLoss(ch, nts(ci), scales(ci), lossFn, ctxs(ci))
+                  ci += 1
+                }
               }
-            }
-            if (!any) Iterator.empty
-            else loss.iterator.zipWithIndex.map { case (v, ci) => (ci, v) }
-          }.toDF("ci", "v").groupBy("ci").agg(sum("v").as("v")).collect()
-          // an empty holdout would give every candidate a fabricated
-          // perfect 0.0 and silently select the first — fail loudly
-          // (the coupled path already failed inside the stats pass)
-          require(rows.nonEmpty, "holdout split is empty — cannot select a candidate")
-          rows.foreach(r => sums(r.getInt(0)) = r.getDouble(1))
+              if (!any) Iterator.empty
+              else loss.iterator.zipWithIndex.map { case (v, ci) => (ci, v) }
+            }.toDF("ci", "v").groupBy("ci").agg(sum("v").as("v")).collect()
+            // an empty holdout would give every candidate a fabricated
+            // perfect 0.0 and silently select the first — fail loudly
+            // (the coupled path already failed inside the stats pass)
+            require(rows.nonEmpty, "holdout split is empty — cannot select a candidate")
+            rows.foreach(r => sums(r.getInt(0)) = r.getDouble(1))
+        }
+        Array.tabulate(nets.length)(ci => assembleLoss(lossFn, sums(ci), ctxs(ci)))
       }
-      Array.tabulate(nets.length)(ci => assembleLoss(lossFn, sums(ci), ctxs(ci)))
+      val results = cands.indices.map { ci =>
+        CandidateResult(cands(ci).name, cands(ci).lr, cands(ci).gradBits,
+          lossTrails(ci).result(), holdLoss(ci), nets(ci))
+      }
+      val winner = results.zipWithIndex.minBy { case (r, i) => (r.holdoutLoss, i) }._1
+      (winner, results)
     }
-    val results = cands.indices.map { ci =>
-      CandidateResult(cands(ci).name, cands(ci).lr, cands(ci).gradBits,
-        lossTrails(ci).result(), holdLoss(ci), nets(ci))
-    }
-    val winner = results.zipWithIndex.minBy { case (r, i) => (r.holdoutLoss, i) }._1
-    (winner, results)
   }
 }

@@ -2,10 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.GraftBridge.{expression => exprOf, column => colOf}
 import graft.{TileRow, PolyRow}
 import graft.core.{Geom, GridIndex}
-import graft.functions.{ApplyLutExpr, CombineSceneExpr, MaskEqualsExpr, MaskRuleExpr, NdviExpr, PxRuntime, ZipMulExpr}
+import graft.functions.{PxFunctions => Px, PxRuntime}
 
 /**
  * Per-tile raster operators (SURVEY §2.2, §2.4, §2.8). All of these are
@@ -24,11 +23,11 @@ object RasterOps {
   private val tileKey = Seq("image_id", "tx", "ty")
 
   /** mask_raster (raster.py:1031-1134): keep pixels == mval, else `fill`.
-    * Native per-tile loop (PixelExprs) — the transform() HOF form paid an
+    * Native per-tile loop (PxFunctions) — the transform() HOF form paid an
     * interpreted lambda per pixel, measured ~4x the whole decode cost. */
   def maskEquals(tiles: DataFrame, mval: Float, fill: Float = 0f): DataFrame =
     tiles.withColumn("pixels",
-      colOf(MaskEqualsExpr(exprOf(col("pixels")), mval, fill)))
+      Px.maskEquals(col("pixels"), mval, fill))
 
   /** mask_raster_multi (raster.py:1136-1265): rule in {"==", "<", ">"}
     * with replacement value — pixels matching the rule become `repl`. */
@@ -40,7 +39,7 @@ object RasterOps {
       case r    => throw new IllegalArgumentException(s"rule $r")
     }
     tiles.withColumn("pixels",
-      colOf(MaskRuleExpr(exprOf(col("pixels")), code, threshold, repl)))
+      Px.maskRule(col("pixels"), code, threshold, repl))
   }
 
   /** Band algebra (NDVI raster.py:1347): (a - b) / (a + b) between two
@@ -54,7 +53,7 @@ object RasterOps {
         col("pixels").as("pb"))
     a.join(b, tileKey :+ "cell_id")
       .withColumn("pixels",
-        colOf(NdviExpr(exprOf(col("pa")), exprOf(col("pb")), exprOf(col("nodata")))))
+        Px.ndvi(col("pa"), col("pb"), col("nodata")))
       .drop("pa", "pb")
       .withColumn("band", lit(0))
   }
@@ -67,7 +66,7 @@ object RasterOps {
     * the convert is a same-pixel 3-band op, so riding multiTiles makes
     * the whole thing a zero-shuffle column transform — no band
     * re-alignment join (the NDVI two-band join shape would shuffle).
-    * Output: the tile keys + `mask` (1/0 per pixel, HsvMaskExpr's
+    * Output: the tile keys + `mask` (1/0 per pixel, PxRuntime.hsvInRange's
     * documented OpenCV conventions) and masked bands r/g/b
     * (bitwise_and analog: pixel where mask == 1, else 0). All four
     * arrays come from codegen'd native expressions. */
@@ -75,14 +74,13 @@ object RasterOps {
                    hMin: Double, hMax: Double, sMin: Double, sMax: Double,
                    vMin: Double, vMax: Double): DataFrame = {
     def band(i: Int): Column = col("bands")(i)
-    val mask = colOf(graft.functions.HsvMaskExpr(
-      exprOf(band(0)), exprOf(band(1)), exprOf(band(2)),
-      hMin, hMax, sMin, sMax, vMin, vMax))
+    val mask = Px.hsvInRange(band(0), band(1), band(2),
+      hMin, hMax, sMin, sMax, vMin, vMax)
     tiles.toDF()
       .withColumn("mask", mask)
-      .withColumn("r", colOf(ZipMulExpr(exprOf(band(0)), exprOf(col("mask")))))
-      .withColumn("g", colOf(ZipMulExpr(exprOf(band(1)), exprOf(col("mask")))))
-      .withColumn("b", colOf(ZipMulExpr(exprOf(band(2)), exprOf(col("mask")))))
+      .withColumn("r", Px.mul(band(0), col("mask")))
+      .withColumn("g", Px.mul(band(1), col("mask")))
+      .withColumn("b", Px.mul(band(2), col("mask")))
       .drop("bands")
   }
 
@@ -171,8 +169,7 @@ object RasterOps {
       col("band"), col("cell_id"), col("pixels").as("pb"))
     a.join(b, tileKey ++ Seq("band", "cell_id"))
       .withColumn("pixels",
-        colOf(CombineSceneExpr(exprOf(col("pa")), exprOf(col("pb")),
-          exprOf(col("nodata").cast("float")))))
+        Px.combineScene(col("pa"), col("pb"), col("nodata").cast("float")))
       .drop("pa", "pb")
   }
 
@@ -196,8 +193,7 @@ object RasterOps {
     // (a first("nodata") would both misread differing layers and flip
     // nondeterministically across runs — the mosaic note below)
     val normalized = snapshots.withColumn("pixels",
-      colOf(graft.functions.NodataToNanExpr(exprOf(col("pixels")),
-        exprOf(col("nodata").cast("float")))))
+      Px.nodataToNan(col("pixels"), col("nodata").cast("float")))
     val gathered = normalized
       .groupBy((tileKey ++ Seq("band", "cell_id")).map(col): _*)
       .agg(sort_array(collect_list(struct(col("t"), col("pixels")))).as("series"),
@@ -205,7 +201,7 @@ object RasterOps {
         first("px").as("px"), first("tw").as("tw"), first("th").as("th"),
         lit(Float.NaN).cast("float").as("nodata"))
     val arrays = col("series.pixels")
-    // native one-loop composite (PixelExprs): the aggregate/zip_with/
+    // native one-loop composite (PxFunctions): the aggregate/zip_with/
     // array_sort HOF chains paid interpreted lambdas per pixel PER
     // SERIES ELEMENT and dominated the whole job at bench volume
     val opCode = stat match {
@@ -219,7 +215,7 @@ object RasterOps {
     }
     val qq = if (stat == "median") 50.0 else q
     require(opCode != 4 || (qq >= 0.0 && qq <= 100.0), s"percentile out of range: $qq")
-    val out = colOf(graft.functions.SeriesCompositeExpr(exprOf(arrays), opCode, qq))
+    val out = Px.seriesComposite(arrays, opCode, qq)
     gathered.withColumn("pixels", out).drop("series")
   }
 
@@ -239,8 +235,7 @@ object RasterOps {
     // against ITS OWN sentinel (a single first("nodata") would both
     // misread differing layers and flip nondeterministically); the
     // output tile's sentinel is the sorted FIRST layer's — deterministic
-    val composited = colOf(graft.functions.MosaicCompositeExpr(
-      exprOf(col("layers.pixels")), exprOf(col("layers.nodata"))))
+    val composited = Px.mosaic(col("layers.pixels"), col("layers.nodata"))
     gathered.withColumn("pixels", composited)
       .withColumn("nodata", col("layers.nodata").getItem(0))
       .withColumn("image_id", lit("mosaic")).drop("layers")
@@ -254,7 +249,7 @@ object RasterOps {
     val b = s2.toDF().select(col("image_id"), col("tx"), col("ty"),
       col("band"), col("cell_id"), col("pixels").as("pb"))
     a.join(b, tileKey ++ Seq("band", "cell_id"))
-      .withColumn("pixels", colOf(ZipMulExpr(exprOf(col("pa")), exprOf(col("pb")))))
+      .withColumn("pixels", Px.mul(col("pa"), col("pb")))
       .drop("pa", "pb")
   }
 
@@ -373,8 +368,8 @@ object RasterOps {
   def applyLut(tiles: DataFrame, lut: Map[Float, Float])
               (implicit spark: SparkSession): DataFrame = {
     val entries = lut.toSeq.sortWith((p, q) => PxRuntime.cmp(p._1, q._1) < 0)
-    tiles.withColumn("pixels", colOf(ApplyLutExpr(exprOf(col("pixels")),
-      entries.map(_._1).toArray, entries.map(_._2).toArray)))
+    tiles.withColumn("pixels", Px.applyLut(col("pixels"),
+      entries.map(_._1).toArray, entries.map(_._2).toArray))
   }
 
   /** Otsu threshold (shape.py:2367-2372 thresholds): maximize between-

@@ -3,12 +3,9 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.GraftBridge.{expression => exprOf, column => colOf}
+import graft.functions.Kernel
 
 /**
  * Similarity search over an embedding column (ARRAY<FLOAT>) — builder
@@ -20,11 +17,16 @@ import org.apache.spark.sql.GraftBridge.{expression => exprOf, column => colOf}
  */
 object EmbedOps {
 
+  private[graft] val Dot = Kernel("vec_dot", EmbedRuntime.getClass, "dotOrNull", DoubleType,
+    Seq(ArrayType(FloatType), ArrayType(FloatType)), orNull = true)
+  private[graft] val LshSig = Kernel("lsh_signature", EmbedRuntime.getClass, "lshSig",
+    LongType, Seq(ArrayType(FloatType), IntegerType), orNull = true)
+
   /** Sum_i a_i*b_i in double, sequential index order — a codegen'd
     * native expression (the zip_with/aggregate HOF form computes the
     * identical value but evaluates per-element interpreted lambdas;
     * the ANN paths run millions of these per task). */
-  def dot(a: Column, b: Column): Column = colOf(DotExpr(exprOf(a), exprOf(b)))
+  def dot(a: Column, b: Column): Column = Dot(Seq(a, b))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -77,7 +79,7 @@ object EmbedOps {
     require(planes >= 1 && planes <= 64,
       s"lshSignature packs one bit per plane into a LONG: planes must be " +
         s"in [1, 64], got $planes (Java shifts would silently wrap mod 64)")
-    colOf(LshSigExpr(exprOf(emb), exprOf(lit(planes))))
+    LshSig(Seq(emb, lit(planes)))
   }
 
   /**
@@ -247,7 +249,7 @@ object EmbedRuntime {
     * consumers need no explicit filter. */
   def lshSig(v: ArrayData, planes: Int): java.lang.Long = {
     // validated HERE so every surface is covered — the registered SQL
-    // function builds LshSigExpr directly and would otherwise bypass the
+    // function calls the LshSig kernel directly and would otherwise bypass the
     // EmbedOps.lshSignature wrapper's guard (planes = 65 would shift-wrap
     // onto bit 0 and silently double-write it; planes <= 0 would emit a
     // constant 0 signature, funneling every vector into one LSH bucket).
@@ -274,54 +276,4 @@ object EmbedRuntime {
     }
     java.lang.Long.valueOf(sig)
   }
-}
-
-/** Codegen'd float-vector dot product in double. */
-case class DotExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"vec_dot needs two ARRAY<FLOAT> inputs, got ${left.dataType} / ${right.dataType}")
-    }
-  override def nullable: Boolean = true
-  override def nullSafeEval(a: Any, b: Any): Any =
-    EmbedRuntime.dotOrNull(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      java.lang.Double ${ev.value}_r = graft.text.EmbedRuntime.dotOrNull($a, $b);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r.doubleValue(); }""")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-  override def prettyName: String = "vec_dot"
-}
-
-/** Codegen'd hyperplane-LSH signature over an ARRAY<FLOAT> embedding. */
-case class LshSigExpr(child: Expression, planes: Expression) extends BinaryExpression {
-  override def left: Expression = child
-  override def right: Expression = planes
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (child.dataType, planes.dataType) match {
-      case (ArrayType(FloatType, _), org.apache.spark.sql.types.IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (t, pt) => TypeCheckResult.TypeCheckFailure(
-        s"lsh_signature needs (ARRAY<FLOAT>, INT), got ($t, $pt)")
-    }
-  override def nullable: Boolean = true
-  override def nullSafeEval(v: Any, p: Any): Any = {
-    val r = EmbedRuntime.lshSig(v.asInstanceOf[ArrayData], p.asInstanceOf[Int])
-    if (r == null) null else r.longValue()
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, p) => s"""
-      java.lang.Long ${ev.value}_r = graft.text.EmbedRuntime.lshSig($v, $p);
-      if (${ev.value}_r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ${ev.value}_r.longValue(); }""")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(child = l, planes = r)
-  override def prettyName: String = "lsh_signature"
 }

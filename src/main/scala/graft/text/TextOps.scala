@@ -3,24 +3,63 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, BinaryExpression}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.GraftBridge.{expression => exprOf, column => colOf}
+import graft.functions.Kernel
 
 /**
  * Large-scale training-data pipeline text operators (builder brief:
  * dedup, text analysis). All deterministic; heavy lifting stays in
- * codegen'd built-ins (split/explode/xxhash64/groupBy); custom Catalyst
- * expressions only where a scalar has no built-in form (SimHash, rolling
- * fingerprint).
+ * codegen'd built-ins (split/explode/xxhash64/groupBy); [[HashRuntime]]
+ * kernels only where a scalar has no built-in form (SimHash, rolling
+ * fingerprint, shingle and band hashes).
  *
  * Scale notes: every dedup path is shuffle-bounded by (doc, feature)
  * rows, never by doc pairs — candidate pairs only materialize inside an
  * LSH band bucket. Exact dedup is one hash-groupBy.
  */
 object TextOps {
+
+  private def hash(name: String, method: String, result: DataType,
+                   inputs: DataType*) =
+    Kernel(name, HashRuntime.getClass, method, result, inputs)
+
+  // lazy: HashRuntime reads TextOps.QualityStopwords when it initializes
+  private[graft] lazy val TextStats = hash("text_stats", "textStats",
+    ArrayType(IntegerType, containsNull = false), StringType)
+  private[graft] lazy val PolyFp = hash("poly_fingerprint", "polyFp", LongType, StringType)
+  private[graft] lazy val SimHash = hash("simhash64", "simhash", LongType, StringType)
+  private[graft] lazy val RollingFp = hash("rolling_fingerprint", "rollingFp", LongType,
+    StringType, IntegerType)
+
+  /** [n_chars, n_tokens, n_punct, n_stop] of a document in one byte-walk
+    * ([[HashRuntime.textStats]] — the quality-score counts). */
+  def textStats(text: Column): Column = TextStats(Seq(text))
+
+  /** Composed 62-bit polynomial fingerprint of a whole string
+    * ([[HashFamily.fp62]]). */
+  def polyFingerprint(text: Column): Column = PolyFp(Seq(text))
+
+  /** Array of composed 62-bit fingerprints of a document's n-token
+    * shingles in one byte-walk ([[HashRuntime.shingleFps]]). */
+  def shingleFps(text: Column, n: Int): Column = {
+    require(n >= 1)
+    hash("shingle_fps", "shingleFps", ArrayType(LongType, containsNull = false),
+      StringType)(Seq(text), n)
+  }
+
+  /** Per-band LSH bucket keys of a minhash signature
+    * ([[HashRuntime.bandKeys]]). */
+  def bandKeys(sig: Column, bands: Int, rows: Int): Column = {
+    require(bands >= 1 && rows >= 1)
+    hash("band_keys", "bandKeys", ArrayType(LongType, containsNull = true),
+      ArrayType(LongType))(Seq(sig), bands, rows)
+  }
+
+  /** Count of agreeing positions between two minhash signatures
+    * ([[HashRuntime.sigAgree]]). */
+  def sigAgree(s1: Column, s2: Column): Column =
+    hash("sig_agree", "sigAgree", IntegerType, ArrayType(LongType), ArrayType(LongType))(
+      Seq(s1, s2))
 
   // ------------------------------------------------------------ analysis
 
@@ -35,12 +74,12 @@ object TextOps {
   /** Quality features per doc: chars, tokens, mean token length,
     * punctuation ratio, stopword ratio — the length/punct/stopword
     * heuristics of standard corpus-quality scoring. The four counts come
-    * from ONE native byte-walk (TextStatsExpr): the split/filter/
+    * from ONE native byte-walk ([[textStats]]): the split/filter/
     * array_contains HOF form paid an interpreted lambda per token and
     * roughly DOUBLED the whole job at bench volume (A/B in BENCH.md);
     * parity with the HOF tree is spec-gated in TextOpsSpec. */
   def qualityFeatures(text: Column): Column = {
-    val st = colOf(TextStatsExpr(exprOf(text)))
+    val st = textStats(text)
     val nChar = element_at(st, 1)
     val nTok = element_at(st, 2)
     val punct = element_at(st, 3)
@@ -55,7 +94,7 @@ object TextOps {
 
   /** The stopword list the quality score counts (single-space-separated
     * token equality, occurrences not distinct — the split/filter HOF
-    * semantics TextStatsExpr replicates byte for byte). */
+    * semantics [[textStats]] replicates byte for byte). */
   val QualityStopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is")
 
   /** Language-marker scores (n-gram/stopword heuristic). Deterministic
@@ -147,7 +186,7 @@ object TextOps {
     * engine's implementation).
     *
     * The fingerprints come from ONE native byte-walk per document
-    * (ShingleFpsExpr): because tokens come from single-space splitting
+    * ([[shingleFps]]): because tokens come from single-space splitting
     * and shingles re-join with a single space, every shingle string IS
     * a substring of the original text (empty tokens from repeated
     * spaces included), so the expression hashes text ranges directly —
@@ -161,7 +200,7 @@ object TextOps {
     * collided. */
   def shingles(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     docs.select(col(idCol).as("doc"),
-        explode(colOf(ShingleFpsExpr(exprOf(col(textCol)), n))).as("sh"))
+        explode(shingleFps(col(textCol), n)).as("sh"))
       .distinct()
 
   /**
@@ -189,7 +228,7 @@ object TextOps {
     // (every shingle row, ahead of the one-row-per-doc aggregate).
     // Duplicates now fold in the groupBy's map-side partial instead.
     val sh = docs.select(col(idCol).as("doc"),
-      explode(colOf(ShingleFpsExpr(exprOf(col(textCol)), shingleN))).as("sh"))
+      explode(shingleFps(col(textCol), shingleN)).as("sh"))
     // signature: numHashes min-aggregates in ONE pass (partial+final agg).
     // The composed 62-bit fingerprint splits into its 31-bit halves with
     // bit ops (never a double-rounding division) so each permutation sees
@@ -212,14 +251,14 @@ object TextOps {
     // band filter needs the signature on every band row, and a minhash
     // signature is the numHashes-long array kept off them, so pairs
     // dedupe with distinct().
-    // native band fold + agreement count (BandKeysExpr / SigAgreeExpr):
+    // native band fold + agreement count (bandKeys / sigAgree):
     // the interpreted transform+aggregate+slice fold ran a lambda per
     // signature element per DOC, and the zip_with agreement chain a
     // lambda per element per candidate PAIR — both replaced by
     // codegen'd one-pass kernels, bit-parity spec-gated vs the HOF
     // forms (incl. null poisoning and short-array edges)
     val banded = sig.select(col("doc"),
-      posexplode(colOf(BandKeysExpr(exprOf(col("sig")), bands, rows))))
+      posexplode(bandKeys(col("sig"), bands, rows)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
     val cand = banded.select(col("band"), col("bh"), col("doc").as("d1"))
       .join(banded.select(col("band"), col("bh"), col("doc").as("d2")),
@@ -230,8 +269,7 @@ object TextOps {
       .join(sig.select(col("doc").as("d1"), col("sig").as("s1")), Seq("d1"))
       .join(sig.select(col("doc").as("d2"), col("sig").as("s2")), Seq("d2"))
       .select(col("d1"), col("d2"),
-        (colOf(SigAgreeExpr(exprOf(col("s1")), exprOf(col("s2"))))
-          .cast("double") / numHashes).as("jaccard_est"))
+        (sigAgree(col("s1"), col("s2")).cast("double") / numHashes).as("jaccard_est"))
   }
 
   /**
@@ -280,8 +318,10 @@ object TextOps {
       .select("d1", "d2", "jaccard")
   }
 
-  /** 64-bit SimHash of the whitespace token multiset. */
-  def simHash(text: Column): Column = colOf(SimHashExpr(exprOf(text)))
+  /** 64-bit SimHash of the whitespace token multiset: per token (empties
+    * skipped) its composed 62-bit fingerprint via HashFamily, bit k from
+    * the parity of the k-th permutation hash; +1/-1 per bit; sign -> bit. */
+  def simHash(text: Column): Column = SimHash(Seq(text))
 
   /**
    * Pigeonhole Hamming-distance blocking over a 64-bit signature column:
@@ -365,7 +405,7 @@ object TextOps {
   /** Winnowing-style document fingerprint: min of rolling polynomial
     * hashes over character windows of length w. */
   def fingerprint(text: Column, w: Int): Column =
-    colOf(RollingFingerprintExpr(exprOf(text), exprOf(lit(w))))
+    RollingFp(Seq(text, lit(w)))
 }
 
 /**
@@ -505,9 +545,9 @@ object HashFamily {
   }
 }
 
-/** Static eval targets for the text-hash expressions — a plain static
-  * call keeps them inside WholeStageCodegen (same pattern as the
-  * spatial expressions in graft.functions). */
+/** Static kernels of the text-hash functions ([[TextOps]]'s [[Kernel]]s)
+  * — a plain static call keeps them inside WholeStageCodegen (same
+  * pattern as the spatial functions in graft.functions). */
 object HashRuntime {
   def polyFp(v: UTF8String): Long = {
     val s = v.toString
@@ -640,7 +680,7 @@ object HashRuntime {
     // fail loudly, not per-row garbage: win <= 0 would index t(0)(-1)
     // (negative) or hash every window as the empty range (zero — every
     // doc silently "identical"); siblings guard their params the same
-    // way (ShingleFpsExpr n >= 1, BandKeysExpr bands/rows >= 1)
+    // way (shingleFps n >= 1, bandKeys bands/rows >= 1)
     require(win >= 1, s"rolling_fingerprint window must be >= 1, got $win")
     val s = v.toString
     val n = s.length
@@ -704,147 +744,4 @@ object HashRuntime {
     }
     c
   }
-}
-
-/** [n_chars, n_tokens, n_punct, n_stop] of a document in one byte-walk
-  * (HashRuntime.textStats — the quality-score counts). */
-case class TextStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs a STRING input, got $t")
-    }
-  override def nullSafeEval(v: Any): Any =
-    HashRuntime.textStats(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.text.HashRuntime.textStats($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-  override def prettyName: String = "text_stats"
-}
-
-/** Array of composed 62-bit fingerprints of a document's n-token
-  * shingles in one byte-walk (HashRuntime.shingleFps). */
-case class ShingleFpsExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs a STRING input, got $t")
-    }
-  override def nullSafeEval(v: Any): Any =
-    HashRuntime.shingleFps(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.text.HashRuntime.shingleFps($c, $n)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "shingle_fps"
-}
-
-/** Composed 62-bit polynomial fingerprint of a whole string
-  * (HashFamily.fp62). */
-case class PolyHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs a STRING input, got $t")
-    }
-  override def nullSafeEval(v: Any): Any =
-    HashRuntime.polyFp(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.text.HashRuntime.polyFp($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-  override def prettyName: String = "poly_fingerprint"
-}
-
-/** 64-bit SimHash: per whitespace token (multiset, empties skipped),
-  * composed 62-bit fingerprint via HashFamily, bit k from the parity of
-  * the k-th permutation hash; add +1/-1 per bit; sign -> bit. */
-case class SimHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs a STRING input, got $t")
-    }
-  override def nullSafeEval(v: Any): Any =
-    HashRuntime.simhash(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.text.HashRuntime.simhash($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-  override def prettyName: String = "simhash64"
-}
-
-/** Winnowing-style fingerprint: min over char windows of length w of the
-  * window's HashFamily polynomial fingerprint; short/empty text hashes
-  * the whole string. */
-case class RollingFingerprintExpr(child: Expression, w: Expression)
-    extends BinaryExpression {
-  override def left: Expression = child
-  override def right: Expression = w
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (child.dataType, w.dataType) match {
-      case (StringType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (t, wt) => TypeCheckResult.TypeCheckFailure(
-        s"rolling_fingerprint needs (STRING, INT), got ($t, $wt)")
-    }
-  override def nullSafeEval(v: Any, wv: Any): Any =
-    HashRuntime.rollingFp(v.asInstanceOf[UTF8String], wv.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, ww) => s"graft.text.HashRuntime.rollingFp($s, $ww)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(child = l, w = r)
-  override def prettyName: String = "rolling_fingerprint"
-}
-
-/** Per-band LSH bucket keys of a minhash signature
-  * (HashRuntime.bandKeys — replaces the interpreted
-  * transform+aggregate+slice fold, bit-parity spec-gated). */
-case class BandKeysExpr(child: Expression, bands: Int, rows: Int)
-    extends UnaryExpression {
-  require(bands >= 1 && rows >= 1)
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs an ARRAY<BIGINT> input, got $t")
-    }
-  override def nullSafeEval(v: Any): Any =
-    HashRuntime.bandKeys(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], bands, rows)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.text.HashRuntime.bandKeys($c, $bands, $rows)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  override def prettyName: String = "band_keys"
-}
-
-/** Count of agreeing positions between two minhash signatures
-  * (HashRuntime.sigAgree — replaces the interpreted
-  * size(filter(zip_with(...))) chain, bit-parity spec-gated). */
-case class SigAgreeExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (lt, rt) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs two ARRAY<BIGINT> inputs, got ($lt, $rt)")
-    }
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashRuntime.sigAgree(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.text.HashRuntime.sigAgree($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-  override def prettyName: String = "sig_agree"
 }

@@ -3,8 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.GraftBridge.{expression => exprOf, column => colOf}
-import graft.functions.HsvMaskExpr
+import graft.functions.PxFunctions
 import graft.gen.GridImages
 import graft.operators.{RasterOps, Tiler}
 
@@ -33,8 +32,8 @@ class ColourThreshSpec extends AnyFunSuite {
   private def maskOf(rows: Seq[(Array[Float], Array[Float], Array[Float])],
                      lo: (Double, Double, Double), hi: (Double, Double, Double)): Seq[Seq[Float]] =
     rows.toDF("r", "g", "b")
-      .select(colOf(HsvMaskExpr(exprOf(col("r")), exprOf(col("g")), exprOf(col("b")),
-        lo._1, hi._1, lo._2, hi._2, lo._3, hi._3)))
+      .select(PxFunctions.hsvInRange(col("r"), col("g"), col("b"),
+        lo._1, hi._1, lo._2, hi._2, lo._3, hi._3))
       .as[Seq[Float]].collect().toSeq
 
   test("cv2 primary/secondary hues land on the 8-bit OpenCV scale") {
@@ -84,8 +83,8 @@ class ColourThreshSpec extends AnyFunSuite {
       array(lit(255f), lit(null).cast("float")).as("r"),
       array(lit(0f), lit(0f)).as("g"),
       array(lit(0f), lit(0f)).as("b"))
-    val m = df.select(colOf(HsvMaskExpr(exprOf(col("r")), exprOf(col("g")),
-      exprOf(col("b")), 0, 180, 0, 255, 0, 255))).as[Seq[Option[Float]]].head()
+    val m = df.select(PxFunctions.hsvInRange(col("r"), col("g"),
+      col("b"), 0, 180, 0, 255, 0, 255)).as[Seq[Option[Float]]].head()
     assert(m == Seq(Some(1f), None))
   }
 
@@ -93,8 +92,8 @@ class ColourThreshSpec extends AnyFunSuite {
     val df = Seq(1).toDF("i").select(
       array(lit(1f), lit(2f)).as("r"), array(lit(1f)).as("g"), array(lit(1f)).as("b"))
     val ex = intercept[Exception] {
-      df.select(colOf(HsvMaskExpr(exprOf(col("r")), exprOf(col("g")),
-        exprOf(col("b")), 0, 180, 0, 255, 0, 255))).collect()
+      df.select(PxFunctions.hsvInRange(col("r"), col("g"),
+        col("b"), 0, 180, 0, 255, 0, 255)).collect()
     }
     assert(ex.getMessage.contains("px_hsv_in_range") ||
       Option(ex.getCause).exists(_.getMessage.contains("px_hsv_in_range")))

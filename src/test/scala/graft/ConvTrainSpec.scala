@@ -377,6 +377,22 @@ class ConvTrainSpec extends AnyFunSuite {
     assert(!ConvTrain.isHoldout(full, 16)) // grid (0, 0) -> even -> train
   }
 
+  test("gridSearch reads the upstream chips once per split, not once per epoch") {
+    // persisted splits: one nominal-size scan + one read per split, for a
+    // plain and a coupled (stats pass + gradient pass) loss alike
+    val rows = fixtureChips(2).collect()
+    assert(rows.length == 30)
+    for ((loss, net, cand) <- Seq(
+        (ConvTrain.SquaredError, ConvNet.fixtureNet, ConvTrain.Candidate("a", math.pow(2.0, -25))),
+        (ConvTrain.Dice(), ConvNet.fixtureNetSoft, ConvTrain.Candidate("a", math.pow(2.0, -10), 20)))) {
+      val reads = spark.sparkContext.longAccumulator("chip reads")
+      val chips = spark.createDataset(rows.toSeq)(Encoders.product[ChipRow])
+        .map { ch => reads.add(1); ch }(Encoders.product[ChipRow])
+      ConvTrain.gridSearch(chips, net, Seq(cand), epochs = 4, lossFn = loss)
+      assert(reads.sum == 3 * rows.length, s"$loss read ${reads.sum} upstream chip rows")
+    }
+  }
+
   test("trainSegBatched skips empty batch residues instead of crashing") {
     // every chip of a single-chip-per-image dataset sits at grid (0,0),
     // so with batches=2 residue 1 is empty — a DataLoader yields fewer

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.GraftBridge.{expression => exprOf, column => colOf}
 import graft.functions._
 
 /** Native pixel expressions must match the HOF lambda forms they
@@ -33,7 +32,7 @@ class PixelExprsSpec extends AnyFunSuite {
   test("MaskEqualsExpr == transform/when HOF (incl. NaN and -0.0 mvals)") {
     for (mval <- Seq(42f, Float.NaN, 0f, -0.0f)) {
       check(
-        df.select(colOf(MaskEqualsExpr(exprOf(col("pa")), mval, 7f))),
+        df.select(PxFunctions.maskEquals(col("pa"), mval, 7f)),
         df.select(transform(col("pa"), p => when(p === mval, p).otherwise(lit(7f)))))
     }
   }
@@ -49,7 +48,7 @@ class PixelExprsSpec extends AnyFunSuite {
         case _    => p > thr
       }
       check(
-        df.select(colOf(MaskRuleExpr(exprOf(col("pa")), code, thr, -1f))),
+        df.select(PxFunctions.maskRule(col("pa"), code, thr, -1f)),
         df.select(transform(col("pa"), p => when(cond(p), lit(-1f)).otherwise(p))),
       )
     }
@@ -60,8 +59,8 @@ class PixelExprsSpec extends AnyFunSuite {
     val entries = lut.toSeq.sortWith((p, q) => PxRuntime.cmp(p._1, q._1) < 0)
     val m = map(entries.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
     check(
-      df.select(colOf(ApplyLutExpr(exprOf(col("pa")),
-        entries.map(_._1).toArray, entries.map(_._2).toArray))),
+      df.select(PxFunctions.applyLut(col("pa"),
+        entries.map(_._1).toArray, entries.map(_._2).toArray)),
       df.select(transform(col("pa"), p => coalesce(element_at(m, p), p))))
   }
 
@@ -112,7 +111,7 @@ class PixelExprsSpec extends AnyFunSuite {
       }
     hofs.foreach { case (op, qq, hof) =>
       check(
-        sdf.select(colOf(SeriesCompositeExpr(exprOf(arrays), op, qq))),
+        sdf.select(PxFunctions.seriesComposite(arrays, op, qq)),
         sdf.select(hof))
     }
     // mosaic fold vs its HOF (uniform nodata = 0 across layers)
@@ -122,8 +121,8 @@ class PixelExprsSpec extends AnyFunSuite {
       element_at(arrays, 1),
       (acc, cur) => zip_with(acc, cur, (a, x) => when(a === nod, x).otherwise(a)))
     check(
-      sdf.select(colOf(MosaicCompositeExpr(exprOf(arrays),
-        exprOf(array_repeat(nod.cast("float"), size(arrays)))))),
+      sdf.select(PxFunctions.mosaic(arrays,
+        array_repeat(nod.cast("float"), size(arrays)))),
       sdf.select(mosaicHof))
   }
 
@@ -133,8 +132,8 @@ class PixelExprsSpec extends AnyFunSuite {
     val df = Seq(1).toDF("i").select(
       array(array(lit(-1f), lit(5f)), array(lit(7f), lit(5f))).as("arrays"),
       array(lit(-1f), lit(5f)).as("nds"))
-    val got = df.select(colOf(MosaicCompositeExpr(exprOf(col("arrays")),
-      exprOf(col("nds")))).as("px")).as[Seq[Float]].head()
+    val got = df.select(PxFunctions.mosaic(col("arrays"),
+      col("nds")).as("px")).as[Seq[Float]].head()
     // pixel0: layer0 hole -> layer1's 7; pixel1: layer0's 5 wins (5 is
     // only a sentinel for layer 1, NOT layer 0)
     assert(got == Seq(7f, 5f))
@@ -142,33 +141,31 @@ class PixelExprsSpec extends AnyFunSuite {
     val df2 = Seq(1).toDF("i").select(
       array(array(lit(-1f)), array(lit(9f))).as("arrays"),
       array(lit(-1f), lit(9f)).as("nds"))
-    val got2 = df2.select(colOf(MosaicCompositeExpr(exprOf(col("arrays")),
-      exprOf(col("nds")))).as("px")).as[Seq[Float]].head()
+    val got2 = df2.select(PxFunctions.mosaic(col("arrays"),
+      col("nds")).as("px")).as[Seq[Float]].head()
     assert(got2 == Seq(-1f))
   }
 
   test("ZipMulExpr / CombineSceneExpr / NdviExpr == zip_with HOFs") {
     check(
-      df.select(colOf(ZipMulExpr(exprOf(col("pa")), exprOf(col("pb"))))),
+      df.select(PxFunctions.mul(col("pa"), col("pb"))),
       df.select(zip_with(col("pa"), col("pb"), (x, y) => x * y)))
     // the "missing" set is 0, NaN, and the row's declared sentinel
     // (Spark SQL treats NaN === NaN as TRUE, matching Float.compare)
     val snd = lit(-9999f)
     check(
-      df.select(colOf(CombineSceneExpr(exprOf(col("pa")), exprOf(col("pb")),
-        exprOf(snd)))),
+      df.select(PxFunctions.combineScene(col("pa"), col("pb"), snd)),
       df.select(zip_with(col("pa"), col("pb"), (x, y) =>
         when(x === 0f || isnan(x) || x === snd, y).otherwise(x))))
     val sentinels = spark.createDataFrame(Seq(
       (Array(-9999f, 1f, Float.NaN, 2f), Array(7f, 8f, 9f, 10f))))
       .toDF("pa", "pb")
-    assert(sentinels.select(colOf(CombineSceneExpr(exprOf(col("pa")),
-        exprOf(col("pb")), exprOf(snd)))).as[Seq[Float]].head()
+    assert(sentinels.select(PxFunctions.combineScene(col("pa"),
+        col("pb"), snd)).as[Seq[Float]].head()
       == Seq(7f, 1f, 9f, 2f))
     val nodata = lit(Float.NaN)
     check(
-      df.select(colOf(NdviExpr(exprOf(col("pa")), exprOf(col("pb")),
-        exprOf(nodata.cast("float"))))),
+      df.select(PxFunctions.ndvi(col("pa"), col("pb"), nodata.cast("float"))),
       df.select(zip_with(col("pa"), col("pb"), (x, y) =>
         when(x + y === 0f, nodata).otherwise(((x - y) / (x + y)).cast("float")))))
   }
@@ -183,7 +180,7 @@ class PixelExprsSpec extends AnyFunSuite {
       Tuple1(Array(Float.NaN, 1f)), Tuple1(Array(-0.0f, 0.0f)),
       Tuple1(Array.empty[Float]))).toDF("pa")
     for (d <- Seq(df, edge)) checkD(
-      d.select(colOf(PxSumExpr(exprOf(col("pa"))))),
+      d.select(PxFunctions.pxSum(col("pa"))),
       d.select(aggregate(col("pa"), lit(0.0), (a, x) => a + x)))
   }
 
@@ -193,10 +190,10 @@ class PixelExprsSpec extends AnyFunSuite {
     val bad = spark.createDataFrame(Seq(
       (Array(1f, 2f, 3f), Array(1f, 2f)))).toDF("pa", "pb")
     for (e <- Seq(
-        ZipMulExpr(exprOf(col("pa")), exprOf(col("pb"))),
-        CombineSceneExpr(exprOf(col("pa")), exprOf(col("pb")), exprOf(lit(0f))),
-        NdviExpr(exprOf(col("pa")), exprOf(col("pb")), exprOf(lit(0f))))) {
-      val ex = intercept[Exception](bad.select(colOf(e)).collect())
+        PxFunctions.mul(col("pa"), col("pb")),
+        PxFunctions.combineScene(col("pa"), col("pb"), lit(0f)),
+        PxFunctions.ndvi(col("pa"), col("pb"), lit(0f)))) {
+      val ex = intercept[Exception](bad.select(e).collect())
       def msgs(t: Throwable): Seq[String] =
         if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
       assert(msgs(ex).exists(_.contains("differ in length")), s"$e: $ex")
@@ -207,8 +204,7 @@ class PixelExprsSpec extends AnyFunSuite {
     val df = Seq(1).toDF("i")
       .select(array_repeat(array(lit(1f)), 65537).as("arrays"))
     val e = intercept[Exception] {
-      df.select(colOf(graft.functions.SeriesCompositeExpr(
-        exprOf(col("arrays")), 1, 50.0))).collect()
+      df.select(PxFunctions.seriesComposite(col("arrays"), 1, 50.0)).collect()
     }
     assert(Causes.messages(e).contains("pre-aggregate"))
   }

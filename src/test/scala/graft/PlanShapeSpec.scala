@@ -51,8 +51,9 @@ class PlanShapeSpec extends AnyFunSuite {
     joined.collect() // collect() runs THIS QueryExecution -> final adaptive plan
     val p = plan(joined)
     assert(p.contains("BroadcastHashJoin"))
-    // Catalyst pushed the PIP refine INTO the broadcast join condition
-    assert(p.contains("st_point_in_polygon"))
+    // Catalyst pushed the PIP refine (st_point_in_polygon's static call)
+    // INTO the broadcast join condition
+    assert(p.contains("PipRuntime.eval"), p)
     // the final adaptive plan renders codegen stages as "*(n)" prefixes;
     // the join + PIP must carry one (i.e. run inside WholeStageCodegen)
     assert(p.contains("*(") && p.linesIterator.exists(l =>

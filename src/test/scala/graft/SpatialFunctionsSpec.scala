@@ -71,7 +71,7 @@ class SpatialFunctionsSpec extends AnyFunSuite with SeededProps {
 
   test("PIP fallback through the expression path: same-winding hole + grazing scanline") {
     // GeomSpec's fallback case (collinear exterior vertex on y=50, hole
-    // wound like the exterior) through PointInPolygonExpr / PipRuntime
+    // wound like the exterior) through st_point_in_polygon / PipRuntime
     val poly = PolyRow(1L, 0, Array(
       Array(Pt(0, 0), Pt(100, 0), Pt(100, 50), Pt(100, 100), Pt(0, 100)),
       Array(Pt(20, 20), Pt(80, 20), Pt(80, 80), Pt(20, 80))), 1, "h", 0.0)
@@ -143,5 +143,84 @@ class GraftFunctionsSqlSpec extends AnyFunSuite {
       spark.sql("SELECT shingle_fps('a b c', CAST(3 AS BIGINT))").collect()
     }
     assert(bad.getMessage.contains("INT literal"), bad.getMessage)
+  }
+
+  test("grid_k_ring / hex_k_ring widen an INT cell to BIGINT") {
+    graft.functions.GraftFunctions.register(spark)
+    val got = spark.sql(
+      """SELECT id, grid_k_ring(CAST(id AS INT), 1) AS g, hex_k_ring(CAST(id AS INT), 1) AS h
+        |FROM range(3)""".stripMargin).as[(Long, Array[Long], Array[Long])].collect()
+    assert(got.length == 3)
+    got.foreach { case (id, g, h) =>
+      assert(g.sameElements(GridIndex.kRing(id, 1)), s"grid $id")
+      assert(h.sameElements(Hex.kRing(id, 1)), s"hex $id")
+    }
+  }
+
+  test("every SQL-registered function compiles to its kernel's static call") {
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    graft.functions.GraftFunctions.register(spark)
+    spark.range(4).selectExpr("CAST(id AS DOUBLE) * 10.5 AS x", "CAST(id AS DOUBLE) * -3.25 AS y",
+      "id AS cell", "concat('doc ', CAST(id AS STRING), ' a b c d') AS text",
+      "array(CAST(id AS FLOAT), CAST(1.5 AS FLOAT)) AS px").createOrReplaceTempView("k")
+    val rings = "array(array(struct(-10.0 AS x, -10.0 AS y), struct(50.0 AS x, -10.0 AS y), " +
+      "struct(50.0 AS x, 10.0 AS y)))"
+    val calls = Seq(
+      s"st_point_in_polygon(x, y, $rings)" -> "PipRuntime.eval",
+      "s2_cell_id(y / 100, x / 100, 14)" -> "S2.cellId",
+      "hex_cell_id(x, y, 9)" -> "Hex.cellId",
+      "grid_cell_id(x, y, 12)" -> "GridIndex.cellId",
+      "grid_k_ring(cell, 1)" -> "GridIndex.kRing",
+      "hex_k_ring(cell, 1)" -> "Hex.kRing",
+      "simhash64(text)" -> "HashRuntime.simhash",
+      "rolling_fingerprint(text, 4)" -> "HashRuntime.rollingFp",
+      "poly_fingerprint(text)" -> "HashRuntime.polyFp",
+      "text_stats(text)" -> "HashRuntime.textStats",
+      "shingle_fps(text, 3)" -> "HashRuntime.shingleFps",
+      "vec_dot(px, px)" -> "EmbedRuntime.dotOrNull",
+      "lsh_signature(px, 8)" -> "EmbedRuntime.lshSig",
+      "px_sum(px)" -> "PxRuntime.sumOrNull")
+    assert(calls.map(_._1.takeWhile(_ != '(')).distinct.size == 14)
+    for ((call, method) <- calls) {
+      val df = spark.sql(s"SELECT $call AS v FROM k")
+      assert(df.collect().length == 4, call)
+      val code = codegenStringSeq(df.queryExecution.executedPlan).map(_._2).mkString("\n")
+      assert(code.contains(method + "("), s"$call: no static call to $method")
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.exists(l => l.contains("Project") && l.contains("*(")),
+        s"$call: Project outside WholeStageCodegen\n$plan")
+    }
+  }
+
+  test("type contracts: mistyped inputs fail analysis by name; coordinates cast") {
+    import org.apache.spark.sql.functions.{array, col, lit}
+    graft.functions.GraftFunctions.register(spark)
+    def messages(t: Throwable): String =
+      if (t == null) "" else t.getMessage + "\n" + messages(t.getCause)
+    val rejected: Seq[(String, () => Any)] = Seq(
+      "px_sum" -> (() => spark.sql("SELECT px_sum(array(CAST(id AS DOUBLE))) FROM range(2)")),
+      "simhash64" -> (() => spark.sql("SELECT simhash64(CAST(id AS INT)) FROM range(2)")),
+      "vec_dot" -> (() => spark.sql(
+        "SELECT vec_dot(array(CAST(id AS DOUBLE)), array(CAST(id AS DOUBLE))) FROM range(2)")),
+      "px_mask_equals" -> (() => spark.range(2).select(
+        graft.functions.PxFunctions.maskEquals(array(col("id").cast("double")), 1f, 0f))),
+      "INT literal" -> (() => spark.sql("SELECT shingle_fps('a b c', CAST(3 AS BIGINT))")))
+    for ((name, run) <- rejected) {
+      val ex = intercept[Exception](run() match {
+        case df: org.apache.spark.sql.DataFrame => df.collect()
+        case _ =>
+      })
+      assert(messages(ex).contains(name), s"$name: ${messages(ex)}")
+    }
+    val ring = "array(array(struct(-10 AS x, -10 AS y), struct(10.5 AS x, -10 AS y), " +
+      "struct(10.5 AS x, 10 AS y), struct(-10 AS x, 10 AS y)))"
+    val accepted: Seq[(String, Any)] = Seq(
+      "grid_cell_id(CAST(3 AS INT), 2.5, 12)" -> GridIndex.cellId(3.0, 2.5, 12),
+      "hex_cell_id(2.5, CAST(3 AS INT), 9)" -> Hex.cellId(2.5, 3.0, 9),
+      "s2_cell_id(CAST(45 AS INT), 12.25, 14)" -> S2.cellId(45.0, 12.25, 14),
+      s"st_point_in_polygon(CAST(3 AS INT), 2.5, $ring)" -> true,
+      s"st_point_in_polygon(11, 2.5, $ring)" -> false)
+    for ((call, want) <- accepted)
+      assert(spark.sql(s"SELECT $call FROM range(1)").head().get(0) == want, call)
   }
 }

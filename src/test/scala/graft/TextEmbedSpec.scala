@@ -50,14 +50,13 @@ class TextOpsSpec extends AnyFunSuite {
   test("shingles (native shingle_fps) == split/transform/concat_ws HOF chain") {
     // the exact pipeline the native substring-hashing expression replaced
     def hofShingles(d: org.apache.spark.sql.DataFrame, n: Int) = {
-      import org.apache.spark.sql.GraftBridge.{expression => exprOf, column => colOf}
       val toks = split(col("text"), " ")
       val idx = sequence(lit(0), greatest(size(toks) - n, lit(0)))
       d.select(col("doc_id").as("doc"), toks.as("__toks"), idx.as("__idx"))
         .select(col("doc"), explode(transform(col("__idx"),
           i => concat_ws(" ", slice(col("__toks"), i + 1, lit(n))))).as("shingle"))
         .select(col("doc"),
-          colOf(graft.text.PolyHashExpr(exprOf(col("shingle")))).as("sh"))
+          graft.text.TextOps.polyFingerprint(col("shingle")).as("sh"))
         .distinct()
     }
     val edge = Seq((10L, ""), (11L, "only two"), (12L, "a  b   c d"),
@@ -73,8 +72,7 @@ class TextOpsSpec extends AnyFunSuite {
   }
 
   test("band_keys / sig_agree natives == transform+aggregate / zip_with HOFs") {
-    import org.apache.spark.sql.GraftBridge.{expression => exprOf, column => colOf}
-    import graft.text.{BandKeysExpr, SigAgreeExpr, HashFamily}
+    import graft.text.{HashFamily, TextOps}
     val bands = 4; val rows = 4
     // edges: full-length, short (partial + empty bands), empty, a null
     // element (must null ONLY its band / drop only its position), and
@@ -92,7 +90,7 @@ class TextOpsSpec extends AnyFunSuite {
           lit(0L), (acc, x) => (acc * HashFamily.B + x) % HashFamily.P)).as("k"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
     val natK = df.select(col("id"),
-        colOf(BandKeysExpr(exprOf(col("sig")), bands, rows)).as("k"))
+        TextOps.bandKeys(col("sig"), bands, rows).as("k"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
     assert(natK == hofK)
     val pairs = df.select(col("id").as("i1"), col("sig").as("s1"))
@@ -102,7 +100,7 @@ class TextOpsSpec extends AnyFunSuite {
           b => b)).as("a"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     val natA = pairs.select(col("i1"), col("i2"),
-        colOf(SigAgreeExpr(exprOf(col("s1")), exprOf(col("s2")))).as("a"))
+        TextOps.sigAgree(col("s1"), col("s2")).as("a"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     assert(natA == hofA)
   }
